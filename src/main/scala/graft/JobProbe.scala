@@ -5,7 +5,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Dev aid for the optimization rounds: run declared queries under a
   * SparkListener and report the SCHEDULED-JOB breakdown — job count,
-  * stage count, task count, wall seconds — per query. The iterative
+  * stage count, task count, wall seconds — and the number of generated
+  * classes Spark compiled (`compiles`: a class evicted from Spark's
+  * codegen cache compiles again) per query. The iterative
   * operators execute their loops at query construction, so their
   * `.explain` dumps show only the final fragment; this probe is the
   * committed evidence for job-count claims (e.g. step fusion halving
@@ -38,6 +40,7 @@ object JobProbe {
     if (names.exists(n => n.startsWith("dd") || n.startsWith("ann") ||
         n.startsWith("bpe")))
       graft.queries.PipelineQueries.prepareIndexes(spark, sfDir)
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     val jobs = new java.util.concurrent.atomic.AtomicLong(0)
     val stages = new java.util.concurrent.atomic.AtomicLong(0)
     val tasks = new java.util.concurrent.atomic.AtomicLong(0)
@@ -54,13 +57,16 @@ object JobProbe {
       (1 to repeats).foreach { rep =>
         spark.sparkContext.setJobDescription(s"$name rep $rep")
         jobs.set(0); stages.set(0); tasks.set(0)
+        val compiles0 = compiles.getCount
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
         val dt = (System.nanoTime() - t0) / 1e9
-        // listener events are async — give the bus a beat to drain
-        Thread.sleep(300)
+        // listener events are async: drain the bus before reading
+        if (!org.apache.spark.sql.graftshim.ListenerBridge.waitUntilEmpty(spark, 30000L))
+          System.err.println(s"[jobprobe] $name rep=$rep: listener bus not drained")
         println(f"[jobprobe] $name rep=$rep sec=$dt%.3f jobs=${jobs.get}" +
-          s" stages=${stages.get} tasks=${tasks.get}")
+          s" stages=${stages.get} tasks=${tasks.get}" +
+          s" compiles=${compiles.getCount - compiles0}")
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
         System.gc()
       }

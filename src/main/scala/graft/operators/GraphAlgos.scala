@@ -34,7 +34,7 @@ object GraphAlgos {
     * scalar stays in-plan (broadcast aggregate, not a driver collect),
     * TWO iterations fuse into one linear plan between
     * materializations — the rank vector checkpoints once per two
-    * steps, bit-identically (the sssp/closeness double-step). No
+    * steps, bit-identically. No
     * driver-side loops: the only driver scalar is the node count, one
     * job at build time (plus the opt-in tolerance delta).
     *
@@ -96,8 +96,8 @@ object GraphAlgos {
     var converged = false
     val fuse = IterPin.stepsPerPin(edges.sparkSession, 2)
     while (it < iterations && !converged) {
-      // step fusion between materializations (the sssp/closeness
-      // fusion; depth 2 is the measured optimum for this loop — the
+      // step fusion between materializations (depth 2 is the
+      // measured optimum for this loop — the
       // contribution subplan is read twice per step, so deeper fusion
       // doubles the un-pinned plan per step; see IterPin.stepsPerPin):
       // the dangling scalar is IN-PLAN (a broadcast 1-row aggregate of
@@ -200,7 +200,7 @@ object GraphAlgos {
     var converged = nEdges == 0
     val fuse = IterPin.stepsPerPin(edges.sparkSession, 2)
     while (round < maxRounds && !converged) {
-      // step fusion between materializations (the pageRank/LPA/sssp
+      // step fusion between materializations (the pageRank
       // fusion): one peel is a pure degree-filter + two semi joins, so
       // consecutive peels compose into one linear plan. Edges only
       // shrink and peeling is idempotent past the fixpoint, so an
@@ -238,64 +238,20 @@ object GraphAlgos {
     * community semantics. Exact integer state — an external SQL
     * engine replays every iteration verbatim.
     *
-    * Scale shape mirrors [[pageRank]]: the edge table is pinned once;
-    * each iteration is one hash join moving the n-row label vector,
-    * one map-side-combinable (node, label) count, and one
-    * per-node-partitioned ranking window (its partition size is the
-    * number of DISTINCT neighbor labels, which shrinks every
-    * iteration — never a global window). Labels are checkpointed once
-    * per TWO iterations (double-step fusion — the update is pure, so
-    * fused steps are label-identical) to keep the loop's plan linear
-    * at half the materializations.
+    * Scale shape ([[VertexLoop]]): the adjacency is partitioned by
+    * source once; each iteration moves every label along its
+    * out-edges in one map-side-combined (node, label) count shuffle
+    * and merges the per-node winner into the co-partitioned label
+    * vector — one Spark job per iteration, which also pins the
+    * labels. An iteration that changes no label is a fixpoint, so the
+    * loop stops there with identical labels.
     *
     * Synchronous LPA can oscillate on bipartite structures (period-2
     * flips) — the documented trade for determinism; `iterations` caps
     * the loop either way.
     */
-  def labelPropagation(edges: DataFrame, iterations: Int = 3): DataFrame = {
-    val e = IterPin.pin(edges.select(col("src"), col("dst")))
-    val nodes = IterPin.pin(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct())
-    var labels = nodes.select(col("node"), col("node").as("label"))
-    var it = 0
-    // single-reference step → linear fused-plan growth → depth 4 is
-    // the measured optimum here (unlike the multi-ref loops; see
-    // IterPin.stepsPerPin)
-    val fuse = IterPin.stepsPerPin(edges.sparkSession, 4)
-    while (it < iterations) {
-      // the update is pure (join + count + argmax aggregate), so
-      // consecutive iterations fuse into one linear plan between
-      // checkpoints — identical labels, a fraction of the
-      // materializations (the pageRank/sssp step fusion)
-      val steps = math.min(fuse, iterations - it)
-      var cur = labels
-      for (_ <- 1 to steps) {
-        val counts = e.join(cur, e("src") === cur("node"))
-          .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("c"))
-        // winner = (count desc, label asc) as min(struct(-c, label)) —
-        // a map-side-combinable aggregate, NOT a row_number window: a
-        // ranking window sorts every (node, label) row inside each
-        // shuffle partition, and at sf10 (48M edge rows per round,
-        // one JVM) that sort was the measured memory-pressure term of
-        // the round-12 scaling study; the aggregate collapses each
-        // node's labels to one row map-side. Same winner, bit-
-        // identical labels (gr02's fixed-unroll oracle pins it).
-        val won = counts.groupBy(col("dst"))
-          .agg(min(struct((-col("c")).as("nc"), col("label").as("l"))).as("__m"))
-          .select(col("dst").as("node"), col("__m.l").as("__new"))
-        cur = nodes.join(won, Seq("node"), "left")
-          .select(col("node"),
-            coalesce(col("__new"), col("node")).as("label"))
-      }
-      val next = IterPin.pin(cur)
-      IterPin.free(labels) // superseded label vector
-      labels = next
-      it += steps
-    }
-    IterPin.free(e) // exit free — the final pinned labels read neither
-    if (it > 0) IterPin.free(nodes) // (it==0 → labels still reads nodes)
-    labels
-  }
+  def labelPropagation(edges: DataFrame, iterations: Int = 3): DataFrame =
+    VertexLoop.labels(edges, iterations)
 
   /** Per-node triangle participation + local clustering coefficient
     * (Watts–Strogatz 1998) over a SYMMETRIC simple edge table.
@@ -346,135 +302,31 @@ object GraphAlgos {
     * exact whether or not it knows where convergence fell (same
     * argument as [[kCore]]).
     *
-    * Scale shape: the weighted edge table is pinned once; each round
-    * is one hash join moving the reached-set rows along edges plus one
-    * map-side-combinable min per destination — no windows, no global
-    * ordering. Convergence is detected from two scalars ((count,
-    * sum(dist)) — relaxation never removes a node or increases a
-    * distance, so equality means fixpoint) rather than an EXCEPT join.
-    * `maxRounds` caps hostile diameters; per-round frontier deltas are
-    * the usual Pregel/GraphX shape re-expressed as DataFrame joins.
+    * Scale shape ([[VertexLoop.relax]]): frontier-delta rounds — only
+    * nodes whose distance changed last round offer along their
+    * out-edges (the Pregel/GraphX shape), so total traffic is
+    * O(improvements), not O(rounds × reached set). One map-side min
+    * shuffle and one Spark job per round; the loop stops after a round
+    * that changed nothing, and `maxRounds` caps hostile diameters.
     */
-  def sssp(edges: DataFrame, seeds: DataFrame, maxRounds: Int = 15): DataFrame = {
-    val e = IterPin.pin(edges.select(col("src"), col("dst"),
-      col("weight").cast("long").as("weight")))
-    // FRONTIER-DELTA relaxation (round 21, guide §2.3 — shuffle fewer
-    // bytes): each round offers only from nodes whose distance CHANGED
-    // last round (`__f`), not from the whole reached set. Bit-identical
-    // per round to full relaxation: an unchanged node's offers were
-    // already applied the round after it last changed and min() is
-    // idempotent, so dropping them changes no minimum (the classic
-    // Bellman–Ford frontier invariant — the fixed-unroll oracle, which
-    // replays the FULL relaxation, stays exact at every round). At
-    // scale this turns O(rounds × reached-set) join traffic into
-    // O(total improvements); at bench scale it shrinks the offers join
-    // once the frontier passes its peak. The changed flag rides the
-    // existing per-round aggregate (one extra map-side min column — no
-    // extra exchange): a node is frontier iff it is newly reached
-    // (no pre-round row → old-dist min over the tagged union is null)
-    // or its new min beats its pre-round distance.
-    var (dist, seedRow) = IterPin.pinProbed(
-      seeds.select(col("node"), lit(0L).as("dist"), lit(true).as("__f")),
-      Seq(count(lit(1))))
-    var round = 0
-    var converged = seedRow.getLong(0) == 0L
-    val fuse = IterPin.stepsPerPin(edges.sparkSession, 2)
-    while (round < maxRounds && !converged) {
-      // fused relaxations per materialization: min-plus relaxation is
-      // associative, so composing steps between checkpoints yields
-      // bit-identical distances to single-stepping (the fixed-unroll
-      // oracle stays exact) while dividing the per-round materialize +
-      // scheduler cost by the fusion depth
-      val steps = math.min(fuse, maxRounds - round)
-      var cur = dist
-      for (_ <- 1 to steps) {
-        val frontier = cur.filter(col("__f"))
-        val offers = e.join(frontier, e("src") === frontier("node"))
-          .select(col("dst").as("node"), (col("dist") + col("weight")).as("dist"))
-        cur = cur.select(col("node"), col("dist"), lit(false).as("__n"))
-          .unionAll(offers.select(col("node"), col("dist"), lit(true).as("__n")))
-          .groupBy(col("node"))
-          .agg(min(col("dist")).as("dist"),
-            min(when(!col("__n"), col("dist"))).as("__od"))
-          .select(col("node"), col("dist"),
-            (col("__od").isNull || col("dist") < col("__od")).as("__f"))
-      }
-      // convergence probe folded into the pin's own job: fixpoint ⟺
-      // the block's LAST step changed nothing (zero frontier rows) —
-      // relaxation past a fixpoint stays a fixpoint, so earlier steps
-      // of the block are covered by induction. Same detection latency
-      // as the old cross-block (count, sum) signature (one block past
-      // the last change either way), but that trailing block's offers
-      // join now runs on an EMPTY frontier instead of the full reached
-      // set — the wasted block costs scheduler floor, not data.
-      val (next, sig) = IterPin.pinProbed(cur,
-        Seq(coalesce(sum(when(col("__f"), lit(1L)).otherwise(lit(0L))),
-          lit(0L))))
-      converged = sig.getLong(0) == 0L
-      IterPin.free(dist) // superseded distance vector
-      dist = next
-      round += steps
-    }
-    IterPin.free(e) // exit free — the pinned distance vector reads nothing
-    dist.select(col("node"), col("dist"))
-  }
+  def sssp(edges: DataFrame, seeds: DataFrame, maxRounds: Int = 15): DataFrame =
+    VertexLoop.relax(edges.select(col("src"), col("dst"), col("weight")),
+      seeds.select(lit(0L).as("origin"), col("node")), maxRounds,
+      withOrigin = false)
 
   /** Per-origin hop distances from a seed set — synchronous BFS with
     * (origin, node) state, the landmark-distance building block.
-    * Same loop shape and fixed-unroll-exact argument as [[sssp]]; the
-    * state is |seeds| × reached nodes, so seed count is the memory
-    * knob (landmark methods sample tens of seeds, not thousands).
+    * Same loop and fixed-unroll-exact argument as [[sssp]] with unit
+    * weights; each (origin, node) moves through the shuffle once, in
+    * its reach round. The state is |seeds| × reached nodes, so seed
+    * count is the memory knob (landmark methods sample tens of seeds,
+    * not thousands).
     */
   def multiSourceHopDistances(edges: DataFrame, seeds: DataFrame,
-                              maxRounds: Int = 10): DataFrame = {
-    val e = IterPin.pin(edges.select(col("src"), col("dst")))
-    // frontier-delta BFS (see [[sssp]] — identical invariant, (origin,
-    // node) keys): offers come only from rows reached/improved last
-    // round, the flag rides the per-round aggregate, and the loop
-    // stops in the block where the last step changed nothing. At
-    // scale this is the difference between moving |seeds| × reached
-    // rows through the edge join EVERY round and moving each (origin,
-    // node) exactly once, in its reach round (synchronous BFS never
-    // improves a set distance).
-    var (dist, seedRow) = IterPin.pinProbed(
-      seeds.select(col("node").as("origin"), col("node"),
-        lit(0L).as("dist"), lit(true).as("__f")), Seq(count(lit(1))))
-    var round = 0
-    var converged = seedRow.getLong(0) == 0L
-    val fuse = IterPin.stepsPerPin(edges.sparkSession, 2)
-    while (round < maxRounds && !converged) {
-      // fused steps between checkpoints — same associativity argument
-      // as [[sssp]], identical distances, a fraction of the
-      // materializations
-      val steps = math.min(fuse, maxRounds - round)
-      var cur = dist
-      for (_ <- 1 to steps) {
-        val frontier = cur.filter(col("__f"))
-        val offers = frontier.join(e, frontier("node") === e("src"))
-          .select(col("origin"), col("dst").as("node"),
-            (col("dist") + 1).as("dist"))
-        cur = cur.select(col("origin"), col("node"), col("dist"),
-            lit(false).as("__n"))
-          .unionAll(offers.select(col("origin"), col("node"), col("dist"),
-            lit(true).as("__n")))
-          .groupBy(col("origin"), col("node"))
-          .agg(min(col("dist")).as("dist"),
-            min(when(!col("__n"), col("dist"))).as("__od"))
-          .select(col("origin"), col("node"), col("dist"),
-            (col("__od").isNull || col("dist") < col("__od")).as("__f"))
-      }
-      // zero-frontier fixpoint probe folded into the pin's own job
-      val (next, sig) = IterPin.pinProbed(cur,
-        Seq(coalesce(sum(when(col("__f"), lit(1L)).otherwise(lit(0L))),
-          lit(0L))))
-      converged = sig.getLong(0) == 0L
-      IterPin.free(dist) // superseded distance vector
-      dist = next
-      round += steps
-    }
-    IterPin.free(e) // exit free — the pinned distance vector reads nothing
-    dist.select(col("origin"), col("node"), col("dist"))
-  }
+                              maxRounds: Int = 10): DataFrame =
+    VertexLoop.relax(edges.select(col("src"), col("dst"), lit(1L).as("weight")),
+      seeds.select(col("node").as("origin"), col("node")), maxRounds,
+      withOrigin = true)
 
   /** Weighted one-mode projection of a bipartite graph: given
     * (left, right) membership edges, connect left nodes that share a

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -43,10 +44,27 @@ private[graft] object IterPin {
       case None => df.localCheckpoint()
     }
 
+  /** [[pin]] for RDD state ([[VertexLoop]]): marks `rdd` for the same
+    * route and returns it; the next job over it materializes it, so a
+    * loop's per-round count job is also its pin. The reliable route
+    * persists first, so the checkpoint write reads the blocks that job
+    * cached instead of recomputing the round.
+    */
+  def pin[T](spark: SparkSession, rdd: RDD[T]): RDD[T] = {
+    spark.conf.getOption("graft.iter.checkpointDir") match {
+      case Some(dir) =>
+        val sc = spark.sparkContext
+        if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
+        rdd.persist(StorageLevel.MEMORY_AND_DISK).checkpoint()
+      case None => rdd.localCheckpoint()
+    }
+    rdd
+  }
+
   private val probeId = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Fused steps per materialization for the iterative loops
-    * (pageRank/LPA/k-core/sssp/BFS/components). Each loop composes up
+  /** Fused steps per materialization for the DataFrame loops
+    * (pageRank/k-core/components). Each loop composes up
     * to this many pure update steps into ONE linear plan between
     * checkpoints — bit-identical state by associativity/purity of the
     * updates; what changes is bookkeeping: state materializes (and the
@@ -56,16 +74,14 @@ private[graft] object IterPin {
     *
     * `algoDefault` is the loop's MEASURED structural optimum, not a
     * guess (round-21 regime table, OPTIMIZATION_r21.md): a step that
-    * references the incoming state MORE THAN ONCE (sssp/BFS's
-    * `cur ∪ offers(cur)`, pageRank's twice-read contribution table,
-    * k-core's three state reads per peel) duplicates the un-pinned
-    * subtree 2-3× per fused step — 2^k/3^k plan copies that Catalyst
-    * must plan and AQE must stage even where exchange reuse executes
-    * them once — so depth 4 REGRESSED those loops 20-40% (gr05 warm
-    * 5.1 s @2 vs 7.0 s @4; gr01 4.8 vs 6.6) while cutting jobs only
-    * ~20% (AQE schedules one job per exchange, and fusion does not
-    * remove exchanges). Single-reference steps grow linearly and do
-    * win at 4 (LPA 4.5 vs 4.9). `graft.iter.stepsPerPin` overrides
+    * references the incoming state MORE THAN ONCE (pageRank's
+    * twice-read contribution table, k-core's three state reads per
+    * peel) duplicates the un-pinned subtree 2-3× per fused step —
+    * 2^k/3^k plan copies that Catalyst must plan and AQE must stage
+    * even where exchange reuse executes them once — so depth 4
+    * REGRESSED those loops (gr01 warm 4.8 s @2 vs 6.6 s @4) while
+    * cutting jobs only ~20% (AQE schedules one job per exchange, and
+    * fusion does not remove exchanges). `graft.iter.stepsPerPin` overrides
     * uniformly for experiments or cluster regimes where the
     * wasted-rounds-past-fixpoint trade differs (a past-fixpoint round
     * moves no new rows through the aggregates, but it still re-scans
@@ -99,7 +115,8 @@ private[graft] object IterPin {
     *    EXECUTION, so a retry after executor loss can double-apply a
     *    lost task's update. Local masters run no speculation and no
     *    stage retries, so the observe route defaults ON only under
-    *    `local[*]`; non-local masters take the exact pin-then-agg
+    *    [[localMaster]]; other masters (`local-cluster[...]` too: it
+    *    has real executors) take the exact pin-then-agg
     *    two-job probe unless `graft.iter.observeProbe=true` opts in
     *    explicitly.
     *  - RELIABLE checkpointing (`graft.iter.checkpointDir` set):
@@ -117,10 +134,10 @@ private[graft] object IterPin {
   def pinProbed(df: DataFrame, metrics: Seq[org.apache.spark.sql.Column])
   : (DataFrame, org.apache.spark.sql.Row) = {
     val conf = df.sparkSession.conf
-    val localMaster = df.sparkSession.sparkContext.master.startsWith("local")
+    val local = localMaster(df.sparkSession.sparkContext.master)
     val reliable = conf.getOption("graft.iter.checkpointDir").isDefined
     val observe = !reliable &&
-      conf.get("graft.iter.observeProbe", localMaster.toString).toBoolean
+      conf.get("graft.iter.observeProbe", local.toString).toBoolean
     if (observe) {
       val name = s"__iterpin_probe_${probeId.incrementAndGet()}"
       val obs = df.observe(name, metrics.head, metrics.tail: _*)
@@ -150,22 +167,28 @@ private[graft] object IterPin {
     * Non-blocking on the block route; the file delete is a single
     * recursive FS call on the round's own directory.
     */
-  def free(df: DataFrame): Unit =
-    if (df.sparkSession.conf.get("graft.iter.free", "true").toBoolean)
-      df.queryExecution.logical match {
-        case lr: LogicalRDD =>
-          if (lr.rdd.getStorageLevel != StorageLevel.NONE)
-            lr.rdd.unpersist(blocking = false)
-          // reliable checkpoints report storage level NONE and live as
-          // files under checkpointDir/<uuid>/rdd-<id>; getCheckpointFile
-          // is Some only for the reliable kind, so the local route never
-          // enters here
-          lr.rdd.getCheckpointFile.foreach { dir =>
-            val p = new org.apache.hadoop.fs.Path(dir)
-            p.getFileSystem(
-                df.sparkSession.sparkContext.hadoopConfiguration)
-              .delete(p, true)
-          }
-        case _ => ()
+  def free(df: DataFrame): Unit = df.queryExecution.logical match {
+    case lr: LogicalRDD => free(df.sparkSession, lr.rdd)
+    case _ => ()
+  }
+
+  /** [[free]] for an RDD pin (or any RDD: a plain one no-ops). */
+  def free(spark: SparkSession, rdd: RDD[_]): Unit =
+    if (spark.conf.get("graft.iter.free", "true").toBoolean) {
+      if (rdd.getStorageLevel != StorageLevel.NONE) rdd.unpersist(blocking = false)
+      // reliable checkpoints live as files under
+      // checkpointDir/<uuid>/rdd-<id>; getCheckpointFile is Some only
+      // for the reliable kind, so the local route never enters here
+      rdd.getCheckpointFile.foreach { dir =>
+        val p = new org.apache.hadoop.fs.Path(dir)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
       }
+    }
+
+  /** Masters that run every task in-process: `local`, `local[N]`,
+    * `local[*]` and `local[N,F]` (F task attempts, still no stage
+    * retry). `local-cluster[...]` starts real executors and is not one.
+    */
+  private[graft] def localMaster(master: String): Boolean =
+    master.matches("""local(\[(\d+|\*)(\s*,\s*\d+)?\])?""")
 }

@@ -46,9 +46,11 @@ object PathExpand {
 
   /** Edge sets at or below this row count stay on the AQE-planned path
     * (runtime broadcast of whichever side is smaller — right for dims);
-    * above it the loop pins the co-partitioned regime so the edge table
-    * is never re-shuffled per hop (two-long rows ≈ 16 B → ~32 MB at the
-    * threshold, past any sane broadcast limit). Overridable per session
+    * above it the loop pins the hash-partitioned regime (two-long rows
+    * ≈ 16 B → ~32 MB at the threshold, past any sane broadcast limit).
+    * That regime is meant to keep the edge table from moving per hop,
+    * but under adaptive execution it still moves (see the edge-set
+    * note in the loop). Overridable per session
     * via `graft.pathExpand.broadcastThreshold`.
     */
   val MaxBroadcastEdges = 2000000L
@@ -137,12 +139,14 @@ object PathExpand {
     //  - small edge set → AQE's runtime plan (it broadcasts the tiny
     //    side, so the loop joins are exchange-free already);
     //  - large edge set → hash-partitioned on __src before a second
-    //    checkpoint (localCheckpoint preserves physical partitioning in
-    //    its LogicalRDD) and every frontier batch partitioned on __node
-    //    with the same pinned partition count, so the per-hop join never
-    //    re-shuffles the edge table: O(hops × |frontier|) shuffle
-    //    volume instead of O(hops × |E|). At 100 TB the edge table is
-    //    the side that must not move.
+    //    checkpoint, and every frontier batch partitioned on __node
+    //    with the same partition count. The intent is a per-hop join
+    //    that never re-shuffles the edge table, but under adaptive
+    //    execution (the default) a localCheckpoint's LogicalRDD reports
+    //    UnknownPartitioning, so the planner re-shuffles the edges on
+    //    every hop anyway: O(hops × |E|) shuffle volume, like the
+    //    unpartitioned plan. GraphAlgos' vertex loops hold the layout
+    //    in RDDs instead (VertexLoop); this loop keeps its shape.
     val edges0 = rel.types.map(t => edgeSet(qc, catalog, rel, t, params, carryEdges))
       .reduce(_ unionByName _)
     val nPart = edges0.sparkSession.sessionState.conf.numShufflePartitions
@@ -323,8 +327,7 @@ object PathExpand {
         // lex-min shortest node sequence (see matPaths note above);
         // without it, any row serves (only the hop count is exposed)
         // and dropDuplicates is the cheaper reduction. Both group on
-        // the same keys, so the co-partitioned regime's partitioning
-        // reuse is identical.
+        // the same keys.
         next =
           if (allPaths)
             // keep every distinct shortest prefix: all level-k shortest
@@ -342,14 +345,10 @@ object PathExpand {
         next = next.join(visited, Seq("__origin", "__node"), "left_anti")
       }
       // flat lineage; materializes the early-stop probe. In the
-      // co-partitioned (large-edge) regime the frontier is partitioned
-      // on __node so the next hop's join probes the pre-partitioned
-      // edge table with no exchange on either side (the BFS dedup's
-      // grouping keys are a superset of __node, so it reuses the same
-      // partitioning); skipped on the last hop, where the partitioning
-      // would never be consumed. The remaining per-round cost at local
-      // scale is the Spark scheduling floor (~2 stages/hop), which is
-      // exactly what buys horizontal scale-out on a cluster.
+      // large-edge regime the frontier is repartitioned on __node
+      // (skipped on the last hop); under adaptive execution the pin
+      // drops that partitioning, so the next hop's join still shuffles
+      // both sides (see the edge-set note above).
       // early-stop/cap probe folded into the checkpoint's own job
       val (pinned, pinnedRow) = graft.operators.IterPin.pinProbed(
         if (coPartitioned && hop < maxHops)

@@ -3155,12 +3155,25 @@ class OperatorsSpec extends SparkSpec {
   test("graft.iter.checkpointDir routes loop pins through reliable " +
     "checkpoints: results unchanged, and free() RECLAIMS superseded " +
     "rounds' checkpoint directories (bounded disk, not one dir/round)") {
+    import graft.operators.IterPin
     val dir = java.nio.file.Files.createTempDirectory("graft_relck")
       .toFile.getAbsolutePath
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 5L))
       .flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst")
+    val wedges = edges.withColumn("weight", col("src") + col("dst"))
+    val seeds = Seq(1L, 4L).toDF("node")
+    // the RDD-state loops (sssp, LPA, BFS) pin through the same route
+    val vertexLoops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "sssp" -> (() => GraphAlgos.sssp(wedges, seeds, maxRounds = 6)),
+      "labelPropagation" -> (() => GraphAlgos.labelPropagation(edges, iterations = 6)),
+      "multiSourceHopDistances" ->
+        (() => GraphAlgos.multiSourceHopDistances(edges, seeds, maxRounds = 6)))
     val local = GraphAlgos.pageRank(edges, iterations = 6)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val localVertex = vertexLoops.map { case (_, run) =>
+      val r = run()
+      try r.collect().toSet finally IterPin.free(r)
+    }
     spark.conf.set("graft.iter.checkpointDir", dir)
     try {
       val reliable = GraphAlgos.pageRank(edges, iterations = 6)
@@ -3169,14 +3182,28 @@ class OperatorsSpec extends SparkSpec {
       // superseded rounds' directories were deleted by free(): only
       // the surviving pins' rdd-* dirs remain — without the reclaim,
       // a 6-iteration run leaves one directory PER ROUND (plus the
-      // invariant pins) on exactly the filesystems the conf targets
+      // invariant pins) on exactly the filesystems the conf targets.
+      // Counted under the context's checkpoint dir: it is set once per
+      // context, possibly by an earlier suite under another conf value
       def rddDirs(f: java.io.File): Long =
         if (!f.isDirectory) 0L
         else (if (f.getName.startsWith("rdd-")) 1L else 0L) +
           Option(f.listFiles).map(_.map(rddDirs).sum).getOrElse(0L)
-      val remaining = rddDirs(new java.io.File(dir))
+      def ckptDirs(): Long = rddDirs(new java.io.File(new java.net.URI(
+        spark.sparkContext.getCheckpointDir.get).getPath))
+      val remaining = ckptDirs()
       assert(remaining <= 2, s"$remaining rdd-* checkpoint dirs remain " +
         "after a 6-iteration pageRank (retention leak)")
+      vertexLoops.zip(localVertex).foreach { case ((name, run), want) =>
+        val before = ckptDirs()
+        val r = run()
+        assert(r.collect().toSet == want, s"$name differs under reliable pins")
+        val kept = ckptDirs() - before
+        assert(kept >= 1 && kept <= 2,
+          s"$kept rdd-* checkpoint dirs remain after a 6-round $name")
+        IterPin.free(r)
+        assert(ckptDirs() < before + kept, s"$name's result pin was not freed")
+      }
       // components through the same route (distributed regime)
       val prev = spark.conf.getOption("graft.components.driverMaxEdges")
       spark.conf.set("graft.components.driverMaxEdges", "1")
@@ -3239,6 +3266,47 @@ class OperatorsSpec extends SparkSpec {
       case Some(v) => spark.conf.set("graft.components.driverMaxEdges", v)
       case None => spark.conf.unset("graft.components.driverMaxEdges")
     }
+  }
+
+  test("sssp, BFS and label propagation run one Spark job per round plus " +
+    "a fixed set-up, and the same count on every run") {
+    import graft.operators.IterPin
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graftshim.ListenerBridge
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobs.merge(g, 1, _ + _))
+    }
+    // a path 1 -> ... -> 9 never converges within 4 rounds, and a 2-cycle
+    // swaps its labels every round: each loop runs exactly its cap
+    val path = (1L to 8L).map(i => (i, i + 1)).toDF("src", "dst")
+    val flip = Seq((0L, 1L), (1L, 0L)).toDF("src", "dst")
+    val seeds = Seq(1L).toDF("node")
+    val loops: Seq[(String, Int => org.apache.spark.sql.DataFrame)] = Seq(
+      "sssp" -> (k => GraphAlgos.sssp(path.withColumn("weight", lit(2L)), seeds, k)),
+      "bfs" -> (k => GraphAlgos.multiSourceHopDistances(path, seeds, k)),
+      "lpa" -> (k => GraphAlgos.labelPropagation(flip, k)))
+    sc.addSparkListener(listener)
+    try loops.foreach { case (name, run) =>
+      val perRounds = Seq(1, 2, 4).map { k =>
+        k -> (1 to 2).map { rep =>
+          val group = s"vertexloop-$name-$k-$rep"
+          sc.setJobGroup(group, group)
+          try IterPin.free(run(k)) finally sc.clearJobGroup()
+          assert(ListenerBridge.waitUntilEmpty(spark, 10000L))
+          jobs.getOrDefault(group, 0)
+        }
+      }
+      perRounds.foreach { case (k, runs) =>
+        assert(runs.distinct.size == 1, s"$name at $k rounds: jobs differ $runs")
+      }
+      val setup = perRounds.map { case (k, runs) => runs.head - k }.distinct
+      assert(setup.size == 1 && setup.head >= 0,
+        s"$name: jobs minus rounds is not one fixed set-up: $perRounds")
+    } finally sc.removeSparkListener(listener)
   }
 }
 

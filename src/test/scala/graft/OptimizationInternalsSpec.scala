@@ -29,6 +29,14 @@ class OptimizationInternalsSpec extends SparkSpec {
     } finally spark.conf.unset("graft.iter.observeProbe")
   }
 
+  test("pinProbed's observe route defaults on only for masters that run " +
+       "every task in-process") {
+    Seq("local", "local[4]", "local[*]", "local[4,2]")
+      .foreach(m => assert(IterPin.localMaster(m), m))
+    Seq("local-cluster[2,1,1024]", "spark://h:7077")
+      .foreach(m => assert(!IterPin.localMaster(m), m))
+  }
+
   test("pinProbed under graft.iter.checkpointDir takes the exact probe " +
        "(reliable checkpoint executes the plan twice — observed metrics " +
        "would read 2x)") {

@@ -536,6 +536,37 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("multiSourceHopDistances matches an in-memory multi-source BFS, " +
+    "including searches cut short by maxRounds") {
+    val gen = for {
+      nE <- Gen.chooseNum(1, 30)
+      es <- Gen.listOfN(nE, for {
+        a <- Gen.chooseNum(0L, 11L); b <- Gen.chooseNum(0L, 11L)
+      } yield (a, b))
+      // repeated seeds, and seeds outside the graph (12, 13)
+      seeds <- Gen.chooseNum(1, 4).flatMap(Gen.listOfN(_, Gen.chooseNum(0L, 13L)))
+      maxRounds <- Gen.chooseNum(0, 5)
+    } yield (es, seeds, maxRounds)
+    forAll(gen, trials = 10) { case (edges, seeds, maxRounds) =>
+      import spark.implicits._
+      val out = edges.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+      val want = seeds.distinct.flatMap { o =>
+        val dist = scala.collection.mutable.Map(o -> 0L)
+        var frontier = Set(o)
+        for (r <- 1 to maxRounds) {
+          frontier = frontier.flatMap(out.getOrElse(_, Nil)).filterNot(dist.contains)
+          frontier.foreach(dist(_) = r.toLong)
+        }
+        dist.map { case (n, d) => (o, n, d) }
+      }.sorted
+      val got = graft.operators.GraphAlgos.multiSourceHopDistances(
+          edges.toDF("src", "dst"), seeds.toDF("node"), maxRounds)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+      assert(got == want,
+        s"BFS diverged; edges=$edges seeds=$seeds maxRounds=$maxRounds")
+    }
+  }
+
   // ---- path materialization vs brute-force walk enumeration ----
 
   /** Random multigraph on 6 vertices: self-loops and parallel edges
