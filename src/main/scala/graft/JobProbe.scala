@@ -10,8 +10,8 @@ import org.apache.spark.sql.SparkSession
   * codegen cache compiles again) per query. The iterative
   * operators execute their loops at query construction, so their
   * `.explain` dumps show only the final fragment; this probe is the
-  * committed evidence for job-count claims (e.g. step fusion halving
-  * the per-round scheduler floor).
+  * committed evidence for job-count claims (e.g. one job per round of
+  * a vertex-state loop).
   *
   * Usage: runMain graft.JobProbe <q1,q2,...> [repeats]
   * Reads SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS like Bench.
@@ -31,7 +31,7 @@ object JobProbe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // optional session-conf overrides for A/B probes:
-    // GRAFT_CONF="graft.iter.stepsPerPin=2,graft.x=y"
+    // GRAFT_CONF="graft.components.driverMaxEdges=0,graft.x=y"
     sys.env.get("GRAFT_CONF").foreach(_.split(",").filter(_.contains("="))
       .foreach { kv =>
         val Array(k, v) = kv.split("=", 2)

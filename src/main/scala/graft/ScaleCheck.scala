@@ -178,12 +178,12 @@ object ScaleCheck {
     }
 
     // var-length + shortestPath over the 4M-edge graph through the
-    // engine: edge count > broadcastThreshold (2M) → co-partitioned
-    // regime; > doublingMaxEdges (100k) → frontier loop, no doubling
+    // engine: edge count > doublingMaxEdges (100k) → frontier loop, no
+    // doubling
     timed("cy_varlength_4m_edges") {
       // inline start props filter to 3 origins — applied at the scan,
       // BEFORE expansion (the per-origin BFS frontier stays small while
-      // the 4M-edge table exercises the pinned co-partitioned join)
+      // the 4M-edge table exercises the pinned edge join)
       val verts = spark.range(400000L).select(col("id").as("vid"),
         when(col("id") < 3, 1).otherwise(0).as("grp"))
       val cat = new graft.model.GraphCatalog()
@@ -191,8 +191,7 @@ object ScaleCheck {
         .addRelationship("E", edges, srcCol = "src", dstCol = "dst",
           srcLabel = Some("V"), dstLabel = Some("V"))
       val eng = new CypherEngine(spark, cat)
-      regimes("pathExpand") = "co-partitioned (4M edges > 2M broadcast gate); " +
-        "doubling skipped (> 100k doubling gate)"
+      regimes("pathExpand") = "frontier loop; doubling skipped (> 100k doubling gate)"
       eng.query(
         """MATCH p = shortestPath((a:V {grp: 1})-[:E*1..3]->(b:V))
            RETURN count(*) AS n""")

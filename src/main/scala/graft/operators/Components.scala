@@ -8,100 +8,40 @@ import org.apache.spark.sql.functions._
   * GROUPS, so a corpus keeps one canonical document per component.
   * The reference's ETL dedups row-wise; at corpus scale the standard
   * pipeline is pairs → components → keep min-id representative.
-  *
-  * Algorithm: iterative min-label propagation with pointer jumping
-  * (label(v) ← min over neighbours' labels, then label(v) ←
-  * label(label(v))). The jump halves path lengths each round, so
-  * convergence is O(log diameter) rounds, not O(diameter) — each round
-  * is two hash-partitioned equi-joins plus a checkpoint (flat lineage),
-  * the same shape GraphX's connectedComponents lowers to. No driver
-  * collect; the convergence probe is a 1-row count of changed labels.
   */
 object Components {
 
   /** (id, component) for every node appearing in `pairs`; component is
-    * the minimum node id reachable through the pair graph.
+    * the minimum node id reachable through the pair graph. Ids must be
+    * integral.
     *
     * Two regimes, gated on the deduped edge count
-    * (`graft.components.driverMaxEdges`, default 200k): near-duplicate
-    * pair sets are usually a vanishing fraction of the corpus, and for
-    * those a driver-side union-find over the collected pairs costs ONE
-    * job instead of O(log d) rounds of two joins — each distributed
-    * round pays a fixed scheduler floor that dwarfs the actual work at
-    * that size. Pair sets above the gate (or when the cap is lowered)
-    * take the distributed label-propagation loop, which never
-    * materializes edges on the driver.
+    * (`graft.components.driverMaxEdges`, default 200k), which rides the
+    * edge pin's own job: near-duplicate pair sets are usually a
+    * vanishing fraction of the corpus, and for those a driver-side
+    * union-find over the collected pairs costs ONE job instead of
+    * O(log d) rounds — each distributed round pays a fixed scheduler
+    * floor that dwarfs the actual work at that size. Pair sets above
+    * the gate (or when the cap is lowered) take the distributed
+    * min-label propagation with pointer jumping
+    * ([[VertexLoop.components]]: O(log diameter) rounds of one job
+    * each), which never materializes edges on the driver.
     */
   def connectedComponents(pairs: DataFrame, idCol1: String, idCol2: String,
                           maxIter: Int = 25): DataFrame = {
-    // undirected edge list, deduped once and pinned for the loop
-    val und = IterPin.pin(pairs.select(col(idCol1).as("src"), col(idCol2).as("dst"))
-      .unionByName(pairs.select(col(idCol2).as("src"), col(idCol1).as("dst")))
-      .distinct())
-
+    // undirected edge list, deduped once and pinned; its count rides
+    // the pin's job (IterPin.pinProbed)
+    val (und, row) = IterPin.pinProbed(
+      pairs.select(col(idCol1).as("src"), col(idCol2).as("dst"))
+        .unionByName(pairs.select(col(idCol2).as("src"), col(idCol1).as("dst")))
+        .distinct(), Seq(count(lit(1))))
     val driverCap = und.sparkSession.conf
       .get("graft.components.driverMaxEdges", "200000").toLong
-    if (und.count() <= driverCap) {
-      val r = driverUnionFind(und) // builds from collected longs
-      IterPin.free(und)
-      return r
-    }
-
-    // convergence by MONOTONE SIGNATURE, folded into each round's pin
-    // (IterPin.pinProbed): every update is least()/min() over the
-    // current labels, so each comp is non-increasing — the label sum
-    // (exact DECIMAL, ids can be near Long.Max at 100 TB key spaces)
-    // is unchanged iff NO label changed. Replaces the old
-    // join-the-previous-vector probe: one job per round instead of
-    // two, and no second pass over the label vector.
-    val sigCol = sum(col("comp").cast("decimal(38,0)"))
-    def sigOf(r: org.apache.spark.sql.Row): java.math.BigDecimal =
-      if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
-    var (labels, labelsRow) = IterPin.pinProbed(
-      und.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("comp")), Seq(sigCol))
-    var signature = sigOf(labelsRow)
-
-    var converged = false
-    var it = 0
-    // step fusion (the GraphAlgos discipline): each round is pure
-    // min/least propagation, so consecutive rounds compose into one
-    // linear plan between pins — identical labels, and the monotone
-    // signature still detects a block-level fixpoint exactly (labels
-    // are non-increasing, so an unchanged sum across a fused block
-    // means NO round in the block moved a label). Fusion is capped at
-    // 2 here regardless of graft.iter.stepsPerPin: one round
-    // references the incoming label vector 4× (twice in `stepped`,
-    // `stepped` twice in the jump), so the un-materialized plan grows
-    // 4^steps — exchange reuse executes the duplicates once, but
-    // Catalyst still plans them, and past 2 rounds the planning cost
-    // outruns the saved materializations.
-    val fuse = math.min(2, IterPin.stepsPerPin(pairs.sparkSession, 2))
-    while (!converged && it < maxIter) {
-      val steps = math.min(fuse, maxIter - it)
-      var cur = labels
-      for (_ <- 1 to steps) {
-        // neighbour minimum
-        val nbrMin = und.join(cur, col("dst") === col("id"))
-          .groupBy(col("src")).agg(min(col("comp")).as("nbr"))
-        val stepped = cur.join(nbrMin, col("id") === col("src"), "left_outer")
-          .select(col("id"), least(col("comp"), coalesce(col("nbr"), col("comp"))).as("c1"))
-        // pointer jump: follow the label one more level
-        cur = stepped
-          .join(stepped.select(col("id").as("jid"), col("c1").as("jc")),
-            col("c1") === col("jid"), "left_outer")
-          .select(col("id"), coalesce(col("jc"), col("c1")).as("comp"))
-      }
-      val (next, nextRow) = IterPin.pinProbed(cur, Seq(sigCol))
-      val nextSig = sigOf(nextRow)
-      converged = nextSig.compareTo(signature) == 0
-      IterPin.free(labels) // superseded label vector
-      labels = next
-      signature = nextSig
-      it += steps
-    }
-    IterPin.free(und) // exit free — the final pinned labels read nothing
-    labels
+    val r =
+      if (row.getLong(0) <= driverCap) driverUnionFind(und) // builds from collected longs
+      else VertexLoop.components(und, maxIter)
+    IterPin.free(und) // neither result reads the edge pin
+    r
   }
 
   /** Driver-side union-find for small pair sets: edges collected as

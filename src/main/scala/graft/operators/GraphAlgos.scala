@@ -22,21 +22,15 @@ object GraphAlgos {
     *   rank'(v) = (1-d)/n + d * ( Σ_{u→v} rank(u)/outdeg(u) + D/n )
     * where D is the total rank held by dangling nodes (no out-edges).
     *
-    * Scale shape: the edge table joined with its outdegree is pinned
-    * ONCE (`localCheckpoint` — the corpus-sized operand never
-    * recomputes or re-shuffles its build); each iteration moves only
-    * the n-row rank vector through one hash join on the node key and
-    * one map-side-combinable sum per destination (celebrity/hub skew
-    * collapses in the partial aggregate), plus a single-row broadcast
-    * for the dangling mass, derived by conservation from the same
-    * aggregate (D = 1 - Σ contributions) so the rank vector is
-    * traversed exactly once per iteration. Because that dangling
-    * scalar stays in-plan (broadcast aggregate, not a driver collect),
-    * TWO iterations fuse into one linear plan between
-    * materializations — the rank vector checkpoints once per two
-    * steps, bit-identically. No
-    * driver-side loops: the only driver scalar is the node count, one
-    * job at build time (plus the opt-in tolerance delta).
+    * Scale shape ([[VertexLoop.ranks]]): the adjacency is partitioned
+    * by source once, each weight already divided by its source's total;
+    * an iteration moves every rank along its out-edges in one
+    * map-side-summed shuffle and merges the sums into the
+    * co-partitioned rank vector — one Spark job per iteration, which
+    * pins the ranks, sums the next iteration's dangling mass D and
+    * counts the ranks that moved by `tolerance` or more (none moved:
+    * the L∞ delta is below it). Set-up is one more job: the node set
+    * and its count n.
     *
     * Node set = distinct sources ∪ destinations. `relative = true`
     * returns rank scaled by n (rank relative to uniform — the form
@@ -44,10 +38,11 @@ object GraphAlgos {
     * early once the L∞ rank delta drops below `tol` (`iterations`
     * stays the hard cap). `weightCol` makes the walk weighted: a
     * source's rank splits across its out-edges proportionally to the
-    * edge weight (unit weights reproduce the unweighted results
-    * bit-identically). `seeds` personalizes: teleport and dangling
-    * mass go to the seed set instead of uniform, turning rank into
-    * proximity-to-seeds (the graph-retrieval form).
+    * edge weight (unit weights reproduce the unweighted results). `seeds`
+    * personalizes: teleport and dangling mass go to the seed set
+    * instead of uniform, turning rank into proximity-to-seeds (the
+    * graph-retrieval form); seeds must be nodes of the graph or their
+    * teleport mass is lost.
     */
   def pageRank(edges: DataFrame, iterations: Int = 5,
                damping: Double = 0.85,
@@ -55,116 +50,10 @@ object GraphAlgos {
                tolerance: Option[Double] = None,
                weightCol: Option[String] = None,
                seeds: Option[Seq[Long]] = None): DataFrame = {
-    // weighted edges split a source's rank ∝ weight instead of evenly;
-    // with unit weights sum(__w) is exactly the outdegree count, so the
-    // unweighted results are bit-identical to the count formulation
-    // pin the raw edge projection FIRST: `edges` is usually a lazy
-    // build plan (scan → join → distinct), and the two consumers below
-    // (w pin, nodes pin) would otherwise each re-execute it from the
-    // source — one materialization instead of two full builds
-    val e = IterPin.pin(weightCol match {
-      case Some(wc) => edges.select(col("src"), col("dst"),
-        col(wc).cast("double").as("__w"))
-      case None => edges.select(col("src"), col("dst"), lit(1.0).as("__w"))
-    })
-    val od = e.groupBy(col("src")).agg(sum(col("__w")).as("outdeg"))
-    // edge ⋈ outdeg pinned once: every iteration re-reads this at the
-    // cost of a materialized scan, never the upstream shuffles
-    val w = IterPin.pin(e.join(od, Seq("src"))
-      .select(col("src").as("node"), col("dst"), col("__w"), col("outdeg")))
-    // node count folded into the nodes pin (one job — IterPin.pinProbed)
-    val (nodes, nodesRow) = IterPin.pinProbed(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct(),
-      Seq(count(lit(1))))
-    IterPin.free(e) // both derived pins are materialized
-    val nN = nodesRow.getLong(0)
-    val base = (1.0 - damping) / nN
-    // personalized PageRank: teleport (and dangling redistribution)
-    // concentrate on the seed set instead of uniform — rank becomes
-    // proximity to the seeds (the graph-retrieval form). Seeds must be
-    // nodes of the graph or their teleport mass is lost. The uniform
-    // path keeps its original scalar arithmetic untouched so unseeded
-    // results stay bit-identical to the oracle replay.
-    val teleport: org.apache.spark.sql.Column = seeds match {
-      case Some(s) =>
-        require(s.nonEmpty, "personalized pageRank needs at least one seed")
-        when(col("node").isin(s: _*), lit(1.0 / s.size)).otherwise(lit(0.0))
-      case None => lit(1.0 / nN)
-    }
-    var ranks = nodes.select(col("node"), teleport.as("rank"))
-    var it = 0
-    var converged = false
-    val fuse = IterPin.stepsPerPin(edges.sparkSession, 2)
-    while (it < iterations && !converged) {
-      // step fusion between materializations (depth 2 is the
-      // measured optimum for this loop — the
-      // contribution subplan is read twice per step, so deeper fusion
-      // doubles the un-pinned plan per step; see IterPin.stepsPerPin):
-      // the dangling scalar is IN-PLAN (a broadcast 1-row aggregate of
-      // the contribution table, not a driver collect), so consecutive
-      // iterations compose into one linear plan and the rank vector
-      // materializes once per `fuse` steps — same expressions,
-      // bit-identical ranks, a fraction of the checkpoint + scheduler
-      // floor. Within a fused
-      // step the contribution subplan has two readers (dangling mass +
-      // rank update); Catalyst's exchange reuse shares its shuffle, so
-      // the cost is one extra n-row hash aggregate, far below a
-      // materialization. Tolerance mode stays single-step: the stop
-      // rule compares CONSECUTIVE iterations.
-      val steps = if (tolerance.isDefined) 1 else math.min(fuse, iterations - it)
-      var cur = ranks
-      for (_ <- 1 to steps) {
-        val contrib = w.join(cur, Seq("node"))
-          .groupBy(col("dst").as("node"))
-          .agg(sum(col("rank") * col("__w") / col("outdeg")).as("s"))
-        // dangling mass by conservation: ranks always sum to exactly 1,
-        // and the contribution stream sums to the non-dangling mass
-        // (each source's rank/outdeg appears once per out-edge), so
-        // D = 1 - Σs — no second pass over the rank vector, no
-        // anti-join. fp error vs the explicit dangling sum is ~1 ulp,
-        // ~1e-21 per rank after the /n — invisible at any rounding
-        val dang = contrib
-          .agg((lit(1.0) - coalesce(sum(col("s")), lit(0.0))).as("dmass"))
-        val rankExpr = seeds match {
-          case Some(_) =>
-            lit(1.0 - damping) * teleport + lit(damping) *
-              (coalesce(col("s"), lit(0.0)) + col("dmass") * teleport)
-          case None =>
-            lit(base) + lit(damping) *
-              (coalesce(col("s"), lit(0.0)) + col("dmass") / nN)
-        }
-        cur = nodes.join(contrib, Seq("node"), "left")
-          .crossJoin(broadcast(dang))
-          .select(col("node"), rankExpr.as("rank"))
-      }
-      val next = IterPin.pin(cur)
-      // convergence is opt-in because the L∞ delta is one extra n-row
-      // join + max aggregate per iteration (a driver scalar, the
-      // standard power-iteration stop rule); `iterations` stays the
-      // hard cap either way, so the fixed-iteration oracle form is the
-      // tolerance=None default
-      tolerance.foreach { tol =>
-        val delta = next.join(ranks.withColumnRenamed("rank", "prev"), Seq("node"))
-          .agg(max(abs(col("rank") - col("prev"))).as("d"))
-          .head().getDouble(0)
-        converged = delta < tol
-      }
-      // the superseded rank vector's last consumer (the delta probe)
-      // has run and `next` is materialized — release its blocks now
-      // instead of letting every round's state pile up on the heap
-      IterPin.free(ranks)
-      ranks = next
-      it += steps
-    }
-    // exit frees: the returned frame reads only the FINAL pinned rank
-    // vector, never the edge-sized loop pins — release them here so a
-    // caller running many analytics back-to-back (the Bench repeat
-    // loop; a REPL session) doesn't accumulate one edge table per call
-    // in the block manager waiting on GC-triggered cleanup
-    IterPin.free(w)
-    if (it > 0) IterPin.free(nodes) // it==0 → ranks still reads nodes
-    if (relative) ranks.select(col("node"), (col("rank") * nN).as("rank"))
-    else ranks
+    seeds.foreach(s => require(s.nonEmpty, "personalized pageRank needs at least one seed"))
+    VertexLoop.ranks(edges.select(col("src"), col("dst"),
+        weightCol.fold(lit(1.0))(col(_).cast("double")).as("weight")),
+      iterations, damping, relative, tolerance.getOrElse(0.0), seeds)
   }
 
   /** k-core decomposition by iterative peeling (Seidman 1983; the
@@ -175,15 +64,12 @@ object GraphAlgos {
     * symmetrized edges (both directions present) and returns each
     * surviving node with its degree INSIDE the core.
     *
-    * Scale shape: each round is one map-side-combinable degree count
-    * plus two left-semi hash joins of the edge table against the n-row
-    * survivor set — all shuffles keyed on the node id, and the edge
-    * set only ever shrinks, so per-round cost is monotone decreasing.
-    * The edge frame is pinned once per TWO peels (double-step fusion —
-    * peeling is pure, so fused steps are edge-identical) to keep the
-    * loop's plan linear at half the materializations; the only driver
-    * scalar is the per-materialization edge count used for the
-    * fixpoint test.
+    * Scale shape ([[VertexLoop.core]]): the state is each node's
+    * out-degree among surviving nodes; a round peels the nodes below
+    * `k`, and each sends the edges it takes away to its in-neighbours
+    * in one map-side-summed shuffle — one Spark job per round, and the
+    * traffic falls with the peel. The loop stops after a round that
+    * lowered no survivor's degree.
     *
     * Determinism: peeling is confluent — the fixpoint does not depend
     * on deletion order — and IDEMPOTENT past convergence, so a replay
@@ -193,40 +79,7 @@ object GraphAlgos {
     */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 12): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    var (e, eRow) = IterPin.pinProbed(edges.select(col("src"), col("dst")),
-      Seq(count(lit(1))))
-    var nEdges = eRow.getLong(0)
-    var round = 0
-    var converged = nEdges == 0
-    val fuse = IterPin.stepsPerPin(edges.sparkSession, 2)
-    while (round < maxRounds && !converged) {
-      // step fusion between materializations (the pageRank
-      // fusion): one peel is a pure degree-filter + two semi joins, so
-      // consecutive peels compose into one linear plan. Edges only
-      // shrink and peeling is idempotent past the fixpoint, so an
-      // equal edge count after a fused block implies no step in the
-      // block changed anything — the convergence test and the
-      // fixed-unroll oracle are both unaffected.
-      val steps = math.min(fuse, maxRounds - round)
-      var cur = e
-      for (_ <- 1 to steps) {
-        val keep = cur.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-          .filter(col("deg") >= k).select(col("src"))
-        cur = cur
-          .join(keep, Seq("src"), "left_semi")
-          .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
-          .select(col("src"), col("dst"))
-      }
-      // edge count folded into the pin's own job (IterPin.pinProbed)
-      val (next, nextRow) = IterPin.pinProbed(cur, Seq(count(lit(1))))
-      val nNext = nextRow.getLong(0)
-      converged = nNext == nEdges
-      IterPin.free(e) // superseded peel state — nothing references it
-      e = next
-      nEdges = nNext
-      round += steps
-    }
-    e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
+    VertexLoop.core(edges, k, maxRounds)
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007) with fully
@@ -392,6 +245,41 @@ object GraphAlgos {
   def sampledHarmonicCloseness(edges: DataFrame, pivots: Int,
                                maxRounds: Int = 10): DataFrame = {
     require(pivots >= 1, s"pivots must be >= 1, got $pivots")
+    pivotCloseness(edges, _ => pivots, maxRounds)
+  }
+
+  /** SIZE-ROUTED all-vertex harmonic closeness — the production entry
+    * the CALL surface uses: graphs at or under `exactMaxVertices`
+    * vertices run the exact regime (every vertex a pivot — the
+    * estimator's `pivots >= n` degenerate case, scale factor exactly
+    * 1.0), larger graphs get the Eppstein–Wang `pivots` estimator
+    * whose cost is ∝ pivots × graph instead of |V| × graph — a caller
+    * should get the ∝-pivots plan at scale without having to know the
+    * estimator exists. Exact stays opt-in by raising the threshold.
+    * Both regimes return (node, pivots_reached, closeness_est) and the
+    * routing decision is logged. The router reads the vertex count the
+    * estimator's pin already takes, so routing costs no job.
+    */
+  def harmonicClosenessAuto(edges: DataFrame,
+                            exactMaxVertices: Long = 10000L,
+                            pivots: Int = 16,
+                            maxRounds: Int = 10): DataFrame = {
+    require(pivots >= 1, s"pivots must be >= 1, got $pivots")
+    pivotCloseness(edges, { n =>
+      val exact = n <= exactMaxVertices
+      System.err.println(
+        s"[graft] closeness routing: n_vertices=$n regime=" +
+          (if (exact) "exact" else s"sampled(pivots=$pivots)") +
+          s" (exact.maxVertices=$exactMaxVertices)")
+      if (exact) Int.MaxValue else pivots
+    }, maxRounds)
+  }
+
+  /** [[sampledHarmonicCloseness]] with the pivot count chosen by
+    * `pivotsFor(vertex count)`.
+    */
+  private def pivotCloseness(edges: DataFrame, pivotsFor: Long => Int,
+                             maxRounds: Int): DataFrame = {
     // pin the edges once: `edges` is usually a lazy build plan, and the
     // vertex set, the pivot pick, and the BFS would otherwise each
     // re-execute it from the source (4 full builds per call measured
@@ -402,7 +290,7 @@ object GraphAlgos {
         .unionAll(e.select(col("dst").as("node"))).distinct(),
       Seq(count(lit(1))))
     val n = vRow.getLong(0)
-    val k = math.min(pivots.toLong, n)
+    val k = math.min(pivotsFor(n).toLong, n)
     val seeds = verts
       .orderBy(md5(col("node").cast("string").cast("binary")), col("node"))
       .limit(k.toInt)
@@ -417,33 +305,5 @@ object GraphAlgos {
         round(sum(lit(1.0) / col("dist")) *
             (lit(n.toDouble) / lit(k.toDouble)) + lit(1e-11), 6)
           .as("closeness_est"))
-  }
-
-  /** SIZE-ROUTED all-vertex harmonic closeness — the production entry
-    * the CALL surface uses: graphs at or under `exactMaxVertices`
-    * vertices run the exact regime (every vertex a pivot — the
-    * estimator's `pivots >= n` degenerate case, scale factor exactly
-    * 1.0), larger graphs get the Eppstein–Wang `pivots` estimator
-    * whose cost is ∝ pivots × graph instead of |V| × graph — a caller
-    * should get the ∝-pivots plan at scale without having to know the
-    * estimator exists. Exact stays opt-in by raising the threshold.
-    * Both regimes return (node, pivots_reached, closeness_est) and the
-    * routing decision is logged. The vertex-count job the router pays
-    * is one distinct count — noise next to either BFS.
-    */
-  def harmonicClosenessAuto(edges: DataFrame,
-                            exactMaxVertices: Long = 10000L,
-                            pivots: Int = 16,
-                            maxRounds: Int = 10): DataFrame = {
-    require(pivots >= 1, s"pivots must be >= 1, got $pivots")
-    val n = edges.select(col("src").as("node"))
-      .unionAll(edges.select(col("dst").as("node"))).distinct().count()
-    val exact = n <= exactMaxVertices
-    System.err.println(
-      s"[graft] closeness routing: n_vertices=$n regime=" +
-        (if (exact) "exact" else s"sampled(pivots=$pivots)") +
-        s" (exact.maxVertices=$exactMaxVertices)")
-    sampledHarmonicCloseness(edges,
-      if (exact) Int.MaxValue else pivots, maxRounds)
   }
 }

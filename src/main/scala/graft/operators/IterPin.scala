@@ -3,17 +3,19 @@ package graft.operators
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftshim.BlocksBridge
 import org.apache.spark.storage.StorageLevel
 
-/** Checkpoint discipline for iterative operators (pageRank/LPA/k-core/
-  * sssp/BFS/components/path closure): every loop pins its per-round
-  * state with an EAGER checkpoint so the plan stays linear, and frees
-  * the SUPERSEDED round's blocks once the successor is materialized —
-  * without the free, every round's full state stays pinned in the
-  * block manager until GC-triggered cleanup gets around to it, and on
-  * a shared heap (local mode; dense cluster executors) that retention
-  * was the measured memory-pressure term of the sf10 scaling study
-  * (round 12: gr02's residual 1.17 exponent isolated to one-JVM heap).
+/** Checkpoint discipline for iterative operators (the vertex-state
+  * loops of [[VertexLoop]], path expansion and closure, and the pins
+  * around them): every loop pins its per-round state with an EAGER
+  * checkpoint so the plan stays linear, and frees the SUPERSEDED
+  * round's blocks once the successor is materialized — without the
+  * free, every round's full state stays pinned in the block manager
+  * until GC-triggered cleanup gets around to it, and on a shared heap
+  * (local mode; dense cluster executors) that retention was the
+  * measured memory-pressure term of the sf10 scaling study (round 12:
+  * gr02's residual 1.17 exponent isolated to one-JVM heap).
   *
   * `pin` is `localCheckpoint` by default (executor-local blocks, no
   * I/O beyond the memory/disk tier). Set `graft.iter.checkpointDir`
@@ -63,37 +65,6 @@ private[graft] object IterPin {
 
   private val probeId = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Fused steps per materialization for the DataFrame loops
-    * (pageRank/k-core/components). Each loop composes up
-    * to this many pure update steps into ONE linear plan between
-    * checkpoints — bit-identical state by associativity/purity of the
-    * updates; what changes is bookkeeping: state materializes (and the
-    * convergence probe runs) once per BLOCK instead of once per step,
-    * so a converging loop can run up to `steps-1` extra update rounds
-    * past its fixpoint before the block-level signature sees it.
-    *
-    * `algoDefault` is the loop's MEASURED structural optimum, not a
-    * guess (round-21 regime table, OPTIMIZATION_r21.md): a step that
-    * references the incoming state MORE THAN ONCE (pageRank's
-    * twice-read contribution table, k-core's three state reads per
-    * peel) duplicates the un-pinned subtree 2-3× per fused step —
-    * 2^k/3^k plan copies that Catalyst must plan and AQE must stage
-    * even where exchange reuse executes them once — so depth 4
-    * REGRESSED those loops (gr01 warm 4.8 s @2 vs 6.6 s @4) while
-    * cutting jobs only ~20% (AQE schedules one job per exchange, and
-    * fusion does not remove exchanges). `graft.iter.stepsPerPin` overrides
-    * uniformly for experiments or cluster regimes where the
-    * wasted-rounds-past-fixpoint trade differs (a past-fixpoint round
-    * moves no new rows through the aggregates, but it still re-scans
-    * the pinned state).
-    */
-  def stepsPerPin(spark: org.apache.spark.sql.SparkSession,
-                  algoDefault: Int): Int = {
-    val v = spark.conf.get("graft.iter.stepsPerPin", algoDefault.toString).toInt
-    require(v >= 1, s"graft.iter.stepsPerPin must be >= 1, got $v")
-    v
-  }
-
   /** [[pin]] plus the round's convergence probe IN THE SAME JOB: the
     * aggregate columns ride as a `Dataset.observe` node on the frame
     * being checkpointed, so the materialization action itself fills
@@ -104,11 +75,11 @@ private[graft] object IterPin {
     * cluster scale it was a full extra pass over the round's state.
     *
     * Exactness: observed metrics are accumulator-backed, and callers
-    * consume them as ABSOLUTE values (pageRank's node count feeds the
-    * teleport term, closeness's n/k scale factor, PathExpand's row
-    * caps) — not just as stop signals — so an inflated probe corrupts
-    * results, it doesn't merely delay a fixpoint. Two inflation
-    * hazards, both closed here rather than left to a manual conf:
+    * consume them as ABSOLUTE values (closeness's n/k scale factor,
+    * PathExpand's row caps, the components regime gate) — not just as
+    * stop signals — so an inflated probe corrupts results, it doesn't
+    * merely delay a fixpoint. Two inflation hazards, both closed here
+    * rather than left to a manual conf:
     *
     *  - Stage RETRY / speculation (cluster masters): Spark applies
     *    accumulator updates once per successful task per STAGE
@@ -172,10 +143,14 @@ private[graft] object IterPin {
     case _ => ()
   }
 
-  /** [[free]] for an RDD pin (or any RDD: a plain one no-ops). */
+  /** [[free]] for an RDD pin (or any RDD: a plain one no-ops). The
+    * blocks go through [[BlocksBridge]]: `RDD.unpersist` warns on every
+    * local pin that its lineage cannot be recomputed, which is the
+    * point of freeing it; the bridge releases those without the WARN.
+    */
   def free(spark: SparkSession, rdd: RDD[_]): Unit =
     if (spark.conf.get("graft.iter.free", "true").toBoolean) {
-      if (rdd.getStorageLevel != StorageLevel.NONE) rdd.unpersist(blocking = false)
+      if (rdd.getStorageLevel != StorageLevel.NONE) BlocksBridge.unpersist(rdd)
       // reliable checkpoints live as files under
       // checkpointDir/<uuid>/rdd-<id>; getCheckpointFile is Some only
       // for the reliable kind, so the local route never enters here

@@ -44,17 +44,6 @@ object PathExpand {
 
   val DefaultMaxHops = 20
 
-  /** Edge sets at or below this row count stay on the AQE-planned path
-    * (runtime broadcast of whichever side is smaller — right for dims);
-    * above it the loop pins the hash-partitioned regime (two-long rows
-    * ≈ 16 B → ~32 MB at the threshold, past any sane broadcast limit).
-    * That regime is meant to keep the edge table from moving per hop,
-    * but under adaptive execution it still moves (see the edge-set
-    * note in the loop). Overridable per session
-    * via `graft.pathExpand.broadcastThreshold`.
-    */
-  val MaxBroadcastEdges = 2000000L
-
   /** Compile a whole shortestPath pattern (single var-length segment). */
   def compile(qc: QueryCompiler, catalog: GraphCatalog, p: PathPattern,
               params: Map[String, Any]): Frame = {
@@ -134,37 +123,21 @@ object PathExpand {
     // unions the per-type edge lists before the loop. Materialized ONCE
     // when the loop iterates — otherwise every hop re-executes the edge
     // derivation subtree (the standard iterative-graph pattern; GraphX
-    // caches its edge RDD the same way). The loop join strategy is then
-    // sized off the materialized count:
-    //  - small edge set → AQE's runtime plan (it broadcasts the tiny
-    //    side, so the loop joins are exchange-free already);
-    //  - large edge set → hash-partitioned on __src before a second
-    //    checkpoint, and every frontier batch partitioned on __node
-    //    with the same partition count. The intent is a per-hop join
-    //    that never re-shuffles the edge table, but under adaptive
-    //    execution (the default) a localCheckpoint's LogicalRDD reports
-    //    UnknownPartitioning, so the planner re-shuffles the edges on
-    //    every hop anyway: O(hops × |E|) shuffle volume, like the
-    //    unpartitioned plan. GraphAlgos' vertex loops hold the layout
-    //    in RDDs instead (VertexLoop); this loop keeps its shape.
+    // caches its edge RDD the same way). Each hop's join is planned by
+    // AQE, which broadcasts a small side; under adaptive execution a
+    // pin reports UnknownPartitioning, so no DataFrame layout keeps a
+    // large edge table from re-shuffling per hop (the whole-graph loops
+    // hold that layout in RDDs instead, VertexLoop).
     val edges0 = rel.types.map(t => edgeSet(qc, catalog, rel, t, params, carryEdges))
       .reduce(_ unionByName _)
-    val nPart = edges0.sparkSession.sessionState.conf.numShufflePartitions
     val loops = maxHopsOpt.getOrElse(DefaultMaxHops) > 1
     // edge count folded into the materialization job (IterPin.pinProbed)
-    val (materialized, edgeCount) =
+    val (edges, edgeCount) =
       if (loops) {
         val (m, r) = graft.operators.IterPin.pinProbed(edges0,
           Seq(count(lit(1))))
         (m, r.getLong(0))
       } else (edges0, 0L)
-    val threshold = edges0.sparkSession.conf
-      .get("graft.pathExpand.broadcastThreshold", MaxBroadcastEdges.toString).toLong
-    val coPartitioned = loops && edgeCount > threshold
-    val edges =
-      if (coPartitioned)
-        materialized.repartition(nPart, col("__src")).localCheckpoint()
-      else materialized
 
     val startLabel = cur.vars(fromVar) match {
       case NodeVar(l, _, _) => Some(l)
@@ -217,8 +190,7 @@ object PathExpand {
       .get("graft.pathExpand.doublingMaxClosureRows", "4000000").toLong
     // (the closure carries pair-distances only — it cannot materialize
     // witness paths, so materialization routes through the frontier)
-    val doubling = bfs && loops && !matPaths &&
-      edgeCount <= math.min(doublingThreshold, threshold)
+    val doubling = bfs && loops && !matPaths && edgeCount <= doublingThreshold
 
     if (doubling) {
       val probe = Seq(count(lit(1)), coalesce(sum(col("__hops")), lit(0L)))
@@ -344,16 +316,10 @@ object PathExpand {
           else next.dropDuplicates("__origin", "__node")
         next = next.join(visited, Seq("__origin", "__node"), "left_anti")
       }
-      // flat lineage; materializes the early-stop probe. In the
-      // large-edge regime the frontier is repartitioned on __node
-      // (skipped on the last hop); under adaptive execution the pin
-      // drops that partitioning, so the next hop's join still shuffles
-      // both sides (see the edge-set note above).
-      // early-stop/cap probe folded into the checkpoint's own job
-      val (pinned, pinnedRow) = graft.operators.IterPin.pinProbed(
-        if (coPartitioned && hop < maxHops)
-          next.repartition(nPart, col("__node"))
-        else next, Seq(count(lit(1))))
+      // flat lineage; the early-stop/cap probe rides the checkpoint's
+      // own job
+      val (pinned, pinnedRow) = graft.operators.IterPin.pinProbed(next,
+        Seq(count(lit(1))))
       frontier = pinned
       val frontierRows = pinnedRow.getLong(0)
       if (frontierRows == 0) exhausted = true

@@ -379,23 +379,6 @@ class CypherEngineSpec extends SparkSpec {
     assert(fold(fold(specials)) == fold(specials))
   }
 
-  test("co-partitioned edge regime matches broadcast-regime results") {
-    // threshold 0 forces the large-edge path (pre-partitioned edges +
-    // per-hop frontier repartition) that 100 TB edge tables take; walk
-    // counting and BFS min-hops must be identical to the AQE path
-    spark.conf.set("graft.pathExpand.broadcastThreshold", "0")
-    try {
-      val walks = rows(
-        """MATCH (a:Person {name: 'Alice'})-[:KNOWS*1..2]->(b:Person)
-           RETURN b.name AS name ORDER BY name""")
-      assert(walks.map(_.getString(0)) == Seq("Bob", "Carol"))
-      val sp = rows(
-        """MATCH p = shortestPath((a:Person {name: 'Alice'})-[:KNOWS*1..5]->(b:Person {name: 'Dan'}))
-           RETURN length(p) AS hops""")
-      assert(sp.map(_.getLong(0)) == Seq(3L))
-    } finally spark.conf.unset("graft.pathExpand.broadcastThreshold")
-  }
-
   test("path-doubling shortestPath regime matches the frontier-loop BFS") {
     // default gate routes small edge sets through min-plus doubling;
     // doublingMaxEdges=0 forces the per-origin frontier loop — both must

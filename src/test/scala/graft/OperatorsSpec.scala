@@ -2602,6 +2602,24 @@ class OperatorsSpec extends SparkSpec {
       edges.select(col("src"), col("dst")), empty, maxRounds = 3).count() == 0L)
   }
 
+  test("sssp: double weights are cast to long (truncated); ids must be integral") {
+    import graft.operators.GraphAlgos
+    // 1→2 (w5.9), 1→3 (w1.2), 3→2 (w1.7) truncate to 5, 1, 1: 2 via 3
+    // at 2 (rounding would give 3, raw double bits a huge number)
+    val edges = Seq((1L, 2L, 5.9), (1L, 3L, 1.2), (3L, 2L, 1.7))
+      .toDF("src", "dst", "weight")
+    val seeds = Seq(Tuple1(1L)).toDF("node")
+    val d = GraphAlgos.sssp(edges, seeds, maxRounds = 10).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(d == Map(1L -> 0L, 2L -> 2L, 3L -> 1L))
+    val floats = edges.withColumn("weight", col("weight").cast("float"))
+    assert(GraphAlgos.sssp(floats, seeds, maxRounds = 10).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap == d)
+    intercept[IllegalArgumentException] {
+      GraphAlgos.sssp(edges.withColumn("src", col("src").cast("double")), seeds, 10)
+    }
+  }
+
   test("centroid drift: self-drift is identity; a shifted class moves; " +
     "one-sided labels surface with null drift") {
     import graft.operators.Similarity
@@ -3162,12 +3180,13 @@ class OperatorsSpec extends SparkSpec {
       .flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst")
     val wedges = edges.withColumn("weight", col("src") + col("dst"))
     val seeds = Seq(1L, 4L).toDF("node")
-    // the RDD-state loops (sssp, LPA, BFS) pin through the same route
+    // the RDD-state loops (sssp, LPA, BFS, kCore) pin through the same route
     val vertexLoops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
       "sssp" -> (() => GraphAlgos.sssp(wedges, seeds, maxRounds = 6)),
       "labelPropagation" -> (() => GraphAlgos.labelPropagation(edges, iterations = 6)),
       "multiSourceHopDistances" ->
-        (() => GraphAlgos.multiSourceHopDistances(edges, seeds, maxRounds = 6)))
+        (() => GraphAlgos.multiSourceHopDistances(edges, seeds, maxRounds = 6)),
+      "kCore" -> (() => GraphAlgos.kCore(edges, k = 2, maxRounds = 6)))
     val local = GraphAlgos.pageRank(edges, iterations = 6)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val localVertex = vertexLoops.map { case (_, run) =>
@@ -3268,8 +3287,12 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
-  test("sssp, BFS and label propagation run one Spark job per round plus " +
-    "a fixed set-up, and the same count on every run") {
+  /** Asserts that each loop, run at 1, 2 and 4 rounds (a cap it always
+    * reaches), schedules rounds + one fixed set-up jobs, the same count
+    * on two runs; jobs are charged per job group.
+    */
+  private def assertJobPerRound(
+      loops: Seq[(String, Int => org.apache.spark.sql.DataFrame)]): Unit = {
     import graft.operators.IterPin
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.graftshim.ListenerBridge
@@ -3280,15 +3303,6 @@ class OperatorsSpec extends SparkSpec {
         Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
           .foreach(g => jobs.merge(g, 1, _ + _))
     }
-    // a path 1 -> ... -> 9 never converges within 4 rounds, and a 2-cycle
-    // swaps its labels every round: each loop runs exactly its cap
-    val path = (1L to 8L).map(i => (i, i + 1)).toDF("src", "dst")
-    val flip = Seq((0L, 1L), (1L, 0L)).toDF("src", "dst")
-    val seeds = Seq(1L).toDF("node")
-    val loops: Seq[(String, Int => org.apache.spark.sql.DataFrame)] = Seq(
-      "sssp" -> (k => GraphAlgos.sssp(path.withColumn("weight", lit(2L)), seeds, k)),
-      "bfs" -> (k => GraphAlgos.multiSourceHopDistances(path, seeds, k)),
-      "lpa" -> (k => GraphAlgos.labelPropagation(flip, k)))
     sc.addSparkListener(listener)
     try loops.foreach { case (name, run) =>
       val perRounds = Seq(1, 2, 4).map { k =>
@@ -3307,6 +3321,39 @@ class OperatorsSpec extends SparkSpec {
       assert(setup.size == 1 && setup.head >= 0,
         s"$name: jobs minus rounds is not one fixed set-up: $perRounds")
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("sssp, BFS and label propagation run one Spark job per round plus " +
+    "a fixed set-up, and the same count on every run") {
+    // a path 1 -> ... -> 9 never converges within 4 rounds, and a 2-cycle
+    // swaps its labels every round: each loop runs exactly its cap
+    val path = (1L to 8L).map(i => (i, i + 1)).toDF("src", "dst")
+    val flip = Seq((0L, 1L), (1L, 0L)).toDF("src", "dst")
+    val seeds = Seq(1L).toDF("node")
+    assertJobPerRound(Seq(
+      "sssp" -> (k => GraphAlgos.sssp(path.withColumn("weight", lit(2L)), seeds, k)),
+      "bfs" -> (k => GraphAlgos.multiSourceHopDistances(path, seeds, k)),
+      "lpa" -> (k => GraphAlgos.labelPropagation(flip, k))))
+  }
+
+  test("pageRank, kCore and distributed components run one Spark job per " +
+    "round plus a fixed set-up, and the same count on every run") {
+    def sym(n: Long) = (1L until n).flatMap(i => Seq((i, i + 1), (i + 1, i)))
+      .toDF("src", "dst")
+    // pageRank runs its iterations; the 2-core of a 9-node path peels
+    // one node from each end per round (5 rounds to empty); pointer
+    // jumping on a 64-node path still relabels its far end in round 4
+    val prev = spark.conf.getOption("graft.components.driverMaxEdges")
+    spark.conf.set("graft.components.driverMaxEdges", "0")
+    try assertJobPerRound(Seq(
+      "pageRank" -> (k => GraphAlgos.pageRank(sym(9), iterations = k)),
+      "kCore" -> (k => GraphAlgos.kCore(sym(9), k = 2, maxRounds = k)),
+      "components" -> (k => Components.connectedComponents(
+        sym(64).select(col("src").as("a"), col("dst").as("b")), "a", "b", maxIter = k))))
+    finally prev match {
+      case Some(v) => spark.conf.set("graft.components.driverMaxEdges", v)
+      case None => spark.conf.unset("graft.components.driverMaxEdges")
+    }
   }
 }
 

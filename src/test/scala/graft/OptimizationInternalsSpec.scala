@@ -60,37 +60,6 @@ class OptimizationInternalsSpec extends SparkSpec {
     }
   }
 
-  test("iterative step fusion is result-identical across stepsPerPin 1/2/4") {
-    import graft.operators.{Components, GraphAlgos}
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
-      (2L, 1L), (3L, 2L), (4L, 3L), (5L, 4L), (6L, 5L), (7L, 8L), (8L, 7L),
-      // a triangle so the 2-core is non-empty
-      (10L, 11L), (11L, 12L), (12L, 10L),
-      (11L, 10L), (12L, 11L), (10L, 12L))
-      .toDF("src", "dst")
-    val wedges = edges.withColumn("weight", (col("src") + col("dst")) % 5 + 1)
-    val seeds = Seq(1L).toDF("node")
-    def runAll(): (Set[org.apache.spark.sql.Row], Set[org.apache.spark.sql.Row],
-                   Set[org.apache.spark.sql.Row], Set[org.apache.spark.sql.Row],
-                   Set[org.apache.spark.sql.Row]) = (
-      GraphAlgos.pageRank(edges, iterations = 5).collect().toSet,
-      GraphAlgos.labelPropagation(edges, iterations = 3).collect().toSet,
-      GraphAlgos.sssp(wedges, seeds, maxRounds = 15).collect().toSet,
-      GraphAlgos.kCore(edges, k = 2, maxRounds = 12).collect().toSet,
-      locally {
-        // force the distributed label-propagation loop (not union-find)
-        spark.conf.set("graft.components.driverMaxEdges", "0")
-        try Components.connectedComponents(edges, "src", "dst").collect().toSet
-        finally spark.conf.unset("graft.components.driverMaxEdges")
-      })
-    val perSteps = Seq("1", "2", "4").map { s =>
-      spark.conf.set("graft.iter.stepsPerPin", s)
-      try runAll() finally spark.conf.unset("graft.iter.stepsPerPin")
-    }
-    assert(perSteps(0) == perSteps(1), "stepsPerPin 1 vs 2 diverged")
-    assert(perSteps(1) == perSteps(2), "stepsPerPin 2 vs 4 diverged")
-  }
-
   test("Par.spreadPinned materializes a fired spread once, identity otherwise") {
     val par = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val one = spark.range(0, 100, 1, numPartitions = 1).toDF("id")

@@ -461,10 +461,10 @@ class PlanSpec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // the corpus-sized operand GraphAlgos.pageRank pins once:
-      // edges ⋈ per-src outdegree — over a bucketed table BOTH the
-      // aggregate and the self-join run on co-located buckets, so the
-      // one-off build never shuffles the edge table at all
+      // edges ⋈ per-src outdegree (the weight split pageRank's
+      // adjacency holds) — over a bucketed table BOTH the aggregate and
+      // the self-join run on co-located buckets, so the build never
+      // shuffles the edge table at all
       val e = graft.etl.BucketedGraphStore.table(spark, "bgs_pr_edges")
       val od = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
       val w = e.join(od, Seq("src"))

@@ -454,6 +454,33 @@ class PropertySpec extends AnyFunSuite {
       .collect().foreach(x => assert(math.abs(x.getDouble(1) - 0.5) < 1e-12))
   }
 
+  test("kCore matches an in-memory synchronous peel on random digraphs") {
+    val caseGen: Gen[(Seq[(Long, Long)], Int, Int)] = for {
+      nE <- Gen.chooseNum(0, 30)
+      es <- Gen.listOfN(nE, for {
+        a <- Gen.chooseNum(0L, 9L); b <- Gen.chooseNum(0L, 9L)
+      } yield (a, b)) // asymmetric and parallel edges, self-loops all arise
+      k <- Gen.chooseNum(1, 3)
+      rounds <- Gen.chooseNum(0, 5)
+    } yield (es, k, rounds)
+    forAll(caseGen, trials = 10) { case (edges, k, rounds) =>
+      import spark.implicits._
+      // reference: the edge-set peel — a round keeps the edges whose two
+      // ends both have out-degree >= k (counting every edge row)
+      var es = edges
+      for (_ <- 1 to rounds) {
+        val deg = es.groupBy(_._1).view.mapValues(_.size).toMap
+        def keep(v: Long) = deg.getOrElse(v, 0) >= k
+        es = es.filter { case (a, b) => keep(a) && keep(b) }
+      }
+      val want = es.groupBy(_._1).view.mapValues(_.size.toLong).toMap
+      val got = graft.operators.GraphAlgos
+        .kCore(edges.toDF("src", "dst"), k, maxRounds = rounds)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == want, s"k=$k rounds=$rounds; edges=$edges")
+    }
+  }
+
   test("bigram LM quality bins match an in-memory replay on random corpora") {
     val word = Gen.oneOf("a", "b", "c", "d")
     val docGen: Gen[String] = for {
