@@ -1,5 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
+
+import graft.operators.IterPin
+
 object Bench {
   def main(args: Array[String]): Unit = {
     // optional arg: comma-separated query names (dev aid for warm
@@ -67,7 +70,7 @@ object Bench {
         // paid OUTSIDE the next query's timed region — without this,
         // queries sequenced after the dedup block absorb its GC pauses
         // (observed 5x swings on otherwise-steady plans)
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+        IterPin.freeAll(spark)
         System.gc()
         Thread.sleep(200) // let the context cleaner drain off the timed path
         t

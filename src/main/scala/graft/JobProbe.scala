@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
+import graft.operators.IterPin
+
 /** Dev aid for the optimization rounds: run declared queries under a
   * SparkListener and report the SCHEDULED-JOB breakdown — job count,
   * stage count, task count, wall seconds — and the number of generated
@@ -67,7 +69,7 @@ object JobProbe {
         println(f"[jobprobe] $name rep=$rep sec=$dt%.3f jobs=${jobs.get}" +
           s" stages=${stages.get} tasks=${tasks.get}" +
           s" compiles=${compiles.getCount - compiles0}")
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+        IterPin.freeAll(spark)
         System.gc()
       }
     }

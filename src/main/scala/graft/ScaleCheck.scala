@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.IterPin
+
 /** Scale-regime validation (round-4 judge ask #4): up-sample the
   * driver testdata to ~sf1.0 (10× sf0.1 — 50k documents / 20k
   * embeddings, plus a 4M-edge random graph), run the dedup / ANN /
@@ -74,7 +76,7 @@ object ScaleCheck {
           val t0 = System.nanoTime()
           val n = body
           val s = (System.nanoTime() - t0) / 1e9
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+          IterPin.freeAll(spark)
           System.gc()
           (s, n)
         }
@@ -83,7 +85,7 @@ object ScaleCheck {
       } catch { case e: Throwable =>
         errors(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(160)}"
         println(s"[scale] $name FAILED: ${errors(name)}")
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+        IterPin.freeAll(spark)
         System.gc()
       }
     }

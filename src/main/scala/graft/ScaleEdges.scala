@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.operators.IterPin
+
 /** Scaling-exponent harness for the dedup SURVIVOR-selection paths
   * (VERDICT r16 item 3): times the connectivity-thin edge operators
   * and the router's two arms on a ScaleData corpus so their absolute
@@ -69,7 +71,7 @@ object ScaleEdges {
         val t0 = System.nanoTime()
         val n = body
         val s = (System.nanoTime() - t0) / 1e9
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+        IterPin.freeAll(spark)
         System.gc()
         (s, n)
       }
@@ -95,8 +97,8 @@ object ScaleEdges {
     // the router itself (sampling aggregate + whichever arm it picks;
     // the routing line on stderr records the decision + statistics)
     timed("ngram_auto_routed")(
-      Dedup.ngramJaccardDedupEdgesAuto(docs, "doc_id", "text", n = 3,
-        threshold = 0.8, exhaustive = false).count())
+      Dedup.ngramJaccardDedupEdgesAutoLedger(docs, "doc_id", "text", n = 3,
+        threshold = 0.8, exhaustive = false)._1.count())
 
     // The three thin survivor arms r17 measured only BY ANALOGY
     // (VERDICT r17 item 1), at their wired configurations. The fuzzy
@@ -150,8 +152,8 @@ object ScaleEdges {
     // DIVERSE corpora cross it harder — the stderr routing line +
     // this wall record what the guard buys vs the raw simhash arm
     timed("simhash_auto_routed")(
-      Dedup.simHashDedupEdgesAuto(docs, "doc_id", "text",
-        maxHamming = 6).count())
+      Dedup.simHashDedupEdgesAutoLedger(docs, "doc_id", "text",
+        maxHamming = 6)._1.count())
     // embedding near-dup thin edges (dd05's threshold/planes/tables):
     // replicas carry IDENTICAL vectors, so each base vector is an exact
     // clone group of size `replicas` — star edges linear in replicas,
@@ -171,15 +173,15 @@ object ScaleEdges {
     // (the stderr routing line + this wall record what the guard buys
     // vs the raw hyperplane arm)
     timed("embedding_auto_routed")(
-      Dedup.embeddingNearDupDedupEdgesAuto(emb, "vec_id", "embedding",
-        threshold = 0.4, planes = 6, tables = 8).count())
+      Dedup.embeddingNearDupDedupEdgesAutoLedger(emb, "vec_id", "embedding",
+        threshold = 0.4, planes = 6, tables = 8)._1.count())
     // the fuzzy tier's symmetric-delete candidate mass (the regime
     // audit's control arm: this key space GROWS with the corpus, so
     // mass should track true near-dup structure, not a bucket count)
     timed("fuzzy_candidates")(
       Dedup.edCandidateStats(cust, "c_custkey", "c_name", maxDist = 1)
         .head().getAs[Long]("candidate_pairs"))
-    // the embedding router's IVF fallback arm on its own — what the
+    // the embedding router's IVF arm on its own — what the
     // route buys when the hyperplane arm's fixed bucket space goes
     // quadratic (same exact-cosine predicate, cluster-local blocking)
     timed("embedding_ivf_edges")(

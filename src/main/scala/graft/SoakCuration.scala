@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.operators.IterPin
+
 /** End-to-end curation SOAK at scale (VERDICT r17 item 3): the
   * cu01/tx13 declarative stage chain — quality_gate → langid_filter →
   * exact_dedup → minhash_dedup → decontaminate → token_budget — run
@@ -76,7 +78,7 @@ object SoakCuration {
       CurationStages.apply(spark, in, "doc_id", "text", st)
         .write.parquet(next)
       val secs = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      IterPin.freeAll(spark)
       val rows = spark.read.parquet(next).count()
       val line =
         s""""$name":{"secs":${f"$secs%.1f"},"rows_in":$prevRows,""" +

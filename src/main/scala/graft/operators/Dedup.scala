@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Deduplication operators for large-scale text/embedding corpora.
   *
@@ -288,22 +289,9 @@ object Dedup {
     * deleting the first's rows. Default unset: stderr only.
     */
   private def capHotBuckets(banded: DataFrame, keys: Seq[String],
-                            opName: String,
-                            capOverride: Option[Int] = None): DataFrame = {
+                            opName: String): DataFrame = {
     val conf = banded.sparkSession.conf
-    // capOverride (router-engaged, e.g. simHashDedupEdgesAutoLedger's
-    // "cap" fallback) composes with the session conf as the MIN of the
-    // two: the router's budget-derived cap is a per-operator decision
-    // with its own ledger row, but a session-wide graft.lsh.bucketCap
-    // is a global safety bound an operator set deliberately — a router
-    // must be able to TIGHTEN it, never to silently loosen it
-    val sessionCap = conf.getOption("graft.lsh.bucketCap").map(_.toInt)
-    val cap = (capOverride, sessionCap) match {
-      case (Some(o), Some(s)) => math.min(o, s)
-      case (Some(o), None)    => o
-      case (None, Some(s))    => s
-      case (None, None)       => Int.MaxValue
-    }
+    val cap = conf.get("graft.lsh.bucketCap", Int.MaxValue.toString).toInt
     require(cap >= 0, s"graft.lsh.bucketCap must be >= 0, got $cap")
     if (cap == Int.MaxValue) banded
     else {
@@ -569,26 +557,22 @@ object Dedup {
     * DISTINCT fingerprint (the lshBandPairs collapse — exact, since
     * block values and hamming are pure functions of the fingerprint),
     * so a boilerplate mega-cluster costs one row per bucket, not a
-    * quadratic self-join. `hotBucketWarn` (opt-in): log any
-    * (blk, bval) bucket holding more than this many DISTINCT
-    * fingerprints before the self-join runs — see the guard comment
-    * below and [[simHashBucketStats]].
+    * quadratic self-join. [[simHashBucketStats]] shows the buckets a
+    * near-identical-but-DISTINCT flood still makes hot.
     *
     * SCALE CEILING on DIVERSE corpora: the pigeonhole bucket space is
     * FIXED (~832 (blk, bval) buckets at 48-bit/h=6), so candidate mass
     * is Θ(n²) in DISTINCT fingerprints — the collapse only absorbs
     * exact clones. For survivor selection, go through
     * [[simHashDedupEdgesAutoLedger]], whose one-aggregate pre-flight
-    * routes over-budget corpora to the diversity-safe minhash tier or
-    * auto-engages the audited bucket cap. The pairs form has no routed
-    * equivalent because its OUTPUT is the pair set itself — quadratic
-    * whenever the near-dup truth is; measure with
+    * routes over-budget corpora to the diversity-safe minhash tier. The
+    * pairs form has no routed equivalent because its OUTPUT is the pair
+    * set itself — quadratic whenever the near-dup truth is; measure with
     * [[simHashCandidateStats]] before running it at scale.
     */
   def simHashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int, hotBucketWarn: Int = Int.MaxValue): DataFrame = {
-    val (members, repPairs) =
-      simHashRepPairs(df, idCol, textCol, maxHamming, hotBucketWarn)
+                   maxHamming: Int): DataFrame = {
+    val (members, repPairs) = simHashRepPairs(df, idCol, textCol, maxHamming)
     expandRepPairs(members, Seq("__g"), repPairs,
       Seq(col("hamming")), Seq(lit(0).as("hamming")))
   }
@@ -605,10 +589,8 @@ object Dedup {
     * on a diverse corpus.
     */
   def simHashDedupEdges(df: DataFrame, idCol: String, textCol: String,
-                        maxHamming: Int,
-                        hotBucketWarn: Int = Int.MaxValue): DataFrame = {
-    val (members, repPairs) =
-      simHashRepPairs(df, idCol, textCol, maxHamming, hotBucketWarn)
+                        maxHamming: Int): DataFrame = {
+    val (members, repPairs) = simHashRepPairs(df, idCol, textCol, maxHamming)
     thinComponentEdges(members, Seq("__g"), repPairs)
   }
 
@@ -636,36 +618,22 @@ object Dedup {
     * collapsed pigeonhole blocking, no join — measures the EXACT
     * candidate mass the verification stage would pay. Within
     * `candidateBudget`, the plain [[simHashDedupEdges]] runs
-    * (bit-identical, spec-gated). Over budget, `fallback` picks the
-    * scale-safe arm:
-    *
-    *  - `"minhash"` (default): route to [[minHashLshDedupEdges]] at
-    *    (`shingleSize`, `numHashes`, `bands`, `minEstJaccard`). The
-    *    results are a DIFFERENT near-dup relation (estimated
-    *    shingle-Jaccard edges, not fingerprint-hamming edges) — both
-    *    are survivor-selection edge graphs, but pairs near either cut
-    *    can differ, which is exactly why the decision is returned as
-    *    an auditable LEDGER row rather than made silently, and why the
-    *    routed form carries its own oracle gate (dd32) rather than
-    *    inheriting dd03's. MEASURED shift at the wired defaults
-    *    (sf1_div diverse corpus — artifacts/r20/
-    *    route_overlap_sf1_div.json): est-J ≥ 0.9 pairs are 97%
-    *    hamming-true but cover only 0.56% of the hamming ≤ 6 pair set
-    *    (42.9k vs 7.49M pairs; survivor sets 29,087 vs 1,970 of 50k,
-    *    Jaccard 0.068) — the route is a TIGHTER merge radius, so
-    *    lower `minEstJaccard` if the hamming relation's looser merge
-    *    was load-bearing.
-    *  - `"cap"`: stay on the simhash relation but auto-engage the
-    *    hot-bucket cap, bounding candidate mass at ~buckets × C(cap, 2)
-    *    independent of n. `fallbackBucketCap` = -1 (default) DERIVES
-    *    the cap from the measurements the pre-flight already paid for:
-    *    the largest c with buckets · C(c, 2) <= candidateBudget — the
-    *    budget keeps one meaning on both fallbacks instead of the cap
-    *    being a second magic number; pass an explicit cap to override.
-    *    The trade is RECALL (pairs connected ONLY through a dropped
-    *    bucket are lost), with the same stderr + optional
-    *    `graft.lsh.bucketCapLedgerDir` audit trail as every capped
-    *    join.
+    * (bit-identical, spec-gated). Over budget, it routes to
+    * [[minHashLshDedupEdges]] at (`shingleSize`, `numHashes`, `bands`,
+    * `minEstJaccard`). The results are a DIFFERENT near-dup relation
+    * (estimated shingle-Jaccard edges, not fingerprint-hamming edges) —
+    * both are survivor-selection edge graphs, but pairs near either cut
+    * can differ, which is exactly why the decision is returned as an
+    * auditable LEDGER row rather than made silently, and why the routed
+    * form carries its own oracle gate (dd32) rather than inheriting
+    * dd03's. MEASURED shift at the wired defaults (sf1_div diverse
+    * corpus — artifacts/r20/route_overlap_sf1_div.json): est-J ≥ 0.9
+    * pairs are 97% hamming-true but cover only 0.56% of the hamming ≤ 6
+    * pair set (42.9k vs 7.49M pairs; survivor sets 29,087 vs 1,970 of
+    * 50k, Jaccard 0.068) — the route is a TIGHTER merge radius, so lower
+    * `minEstJaccard` if the hamming relation's looser merge was
+    * load-bearing. A session-wide `graft.lsh.bucketCap` still applies to
+    * the simhash arm's blocking.
     *
     * The same guarded-quadratic eligibility discipline as the
     * clone-density router ([[ngramJaccardDedupEdgesAutoLedger]]) and
@@ -673,92 +641,65 @@ object Dedup {
     * pycypher/leapfrog_triejoin.py:421-461); the pre-flight costs one
     * linear fingerprint pass — noise against either arm's join.
     *
-    * Ledger row: (route, fallback, distinct_fingerprints, buckets,
-    * candidate_pairs, candidate_budget, max_hamming, bucket_cap —
-    * the engaged per-bucket cap on the "cap" route, 0 otherwise).
+    * Ledger row: (route, distinct_fingerprints, buckets,
+    * candidate_pairs, candidate_budget, max_hamming).
     */
   def simHashDedupEdgesAutoLedger(df: DataFrame, idCol: String,
                                   textCol: String, maxHamming: Int,
                                   candidateBudget: Long = 2000000000L,
-                                  fallback: String = "minhash",
                                   shingleSize: Int = 3, numHashes: Int = 64,
                                   bands: Int = 16,
-                                  minEstJaccard: Double = 0.9,
-                                  fallbackBucketCap: Int = -1)
+                                  minEstJaccard: Double = 0.9)
   : (DataFrame, DataFrame) = {
     require(candidateBudget >= 0L,
       s"candidateBudget must be >= 0, got $candidateBudget")
-    require(fallback == "minhash" || fallback == "cap",
-      s"""fallback must be "minhash" or "cap", got "$fallback"""")
-    require(fallbackBucketCap >= -1,
-      s"fallbackBucketCap must be >= 0, or -1 to derive it from the " +
-        s"budget, got $fallbackBucketCap")
     // validated before routing so every route fails identically
     require(minEstJaccard <= 1.0,
       "minEstJaccard must be <= 1.0 (intra-clone pairs sit at exactly " +
         s"1.0, so a higher cut would drop whole clone groups), got $minEstJaccard")
-    val spark = df.sparkSession
     val st = simHashCandidateStats(df, idCol, textCol, maxHamming).head()
-    val (nFp, buckets, cand) =
-      (st.getLong(0), st.getLong(1), st.getLong(2))
-    val over = cand > candidateBudget
-    val route = if (!over) "simhash" else fallback
-    // the engaged per-bucket cap on the "cap" route: explicit, or
-    // derived as the largest c with buckets · C(c, 2) <= budget (so
-    // the capped join's worst-case candidate mass honors the SAME
-    // budget the routing decision used), never below 1
-    val engagedCap: Int =
-      if (route != "cap") 0
-      else if (fallbackBucketCap >= 0) fallbackBucketCap
-      else math.max(1L, ((1.0 + math.sqrt(
-        1.0 + 8.0 * candidateBudget / math.max(1L, buckets))) / 2.0).toLong)
-        .min(Int.MaxValue.toLong).toInt
-    System.err.println(
-      s"[graft] simhash dedup-edges routing: route=$route " +
-        s"candidate_pairs=$cand (budget $candidateBudget) " +
-        s"distinct_fingerprints=$nFp buckets=$buckets " +
-        s"max_hamming=$maxHamming" +
-        (if (route == "cap") s" bucket_cap=$engagedCap" +
-          (if (fallbackBucketCap < 0) " (derived)" else "")
-         else ""))
-    val edges = route match {
-      case "simhash" =>
-        simHashDedupEdges(df, idCol, textCol, maxHamming)
-      case "minhash" =>
-        minHashLshDedupEdges(df, idCol, textCol, shingleSize, numHashes,
-          bands, minEstJaccard)
-      case "cap" =>
-        val (members, repPairs) = simHashRepPairs(df, idCol, textCol,
-          maxHamming, hotBucketWarn = Int.MaxValue,
-          capOverride = Some(engagedCap))
-        thinComponentEdges(members, Seq("__g"), repPairs)
-    }
-    import spark.implicits._
-    val ledger = Seq((route, fallback, nFp, buckets, cand,
-        candidateBudget, maxHamming, engagedCap))
-      .toDF("route", "fallback", "distinct_fingerprints", "buckets",
-        "candidate_pairs", "candidate_budget", "max_hamming",
-        "bucket_cap")
-    (edges, ledger)
+    val cand = st.getLong(2)
+    val route = if (cand > candidateBudget) "minhash" else "simhash"
+    val led = ledger(df.sparkSession, "simhash dedup-edges",
+      "route" -> route, "distinct_fingerprints" -> st.getLong(0),
+      "buckets" -> st.getLong(1), "candidate_pairs" -> cand,
+      "candidate_budget" -> candidateBudget, "max_hamming" -> maxHamming)
+    val edges =
+      if (route == "simhash") simHashDedupEdges(df, idCol, textCol, maxHamming)
+      else minHashLshDedupEdges(df, idCol, textCol, shingleSize, numHashes,
+        bands, minEstJaccard)
+    (edges, led)
   }
 
-  /** [[simHashDedupEdgesAutoLedger]] without the ledger — the
-    * edges-only surface, for callers that only read the stderr line.
+  /** The one stderr line of a routing decision:
+    * `[graft] <kind> routing: name=value …`.
     */
-  def simHashDedupEdgesAuto(df: DataFrame, idCol: String, textCol: String,
-                            maxHamming: Int,
-                            candidateBudget: Long = 2000000000L,
-                            fallback: String = "minhash",
-                            shingleSize: Int = 3, numHashes: Int = 64,
-                            bands: Int = 16, minEstJaccard: Double = 0.9,
-                            fallbackBucketCap: Int = -1): DataFrame =
-    simHashDedupEdgesAutoLedger(df, idCol, textCol, maxHamming,
-      candidateBudget, fallback, shingleSize, numHashes, bands,
-      minEstJaccard, fallbackBucketCap)._1
+  private def logRouting(kind: String, fields: Seq[(String, Any)]): Unit =
+    System.err.println(s"[graft] $kind routing: " +
+      fields.map { case (k, v) => s"$k=$v" }.mkString(" "))
 
-  /** The shared blocking + verification core of the two simhash forms:
-    * (members = (__g = fingerprint, id), verified rep pairs).
+  /** The one-row routing LEDGER of a dedup router, logged through
+    * [[logRouting]] from the same fields. Column types follow the values
+    * as `Seq(tuple).toDF` types them: String nullable; Long, Int, Double
+    * and Boolean not.
     */
+  private def ledger(spark: SparkSession, kind: String,
+                     fields: (String, Any)*): DataFrame = {
+    logRouting(kind, fields)
+    val schema = StructType(fields.map { case (k, v) =>
+      val t = v match {
+        case _: String => StringType
+        case _: Long => LongType
+        case _: Int => IntegerType
+        case _: Double => DoubleType
+        case _: Boolean => BooleanType
+      }
+      StructField(k, t, nullable = t == StringType)
+    })
+    spark.createDataFrame(
+      java.util.Collections.singletonList(Row(fields.map(_._2): _*)), schema)
+  }
+
   /** Pigeonhole split of the 48-bit fingerprint space into
     * `maxHamming + 1` blocks: (widths, offsets). Any pair within
     * `maxHamming` agrees on at least one whole block (Manku et al.).
@@ -773,9 +714,9 @@ object Dedup {
     (widths, widths.scanLeft(0)(_ + _).init)
   }
 
-  /** One row of (blk, bval) per pigeonhole block per distinct
-    * fingerprint — the candidate-generation frame both simhash forms
-    * self-join.
+  /** One row of (sim, blk, bval) per pigeonhole block per row of
+    * `groups` — over distinct fingerprints, the candidate-generation
+    * frame both simhash forms self-join.
     */
   private def simHashBlockedReps(groups: DataFrame,
                                  maxHamming: Int): DataFrame = {
@@ -796,7 +737,7 @@ object Dedup {
     * collapse + pigeonhole split [[simHashPairs]] uses (so the number
     * is the operator's true candidate mass, not an estimate). Costs
     * one aggregate over the blocked reps — no join. The scale-study
-    * companion of the hotBucketWarn guard: candidate growth, not
+    * companion of [[simHashBucketStats]]: candidate growth, not
     * output growth, is what moved simhash's per-output-row cost at
     * sf10 (PERFORMANCE.md round 18).
     */
@@ -813,10 +754,11 @@ object Dedup {
         col("candidate_pairs"))
   }
 
+  /** The shared blocking + verification core of the two simhash forms:
+    * (members = (__g = fingerprint, id), verified rep pairs).
+    */
   private def simHashRepPairs(df: DataFrame, idCol: String, textCol: String,
-                              maxHamming: Int, hotBucketWarn: Int,
-                              capOverride: Option[Int] = None)
-  : (DataFrame, DataFrame) = {
+                              maxHamming: Int): (DataFrame, DataFrame) = {
     val (widths, offsets) = simHashBlocks(maxHamming)
     val nBlocks = widths.size
     val sigDf = simHashes(df, idCol, textCol)
@@ -833,7 +775,7 @@ object Dedup {
     val members = sigDf.select(col("sim").as("__g"), col("id"))
     val blocked = simHashBlockedReps(groups, maxHamming)
     val capped =
-      capHotBuckets(blocked, Seq("blk", "bval"), "simHashPairs", capOverride)
+      capHotBuckets(blocked, Seq("blk", "bval"), "simHashPairs")
     val l = capped.select(col("blk"), col("bval"), col("sim").as("sim1"))
     val r = capped.select(col("blk"), col("bval"), col("sim").as("sim2"))
     // emit each pair ONLY from its first agreeing block (all earlier
@@ -847,26 +789,6 @@ object Dedup {
       (0 until b).map(a => blockVal(col("sim1"), a) =!= blockVal(col("sim2"), a))
         .foldLeft(col("blk") === b)(_ && _)
     }.reduce(_ || _)
-    // Hot-bucket observability guard (opt-in, like Wcoj.maxAdjDegree):
-    // a near-identical-but-DISTINCT flood can still put m distinct
-    // fingerprints into one (blk, bval) bucket, making that bucket's
-    // self-join quadratic — inherent to candidate generation (the true
-    // near-dup pairs ARE quadratic in the cluster), but the failure
-    // mode should be a NAMED log line, not an anonymous straggler
-    // task. Exact clones no longer count here (collapsed above). Costs
-    // one small aggregate over the blocked frame; results are never
-    // altered.
-    if (hotBucketWarn != Int.MaxValue) {
-      val hot = blocked.groupBy(col("blk"), col("bval"))
-        .agg(count(lit(1)).as("__n")).filter(col("__n") > hotBucketWarn)
-        .orderBy(col("__n").desc).limit(20).collect()
-      hot.foreach { h =>
-        System.err.println(
-          s"[graft] simHashPairs hot bucket: blk=${h.get(0)} bval=${h.get(1)} " +
-            s"distinct_fingerprints=${h.get(2)} (> $hotBucketWarn; " +
-            "self-join is ~n^2/2 candidate pairs)")
-      }
-    }
     val repPairs = l.join(r, Seq("blk", "bval"))
       .filter(col("sim1") < col("sim2"))
       .filter(firstAgree)
@@ -885,14 +807,8 @@ object Dedup {
     */
   def simHashBucketStats(df: DataFrame, idCol: String, textCol: String,
                          maxHamming: Int): DataFrame = {
-    val (widths, offsets) = simHashBlocks(maxHamming)
-    simHashes(df, idCol, textCol).select(col("sim"),
-      explode(array(widths.indices.map { b =>
-        struct(lit(b).as("blk"),
-          shiftrightunsigned(col("sim"), offsets(b))
-            .bitwiseAND((1L << widths(b)) - 1).as("bval"))
-      }: _*)).as("kb"))
-      .groupBy(col("kb.blk").as("blk"), col("kb.bval").as("bval"))
+    simHashBlockedReps(simHashes(df, idCol, textCol), maxHamming)
+      .groupBy(col("blk"), col("bval"))
       .agg(count(lit(1)).as("rows"),
         countDistinct(col("sim")).as("distinct_fingerprints"))
       .orderBy(col("rows").desc)
@@ -1185,7 +1101,6 @@ object Dedup {
       s"sampleSixteenths must be in [1, 16], got $sampleSixteenths")
     require(maxSampledGroup >= 2L,
       s"maxSampledGroup must be >= 2 (1 would route every corpus thin), got $maxSampledGroup")
-    val spark = df.sparkSession
     val sampled = df
       .filter(pmod(xxhash64(col(idCol)), lit(16)) < lit(sampleSixteenths))
     // one extra groupBy level vs the old docs/sets aggregate buys the
@@ -1206,13 +1121,12 @@ object Dedup {
     val (docs, sets, maxGroup) = (fp.getLong(0), fp.getLong(1), fp.getLong(2))
     val ratio = if (docs == 0L) 0.0 else 1.0 - sets.toDouble / docs
     val thin = ratio >= cloneRatioThreshold || maxGroup >= maxSampledGroup
-    val route = if (thin) "thin" else "pairs"
-    System.err.println(
-      s"[graft] ngram dedup-edges routing: route=$route " +
-        s"clone_ratio=$ratio (threshold $cloneRatioThreshold) " +
-        s"max_group=$maxGroup (threshold $maxSampledGroup) " +
-        s"sampled_docs=$docs distinct_sets=$sets " +
-        s"sample_sixteenths=$sampleSixteenths")
+    val led = ledger(df.sparkSession, "ngram dedup-edges",
+      "route" -> (if (thin) "thin" else "pairs"), "clone_ratio" -> ratio,
+      "clone_ratio_threshold" -> cloneRatioThreshold,
+      "max_group" -> maxGroup, "max_group_threshold" -> maxSampledGroup,
+      "sampled_docs" -> docs, "distinct_sets" -> sets,
+      "sample_sixteenths" -> sampleSixteenths)
     val edges =
       if (thin)
         ngramJaccardDedupEdges(df, idCol, textCol, n, threshold, maxShingleDf,
@@ -1221,29 +1135,8 @@ object Dedup {
         ngramJaccardPairs(df, idCol, textCol, n, threshold, maxShingleDf,
           numHashes, bands, exhaustive)
           .select(col("id1"), col("id2"))
-    import spark.implicits._
-    val ledger = Seq((route, ratio, cloneRatioThreshold, maxGroup,
-        maxSampledGroup, docs, sets, sampleSixteenths))
-      .toDF("route", "clone_ratio", "clone_ratio_threshold", "max_group",
-        "max_group_threshold", "sampled_docs", "distinct_sets",
-        "sample_sixteenths")
-    (edges, ledger)
+    (edges, led)
   }
-
-  /** [[ngramJaccardDedupEdgesAutoLedger]] without the ledger — the
-    * original edges-only surface.
-    */
-  def ngramJaccardDedupEdgesAuto(df: DataFrame, idCol: String, textCol: String,
-                                 n: Int, threshold: Double,
-                                 maxShingleDf: Int = 1000,
-                                 numHashes: Int = 64, bands: Int = 16,
-                                 exhaustive: Boolean = true,
-                                 cloneRatioThreshold: Double = 0.02,
-                                 sampleSixteenths: Int = 2,
-                                 maxSampledGroup: Long = 64L): DataFrame =
-    ngramJaccardDedupEdgesAutoLedger(df, idCol, textCol, n, threshold,
-      maxShingleDf, numHashes, bands, exhaustive, cloneRatioThreshold,
-      sampleSixteenths, maxSampledGroup)._1
 
   /** Exact Jaccard pairs by CO-OCCURRENCE COUNTING: self-join the
     * inverted index on the shingle key, count shared shingles per
@@ -1415,21 +1308,14 @@ object Dedup {
     * For survivor selection, go through
     * [[embeddingNearDupDedupEdgesAutoLedger]], whose one-aggregate
     * pre-flight routes over-budget corpora to the IVF-clustered
-    * blocking (growing cluster count, same verify predicate) or
-    * auto-engages the audited bucket cap. The pairs form has no routed
-    * equivalent because its OUTPUT is the pair set itself; measure
-    * with [[embeddingCandidateStats]] before running it at scale.
+    * blocking (growing cluster count, same verify predicate). The pairs
+    * form has no routed equivalent because its OUTPUT is the pair set
+    * itself; measure with [[embeddingCandidateStats]] before running it
+    * at scale.
     */
   def embeddingNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
                             threshold: Double, planes: Int = 8,
-                            tables: Int = 4): DataFrame =
-    embeddingNearDupPairsImpl(df, idCol, vecCol, threshold, planes, tables,
-      capOverride = None)
-
-  private def embeddingNearDupPairsImpl(df: DataFrame, idCol: String,
-                                        vecCol: String, threshold: Double,
-                                        planes: Int, tables: Int,
-                                        capOverride: Option[Int]): DataFrame = {
+                            tables: Int = 4): DataFrame = {
     val v = df.select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("v"))
     val sigs = embeddingSigs(df, idCol, vecCol, planes, tables)
@@ -1454,7 +1340,7 @@ object Dedup {
     val bucketed = capHotBuckets(
       groups.select(col("__k1"), col("__k2"),
         posexplode(col("sigs")).as(Seq("tbl", "sig"))),
-      Seq("tbl", "sig"), "embeddingNearDupPairs", capOverride)
+      Seq("tbl", "sig"), "embeddingNearDupPairs")
     val repCand = bucketed.select(col("tbl"), col("sig"),
         col("__k1").as("__k1_a"), col("__k2").as("__k2_a"))
       .join(bucketed.select(col("tbl"), col("sig"),
@@ -1487,17 +1373,8 @@ object Dedup {
   def embeddingNearDupDedupEdges(df: DataFrame, idCol: String, vecCol: String,
                                  threshold: Double, planes: Int = 8,
                                  tables: Int = 4): DataFrame =
-    embeddingNearDupDedupEdgesImpl(df, idCol, vecCol, threshold, planes,
-      tables, capOverride = None)
-
-  private def embeddingNearDupDedupEdgesImpl(df: DataFrame, idCol: String,
-                                             vecCol: String, threshold: Double,
-                                             planes: Int, tables: Int,
-                                             capOverride: Option[Int])
-  : DataFrame =
     embeddingDedupEdgesVia(df, idCol, vecCol, threshold)(canonDf =>
-      embeddingNearDupPairsImpl(canonDf, "id", "v", threshold, planes,
-        tables, capOverride))
+      embeddingNearDupPairs(canonDf, "id", "v", threshold, planes, tables))
 
   /** The clone-collapse + star-expansion skeleton shared by every
     * embedding survivor-selection arm: collapse on the VECTOR (two
@@ -1562,7 +1439,7 @@ object Dedup {
     * not predicate: a near-dup pair split across two clusters is
     * missed here, a pair the `tables` sketches all miss is missed
     * there — both candidate generators feed the identical verifier,
-    * which is what makes the router's fallback an apples-to-apples
+    * which is what makes the router's routed arm an apples-to-apples
     * survivor graph ([[embeddingNearDupDedupEdgesAutoLedger]]).
     */
   def embeddingIvfDedupEdges(df: DataFrame, idCol: String, vecCol: String,
@@ -1629,115 +1506,51 @@ object Dedup {
     * (they diverge on near-dup-family corpora, whose members share
     * sketches; see the stats scaladoc). With both within
     * `candidateBudget`, the plain [[embeddingNearDupDedupEdges]] runs
-    * (bit-identical, spec-gated). With EITHER over budget, `fallback`
-    * picks the scale-safe arm:
+    * (bit-identical, spec-gated). With EITHER over budget, it routes to
+    * [[embeddingIvfDedupEdges]] — UNLIKE the simhash router's minhash
+    * route, this is the SAME pair predicate (the shared exact-cosine
+    * verifier), only the candidate blocking changes: IVF clusters whose
+    * count derives from n (the [[semanticDedup]] nlist discipline), so
+    * per-bucket pair cost stays constant at any scale. The recall
+    * difference is which candidate pairs each blocking surfaces
+    * (cross-cluster near-dups there, all-sketches-miss pairs here) — why
+    * the decision is an auditable LEDGER row and the routed form carries
+    * its own oracle gate (dd33/dd34) rather than inheriting dd05's.
     *
-    *  - `"ivf"` (default): route to [[embeddingIvfDedupEdges]] —
-    *    UNLIKE the simhash router's minhash fallback, this is the SAME
-    *    pair predicate (the shared exact-cosine verifier), only the
-    *    candidate blocking changes: IVF clusters whose count derives
-    *    from n (the [[semanticDedup]] nlist discipline), so per-bucket
-    *    pair cost stays constant at any scale. The recall difference
-    *    is which candidate pairs each blocking surfaces (cross-cluster
-    *    near-dups there, all-sketches-miss pairs here) — why the
-    *    decision is an auditable LEDGER row and the routed form
-    *    carries its own oracle gate (dd33/dd34) rather than
-    *    inheriting dd05's.
-    *  - `"cap"`: stay on the hyperplane relation but auto-engage the
-    *    hot-bucket cap, bounding candidate mass at ~buckets × C(cap, 2)
-    *    independent of n. `fallbackBucketCap` = -1 (default) DERIVES
-    *    the cap from the pre-flight's measurements: the largest c with
-    *    buckets · C(c, 2) <= candidateBudget. The trade is RECALL
-    *    (pairs connected ONLY through a dropped bucket are lost), with
-    *    the same stderr + optional `graft.lsh.bucketCapLedgerDir`
-    *    audit trail as every capped join; a session-wide
-    *    `graft.lsh.bucketCap` composes as the MIN of the two caps.
-    *
-    * Ledger row: (route, fallback, distinct_signatures, buckets,
-    * candidate_pairs, member_candidate_pairs, candidate_budget,
-    * planes, tables, bucket_cap — the engaged per-bucket cap on the
-    * "cap" route, 0 otherwise).
+    * Ledger row: (route, distinct_signatures, buckets, candidate_pairs,
+    * member_candidate_pairs, candidate_budget, planes, tables).
     */
   def embeddingNearDupDedupEdgesAutoLedger(df: DataFrame, idCol: String,
                                            vecCol: String, threshold: Double,
                                            planes: Int = 8, tables: Int = 4,
                                            candidateBudget: Long = 2000000000L,
-                                           fallback: String = "ivf",
-                                           nlist: Int = 0,
-                                           fallbackBucketCap: Int = -1)
+                                           nlist: Int = 0)
   : (DataFrame, DataFrame) = {
     require(candidateBudget >= 0L,
       s"candidateBudget must be >= 0, got $candidateBudget")
-    require(fallback == "ivf" || fallback == "cap",
-      s"""fallback must be "ivf" or "cap", got "$fallback"""")
-    require(fallbackBucketCap >= -1,
-      s"fallbackBucketCap must be >= 0, or -1 to derive it from the " +
-        s"budget, got $fallbackBucketCap")
     // validated before routing so every route fails identically
     require(threshold <= 1.0,
       "threshold must be <= 1.0 (identical-vector pairs verify at " +
         s"cosine 1.0, so a higher cut would drop whole clone groups), got $threshold")
-    val spark = df.sparkSession
     val st = embeddingCandidateStats(df, idCol, vecCol, planes, tables).head()
-    val (nSig, buckets, cand, memberCand) =
-      (st.getLong(0), st.getLong(1), st.getLong(2), st.getLong(3))
+    val (cand, memberCand) = (st.getLong(2), st.getLong(3))
     // EITHER mass over budget routes: the rep-level join volume and
     // the member-level verify bound diverge exactly on near-dup-family
     // corpora (members share sketches → small rep join, full member
     // verify) — see [[embeddingCandidateStats]]
     val over = cand > candidateBudget || memberCand > candidateBudget
-    val route = if (!over) "embedding" else fallback
-    // the engaged per-bucket cap on the "cap" route: explicit, or
-    // derived as the largest c with buckets · C(c, 2) <= budget (the
-    // simhash router's rule — one budget, one meaning on both
-    // fallbacks), never below 1
-    val engagedCap: Int =
-      if (route != "cap") 0
-      else if (fallbackBucketCap >= 0) fallbackBucketCap
-      else math.max(1L, ((1.0 + math.sqrt(
-        1.0 + 8.0 * candidateBudget / math.max(1L, buckets))) / 2.0).toLong)
-        .min(Int.MaxValue.toLong).toInt
-    System.err.println(
-      s"[graft] embedding dedup-edges routing: route=$route " +
-        s"candidate_pairs=$cand member_candidate_pairs=$memberCand " +
-        s"(budget $candidateBudget) " +
-        s"distinct_signatures=$nSig buckets=$buckets " +
-        s"planes=$planes tables=$tables" +
-        (if (route == "cap") s" bucket_cap=$engagedCap" +
-          (if (fallbackBucketCap < 0) " (derived)" else "")
-         else ""))
-    val edges = route match {
-      case "embedding" =>
-        embeddingNearDupDedupEdges(df, idCol, vecCol, threshold, planes,
-          tables)
-      case "ivf" =>
-        embeddingIvfDedupEdges(df, idCol, vecCol, threshold, nlist)
-      case "cap" =>
-        embeddingNearDupDedupEdgesImpl(df, idCol, vecCol, threshold, planes,
-          tables, capOverride = Some(engagedCap))
-    }
-    import spark.implicits._
-    val ledger = Seq((route, fallback, nSig, buckets, cand, memberCand,
-        candidateBudget, planes, tables, engagedCap))
-      .toDF("route", "fallback", "distinct_signatures", "buckets",
-        "candidate_pairs", "member_candidate_pairs", "candidate_budget",
-        "planes", "tables", "bucket_cap")
-    (edges, ledger)
+    val led = ledger(df.sparkSession, "embedding dedup-edges",
+      "route" -> (if (over) "ivf" else "embedding"),
+      "distinct_signatures" -> st.getLong(0), "buckets" -> st.getLong(1),
+      "candidate_pairs" -> cand, "member_candidate_pairs" -> memberCand,
+      "candidate_budget" -> candidateBudget, "planes" -> planes,
+      "tables" -> tables)
+    val edges =
+      if (over) embeddingIvfDedupEdges(df, idCol, vecCol, threshold, nlist)
+      else embeddingNearDupDedupEdges(df, idCol, vecCol, threshold, planes,
+        tables)
+    (edges, led)
   }
-
-  /** [[embeddingNearDupDedupEdgesAutoLedger]] without the ledger — the
-    * edges-only surface, for callers that only read the stderr line.
-    */
-  def embeddingNearDupDedupEdgesAuto(df: DataFrame, idCol: String,
-                                     vecCol: String, threshold: Double,
-                                     planes: Int = 8, tables: Int = 4,
-                                     candidateBudget: Long = 2000000000L,
-                                     fallback: String = "ivf",
-                                     nlist: Int = 0,
-                                     fallbackBucketCap: Int = -1): DataFrame =
-    embeddingNearDupDedupEdgesAutoLedger(df, idCol, vecCol, threshold,
-      planes, tables, candidateBudget, fallback, nlist,
-      fallbackBucketCap)._1
 
   /** Codegen'd dot product for fixed-dim vectors: the same left-fold
     * order as the interpreted `aggregate(zip_with(...))` HOF
@@ -2669,7 +2482,7 @@ object Dedup {
   }
 
   /** [[editDistancePairs]] behind the collision-density ROUTER — the
-    * runtime seam for [[deletionCollisionDensity]]. Measures the
+    * runtime seam for [[deletionCollisionStats]]. Measures the
     * post-compaction sampled density and mean key length, then routes:
     * a corpus whose symmetric-delete blocking stays linear (the common
     * case — the exact tier, bit-identical to the oracle) vs a
@@ -2678,9 +2491,9 @@ object Dedup {
     * candidates, exact-verified precision, banding recall).
     *
     * Returns (pairs, ledger): the ledger is ONE row recording the
-    * decision and the measurements that drove it —
-    * (tier, density, density_threshold, mean_key_cp, max_mean_key_cp,
-    * sample_sixteenths, max_dist) — the auditable counterpart of
+    * decision and the measurements that drove it — (tier,
+    * [[fuzzyTier]]'s measurements, exact_candidate_budget,
+    * exact_candidate_pairs, budget_override) — the auditable counterpart of
     * dd20's recall ledger. The router is opt-in: callers who need the
     * exact tier's guaranteed recall keep calling [[editDistancePairs]].
     */
@@ -2740,7 +2553,9 @@ object Dedup {
 
   /** The shared measurement + routing core of the two auto forms:
     * (v = compacted (id, s), sp = verified distinct-string pairs,
-    * ledger).
+    * ledger). The tier is [[fuzzyTier]]'s over the POST-COMPACTION
+    * distinct strings — the population the exact tier's blocking would
+    * actually explode.
     */
   private def edAutoRouted(df: DataFrame, idCol: String, strCol: String,
                            maxDist: Int,
@@ -2748,64 +2563,18 @@ object Dedup {
                            maxMeanKeyLen: Double,
                            sampleSixteenths: Int,
                            numHashes: Int, bands: Int,
-                           previousTier: Option[String] = None,
-                           hysteresisPct: Double = 0.10,
-                           exactCandidateBudget: Long = 0L)
+                           previousTier: Option[String],
+                           hysteresisPct: Double,
+                           exactCandidateBudget: Long)
   : (DataFrame, DataFrame, DataFrame) = {
-    require(maxDist == 1 || maxDist == 2,
-      s"maxDist must be 1 or 2, got $maxDist")
-    require(hysteresisPct >= 0.0 && hysteresisPct < 1.0,
-      s"hysteresisPct must be in [0, 1), got $hysteresisPct")
     require(exactCandidateBudget >= 0L,
       s"exactCandidateBudget must be >= 0 (0 disables the disjunct), " +
         s"got $exactCandidateBudget")
-    previousTier.foreach(t => require(t == "exact" || t == "minhash",
-      s"""previousTier must be "exact" or "minhash", got "$t""""))
-    val spark = df.sparkSession
     val v = compactTemplate(
       df.select(col(idCol).as("id"), col(strCol).as("s")))
-    // both measurements run on the POST-COMPACTION distinct strings —
-    // the population the exact tier's blocking would actually explode.
-    // max_bucket is ledger visibility, not a route input — see
-    // [[deletionCollisionStats]] for why no route dodges a mega bucket
-    // of DISTINCT near-identical strings (exact KEY-CLONE mega groups
-    // are already collapse-safe here).
-    val (density, maxBucket) =
-      deletionCollisionStats(v, "s", maxDist, sampleSixteenths)
-    val meanLen = v.select(col("s"))
-      .filter(pmod(xxhash64(col("s")), lit(16)) < lit(sampleSixteenths))
-      .distinct()
-      .agg(coalesce(avg(length(col("s"))), lit(0.0)))
-      .head().getDouble(0)
-    val rawTier =
-      if (density > densityThreshold || meanLen > maxMeanKeyLen) "minhash"
-      else "exact"
-    // TIER HYSTERESIS (r18 verdict item 4): a corpus whose measured
-    // density sits AT the threshold (sf10 measured 63.76 vs 64)
-    // alternates tiers between crawls as sampling noise and corpus
-    // drift wiggle the statistic — both tiers are correct (parity
-    // spec'd), but a flip re-pays plan warmup and makes audit ledgers
-    // read as churn. With `previousTier` supplied (e.g. the previous
-    // crawl's ledger row under the streaming fall-through), the tier
-    // only flips when the measurements leave a ±hysteresisPct band
-    // around their thresholds: minhash needs density or length
-    // CONFIDENTLY over (> (1+h)·threshold), exact needs both
-    // CONFIDENTLY under (<= (1-h)·threshold). Inside the band the
-    // previous tier holds and the ledger records the suppressed flip.
-    val confidentlyMinhash =
-      density > densityThreshold * (1.0 + hysteresisPct) ||
-        meanLen > maxMeanKeyLen * (1.0 + hysteresisPct)
-    val confidentlyExact =
-      density <= densityThreshold * (1.0 - hysteresisPct) &&
-        meanLen <= maxMeanKeyLen * (1.0 - hysteresisPct)
-    val tierH = previousTier match {
-      case Some("exact") if rawTier == "minhash" && !confidentlyMinhash =>
-        "exact"
-      case Some("minhash") if rawTier == "exact" && !confidentlyExact =>
-        "minhash"
-      case _ => rawTier
-    }
-    val suppressedFlip = tierH != rawTier
+    val (tierH, measured) = fuzzyTier(v.select(col("s")), maxDist,
+      densityThreshold, maxMeanKeyLen, sampleSixteenths, previousTier,
+      hysteresisPct)
     // EXACT-TIER CANDIDATE-BUDGET DISJUNCT (opt-in, r20 — the
     // simhash/embedding routers' absolute-mass lens applied to the
     // fuzzy tier): the density statistic is candidate pairs PER ROW,
@@ -2827,37 +2596,78 @@ object Dedup {
       if (exactCandidateBudget > 0L && tierH == "minhash")
         edCandidateStatsOf(v, maxDist).head().getAs[Long]("candidate_pairs")
       else -1L
-    val budgetOverride =
-      exactCandidateBudget > 0L && tierH == "minhash" &&
-        exactCand <= exactCandidateBudget
+    val budgetOverride = exactCand >= 0L && exactCand <= exactCandidateBudget
     val tier = if (budgetOverride) "exact" else tierH
-    System.err.println(
-      s"[graft] fuzzy routing: tier=$tier density=$density " +
-        s"(threshold $densityThreshold) mean_key_cp=$meanLen " +
-        s"(max $maxMeanKeyLen) max_bucket=$maxBucket maxDist=$maxDist" +
-        (if (suppressedFlip)
-          s" suppressed_flip=true (raw=$rawTier held=${previousTier.get}" +
-            s" hysteresis=$hysteresisPct)"
-         else "") +
-        (if (exactCand >= 0L)
-          s" exact_candidate_pairs=$exactCand (budget " +
-            s"$exactCandidateBudget${if (budgetOverride)
-              " — budget override to exact" else ""})"
-         else ""))
+    val led = ledger(df.sparkSession, "fuzzy", ("tier" -> tier) +: measured :+
+      ("exact_candidate_budget" -> exactCandidateBudget) :+
+      ("exact_candidate_pairs" -> exactCand) :+
+      ("budget_override" -> budgetOverride): _*)
     val sp =
       if (tier == "minhash") edLshSelfStringPairs(v, maxDist, numHashes, bands)
       else edSelfStringPairs(v, maxDist)
-    import spark.implicits._
-    val ledger = Seq((tier, density, densityThreshold, meanLen,
-        maxMeanKeyLen, maxBucket, sampleSixteenths, maxDist,
-        rawTier, previousTier.getOrElse(""), suppressedFlip,
-        exactCandidateBudget, exactCand, budgetOverride))
-      .toDF("tier", "density", "density_threshold", "mean_key_cp",
-        "max_mean_key_cp", "max_bucket", "sample_sixteenths", "max_dist",
-        "raw_tier", "previous_tier", "suppressed_flip",
-        "exact_candidate_budget", "exact_candidate_pairs",
-        "budget_override")
-    (v, sp, ledger)
+    (v, sp, led)
+  }
+
+  /** The fuzzy routers' measurement and tier rule over a one-column
+    * frame of strings `s`: the sampled collision density and max bucket
+    * ([[deletionCollisionStats]]) and the sampled mean key length in
+    * codepoints. The raw tier is minhash when the density or the length
+    * is over its threshold, exact otherwise. Returns the routed tier and
+    * the ledger fields from `density` to `suppressed_flip`.
+    *
+    * TIER HYSTERESIS (r18 verdict item 4): a corpus whose measured
+    * density sits AT the threshold (sf10 measured 63.76 vs 64)
+    * alternates tiers between crawls as sampling noise and corpus drift
+    * wiggle the statistic — both tiers are correct (parity spec'd), but
+    * a flip re-pays plan warmup and makes audit ledgers read as churn.
+    * With `previousTier` supplied (e.g. the previous crawl's ledger row
+    * under the streaming fall-through), the tier only flips when the
+    * measurements leave a ±hysteresisPct band around their thresholds:
+    * minhash needs density or length CONFIDENTLY over
+    * (> (1+h)·threshold), exact needs both CONFIDENTLY under
+    * (<= (1-h)·threshold). Inside the band the previous tier holds and
+    * the ledger records the suppressed flip.
+    */
+  private def fuzzyTier(s: DataFrame, maxDist: Int, densityThreshold: Double,
+                        maxMeanKeyLen: Double, sampleSixteenths: Int,
+                        previousTier: Option[String], hysteresisPct: Double)
+  : (String, Seq[(String, Any)]) = {
+    require(maxDist == 1 || maxDist == 2,
+      s"maxDist must be 1 or 2, got $maxDist")
+    require(hysteresisPct >= 0.0 && hysteresisPct < 1.0,
+      s"hysteresisPct must be in [0, 1), got $hysteresisPct")
+    previousTier.foreach(t => require(t == "exact" || t == "minhash",
+      s"""previousTier must be "exact" or "minhash", got "$t""""))
+    // max_bucket is ledger visibility, not a route input — see
+    // [[deletionCollisionStats]] for why no route dodges a mega bucket
+    // of DISTINCT near-identical strings
+    val (density, maxBucket) =
+      deletionCollisionStats(s, "s", maxDist, sampleSixteenths)
+    val meanLen = s
+      .filter(pmod(xxhash64(col("s")), lit(16)) < lit(sampleSixteenths))
+      .distinct()
+      .agg(coalesce(avg(length(col("s"))), lit(0.0)))
+      .head().getDouble(0)
+    def over(h: Double): Boolean =
+      density > densityThreshold * (1.0 + h) ||
+        meanLen > maxMeanKeyLen * (1.0 + h)
+    val rawTier = if (over(0.0)) "minhash" else "exact"
+    val confidentlyExact =
+      density <= densityThreshold * (1.0 - hysteresisPct) &&
+        meanLen <= maxMeanKeyLen * (1.0 - hysteresisPct)
+    val tier = previousTier match {
+      case Some("exact") if rawTier == "minhash" && !over(hysteresisPct) =>
+        "exact"
+      case Some("minhash") if rawTier == "exact" && !confidentlyExact =>
+        "minhash"
+      case _ => rawTier
+    }
+    (tier, Seq("density" -> density, "density_threshold" -> densityThreshold,
+      "mean_key_cp" -> meanLen, "max_mean_key_cp" -> maxMeanKeyLen,
+      "max_bucket" -> maxBucket, "sample_sixteenths" -> sampleSixteenths,
+      "max_dist" -> maxDist, "raw_tier" -> rawTier,
+      "previous_tier" -> previousTier.getOrElse(""),
+      "suppressed_flip" -> (tier != rawTier)))
   }
 
   /** Symmetric-delete collision-density detector: the estimated
@@ -2870,15 +2680,11 @@ object Dedup {
     * Template-dense keys (shared affixes, low-entropy runs) score
     * orders of magnitude above high-entropy keys — the signal that the
     * exact tier's candidate set grows quadratically on this corpus.
-    */
-  def deletionCollisionDensity(df: DataFrame, strCol: String,
-                               maxDist: Int = 2,
-                               sampleSixteenths: Int = 4): Double =
-    deletionCollisionStats(df, strCol, maxDist, sampleSixteenths)._1
-
-  /** [[deletionCollisionDensity]] plus the MAX sampled bucket
-    * occupancy (distinct strings sharing one deletion value) — the
-    * dilution-proof companion statistic: the density is a MEAN over
+    * Returns (density, max_bucket).
+    *
+    * `max_bucket`, the MAX sampled bucket occupancy (distinct strings
+    * sharing one deletion value), is the dilution-proof companion
+    * statistic: the density is a MEAN over
     * the whole sample, so one mega collision bucket buried in a large
     * distinct corpus can sit under the density threshold while still
     * being per-bucket quadratic. Recorded in the routing ledgers for
@@ -3119,21 +2925,9 @@ object Dedup {
         val m = spark.read.parquet(s"$indexDir/_meta").head()
         (m.getString(0), m.getInt(1), m.getInt(2), m.getInt(3))
       } else {
-        val density = deletionCollisionDensity(v, "s", maxDist,
-          sampleSixteenths)
-        val meanLen = v.select(col("s"))
-          .filter(pmod(xxhash64(col("s")), lit(16)) < lit(sampleSixteenths))
-          .distinct()
-          .agg(coalesce(avg(length(col("s"))), lit(0.0)))
-          .head().getDouble(0)
-        val t =
-          if (density > densityThreshold || meanLen > maxMeanKeyLen)
-            "minhash"
-          else "exact"
-        System.err.println(
-          s"[graft] streaming fuzzy routing: tier=$t density=$density " +
-            s"(threshold $densityThreshold) mean_key_cp=$meanLen " +
-            s"(max $maxMeanKeyLen) maxDist=$maxDist")
+        val (t, measured) = fuzzyTier(v.select(col("s")), maxDist,
+          densityThreshold, maxMeanKeyLen, sampleSixteenths, None, 0.0)
+        logRouting("streaming fuzzy", ("tier" -> t) +: measured)
         (t, maxDist, numHashes, bands)
       }
     // 1. cross-batch drop: batch strings within md of anything the
@@ -3356,7 +3150,7 @@ object Dedup {
     * the hysteresis columns: a nightly re-linkage of a near-threshold
     * corpus alternates tiers exactly like the dedup crawl, so
     * `previousTier` (e.g. the previous run's ledger row) +
-    * `hysteresisPct` apply the same ±band rule as [[edAutoRouted]].
+    * `hysteresisPct` apply the same ±band rule ([[fuzzyTier]]).
     */
   def fuzzyLinkAuto(left: DataFrame, lIdCol: String, lStrCol: String,
                     right: DataFrame, rIdCol: String, rStrCol: String,
@@ -3368,55 +3162,17 @@ object Dedup {
                     previousTier: Option[String] = None,
                     hysteresisPct: Double = 0.10)
   : (DataFrame, DataFrame) = {
-    require(maxDist == 1 || maxDist == 2,
-      s"maxDist must be 1 or 2, got $maxDist")
-    require(hysteresisPct >= 0.0 && hysteresisPct < 1.0,
-      s"hysteresisPct must be in [0, 1), got $hysteresisPct")
-    previousTier.foreach(t => require(t == "exact" || t == "minhash",
-      s"""previousTier must be "exact" or "minhash", got "$t""""))
-    val spark = left.sparkSession
     val l0 = left.select(col(lIdCol).as("id"), col(lStrCol).as("s"))
     val r0 = right.select(col(rIdCol).as("id"), col(rStrCol).as("s"))
     val (pre, suf) = corpusAffixes(
       l0.select(col("s")).unionByName(r0.select(col("s"))))
-    val unionS = stripAffixes(l0, pre, suf).select(col("s"))
-      .unionByName(stripAffixes(r0, pre, suf).select(col("s")))
-    // max_bucket: ledger visibility for a diluted mega collision
-    // bucket the mean-based density cannot see ([[deletionCollisionStats]])
-    val (density, maxBucket) = deletionCollisionStats(unionS, "s", maxDist,
-      sampleSixteenths)
-    val meanLen = unionS
-      .filter(pmod(xxhash64(col("s")), lit(16)) < lit(sampleSixteenths))
-      .distinct()
-      .agg(coalesce(avg(length(col("s"))), lit(0.0)))
-      .head().getDouble(0)
-    val rawTier =
-      if (density > densityThreshold || meanLen > maxMeanKeyLen) "minhash"
-      else "exact"
-    // the edAutoRouted hysteresis band, verbatim: flips need the
-    // measurements CONFIDENTLY outside ±hysteresisPct
-    val confidentlyMinhash =
-      density > densityThreshold * (1.0 + hysteresisPct) ||
-        meanLen > maxMeanKeyLen * (1.0 + hysteresisPct)
-    val confidentlyExact =
-      density <= densityThreshold * (1.0 - hysteresisPct) &&
-        meanLen <= maxMeanKeyLen * (1.0 - hysteresisPct)
-    val tier = previousTier match {
-      case Some("exact") if rawTier == "minhash" && !confidentlyMinhash =>
-        "exact"
-      case Some("minhash") if rawTier == "exact" && !confidentlyExact =>
-        "minhash"
-      case _ => rawTier
-    }
-    val suppressedFlip = tier != rawTier
-    System.err.println(
-      s"[graft] fuzzy-link routing: tier=$tier density=$density " +
-        s"(threshold $densityThreshold) mean_key_cp=$meanLen " +
-        s"(max $maxMeanKeyLen) max_bucket=$maxBucket maxDist=$maxDist" +
-        (if (suppressedFlip)
-          s" suppressed_flip=true (raw=$rawTier held=${previousTier.get}" +
-            s" hysteresis=$hysteresisPct)"
-         else ""))
+    val (tier, measured) = fuzzyTier(
+      stripAffixes(l0, pre, suf).select(col("s"))
+        .unionByName(stripAffixes(r0, pre, suf).select(col("s"))),
+      maxDist, densityThreshold, maxMeanKeyLen, sampleSixteenths,
+      previousTier, hysteresisPct)
+    val led = ledger(left.sparkSession, "fuzzy-link",
+      ("tier" -> tier) +: measured: _*)
     val links =
       if (tier == "exact")
         fuzzyLink(left, lIdCol, lStrCol, right, rIdCol, rStrCol, maxDist)
@@ -3449,13 +3205,6 @@ object Dedup {
         sp.join(lG, Seq("__sa")).join(rG, Seq("__sb"))
           .select(col("id1"), col("id2"), col("dist"))
       }
-    import spark.implicits._
-    val ledger = Seq((tier, density, densityThreshold, meanLen,
-        maxMeanKeyLen, maxBucket, sampleSixteenths, maxDist,
-        rawTier, previousTier.getOrElse(""), suppressedFlip))
-      .toDF("tier", "density", "density_threshold", "mean_key_cp",
-        "max_mean_key_cp", "max_bucket", "sample_sixteenths", "max_dist",
-        "raw_tier", "previous_tier", "suppressed_flip")
-    (links, ledger)
+    (links, led)
   }
 }

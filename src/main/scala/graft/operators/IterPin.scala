@@ -160,6 +160,16 @@ private[graft] object IterPin {
       }
     }
 
+  /** Release every persisted RDD's blocks and wait until they are
+    * gone: the measurement mains' sweep between timed runs, so one run's
+    * pins never bill the next run's memory or GC. Through
+    * [[BlocksBridge]], like [[free]], so local pins free without the
+    * "cannot be recomputed" WARN.
+    */
+  def freeAll(spark: SparkSession): Unit =
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(BlocksBridge.unpersist(_, blocking = true))
+
   /** Masters that run every task in-process: `local`, `local[N]`,
     * `local[*]` and `local[N,F]` (F task attempts, still no stage
     * retry). `local-cluster[...]` starts real executors and is not one.

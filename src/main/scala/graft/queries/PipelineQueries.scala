@@ -226,6 +226,20 @@ object PipelineQueries {
         round(col("n_hit") / col("n_truth") + lit(1e-11), 4).as("recall"))
   }
 
+  /** The dd26–dd29 clone flood: the first 8 documents replicated into
+    * clone groups of 120/60/1/25 members by doc_id % 4, as (id, text)
+    * with id = doc_id * 10000 + k. Fixed size, whatever the SF.
+    */
+  private def cloneFlood(s: SparkSession, dir: String): DataFrame = {
+    val reps = when(col("doc_id") % 4 === 0, 120)
+      .when(col("doc_id") % 4 === 1, 60)
+      .when(col("doc_id") % 4 === 2, 1).otherwise(25)
+    Tables(s, dir).documents.filter(col("doc_id") < 8)
+      .select(col("doc_id"), col("text"),
+        explode(sequence(lit(0), reps - 1)).as("k"))
+      .select((col("doc_id") * 10000 + col("k")).as("id"), col("text"))
+  }
+
   val queries: Map[String, Q] = Map(
     // Exact dedup: keep lowest doc_id per content hash.
     "dd01_exact_dedup" -> { (s, dir) =>
@@ -1298,14 +1312,7 @@ object PipelineQueries {
     // 1.0 hash-mismatches). The DuckDB oracle replays the clone-group
     // combinatorics: C(R, 2) pairs per group of R >= 2. FULLY oracled.
     "dd26_lsh_clone_flood" -> { (s, dir) =>
-      val reps = when(col("doc_id") % 4 === 0, 120)
-        .when(col("doc_id") % 4 === 1, 60)
-        .when(col("doc_id") % 4 === 2, 1).otherwise(25)
-      val flood = Tables(s, dir).documents.filter(col("doc_id") < 8)
-        .select(col("doc_id"), col("text"),
-          explode(sequence(lit(0), reps - 1)).as("k"))
-        .select((col("doc_id") * 10000 + col("k")).as("id"), col("text"))
-      Dedup.minHashLshPairs(flood, "id", "text",
+      Dedup.minHashLshPairs(cloneFlood(s, dir), "id", "text",
           shingleSize = 3, numHashes = 64, bands = 16)
         .groupBy(floor(col("id1") / 10000).cast("long").as("grp1"),
           floor(col("id2") / 10000).cast("long").as("grp2"))
@@ -1321,14 +1328,7 @@ object PipelineQueries {
     // maxHamming 6 the clone-group combinatorics ARE the full answer
     // and the DuckDB oracle replays them. FULLY oracled.
     "dd27_simhash_clone_flood" -> { (s, dir) =>
-      val reps = when(col("doc_id") % 4 === 0, 120)
-        .when(col("doc_id") % 4 === 1, 60)
-        .when(col("doc_id") % 4 === 2, 1).otherwise(25)
-      val flood = Tables(s, dir).documents.filter(col("doc_id") < 8)
-        .select(col("doc_id"), col("text"),
-          explode(sequence(lit(0), reps - 1)).as("k"))
-        .select((col("doc_id") * 10000 + col("k")).as("id"), col("text"))
-      Dedup.simHashPairs(flood, "id", "text", maxHamming = 6)
+      Dedup.simHashPairs(cloneFlood(s, dir), "id", "text", maxHamming = 6)
         .groupBy(floor(col("id1") / 10000).cast("long").as("grp1"),
           floor(col("id2") / 10000).cast("long").as("grp2"))
         .agg(count(lit(1)).as("n_pairs"),
@@ -1346,13 +1346,7 @@ object PipelineQueries {
     // a green row certifies the thin graph's components, and therefore
     // the dedup survivors, are EXACTLY the pair graph's. FULLY oracled.
     "dd28_thin_survivor_flood" -> { (s, dir) =>
-      val reps = when(col("doc_id") % 4 === 0, 120)
-        .when(col("doc_id") % 4 === 1, 60)
-        .when(col("doc_id") % 4 === 2, 1).otherwise(25)
-      val flood = Tables(s, dir).documents.filter(col("doc_id") < 8)
-        .select(col("doc_id"), col("text"),
-          explode(sequence(lit(0), reps - 1)).as("k"))
-        .select((col("doc_id") * 10000 + col("k")).as("id"), col("text"))
+      val flood = cloneFlood(s, dir)
       val edges = Dedup.ngramJaccardDedupEdges(flood, "id", "text",
         n = 3, threshold = 0.5)
       val comps = Components.connectedComponents(edges, "id1", "id2")
@@ -1371,13 +1365,7 @@ object PipelineQueries {
     // group-combinatoric labels: comp(id) = the group's min id for
     // groups of >= 2, self for singletons. FULLY oracled.
     "dd29_minhash_thin_flood" -> { (s, dir) =>
-      val reps = when(col("doc_id") % 4 === 0, 120)
-        .when(col("doc_id") % 4 === 1, 60)
-        .when(col("doc_id") % 4 === 2, 1).otherwise(25)
-      val flood = Tables(s, dir).documents.filter(col("doc_id") < 8)
-        .select(col("doc_id"), col("text"),
-          explode(sequence(lit(0), reps - 1)).as("k"))
-        .select((col("doc_id") * 10000 + col("k")).as("id"), col("text"))
+      val flood = cloneFlood(s, dir)
       val edges = Dedup.minHashLshDedupEdges(flood, "id", "text",
         shingleSize = 3, numHashes = 64, bands = 16, minEstJaccard = 0.8)
       val comps = Components.connectedComponents(edges, "id1", "id2")

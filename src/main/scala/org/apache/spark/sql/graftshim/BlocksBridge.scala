@@ -2,7 +2,7 @@ package org.apache.spark.sql.graftshim
 
 import org.apache.spark.rdd.{LocalRDDCheckpointData, RDD}
 
-/** Releases a persisted RDD's blocks, non-blocking. A locally
+/** Releases a persisted RDD's blocks, non-blocking unless asked. A locally
   * checkpointed RDD goes through `SparkContext.unpersistRDD` rather
   * than `RDD.unpersist`, which logs a WARN for each one (its lineage
   * is truncated, so the blocks cannot be recomputed) — for a loop that
@@ -14,10 +14,10 @@ import org.apache.spark.rdd.{LocalRDDCheckpointData, RDD}
   * `private[spark]`; same narrowly-scoped shim pattern as ListenerBridge.
   */
 object BlocksBridge {
-  def unpersist(rdd: RDD[_]): Unit = {
+  def unpersist(rdd: RDD[_], blocking: Boolean = false): Unit = {
     val sc = rdd.sparkContext
     val local = rdd.checkpointData.exists(_.isInstanceOf[LocalRDDCheckpointData[_]])
-    if (!local) rdd.unpersist(blocking = false)
-    else if (sc.persistentRdds.contains(rdd.id)) sc.unpersistRDD(rdd.id, blocking = false)
+    if (!local) rdd.unpersist(blocking)
+    else if (sc.persistentRdds.contains(rdd.id)) sc.unpersistRDD(rdd.id, blocking)
   }
 }

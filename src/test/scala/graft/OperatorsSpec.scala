@@ -263,7 +263,7 @@ class OperatorsSpec extends SparkSpec {
     // where the router could change observable behavior)
     for (corpus <- Seq(flood, distinctDocs))
       intercept[IllegalArgumentException] {
-        Dedup.ngramJaccardDedupEdgesAuto(corpus, "id", "text",
+        Dedup.ngramJaccardDedupEdgesAutoLedger(corpus, "id", "text",
           n = 3, threshold = 1.1, exhaustive = false, sampleSixteenths = 16)
       }
   }
@@ -314,26 +314,13 @@ class OperatorsSpec extends SparkSpec {
     assert(exact.exists(_._3 == 0))
   }
 
-  test("simhash hot-bucket guard: boilerplate corpus fires the warn, results unchanged") {
+  test("simhash hot-bucket view: simHashBucketStats sees the boilerplate bucket") {
     import graft.operators.Dedup
     // 30 near-identical boilerplate docs: every one lands in the same
     // pigeonhole buckets, so each bucket holds ~30 rows
     val boiler = (1L to 30L).map(i =>
       (i, s"terms of service apply to all users of product number $i"))
       .toDF("doc_id", "text")
-    val unguarded = Dedup.simHashPairs(boiler, "doc_id", "text", maxHamming = 6)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val errBuf = new java.io.ByteArrayOutputStream()
-    val prevErr = System.err
-    val guarded = try {
-      System.setErr(new java.io.PrintStream(errBuf, true))
-      Dedup.simHashPairs(boiler, "doc_id", "text", maxHamming = 6,
-        hotBucketWarn = 10)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    } finally System.setErr(prevErr)
-    assert(errBuf.toString.contains("simHashPairs hot bucket")) // guard fired
-    assert(guarded == unguarded)                                // observability only
-    // the standalone histogram sees the same hot buckets
     val stats = Dedup.simHashBucketStats(boiler, "doc_id", "text", maxHamming = 6)
     assert(stats.collect().head.getLong(2) > 10)
   }
@@ -1392,10 +1379,10 @@ class OperatorsSpec extends SparkSpec {
     // from high-entropy keys of the same count and length
     val entropic = (1L to 60L).map(i => (i,
       rnd.alphanumeric.take(11).mkString))
-    val dDense = Dedup.deletionCollisionDensity(
-      rows.toDF("id", "s"), "s", maxDist = 2, sampleSixteenths = 16)
-    val dSparse = Dedup.deletionCollisionDensity(
-      entropic.toDF("id", "s"), "s", maxDist = 2, sampleSixteenths = 16)
+    val dDense = Dedup.deletionCollisionStats(
+      rows.toDF("id", "s"), "s", maxDist = 2, sampleSixteenths = 16)._1
+    val dSparse = Dedup.deletionCollisionStats(
+      entropic.toDF("id", "s"), "s", maxDist = 2, sampleSixteenths = 16)._1
     assert(dDense > 10 * math.max(dSparse, 0.01),
       s"dense=$dDense sparse=$dSparse")
     // clone-invariance: the density models the POST-COLLAPSE blocking
@@ -1403,8 +1390,8 @@ class OperatorsSpec extends SparkSpec {
     // must not inflate the estimate
     val cloned = rows.flatMap { case (i, s) =>
       (0L to 4L).map(k => (i * 10 + k, s)) }
-    val dCloned = Dedup.deletionCollisionDensity(
-      cloned.toDF("id", "s"), "s", maxDist = 2, sampleSixteenths = 16)
+    val dCloned = Dedup.deletionCollisionStats(
+      cloned.toDF("id", "s"), "s", maxDist = 2, sampleSixteenths = 16)._1
     assert(math.abs(dCloned - dDense) < 1e-9, s"cloned=$dCloned dense=$dDense")
   }
 
@@ -1693,10 +1680,7 @@ class OperatorsSpec extends SparkSpec {
     assert(cappedBroadcast.subsetOf(uncapped)) // a cap only DROPS pairs
   }
 
-  test("simhash candidate-budget router: a DIVERSE flood routes to the " +
-    "minhash tier or is capped (both differentially identical to the " +
-    "explicit arm), below-budget stays bit-identical to plain simhash, " +
-    "and the ledger carries the measured decision inputs") {
+  test("simhash candidate-budget router: simhash below budget, minhash above") {
     import graft.operators.Dedup
     // DIVERSE flood — the regime the r18 verdict flagged: every
     // replica carries 3 unique tokens, so fingerprints are distinct
@@ -1733,7 +1717,7 @@ class OperatorsSpec extends SparkSpec {
     val plain = edgeSet(
       Dedup.simHashDedupEdges(flood, "id", "text", maxHamming = 6))
     assert(edgeSet(eLow) == plain)
-    // (2) over budget, default fallback: the minhash tier's thin
+    // (2) over budget: the minhash tier's thin
     // edges, bit-identical to the explicit operator at the same params
     val (eMh, lMh) = Dedup.simHashDedupEdgesAutoLedger(flood, "id",
       "text", maxHamming = 6, candidateBudget = cand - 1)
@@ -1741,85 +1725,9 @@ class OperatorsSpec extends SparkSpec {
     assert(edgeSet(eMh) == edgeSet(
       Dedup.minHashLshDedupEdges(flood, "id", "text", shingleSize = 3,
         numHashes = 64, bands = 16, minEstJaccard = 0.9)))
-    // (3) over budget, "cap" fallback: stays on the simhash relation
-    // with the hot-bucket cap auto-engaged — identical to the session
-    // conf path at the same cap, a strict subset of the uncapped edges
-    // (the cap must actually engage on this flood), audited
-    val (eCap, lCap) = Dedup.simHashDedupEdgesAutoLedger(flood, "id",
-      "text", maxHamming = 6, candidateBudget = cand - 1,
-      fallback = "cap", fallbackBucketCap = 10)
-    assert(lCap.head().getAs[String]("route") == "cap", lCap.head())
-    val capSet = edgeSet(eCap)
-    val confSet =
-      try {
-        spark.conf.set("graft.lsh.bucketCap", "10")
-        edgeSet(Dedup.simHashDedupEdges(flood, "id", "text", maxHamming = 6))
-      } finally spark.conf.unset("graft.lsh.bucketCap")
-    assert(capSet == confSet,
-      s"auto-engaged cap diverged from the conf path: " +
-        s"${capSet.diff(confSet)} vs ${confSet.diff(capSet)}")
-    assert(capSet != plain && capSet.subsetOf(plain),
-      "cap fallback never dropped a bucket — the differential proved " +
-        "nothing; shrink fallbackBucketCap or densify the flood")
-    // capOverride composes with the session conf as MIN: it tightens a
-    // looser session cap (the router's per-operator decision wins)…
-    val confLoose =
-      try {
-        spark.conf.set("graft.lsh.bucketCap", "1000000")
-        edgeSet(Dedup.simHashDedupEdgesAutoLedger(flood, "id", "text",
-          maxHamming = 6, candidateBudget = cand - 1,
-          fallback = "cap", fallbackBucketCap = 10)._1)
-      } finally spark.conf.unset("graft.lsh.bucketCap")
-    assert(confLoose == capSet)
-    // …but can never LOOSEN a stricter one — a session-wide bucketCap
-    // is a global safety bound, so the effective cap here is the
-    // session's 3, not the router's 10 (r19 ADVICE)
-    val confStrict =
-      try {
-        spark.conf.set("graft.lsh.bucketCap", "3")
-        edgeSet(Dedup.simHashDedupEdgesAutoLedger(flood, "id", "text",
-          maxHamming = 6, candidateBudget = cand - 1,
-          fallback = "cap", fallbackBucketCap = 10)._1)
-      } finally spark.conf.unset("graft.lsh.bucketCap")
-    val conf3 =
-      try {
-        spark.conf.set("graft.lsh.bucketCap", "3")
-        edgeSet(Dedup.simHashDedupEdges(flood, "id", "text", maxHamming = 6))
-      } finally spark.conf.unset("graft.lsh.bucketCap")
-    assert(confStrict == conf3,
-      "a stricter session bucketCap must survive a looser capOverride")
-    assert(confStrict.subsetOf(capSet) && confStrict != capSet,
-      "cap-3 must actually drop more than cap-10 for this arm to prove " +
-        "the min composition; densify the flood if this trips")
-    // (4) DERIVED cap (fallbackBucketCap = -1, the default): the
-    // engaged cap is the largest c with buckets · C(c, 2) <= budget —
-    // the budget keeps one meaning on both fallbacks — recorded in
-    // the ledger and identical to the conf path at that cap
-    val budget = cand - 1
-    val (eDer, lDer) = Dedup.simHashDedupEdgesAutoLedger(flood, "id",
-      "text", maxHamming = 6, candidateBudget = budget, fallback = "cap")
-    val dRow = lDer.head()
-    val nBuckets = dRow.getAs[Long]("buckets")
-    val expect = math.max(1L,
-      ((1.0 + math.sqrt(1.0 + 8.0 * budget / nBuckets)) / 2.0).toLong)
-    assert(dRow.getAs[Int]("bucket_cap") == expect.toInt, dRow)
-    assert(nBuckets * expect * (expect - 1) / 2 <= budget,
-      "the derived cap must bound worst-case candidate mass by the budget")
-    val confDer =
-      try {
-        spark.conf.set("graft.lsh.bucketCap", expect.toString)
-        edgeSet(Dedup.simHashDedupEdges(flood, "id", "text", maxHamming = 6))
-      } finally spark.conf.unset("graft.lsh.bucketCap")
-    assert(edgeSet(eDer) == confDer)
-    // non-cap routes record bucket_cap = 0
-    assert(lowRow.getAs[Int]("bucket_cap") == 0 &&
-      lMh.head().getAs[Int]("bucket_cap") == 0)
   }
 
-  test("embedding candidate-budget router: a DIVERSE vector flood routes " +
-    "to the IVF-clustered blocking (same cosine predicate, growing bucket " +
-    "space) or is capped, below-budget stays bit-identical to the plain " +
-    "hyperplane edges, and the ledger carries the measured decision inputs") {
+  test("embedding candidate-budget router: hyperplane below budget, IVF above") {
     import graft.operators.Dedup
     // DIVERSE flood — the r19 verdict's regime: every vector is
     // DISTINCT (a deterministic per-id/per-dim perturbation of a few
@@ -1867,7 +1775,7 @@ class OperatorsSpec extends SparkSpec {
     val plain = edgeSet(Dedup.embeddingNearDupDedupEdges(flood, "id", "v",
       threshold = 0.4, planes = 6, tables = 8))
     assert(edgeSet(eLow) == plain)
-    // (2) over budget, default fallback: the IVF-clustered edges,
+    // (2) over budget: the IVF-clustered edges,
     // bit-identical to the explicit operator at the same nlist
     val (eIvf, lIvf) = Dedup.embeddingNearDupDedupEdgesAutoLedger(flood,
       "id", "v", threshold = 0.4, planes = 6, tables = 8,
@@ -1876,42 +1784,6 @@ class OperatorsSpec extends SparkSpec {
     assert(edgeSet(eIvf) == edgeSet(
       Dedup.embeddingIvfDedupEdges(flood, "id", "v", threshold = 0.4,
         nlist = 8)))
-    // (3) over budget, "cap" fallback: stays on the hyperplane
-    // relation with the hot-bucket cap auto-engaged — identical to the
-    // session conf path at the same cap, a strict subset of the
-    // uncapped edges, audited
-    val (eCap, lCap) = Dedup.embeddingNearDupDedupEdgesAutoLedger(flood,
-      "id", "v", threshold = 0.4, planes = 6, tables = 8,
-      candidateBudget = cand - 1, fallback = "cap", fallbackBucketCap = 4)
-    assert(lCap.head().getAs[String]("route") == "cap", lCap.head())
-    val capSet = edgeSet(eCap)
-    val confSet =
-      try {
-        spark.conf.set("graft.lsh.bucketCap", "4")
-        edgeSet(Dedup.embeddingNearDupDedupEdges(flood, "id", "v",
-          threshold = 0.4, planes = 6, tables = 8))
-      } finally spark.conf.unset("graft.lsh.bucketCap")
-    assert(capSet == confSet,
-      s"auto-engaged cap diverged from the conf path: " +
-        s"${capSet.diff(confSet)} vs ${confSet.diff(capSet)}")
-    assert(capSet != plain && capSet.subsetOf(plain),
-      "cap fallback never dropped a bucket — the differential proved " +
-        "nothing; shrink fallbackBucketCap or densify the flood")
-    // (4) DERIVED cap (fallbackBucketCap = -1, the default): largest c
-    // with buckets * C(c, 2) <= budget, recorded in the ledger
-    val budget = cand - 1
-    val (_, lDer) = Dedup.embeddingNearDupDedupEdgesAutoLedger(flood,
-      "id", "v", threshold = 0.4, planes = 6, tables = 8,
-      candidateBudget = budget, fallback = "cap")
-    val dRow = lDer.head()
-    val expect = math.max(1L,
-      ((1.0 + math.sqrt(1.0 + 8.0 * budget / nBuckets)) / 2.0).toLong)
-    assert(dRow.getAs[Int]("bucket_cap") == expect.toInt, dRow)
-    assert(nBuckets * expect * (expect - 1) / 2 <= budget,
-      "the derived cap must bound worst-case candidate mass by the budget")
-    // non-cap routes record bucket_cap = 0
-    assert(lowRow.getAs[Int]("bucket_cap") == 0 &&
-      lIvf.head().getAs[Int]("bucket_cap") == 0)
   }
 
   test("fuzzy router exact-candidate-budget disjunct: a diverse-family " +
@@ -1963,6 +1835,49 @@ class OperatorsSpec extends SparkSpec {
       !r2.getAs[Boolean]("budget_override") &&
       r2.getAs[Long]("exact_candidate_pairs") == mass, r2)
     assert(edges(eMh) == edges(eDef))
+  }
+
+  test("router ledgers: each router's one-row ledger keeps its exact schema") {
+    import org.apache.spark.sql.types._
+    def f(name: String, t: DataType): StructField =
+      StructField(name, t, nullable = t == StringType)
+    val keys = Seq((1L, "alpha"), (2L, "alphb"), (3L, "omega"))
+      .toDF("id", "s")
+    val ngram = StructType(Seq(f("route", StringType),
+      f("clone_ratio", DoubleType), f("clone_ratio_threshold", DoubleType),
+      f("max_group", LongType), f("max_group_threshold", LongType),
+      f("sampled_docs", LongType), f("distinct_sets", LongType),
+      f("sample_sixteenths", IntegerType)))
+    assert(Dedup.ngramJaccardDedupEdgesAutoLedger(docs, "doc_id", "text",
+      n = 2, threshold = 0.5)._2.schema == ngram)
+    val fuzzyLink = StructType(Seq(f("tier", StringType),
+      f("density", DoubleType), f("density_threshold", DoubleType),
+      f("mean_key_cp", DoubleType), f("max_mean_key_cp", DoubleType),
+      f("max_bucket", LongType), f("sample_sixteenths", IntegerType),
+      f("max_dist", IntegerType), f("raw_tier", StringType),
+      f("previous_tier", StringType), f("suppressed_flip", BooleanType)))
+    assert(Dedup.fuzzyLinkAuto(keys, "id", "s", keys, "id", "s")._2.schema
+      == fuzzyLink)
+    val ed = StructType(fuzzyLink.fields ++ Seq(
+      f("exact_candidate_budget", LongType),
+      f("exact_candidate_pairs", LongType), f("budget_override", BooleanType)))
+    assert(Dedup.editDistancePairsAuto(keys, "id", "s")._2.schema == ed)
+    assert(Dedup.editDistanceDedupEdgesAuto(keys, "id", "s")._2.schema == ed)
+    val simhash = StructType(Seq(f("route", StringType),
+      f("distinct_fingerprints", LongType), f("buckets", LongType),
+      f("candidate_pairs", LongType), f("candidate_budget", LongType),
+      f("max_hamming", IntegerType)))
+    assert(Dedup.simHashDedupEdgesAutoLedger(docs, "doc_id", "text",
+      maxHamming = 6)._2.schema == simhash)
+    val vecs = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.9, 0.1)),
+      (3L, Seq(0.0, 1.0))).toDF("id", "v")
+    val embedding = StructType(Seq(f("route", StringType),
+      f("distinct_signatures", LongType), f("buckets", LongType),
+      f("candidate_pairs", LongType), f("member_candidate_pairs", LongType),
+      f("candidate_budget", LongType), f("planes", IntegerType),
+      f("tables", IntegerType)))
+    assert(Dedup.embeddingNearDupDedupEdgesAutoLedger(vecs, "id", "v",
+      threshold = 0.9)._2.schema == embedding)
   }
 
   test("edCandidateStats: Σ C(n, 2) over deletion-neighborhood variant " +

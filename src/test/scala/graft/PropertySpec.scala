@@ -877,8 +877,8 @@ class PropertySpec extends AnyFunSuite {
           .filter(col("est_jaccard") >= 0.5)), s"minhash: $spec")
       // ngram exact tier through the ROUTER (full sampling for
       // determinism on small corpora) vs the pair expansion
-      assert(comps(Dedup.ngramJaccardDedupEdgesAuto(df, "id", "text",
-          n = 2, threshold = 0.5, sampleSixteenths = 16))
+      assert(comps(Dedup.ngramJaccardDedupEdgesAutoLedger(df, "id", "text",
+          n = 2, threshold = 0.5, sampleSixteenths = 16)._1)
         == comps(Dedup.ngramJaccardPairs(df, "id", "text",
           n = 2, threshold = 0.5)), s"ngram: $spec")
       // fuzzy tier (texts as keys)

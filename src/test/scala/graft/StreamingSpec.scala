@@ -1641,8 +1641,11 @@ class StreamingSpec extends SparkSpec {
     assert(cfg.curation.head.schemaDdl.contains("doc_id LONG, text STRING"))
     val q = PipelineRunner.startCuration(spark, cfg, "sc")
     q.processAllAvailable()
+    // one file, so both rows land in one micro-batch: the running
+    // stream can list a multi-file append between two file commits,
+    // and id 2 alone in an earlier batch would be admitted first
     Seq((1L, "alpha"), (2L, "alpha")).toDF("doc_id", "text")
-      .write.mode("append").parquet(src)
+      .coalesce(1).write.mode("append").parquet(src)
     q.processAllAvailable(); q.stop()
     assert(spark.read.parquet(out).select("doc_id")
       .collect().map(_.getLong(0)).toSet == Set(1L))
