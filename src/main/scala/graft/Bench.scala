@@ -1,23 +1,31 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftshim.ListenerBridge
 
 import graft.operators.IterPin
 
+/** The measurement main over the declared queries.
+  *
+  *   runMain graft.Bench [q1,q2,...]
+  *     median-of-N wall time per query plus its scheduled jobs, stages,
+  *     tasks and codegen compiles; one compact JSON line on stdout, the
+  *     full record in bench_full.json
+  *   runMain graft.Bench plans <outDir> <suffix> [q1,q2,...]
+  *     `.explain("formatted")` per query into <outDir>/<query>_<suffix>.txt
+  *     (explain only — nothing executes)
+  *
+  * Environment: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_SHUFFLE,
+  * SPARK_GRAFT_REPEATS (timed runs per query, default 3) and GRAFT_CONF
+  * (session-conf overrides for A/B runs, e.g.
+  * `graft.components.driverMaxEdges=0,graft.x=y`).
+  */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    // optional arg: comma-separated query names (dev aid for warm
-    // per-query timing; the driver passes no args → full suite)
-    val only: Option[Set[String]] =
-      args.headOption.map(_.split(",").toSet)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val repeats = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt
-    // shuffle partitions default to the core count (right for the
-    // sf0.1 gate); at sf10+ pass SPARK_GRAFT_SHUFFLE so 50M+-row
-    // shuffles aren't forced through 32 spilling partitions — the
-    // local stand-in for sizing spark.sql.shuffle.partitions to the
-    // data on a real cluster
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
+  /** The local session every measurement main runs on. */
+  private[graft] def localSession(cpus: String, shuffle: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shuffle)
@@ -25,45 +33,145 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // untimed warmup: absorb JVM/JIT/codegen startup outside the timed
-    // region (the first heavy plan otherwise pays ~5 s of C2 compilation;
-    // the reference likewise pre-warms its parser/AST caches)
-    locally {
-      import org.apache.spark.sql.functions._
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      val o = spark.read.parquet(s"$sfDir/orders.parquet")
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("l_returnflag")).agg(count(lit(1)), sum(col("l_quantity")))
-        .count()
-      spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(explode(split(lower(col("text")), "\\s+"))).count()
+    spark
+  }
+
+  /** JSON string literal: backslash, quote and ALL control chars (<0x20)
+    * escaped — a tab or CR in a query's oracle SQL would otherwise make
+    * a reader's json.load fail. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  type Query = (SparkSession, String) => DataFrame
+
+  def main(args: Array[String]): Unit = {
+    def names(arg: Option[String]): Option[Set[String]] = arg.map(_.split(",").toSet)
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // shuffle partitions default to the core count (right for the
+    // sf0.1 gate); at sf10+ pass SPARK_GRAFT_SHUFFLE so 50M+-row
+    // shuffles aren't forced through 32 spilling partitions — the
+    // local stand-in for sizing spark.sql.shuffle.partitions to the
+    // data on a real cluster
+    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
+    val spark = localSession(cpus, shuffle)
+    sys.env.get("GRAFT_CONF").foreach(_.split(",").filter(_.contains("="))
+      .foreach { kv =>
+        val Array(k, v) = kv.split("=", 2)
+        spark.conf.set(k.trim, v.trim)
+      })
+    if (args.headOption.contains("plans"))
+      plans(spark, sfDir, args(1), args(2), names(args.lift(3)))
+    else {
+      warmUp(spark, sfDir)
+      val repeats = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt
+      // optional arg: comma-separated query names (dev aid for warm
+      // per-query timing; the driver passes no args → full suite)
+      println(run(spark, sfDir, names(args.headOption), repeats,
+        Paths.get("bench_full.json")))
     }
-    // untimed per-query SETUP: build every index-at-rest (and the BPE
-    // vocab) BEFORE the timed region. The index queries (dd13/dd23-25,
-    // ann08-14, bpe*) are offline-build/online-probe by design; their
-    // lazily-memoized builds otherwise land inside the first timed
-    // repeat, and the build's write I/O is exactly the machine-coupled
-    // term that made dd25 drift ~2× in-suite every round. Skipped for
-    // single-query dev runs outside the dedup/ann/bpe families (the
-    // interleaved A/B protocol spawns many JVMs — a cy/q/gr A/B should
-    // not pay index builds it never touches; an index query's first
-    // timed repeat would still lazily build, as before the setup phase)
+    spark.stop()
+  }
+
+  /** Untimed warmup: absorb JVM/JIT/codegen startup outside the timed
+    * region (the first heavy plan otherwise pays ~5 s of C2 compilation;
+    * the reference likewise pre-warms its parser/AST caches). */
+  private def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    import org.apache.spark.sql.functions._
+    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val o = spark.read.parquet(s"$sfDir/orders.parquet")
+    li.join(o, col("l_orderkey") === col("o_orderkey"))
+      .groupBy(col("l_returnflag")).agg(count(lit(1)), sum(col("l_quantity")))
+      .count()
+    spark.read.parquet(s"$sfDir/documents.parquet")
+      .select(explode(split(lower(col("text")), "\\s+"))).count()
+  }
+
+  /** The selected queries, by name. Builds every index-at-rest (and the
+    * BPE vocab) first when the selection reaches one: the index queries
+    * (dd13/dd23-25, ann08-14, bpe*) are offline-build/online-probe by
+    * design, and their lazily-memoized builds otherwise land inside the
+    * first timed run — the build's write I/O is exactly the
+    * machine-coupled term that made dd25 drift ~2× in-suite. Single-query
+    * runs outside the dedup/ann/bpe families skip it, so a cy/q/gr A/B
+    * does not pay index builds it never touches. */
+  private def prepare(spark: SparkSession, sfDir: String,
+                      only: Option[Set[String]],
+                      queries: Map[String, Query]): Seq[(String, Query)] = {
     if (only.forall(_.exists(n => n.startsWith("dd") ||
         n.startsWith("ann") || n.startsWith("bpe"))))
       graft.queries.PipelineQueries.prepareIndexes(spark, sfDir)
+    queries.toSeq.sortBy(_._1).filter { case (n, _) => only.forall(_.contains(n)) }
+  }
+
+  /** Write `.explain("formatted")` of each selected query to
+    * `<outDir>/<query>_<suffix>.txt` (plan claims are checked against
+    * these committed files). */
+  def plans(spark: SparkSession, sfDir: String, outDir: String, suffix: String,
+            only: Option[Set[String]],
+            queries: Map[String, Query] = SparkEntry.queries): Unit = {
+    val selected = prepare(spark, sfDir, only, queries)
+    Files.createDirectories(Paths.get(outDir))
+    selected.foreach { case (name, fn) =>
+      try {
+        val txt = fn(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        Files.write(Paths.get(outDir, s"${name}_$suffix.txt"), txt.getBytes("UTF-8"))
+        println(s"[plans] wrote $name")
+      } catch { case e: Throwable =>
+        System.err.println(s"[plans] $name FAILED: ${e.getMessage}")
+      }
+    }
+  }
+
+  /** The timed loop. Each selected query runs `repeats` times; its
+    * record is the lower median, the sorted times, and the scheduled
+    * jobs, stages and tasks plus the generated classes compiled (a class
+    * evicted from Spark's codegen cache compiles again) of its LAST run,
+    * counted by one listener. The iterative operators run their loops
+    * while the frame is built, so these counts, not the final plan, are
+    * the evidence for job-count claims. The full record goes to
+    * `fullPath`; the returned compact line (under 1 KB) carries the
+    * total, the query and error counts, the sf dir and `fullPath`.
+    */
+  def run(spark: SparkSession, sfDir: String, only: Option[Set[String]],
+          repeats: Int, fullPath: Path,
+          queries: Map[String, Query] = SparkEntry.queries): String = {
+    val selected = prepare(spark, sfDir, only, queries)
+    val jobs, stages, tasks = new AtomicLong(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        stages.incrementAndGet()
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = tasks.incrementAndGet()
+    }
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    spark.sparkContext.addSparkListener(listener)
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // median-of-N per query so one GC pause or first-run plan compile
     // can't masquerade as a slow plan; a query that throws is reported
     // as -1 with its error surfaced instead of a plausible wall-time
-    val results = scala.collection.immutable.ListMap(SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }: _*).map { case (name, fn) =>
-      val times = (1 to repeats).flatMap { _ =>
+    val results = try selected.map { case (name, fn) =>
+      val runs = (1 to repeats).map { _ =>
+        jobs.set(0); stages.set(0); tasks.set(0)
+        val compiles0 = compiles.getCount
         val t0 = System.nanoTime()
         val t = try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
         catch { case e: Throwable =>
           errors.getOrElseUpdate(name, s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
           None
         }
+        // listener events are async: drain the bus before reading
+        if (!ListenerBridge.waitUntilEmpty(spark, 30000L))
+          System.err.println(s"[bench] $name: listener bus not drained")
+        val counts = Seq(jobs.get, stages.get, tasks.get, compiles.getCount - compiles0)
         // drop checkpoint/persist blocks so one run's cached state can't
         // skew the next run's GC profile, and force a collection so the
         // allocation debt of heavy queries (exploded dedup indexes) is
@@ -73,44 +181,42 @@ object Bench {
         IterPin.freeAll(spark)
         System.gc()
         Thread.sleep(200) // let the context cleaner drain off the timed path
-        t
+        (t, counts)
       }
+      val times = runs.flatMap(_._1).sorted
       // LOWER median — times.size / 2 is the MAX for even repeat counts
       // (the driver runs repeats=2), which reported one-off GC spikes as
       // the steady-state number
-      val dt = if (times.isEmpty) -1.0 else times.sorted.apply((times.size - 1) / 2)
-      name -> (dt, times.sorted)
-    }
-    def num(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val qsFull = results.map { case (k, (v, _)) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // per-query [min, median, max] so artifacts record run-to-run spread
-    // instead of a single sample that can't be reconciled later
-    val spread = results.collect { case (k, (_, ts)) if ts.nonEmpty =>
-      s"\"" + k + "\":[" + ts.head + "," + ts.apply((ts.size - 1) / 2) + "," + ts.last + "]"
-    }.mkString("{", ",", "}")
-    val errs = errors.map { case (k, v) =>
-      s"\"" + k + "\":\"" + v.replace("\\", "\\\\").replace("\"", "\\\"").replace("\n", " ") + "\""
-    }.mkString("{", ",", "}")
-    val total = results.values.map(_._1).filter(_ >= 0).sum
-    // bench_full.json keeps the high-precision map + per-query spread
-    // for artifact-grade reconciliation.
-    val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"spread":$spread,"errors":$errs,"sf":"$sfDir"}"""
-    val fullPath = java.nio.file.Paths.get("bench_full.json")
-    java.nio.file.Files.write(fullPath, (fullJson + "\n").getBytes("UTF-8"))
-    // Driver contract: stdout carries ONE JSON line with EVERY declared
-    // query's ms-precision median, so the harness's per-query parse
-    // (PERF_r*.json) never depends on a side file. Rounds 19-20 printed
-    // only a headline subset (on a 2000-char-tail theory of the log
-    // capture) and both rounds came back "parsed: null" with per_query
-    // empty — the r20 verdict adjudicated the partial map as the likely
-    // parse rejection and directed the full map be restored (additions
-    // only: the same keys, the same headline entries, more of them).
-    val qsLine = results.map { case (k, (v, _)) =>
-      s"\"" + k + "\":" + num(v)
-    }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qsLine,"errors":$errs,"n_queries":${results.size},"full":"bench_full.json","sf":"$sfDir"}""")
-    spark.stop()
+      val dt = if (times.isEmpty) -1.0 else times((times.size - 1) / 2)
+      (name, dt, times, runs.lastOption.fold(Seq.empty[Long])(_._2))
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    def obj(fields: Seq[(String, String)]): String =
+      fields.map { case (k, v) => jsonString(k) + ":" + v }.mkString("{", ",", "}")
+    val total = results.map(_._2).filter(_ >= 0).sum
+    val counterNames = Seq("jobs", "stages", "tasks", "compiles")
+    val full = obj(Seq(
+      "metric" -> "\"total\"", "value" -> total.toString, "unit" -> "\"sec\"",
+      "queries" -> obj(results.map { case (k, v, _, _) => k -> v.toString }),
+      // per-query [min, median, max] so artifacts record run-to-run
+      // spread instead of a single sample that can't be reconciled later
+      "spread" -> obj(results.collect { case (k, v, ts, _) if ts.nonEmpty =>
+        k -> Seq(ts.head, v, ts.last).mkString("[", ",", "]") }),
+      "counters" -> obj(results.map { case (k, _, _, c) =>
+        k -> obj(counterNames.zip(c.map(_.toString))) }),
+      "errors" -> obj(errors.toSeq.map { case (k, e) => k -> jsonString(e) }),
+      "sf" -> jsonString(sfDir)))
+    Files.write(fullPath, (full + "\n").getBytes("UTF-8"))
+    // Driver contract: stdout's last line is ONE compact JSON object —
+    // the driver keeps only ~2 KB of the log tail, so the per-query map
+    // lives in the full file
+    obj(Seq(
+      "metric" -> "\"total\"",
+      "value" -> "%.3f".formatLocal(java.util.Locale.ROOT, total),
+      "unit" -> "\"sec\"",
+      "n_queries" -> results.size.toString,
+      "n_errors" -> errors.size.toString,
+      "sf" -> jsonString(sfDir),
+      "full" -> jsonString(fullPath.toString)))
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.IterPin
@@ -43,11 +42,7 @@ object ScaleEdges {
     // optional arg: comma-separated op names, so a new op's sf10 run
     // doesn't re-pay the already-recorded suite (the Bench `only` aid)
     val only: Option[Set[String]] = args.headOption.map(_.split(",").toSet)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.localSession(cpus, shuffle)
     import graft.operators.Dedup
     // LAZY table handles: spark.read.parquet infers schema EAGERLY, so
     // an unconditional read of customer/embeddings would fail a
@@ -59,8 +54,8 @@ object ScaleEdges {
 
     val times = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val rows = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    // two passes, min — the ScaleCheck warmup discipline (the first
-    // pass pays JIT/codegen; the min is the steady-state plan cost).
+    // two passes, min (the first pass pays JIT/codegen; the min is the
+    // steady-state plan cost).
     // SPARK_GRAFT_SCALE_RUNS=1 for multi-minute sf10 arms where the
     // doubled wall outweighs the warmup bias (record the bias caveat
     // next to the artifact when used).

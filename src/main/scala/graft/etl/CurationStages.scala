@@ -101,12 +101,7 @@ object CurationStages {
   def apply(spark: SparkSession, df: DataFrame, idCol: String,
             textCol: String, stage: CurationStageDef,
             streamBatch: Option[Long] = None): DataFrame = {
-    def param(name: String): Option[String] = stage.params.get(name)
-    def intParam(name: String, default: Int): Int =
-      param(name).map(_.toInt).getOrElse(default)
-    def longParam(name: String): Option[Long] = param(name).map(_.toLong)
-    def doubleParam(name: String, default: Double): Double =
-      param(name).map(_.toDouble).getOrElse(default)
+    import stage.{doubleParam, intParam, longParam, param}
     // operators in the text tier take (doc_id, text) — present the
     // frame under those names, keep results keyed by the real id
     def docs: DataFrame =
@@ -492,9 +487,9 @@ object CurationStages {
           // that crashed and was never re-run. Idempotent, two exists()
           // calls per component on a healthy index.
           pipeline.stages.foreach { st =>
-            st.params.get("index_dir").foreach(idx =>
+            st.param("index_dir").foreach(idx =>
               graft.operators.BatchCompaction.recoverIndex(spark, idx))
-            st.params.get("ledger_dir").foreach(led =>
+            st.param("ledger_dir").foreach(led =>
               graft.operators.BatchCompaction.recoverDir(spark, led, "batch"))
           }
           // index writes are collected, not executed, during the fold:
@@ -522,15 +517,15 @@ object CurationStages {
               // incremental SemDeDup against the vector index-at-rest
               // (Similarity.semanticCrawlBatch) — same deferred-admit
               // exactly-once contract as the text stages
-              val vecCol = stage.params.getOrElse("vec_col",
+              val vecCol = stage.param("vec_col").getOrElse(
                 throw new IllegalArgumentException(
                   "streaming semantic_dedup needs vec_col"))
               val (survivors, admit) = graft.operators.Similarity
                 .semanticCrawlBatch(spark, stage.params("index_dir"), df,
                   pipeline.idCol, vecCol,
-                  tau = stage.params.get("tau").map(_.toDouble).getOrElse(0.9),
-                  nlist = stage.params.get("nlist").map(_.toInt).getOrElse(64),
-                  nprobe = stage.params.get("nprobe").map(_.toInt).getOrElse(4),
+                  tau = stage.doubleParam("tau", 0.9),
+                  nlist = stage.intParam("nlist", 64),
+                  nprobe = stage.intParam("nprobe", 4),
                   batchId = batchId)
               deferred += (shipped => admit(shipped))
               survivors
@@ -542,12 +537,9 @@ object CurationStages {
               val (survivors, admit) = Dedup.fuzzyCrawlBatch(spark,
                 stage.params("index_dir"), df, pipeline.idCol,
                 pipeline.textCol, batchId,
-                maxDist = stage.params.get("max_dist")
-                  .map(_.toInt).getOrElse(1),
-                densityThreshold = stage.params.get("density_threshold")
-                  .map(_.toDouble).getOrElse(64.0),
-                maxMeanKeyLen = stage.params.get("max_mean_key_len")
-                  .map(_.toDouble).getOrElse(64.0))
+                maxDist = stage.intParam("max_dist", 1),
+                densityThreshold = stage.doubleParam("density_threshold", 64.0),
+                maxMeanKeyLen = stage.doubleParam("max_mean_key_len", 64.0))
               deferred += admit
               survivors
             } else if (stage.params.contains("index_dir") && stage.op == "exact_dedup") {
@@ -582,14 +574,13 @@ object CurationStages {
           // accrues one partition per micro-batch and probe listing
           // costs grow linearly in batch count.
           pipeline.stages.foreach { st =>
-            st.params.get("compact_every").map(_.toLong).foreach { every =>
-              val retain = math.max(1L,
-                st.params.get("compact_retain").map(_.toLong).getOrElse(1L))
+            st.longParam("compact_every").foreach { every =>
+              val retain = math.max(1L, st.longParam("compact_retain").getOrElse(1L))
               if (every > 0 && batchId >= retain && batchId % every == 0) {
-                st.params.get("index_dir").foreach(idx =>
+                st.param("index_dir").foreach(idx =>
                   graft.operators.BatchCompaction
                     .compactIndex(spark, idx, upTo = batchId - retain))
-                st.params.get("ledger_dir").foreach(led =>
+                st.param("ledger_dir").foreach(led =>
                   graft.operators.BatchCompaction
                     .compactDir(spark, led, "batch", upTo = batchId - retain))
               }
@@ -610,14 +601,13 @@ object CurationStages {
           pipeline.stages.foreach { st =>
             if (st.op == "semantic_dedup" && st.params.contains("index_dir") &&
                 st.params.contains("drift_dir")) {
-              st.params.get("drift_every").map(_.toLong).foreach { every =>
+              st.longParam("drift_every").foreach { every =>
                 val idx = st.params("index_dir")
                 val meta = new org.apache.hadoop.fs.Path(s"$idx/_meta")
                 val ifs = meta
                   .getFileSystem(spark.sparkContext.hadoopConfiguration)
                 if (every > 0 && batchId % every == 0 && ifs.exists(meta)) {
-                  val thr = st.params.get("drift_threshold")
-                    .map(_.toDouble).getOrElse(4.0)
+                  val thr = st.doubleParam("drift_threshold", 4.0)
                   // INCREMENTAL audit: scan only the EARLIEST batch
                   // (the baseline) and the NEWEST one — partition
                   // pruning makes the periodic watchdog O(2 batches),
@@ -711,7 +701,7 @@ object CurationStages {
                                    idCol: String, textCol: String,
                                    stage: CurationStageDef, batchId: Long)
   : (DataFrame, DataFrame => Unit) = {
-    val budget = stage.params.get("budget").map(_.toLong).getOrElse(
+    val budget = stage.longParam("budget").getOrElse(
       throw new IllegalArgumentException("token_budget needs budget"))
     val ledgerDir = stage.params("ledger_dir")
     val p = new org.apache.hadoop.fs.Path(ledgerDir)
@@ -866,13 +856,13 @@ object CurationStages {
   : (DataFrame, DataFrame => Unit) = {
     import graft.operators.Components
     val indexDir = stage.params("index_dir")
-    val threshold = stage.params.get("threshold").map(_.toDouble).getOrElse(0.8)
+    val threshold = stage.doubleParam("threshold", 0.8)
     // fail early and identically on both the probe filter (which would
     // silently pass everything through) and the intra-batch edge form
     // (which requires it) — the batch router's contract
     require(threshold <= 1.0,
       s"minhash_dedup threshold must be <= 1.0, got $threshold")
-    val rankBy = stage.params.getOrElse("rank_by", "id")
+    val rankBy = stage.param("rank_by").getOrElse("id")
     require(rankBy == "id" || rankBy == "quality",
       s"minhash_dedup rank_by must be 'id' or 'quality', got '$rankBy'")
     def intraSurvivors(d: DataFrame, shingleSize: Int, numHashes: Int,
@@ -915,9 +905,9 @@ object CurationStages {
         val m = spark.read.parquet(s"$indexDir/_meta").head()
         (m.getInt(0), m.getInt(1), m.getInt(2))
       } else (
-        stage.params.get("shingle_size").map(_.toInt).getOrElse(3),
-        stage.params.get("num_hashes").map(_.toInt).getOrElse(64),
-        stage.params.get("bands").map(_.toInt).getOrElse(16))
+        stage.intParam("shingle_size", 3),
+        stage.intParam("num_hashes", 64),
+        stage.intParam("bands", 16))
     val (pre, probePins) =
       if (haveIndex) {
         val (lookup, pins) = Dedup.minHashIndexLookupPinned(spark,

@@ -23,9 +23,17 @@ final case class OutputDef(queryId: String, uri: String, format: Option[String])
 
 /** One declarative curation stage: an operator name from
   * [[CurationStages.SupportedOps]] plus its (string-typed, YAML-sourced)
-  * parameters.
+  * parameters, read through the typed accessors below (a malformed
+  * number throws NumberFormatException).
   */
-final case class CurationStageDef(op: String, params: Map[String, String])
+final case class CurationStageDef(op: String, params: Map[String, String]) {
+  def param(name: String): Option[String] = params.get(name)
+  def intParam(name: String, default: Int): Int =
+    param(name).map(_.toInt).getOrElse(default)
+  def longParam(name: String): Option[Long] = param(name).map(_.toLong)
+  def doubleParam(name: String, default: Double): Double =
+    param(name).map(_.toDouble).getOrElse(default)
+}
 
 /** A curation pipeline: documents in (a source URI, or the id of an
   * earlier curation pipeline to chain from), stages in order, optional

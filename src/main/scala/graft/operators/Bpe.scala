@@ -80,8 +80,9 @@ object Bpe {
     * FIRST-CLASS, not advice: `sampleSixteenths` < 16 trains on a
     * deterministic md5 hash sample of DOCUMENTS (keyed on the text —
     * engine-portable, the [[Sampling.hashSample]] rule). Sampled-train
-    * quality is MEASURED, not cited (graft.BpeAgreement, sf1 corpus,
-    * 128 requested / 102 learned merges — artifacts/r18/
+    * quality is MEASURED, not cited (the deleted graft.BpeAgreement
+    * study main — `git show a640c4d:src/main/scala/graft/BpeAgreement.scala`
+    * recovers it — on the sf1 corpus, 128 requested / 102 learned merges — artifacts/r18/
     * bpe_agreement_sf1.json): the HALF sample learns the IDENTICAL
     * merge set (top-all overlap 1.0000) and the QUARTER sample 97.1%
     * (top-64 overlap 0.98/0.92), while the exact greedy ORDER diverges

@@ -2905,14 +2905,10 @@ object Dedup {
   : (DataFrame, DataFrame => Unit) = {
     require(maxDist == 1 || maxDist == 2,
       s"maxDist must be 1 or 2, got $maxDist")
-    val metaPath = new org.apache.hadoop.fs.Path(s"$indexDir/_meta")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hoodDir = new org.apache.hadoop.fs.Path(s"$indexDir/hood")
-    val have = fs.exists(metaPath)
+    val existing = fuzzyIndexMeta(spark, indexDir)
+    val have = existing.isDefined
     val v = df.select(col(idCol).as("id"), col(strCol).as("s"))
       .localCheckpoint(true)
-    def spaced(d: DataFrame): DataFrame = d.select(col("s").as("id"),
-      regexp_replace(col("s"), "(?s)(.)", "$1 ").as("chars"))
     // an EXISTING index pins tier/maxDist AND the minhash sketch params:
     // the intra-batch banding (edLshSelfPairs) and the admit's
     // minHashIndexPut must use the num_hashes/bands the index was
@@ -2920,16 +2916,12 @@ object Dedup {
     // than the fuzzyIndexPut seed would otherwise silently change
     // intra-batch banding recall and let the outer _meta drift from the
     // sketch's own _meta
-    val (tier, md, nh, bs) =
-      if (have) {
-        val m = spark.read.parquet(s"$indexDir/_meta").head()
-        (m.getString(0), m.getInt(1), m.getInt(2), m.getInt(3))
-      } else {
-        val (t, measured) = fuzzyTier(v.select(col("s")), maxDist,
-          densityThreshold, maxMeanKeyLen, sampleSixteenths, None, 0.0)
-        logRouting("streaming fuzzy", ("tier" -> t) +: measured)
-        (t, maxDist, numHashes, bands)
-      }
+    val meta @ (tier, md, nh, bs) = existing.getOrElse {
+      val (t, measured) = fuzzyTier(v.select(col("s")), maxDist,
+        densityThreshold, maxMeanKeyLen, sampleSixteenths, None, 0.0)
+      logRouting("streaming fuzzy", ("tier" -> t) +: measured)
+      (t, maxDist, numHashes, bands)
+    }
     // 1. cross-batch drop: batch strings within md of anything the
     //    index admitted before this batch
     val dupStrings =
@@ -2965,38 +2957,7 @@ object Dedup {
       val keys = survivors.join(shipped, Seq(idCol), "left_semi")
         .select(col(strCol).as("k")).distinct()
         .localCheckpoint(true)
-      if (!keys.isEmpty) {
-        if (tier == "exact") {
-          ensureBatchLayout(fs, hoodDir)
-          keys.select(col("k"),
-              explode(deletionHood(col("k"), md)).as("dk"))
-            .withColumn("batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch").parquet(s"$indexDir/hood")
-        } else {
-          minHashIndexPut(spark, s"$indexDir/sketch",
-            spaced(keys.select(col("k").as("s"))), "id", "chars",
-            batchId, shingleSize = 2, numHashes = nh,
-            bands = bs)
-        }
-        // the outer _meta pins the tier and means "the index exists":
-        // write it only once the tier's OWN write actually landed. The
-        // exact tier always lands (a non-empty key's hood contains the
-        // key itself); the minhash tier skips keys too short to form a
-        // char bigram — an all-1-char-key admit writes no sketch, and
-        // writing _meta anyway would point later probes at a sketch
-        // that is not there
-        val tierLanded = tier == "exact" ||
-          fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/sketch/_meta"))
-        if (tierLanded && !fs.exists(metaPath)) {
-          import spark.implicits._
-          Seq((tier, md, nh, bs))
-            .toDF("tier", "max_dist", "num_hashes", "bands")
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$indexDir/_meta")
-        }
-      }
+      fuzzyIndexWrite(spark, indexDir, keys, batchId, meta)
       // admit is the batch's LAST consumer of this operator's pins
       // (survivors were materialized into the caller's output
       // checkpoint before admit ran): free deterministically
@@ -3016,8 +2977,6 @@ object Dedup {
                            indexDir: String, probe: DataFrame,
                            tier: String, md: Int,
                            excludeBatchFrom: Option[Long]): DataFrame = {
-    def spaced(d: DataFrame): DataFrame = d.select(col("s").as("id"),
-      regexp_replace(col("s"), "(?s)(.)", "$1 ").as("chars"))
     val cand =
       if (tier == "exact") {
         val hoodDir = new org.apache.hadoop.fs.Path(s"$indexDir/hood")
@@ -3054,7 +3013,7 @@ object Dedup {
           .select(col("s").as("id1"), col("k").as("id2"),
             col("s").as("s1"), col("k").as("s2")).distinct()
       } else
-        minHashIndexLookup(spark, s"$indexDir/sketch", spaced(probe),
+        minHashIndexLookup(spark, s"$indexDir/sketch", charSpaced(probe),
             "id", "chars", excludeBatchFrom = excludeBatchFrom)
           .select(col("new_id").as("id1"), col("corpus_id").as("id2"),
             col("new_id").as("s1"), col("corpus_id").as("s2")).distinct()
@@ -3076,8 +3035,9 @@ object Dedup {
                         indexDir: String, df: DataFrame,
                         idCol: String, strCol: String,
                         excludeBatchFrom: Option[Long] = None): DataFrame = {
-    val m = spark.read.parquet(s"$indexDir/_meta").head()
-    val (tier, md) = (m.getString(0), m.getInt(1))
+    val (tier, md, _, _) = fuzzyIndexMeta(spark, indexDir).getOrElse(
+      throw new IllegalArgumentException(
+        s"no streaming fuzzy index at $indexDir (no _meta)"))
     val v = df.select(col(idCol).as("__pid"), col(strCol).as("s"))
     v.join(matchStrings(spark, indexDir,
         v.select(col("s")).distinct(), tier, md, excludeBatchFrom),
@@ -3101,41 +3061,71 @@ object Dedup {
                     numHashes: Int = 64, bands: Int = 32): Unit = {
     require(maxDist == 1 || maxDist == 2,
       s"maxDist must be 1 or 2, got $maxDist")
-    val metaPath = new org.apache.hadoop.fs.Path(s"$indexDir/_meta")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (t, md, nh, nb) =
-      if (fs.exists(metaPath)) {
-        val m = spark.read.parquet(s"$indexDir/_meta").head()
-        (m.getString(0), m.getInt(1), m.getInt(2), m.getInt(3))
-      } else (tier, maxDist, numHashes, bands)
     val keys = df.select(col(strCol).as("k")).distinct()
       .localCheckpoint(true)
-    if (!keys.isEmpty) {
-      if (t == "exact") {
-        val hoodDir = new org.apache.hadoop.fs.Path(s"$indexDir/hood")
-        ensureBatchLayout(fs, hoodDir)
-        keys.select(col("k"), explode(deletionHood(col("k"), md)).as("dk"))
-          .withColumn("batch", lit(batch))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch").parquet(s"$indexDir/hood")
-      } else
-        minHashIndexPut(spark, s"$indexDir/sketch",
-          keys.select(col("k").as("id"),
-            regexp_replace(col("k"), "(?s)(.)", "$1 ").as("chars")),
-          "id", "chars", batch, shingleSize = 2, numHashes = nh,
-          bands = nb)
-      val landed = t == "exact" ||
-        fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/sketch/_meta"))
-      if (landed && !fs.exists(metaPath)) {
-        import spark.implicits._
-        Seq((t, md, nh, nb))
-          .toDF("tier", "max_dist", "num_hashes", "bands")
-          .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/_meta")
-      }
-    }
+    fuzzyIndexWrite(spark, indexDir, keys, batch,
+      fuzzyIndexMeta(spark, indexDir).getOrElse((tier, maxDist, numHashes, bands)))
     IterPin.free(keys) // the writes above were the pin's last consumers
   }
+
+  /** A streaming fuzzy index's pinned (tier, max_dist, num_hashes,
+    * bands), read from its `_meta`; None before the first admit landed.
+    */
+  private def fuzzyIndexMeta(spark: org.apache.spark.sql.SparkSession,
+                             indexDir: String): Option[(String, Int, Int, Int)] = {
+    val metaPath = new org.apache.hadoop.fs.Path(s"$indexDir/_meta")
+    if (!metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(metaPath)) None
+    else {
+      val m = spark.read.parquet(metaPath.toString).head()
+      Some((m.getString(0), m.getInt(1), m.getInt(2), m.getInt(3)))
+    }
+  }
+
+  /** The admit shared by [[fuzzyCrawlBatch]] and [[fuzzyIndexPut]]:
+    * write the distinct `keys` (one column `k`) under `batch` into the
+    * tier `meta` names — the exact tier's deletion hoods, or the
+    * minhash tier's char-bigram sketch — then the outer `_meta`. An
+    * empty admit writes nothing (an index bootstrapped with data-less
+    * dirs wedges later probes).
+    */
+  private def fuzzyIndexWrite(spark: org.apache.spark.sql.SparkSession,
+                              indexDir: String, keys: DataFrame, batch: Long,
+                              meta: (String, Int, Int, Int)): Unit = {
+    if (keys.isEmpty) return
+    val (tier, md, nh, bs) = meta
+    val metaPath = new org.apache.hadoop.fs.Path(s"$indexDir/_meta")
+    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (tier == "exact") {
+      ensureBatchLayout(fs, new org.apache.hadoop.fs.Path(s"$indexDir/hood"))
+      keys.select(col("k"), explode(deletionHood(col("k"), md)).as("dk"))
+        .withColumn("batch", lit(batch))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch").parquet(s"$indexDir/hood")
+    } else
+      minHashIndexPut(spark, s"$indexDir/sketch",
+        charSpaced(keys.select(col("k").as("s"))), "id", "chars", batch,
+        shingleSize = 2, numHashes = nh, bands = bs)
+    // the outer _meta pins the tier and means "the index exists": write
+    // it only once the tier's OWN write actually landed. The exact tier
+    // always lands (a non-empty key's hood contains the key itself); the
+    // minhash tier skips keys too short to form a char bigram — an
+    // all-1-char-key admit writes no sketch, and writing _meta anyway
+    // would point later probes at a sketch that is not there
+    val landed = tier == "exact" ||
+      fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/sketch/_meta"))
+    if (landed && !fs.exists(metaPath)) {
+      import spark.implicits._
+      Seq(meta).toDF("tier", "max_dist", "num_hashes", "bands")
+        .coalesce(1).write.mode("overwrite").parquet(metaPath.toString)
+    }
+  }
+
+  /** Strings `s` as (id = the string, chars = its characters spaced),
+    * the char-bigram MinHash input of the fuzzy index's minhash tier. */
+  private def charSpaced(d: DataFrame): DataFrame = d.select(col("s").as("id"),
+    regexp_replace(col("s"), "(?s)(.)", "$1 ").as("chars"))
 
   /** [[fuzzyLink]] behind the collision-density ROUTER — the
     * cross-table twin of [[editDistancePairsAuto]]. Density and mean
