@@ -1,21 +1,33 @@
 package graft.paths
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 import graft.compiler.{ExpressionCompiler, Frame, NodeVar, PathVar, QueryCompiler}
 import graft.model.GraphCatalog
 import graft.parser.CypherAst._
 
-/** Variable-length path / shortestPath expansion as an iterative
-  * frontier-join loop — the Spark counterpart of the reference's BFS
-  * expander (/root/reference/packages/pycypher/src/pycypher/
-  * path_expander.py:53-298; caps :40-50; shortestPath :299-490).
+/** Variable-length path / shortestPath expansion — the Spark
+  * counterpart of the reference's BFS expander (pycypher
+  * `path_expander.py:53-298`; caps :40-50; shortestPath :299-490). Two
+  * regimes:
   *
-  * Each hop is one equi-join of the frontier against the edge table
-  * (hash-partitioned on the join key — at scale this is the same
-  * plan GraphFrames BFS produces), with `localCheckpoint` per hop to
-  * keep lineage flat and an action-based empty-frontier early stop.
+  *  - Broadcast BFS: a shortestPath segment that reports hop counts only
+  *    (no materialized witnesses, `maxHops > 1`) over an edge list that
+  *    fits under `spark.sql.autoBroadcastJoinThreshold` runs the
+  *    reference's per-origin BFS inside one `mapPartitions` over the
+  *    distinct start ids, against a broadcast adjacency map. The edge
+  *    list is collected once; the BFS itself is lazy and runs inside the
+  *    query's own action, so no job is paid per hop.
+  *  - Frontier loop: everything else (walks, trails, materialized
+  *    witnesses, edge lists too large to broadcast, broadcast disabled
+  *    with `-1`). Each hop is one equi-join of the frontier against the
+  *    edge table, with `localCheckpoint` per hop to keep lineage flat
+  *    and an empty-frontier early stop read off the pin's own job.
   *
   * Semantics:
   *  - plain var-length counts WALKS (edge repetition allowed), which
@@ -28,11 +40,12 @@ import graft.parser.CypherAst._
   *    inherently heavier (O(maxHops) ids ride along per path, and
   *    walk-sharing across duplicate start rows still applies), so it
   *    is opt-in where cyclic-graph parity with Neo4j matters;
-  *  - shortestPath runs true BFS: per-hop `(origin, node)` frontier
-  *    dedup plus a visited-set anti-join (path_expander.py:56-76), so
-  *    on a dense graph the frontier is bounded by |V| per origin instead
-  *    of growing with the walk count — first reach IS the minimum hop,
-  *    and expansion stops as soon as a frontier empties.
+  *  - shortestPath runs true BFS in both regimes: each `(origin, node)`
+  *    appears once, at its least hop count, and expansion stops at
+  *    `maxHops` or as soon as a frontier empties. The origin counts as
+  *    visited only when its zero-hop row is emitted (`*0..` with the
+  *    end label equal to the start label), so a one-hop match whose
+  *    end id merely equals the start id under another label survives.
   *
   * The expansion is keyed on the START NODE ID, not a synthetic row id:
   * walks depend only on the start node, so duplicate start rows in the
@@ -120,24 +133,10 @@ object PathExpand {
     val allPaths = matPaths && shortest.contains("allShortest")
 
     // direction-adjusted, property-filtered edge set; [:A|B] alternation
-    // unions the per-type edge lists before the loop. Materialized ONCE
-    // when the loop iterates — otherwise every hop re-executes the edge
-    // derivation subtree (the standard iterative-graph pattern; GraphX
-    // caches its edge RDD the same way). Each hop's join is planned by
-    // AQE, which broadcasts a small side; under adaptive execution a
-    // pin reports UnknownPartitioning, so no DataFrame layout keeps a
-    // large edge table from re-shuffling per hop (the whole-graph loops
-    // hold that layout in RDDs instead, VertexLoop).
+    // unions the per-type edge lists before the loop
     val edges0 = rel.types.map(t => edgeSet(qc, catalog, rel, t, params, carryEdges))
       .reduce(_ unionByName _)
-    val loops = maxHopsOpt.getOrElse(DefaultMaxHops) > 1
-    // edge count folded into the materialization job (IterPin.pinProbed)
-    val (edges, edgeCount) =
-      if (loops) {
-        val (m, r) = graft.operators.IterPin.pinProbed(edges0,
-          Seq(count(lit(1))))
-        (m, r.getLong(0))
-      } else (edges0, 0L)
+    val loops = maxHops > 1
 
     val startLabel = cur.vars(fromVar) match {
       case NodeVar(l, _, _) => Some(l)
@@ -151,6 +150,31 @@ object PathExpand {
 
     // expansion is per distinct start node, joined back to rows afterwards
     val startIds = cur.df.select(col(cur.idCol(fromVar)).as("__origin")).distinct()
+    // A zero-length path means start and end are the SAME node, so it can
+    // only contribute when the end label is the start label — otherwise an
+    // id coincidence across label key spaces would fabricate matches.
+    val zeroHop = minHops == 0 && startLabel.contains(endLabel)
+
+    // BFS dedup is only valid when any reached hop >= minHops counts
+    // (minHops <= 1); a minHops > 1 shortestPath must keep walks so a
+    // node first seen below the floor can still be reported at the floor.
+    val bfs = shortest.isDefined && minHops <= 1
+
+    // Broadcast regime: hop counts only (the map holds no edge identities
+    // to build witnesses from) over an edge list small enough to ship.
+    if (bfs && loops && !matPaths) broadcastAdjacency(edges0, startIds) match {
+      case Some((adj, keyType)) =>
+        return finishSegment(qc, cur, fromVar,
+          broadcastBfs(startIds, adj, keyType, maxHops, zeroHop),
+          endVar, cyclic, endLabel, endNode)
+      case None =>
+    }
+
+    // Frontier loop. The edge set is pinned ONCE when the loop iterates,
+    // or every hop re-executes its derivation (GraphX caches its edge RDD
+    // the same way). Under adaptive execution a pin reports
+    // UnknownPartitioning, so a large edge table re-shuffles per hop.
+    val edges = if (loops) graft.operators.IterPin.pin(edges0) else edges0
     var frontier: DataFrame = startIds
       .select(col("__origin"), col("__origin").as("__node"), lit(0L).as("__hops"))
     if (carryEdges)
@@ -161,102 +185,11 @@ object PathExpand {
       (if (matPaths) Seq(col("__nodes"), col("__edges")) else Seq.empty)
     def walkRows(f: DataFrame) = f.select(walkCols: _*)
     var results = Vector.empty[DataFrame]
-    // A zero-length path means start and end are the SAME node, so it can
-    // only contribute when the end label is the start label — otherwise an
-    // id coincidence across label key spaces would fabricate matches.
-    if (minHops == 0 && startLabel.contains(endLabel)) results :+= walkRows(frontier)
+    if (zeroHop) results :+= walkRows(frontier)
 
-    // BFS dedup is only valid when any reached hop >= minHops counts
-    // (minHops <= 1); a minHops > 1 shortestPath must keep walks so a
-    // node first seen below the floor can still be reported at the floor.
-    val bfs = shortest.isDefined && minHops <= 1
-
-    // Min-plus path-doubling regime for shortest-path expansion over
-    // SMALL edge sets (dimension-table graphs): the transitive min-hop
-    // closure of E doubles its horizon per round, so ⌈log2 maxHops⌉
-    // self-joins replace maxHops sequential frontier rounds — at local
-    // scale each BFS round costs a fixed scheduler floor, so a 12-hop
-    // expansion drops from 12 to 4 round-trips. Two guards keep the
-    // closure from dwarfing the per-origin frontier cost: the edge-count
-    // gate below, and a RUNTIME row cap — a dense ≤threshold-edge graph
-    // can still have an O(V²) closure, so if any round's closure exceeds
-    // graft.pathExpand.doublingMaxClosureRows the regime abandons
-    // (work wasted is bounded by the cap) and the frontier loop runs
-    // instead. Rounds also stop early once a round adds/improves
-    // nothing (the closure is a fixpoint — further squaring is a no-op).
-    val doublingThreshold = edges0.sparkSession.conf
-      .get("graft.pathExpand.doublingMaxEdges", "100000").toLong
-    val closureRowCap = edges0.sparkSession.conf
-      .get("graft.pathExpand.doublingMaxClosureRows", "4000000").toLong
-    // (the closure carries pair-distances only — it cannot materialize
-    // witness paths, so materialization routes through the frontier)
-    val doubling = bfs && loops && !matPaths && edgeCount <= doublingThreshold
-
-    if (doubling) {
-      val probe = Seq(count(lit(1)), coalesce(sum(col("__hops")), lit(0L)))
-      var (closure, closureRow) = graft.operators.IterPin.pinProbed(edges
-        .select(col("__src").as("__a"), col("__dst").as("__b"), lit(1L).as("__hops"))
-        .groupBy(col("__a"), col("__b")).agg(min(col("__hops")).as("__hops")),
-        probe)
-      var signature = (closureRow.getLong(0), closureRow.getLong(1))
-      var span = 1L
-      var abandoned = false
-      var converged = false
-      while (span < maxHops && !abandoned && !converged) {
-        val composed = closure.as("l")
-          .join(closure.as("r"), col("l.__b") === col("r.__a"))
-          .select(col("l.__a").as("__a"), col("r.__b").as("__b"),
-            (col("l.__hops") + col("r.__hops")).as("__hops"))
-          .filter(col("__hops") <= maxHops)
-        // row-cap AND fixpoint probe folded into the pin's own job:
-        // the closure is MONOTONE — union ∪ min never removes a pair
-        // (count non-decreasing) and never increases a pair's hops
-        // (sum non-increasing at fixed count) — so (count, sum(__hops))
-        // unchanged ⟺ no pair added and no hop improved, the exact
-        // fixpoint. (Count equality ALONE is not sufficient — a pair
-        // whose true distance exceeds the current horizon can hold a
-        // non-minimal path length that later rounds improve in place;
-        // the sum term catches exactly those in-place improvements.)
-        // Replaces the old per-round left_anti probe job.
-        val (next, nextRow) = graft.operators.IterPin.pinProbed(
-          closure.unionByName(composed)
-            .groupBy(col("__a"), col("__b")).agg(min(col("__hops")).as("__hops")),
-          probe)
-        if (nextRow.getLong(0) > closureRowCap) abandoned = true
-        else {
-          val nextSig = (nextRow.getLong(0), nextRow.getLong(1))
-          converged = nextSig == signature
-          // superseded closure: its last consumer (the composed join)
-          // has run; each round's closure is the full pair set, so
-          // retention across log2(maxHops) rounds is the doubling
-          // regime's dominant memory term
-          graft.operators.IterPin.free(closure)
-          closure = next
-          signature = nextSig
-          span *= 2
-        }
-      }
-      if (!abandoned) {
-        var dist = startIds.join(closure, col("__origin") === col("__a"))
-          .select(col("__origin"), col("__b").as("__node"), col("__hops"))
-          .filter(col("__hops") >= minHops)
-        // With minHops=0 the frontier regime seeds its visited set with
-        // the origins, so a cycle back to the origin is never reported —
-        // only the 0-hop row (added above iff the labels match) is. Drop
-        // closure self-pairs to match; otherwise a cross-label id
-        // coincidence would fabricate the exact match the 0-hop guard
-        // exists to prevent.
-        if (minHops == 0) dist = dist.filter(col("__origin") =!= col("__node"))
-        val collapsed = (results :+ dist).reduce(_ unionByName _)
-          .groupBy(col("__origin"), col("__node"))
-          .agg(min(col("__hops")).as("__hops"))
-        return finishSegment(qc, cur, fromVar, collapsed, endVar,
-          cyclic, endLabel, endNode)
-      }
-    }
-
+    // the origin is visited only when its zero-hop row was emitted
     var visited: DataFrame =
-      if (minHops == 0) frontier.select(col("__origin"), col("__node"))
+      if (zeroHop) frontier.select(col("__origin"), col("__node"))
       else frontier.select(col("__origin"), col("__node")).limit(0)
 
     // explosion guards (reference parity: path_expander.py:40-50 caps
@@ -379,7 +312,7 @@ object PathExpand {
 
   /** Join the collapsed (origin, node, hops) expansion result back to the
     * outer frame and bind the end node — shared by the frontier-loop and
-    * path-doubling regimes. Materialized `__nodes`/`__edges` arrays (if
+    * broadcast regimes. Materialized `__nodes`/`__edges` arrays (if
     * the expansion carried them) are renamed to per-segment columns and
     * reported so the pattern compiler can splice them into the path
     * variable's node/relationship sequences.
@@ -411,6 +344,69 @@ object PathExpand {
         Some((nc, rc))
       } else None
     (Frame(out, outVars), endVar, hopsCol, mat)
+  }
+
+  /** The edge list as a broadcast adjacency map plus its key type, or
+    * None when it does not fit under `spark.sql.autoBroadcastJoinThreshold`
+    * (or that is `-1`). Rows are counted, not estimated: at most one row
+    * past what fits is collected, each sized as Spark sizes a row (8 bytes
+    * plus each column's default size). Keys and neighbours are cast to
+    * the common type of the start ids and both endpoints, so lookups
+    * compare values of one type, strings included. Edges with a null
+    * endpoint are dropped, as the frontier loop's equi-join drops them.
+    */
+  private def broadcastAdjacency(edges: DataFrame, startIds: DataFrame)
+  : Option[(Broadcast[Map[Any, Array[Any]]], DataType)] = {
+    val spark = edges.sparkSession
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val keyType = startIds.select(col("__origin").as("__id"))
+      .unionByName(edges.select(col("__src").as("__id")))
+      .unionByName(edges.select(col("__dst").as("__id"))).schema.head.dataType
+    val fits = math.min(threshold / (8 + 2 * keyType.defaultSize), Int.MaxValue - 1L)
+    if (fits <= 0) None
+    else {
+      val rows = edges
+        .select(col("__src").cast(keyType).as("__src"), col("__dst").cast(keyType).as("__dst"))
+        .where(col("__src").isNotNull && col("__dst").isNotNull)
+        .limit(fits.toInt + 1).collect()
+      Option.when(rows.length <= fits) {
+        val adj = rows.groupMap(_.get(0))(_.get(1)).map { case (u, vs) => u -> vs.distinct }
+        (spark.sparkContext.broadcast(adj), keyType)
+      }
+    }
+  }
+
+  /** The reference's per-origin BFS over a broadcast adjacency map, run
+    * lazily inside one `mapPartitions` over the distinct start ids:
+    * `(__origin, __node, __hops)` with each reached node once, at its
+    * least hop count (1..maxHops), plus the `(origin, origin, 0)` row
+    * when `zeroHop`. `__origin` keeps the start id's type; `__node`
+    * takes the adjacency's key type.
+    */
+  private def broadcastBfs(startIds: DataFrame, adj: Broadcast[Map[Any, Array[Any]]],
+                           keyType: DataType, maxHops: Int, zeroHop: Boolean)
+  : DataFrame = {
+    val schema = StructType(Seq(startIds.schema("__origin"),
+      StructField("__node", keyType), StructField("__hops", LongType, nullable = false)))
+    startIds.select(col("__origin"), col("__origin").cast(keyType))
+      .mapPartitions { (origins: Iterator[Row]) =>
+        val next = adj.value
+        origins.filter(!_.isNullAt(1)).flatMap { r =>
+          val (origin, seed) = (r.get(0), r.get(1))
+          val seen = mutable.HashSet.empty[Any]
+          val out = mutable.ArrayBuffer.empty[Row]
+          if (zeroHop) { seen += seed; out += Row(origin, seed, 0L) }
+          var frontier = Vector[Any](seed)
+          var hop = 1L
+          while (hop <= maxHops && frontier.nonEmpty) {
+            val reached = frontier.flatMap(next.getOrElse(_, Array.empty[Any])).filter(seen.add)
+            reached.foreach(v => out += Row(origin, v, hop))
+            frontier = reached
+            hop += 1
+          }
+          out
+        }
+      }(Encoders.row(schema))
   }
 
   /** (src, dst[, eid]) edge list for one relationship type,

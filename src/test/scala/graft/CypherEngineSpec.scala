@@ -379,27 +379,129 @@ class CypherEngineSpec extends SparkSpec {
     assert(fold(fold(specials)) == fold(specials))
   }
 
-  test("path-doubling shortestPath regime matches the frontier-loop BFS") {
-    // default gate routes small edge sets through min-plus doubling;
-    // doublingMaxEdges=0 forces the per-origin frontier loop — both must
-    // produce identical (pair, min-hop) sets, including the 0-hop seed
-    def sp() = rows(
-      """MATCH p = shortestPath((a:Person)-[:KNOWS*0..5]->(b:Person))
-         RETURN a.name AS an, b.name AS bn, length(p) AS hops
-         ORDER BY an, bn""").map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    val doubled = sp()
-    spark.conf.set("graft.pathExpand.doublingMaxEdges", "0")
+  /** `body` with broadcast joins off, which also routes every
+    * shortestPath through PathExpand's frontier loop.
+    */
+  private def frontierOnly[T](body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try body finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  /** Whether `df` runs PathExpand's broadcast BFS (its one mapPartitions). */
+  private def broadcastBfs(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.MapPartitions])
+
+  test("broadcast-BFS shortestPath regime matches the frontier-loop BFS") {
+    // small edge sets take the broadcast BFS by default; broadcast off
+    // forces the per-origin frontier loop — both must produce identical
+    // (pair, min-hop) sets, including the 0-hop seed
+    val q = """MATCH p = shortestPath((a:Person)-[:KNOWS*0..5]->(b:Person))
+               RETURN a.name AS an, b.name AS bn, length(p) AS hops
+               ORDER BY an, bn"""
+    def sp() = engine.query(q).collect().toSeq
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    assert(broadcastBfs(engine.query(q)))
+    val broadcast = sp()
+    val looped = frontierOnly {
+      assert(!broadcastBfs(engine.query(q)))
+      sp()
+    }
+    assert(broadcast == looped)
+    assert(broadcast.exists(_._3 == 0L)) // zero-hop pairs present
+    assert(broadcast.exists(_._3 >= 2L)) // multi-hop distances present
+  }
+
+  test("shortestPath *0..2 across labels equals *1..2: an id shared by the " +
+    "start and end labels is no zero-hop match") {
+    import spark.implicits._
+    // TPC-H's nation k sits in region k mod 5, so every one-hop match from
+    // nation k < 5 has region id == nation id; the origin may be marked
+    // visited only when its zero-hop row is emitted, which needs the end
+    // label to be Nation
+    val nation = (0 until 25).map(k => (k, k % 5)).toDF("n_nationkey", "n_regionkey")
+    val eng = new CypherEngine(spark, new GraphCatalog()
+      .addEntity("Region", (0 until 5).toDF("r_regionkey"), idCol = "r_regionkey")
+      .addEntity("Nation", nation, idCol = "n_nationkey")
+      .addRelationship("IN_REGION", nation, srcCol = "n_nationkey",
+        dstCol = "n_regionkey", srcLabel = Some("Nation"), dstLabel = Some("Region")))
+    def sp(range: String) = eng.query(
+      s"""MATCH p = shortestPath((n:Nation)-[:IN_REGION*$range]->(r:Region))
+          WHERE n.n_nationkey < 3
+          RETURN n.n_nationkey AS n, r.r_regionkey AS r, length(p) AS hops""")
+      .collect().toSeq.map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).sorted
+    val want = Seq((0, 0, 1L), (1, 1, 1L), (2, 2, 1L))
+    assert(sp("0..2") == want && sp("1..2") == want)
+    frontierOnly(assert(sp("0..2") == want && sp("1..2") == want))
+  }
+
+  test("broadcast-BFS shortestPath on string ids matches the frontier loop") {
+    import spark.implicits._
+    // non-integral ids: the adjacency map is keyed on values, never cast
+    // to long; a 2-cycle, a self-loop, a null endpoint and a dangling id
+    val person = Seq("ann", "bob", "cy", "dee", "eve").map(n => (n, n.toUpperCase))
+      .toDF("__ID__", "name")
+    val knows = Seq[(Long, String, String)]((0L, "ann", "bob"), (1L, "bob", "cy"),
+      (2L, "cy", "bob"), (3L, "cy", "dee"), (4L, "dee", "dee"), (5L, "eve", null),
+      (6L, "dee", "zed")).toDF("__ID__", "__SOURCE__", "__TARGET__")
+    val eng = new CypherEngine(spark, new GraphCatalog()
+      .addEntity("Person", person)
+      .addRelationship("KNOWS", knows,
+        srcLabel = Some("Person"), dstLabel = Some("Person")))
+    for (range <- Seq("1..4", "0..3")) {
+      val q = s"""MATCH p = shortestPath((a:Person)-[:KNOWS*$range]->(b:Person))
+                  RETURN a.name AS an, b.name AS bn, length(p) AS hops"""
+      def sp() = eng.query(q).collect().toSeq
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2))).sorted
+      assert(broadcastBfs(eng.query(q)))
+      val broadcast = sp()
+      assert(broadcast == frontierOnly(sp()), range)
+      assert(broadcast.contains(("BOB", "BOB", if (range == "0..3") 0L else 2L)), range)
+      assert(broadcast.contains(("ANN", "DEE", 3L)), range)
+    }
+  }
+
+  test("broadcast-BFS shortestPath schedules the same jobs at *1..3 and " +
+    "*1..12, the same count on every run") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graftshim.ListenerBridge
+    import spark.implicits._
+    // a 16-node path: the frontier loop would run every one of 12 hops
+    val node = (0L to 15L).map(i => (i, s"n$i")).toDF("__ID__", "name")
+    val next = (0L until 15L).map(i => (i, i, i + 1)).toDF("__ID__", "__SOURCE__", "__TARGET__")
+    val eng = new CypherEngine(spark, new GraphCatalog()
+      .addEntity("N", node)
+      .addRelationship("NEXT", next, srcLabel = Some("N"), dstLabel = Some("N")))
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobs.merge(g, 1, _ + _))
+    }
+    def count(tag: String, maxHops: Int): Seq[Int] = (1 to 2).map { rep =>
+      val group = s"shortestpath-$tag-$maxHops-$rep"
+      sc.setJobGroup(group, group)
+      try eng.query(
+        s"""MATCH p = shortestPath((a:N)-[:NEXT*1..$maxHops]->(b:N))
+            RETURN a.name AS a, b.name AS b, length(p) AS hops""").collect()
+      finally sc.clearJobGroup()
+      assert(ListenerBridge.waitUntilEmpty(spark, 10000L))
+      jobs.getOrDefault(group, 0)
+    }
+    sc.addSparkListener(listener)
     try {
-      val looped = sp()
-      assert(doubled == looped)
-      assert(doubled.exists(_._3 == 0L)) // zero-hop pairs present
-      assert(doubled.exists(_._3 >= 2L)) // multi-hop distances present
-    } finally spark.conf.unset("graft.pathExpand.doublingMaxEdges")
-    // runtime closure-row cap: abandonment mid-regime must fall back to
-    // the frontier loop with identical results
-    spark.conf.set("graft.pathExpand.doublingMaxClosureRows", "0")
-    try assert(sp() == doubled)
-    finally spark.conf.unset("graft.pathExpand.doublingMaxClosureRows")
+      val (short, long) = (count("broadcast", 3), count("broadcast", 12))
+      assert(short.distinct.size == 1 && long.distinct.size == 1, s"$short $long")
+      assert(short == long, s"jobs at *1..3 $short vs *1..12 $long")
+      // the frontier loop pays per hop: the same pair must differ there
+      frontierOnly(assert(count("frontier", 12).head > count("frontier", 3).head))
+    } finally sc.removeSparkListener(listener)
   }
 
   test("WCOJ flag: triangle pattern matches the binary-join result") {

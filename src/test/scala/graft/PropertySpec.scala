@@ -773,6 +773,31 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("shortestPath length(p) is the brute-force least hop count, " +
+    "broadcast BFS and frontier loop alike") {
+    forAll(multigraphGen, trials = 6) { edges =>
+      val eng = pathEngine(edges)
+      for ((minH, maxH) <- Seq((1, 4), (0, 3))) {
+        // least walk length in minH..maxH per pair; *0.. reports every
+        // node at 0 and never again, even when a cycle returns to it
+        val walks = bruteWalks(edges, maxH).map(p => ((p.head, p.last), p.size - 1L))
+        val zero = if (minH == 0) (0L to 5L).map(v => ((v, v), 0L)) else Nil
+        val want = (walks ++ zero).groupMapReduce(_._1)(_._2)(_ min _)
+          .map { case ((a, b), h) => (s"v$a", s"v$b", h) }.toSeq.sorted
+        def run(): Seq[(String, String, Long)] = eng.query(
+          s"""MATCH p = shortestPath((a:N)-[:E*$minH..$maxH]->(b:N))
+              RETURN a.name AS a, b.name AS b, length(p) AS hops""")
+          .collect().toSeq.map(r => (r.getString(0), r.getString(1), r.getLong(2))).sorted
+        assert(run() == want, s"broadcast BFS *$minH..$maxH; edges=$edges")
+        // broadcast off routes the same query through the frontier loop
+        val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try assert(run() == want, s"frontier loop *$minH..$maxH; edges=$edges")
+        finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      }
+    }
+  }
+
   test("sssp matches in-memory Dijkstra on random weighted digraphs") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
