@@ -6,17 +6,6 @@ import org.apache.spark.sql.functions._
 import graft.model.{EntityDef, GraphCatalog, RelationshipDef}
 import graft.parser.CypherAst._
 
-/** Write-path executor — the Spark counterpart of the reference's
-  * MutationEngine + shadow-write transaction (/root/reference/packages/
-  * pycypher/src/pycypher/mutation_engine.py:53-1143,
-  * relational_models.py:589-708). Where the reference stages shadow
-  * copies and promotes them on commit, here every mutation derives a
-  * NEW immutable DataFrame (append = unionByName, delete = anti-join,
-  * set = left-join + coalesce) registered into a snapshot catalog; the
-  * engine swaps the snapshot in atomically after the whole query
-  * succeeds. `localCheckpoint` pins each mutated table so later reads
-  * in the same query see the writes without unbounded lineage growth.
-  */
 /** Dense sequential id assignment WITHOUT a global window.
   *
   * `row_number() OVER (ORDER BY …)` with no PARTITION BY funnels every
@@ -50,8 +39,27 @@ private[graft] object DenseId {
   }
 }
 
+/** Write-path executor — the Spark counterpart of the reference's
+  * MutationEngine + shadow-write transaction (reference
+  * mutation_engine.py:53-1143, relational_models.py:589-708). Where the
+  * reference stages shadow copies and promotes them on commit, here
+  * every mutation derives a NEW immutable DataFrame (append =
+  * unionByName, delete = anti-join, set = keyed left-join) registered
+  * into a snapshot catalog; the engine swaps the snapshot in atomically
+  * after the whole query succeeds. `localCheckpoint` pins each mutated
+  * table so later reads in the same query see the writes without
+  * unbounded lineage growth.
+  *
+  * Nodes and relationships share one write path: a bound variable's
+  * `Element` (its table, key columns and commit) carries every SET,
+  * REMOVE and map SET through one keyed update, and every write clause
+  * rebinds the variables whose properties it wrote, so later clauses in
+  * the same query read the written values (the reference re-reads
+  * through the shadow layer).
+  */
 final class MutationEngine(catalog: GraphCatalog, spark: SparkSession,
                            params: Map[String, Any]) {
+  import MutationEngine._
 
   private def ec(f: Frame) = new ExpressionCompiler(f, params)
 
@@ -67,11 +75,155 @@ final class MutationEngine(catalog: GraphCatalog, spark: SparkSession,
     case _              => false
   }
 
-  /** Allocate `perRow` ids starting after the current max id. */
+  /** The first free id: one past the table's current max (0 if empty). */
   private def nextIdBase(df: DataFrame, idCol: String): Long = {
     val m = df.agg(max(col(idCol))).head()
     if (m.isNullAt(0)) 0L else m.getLong(0) + 1L
   }
+
+  // ---------------- elements and commit ----------------
+
+  private def relElement(r: RelationshipDef, keys: Seq[String]): Element =
+    Element(r.df, keys, Set(r.srcCol, r.dstCol) ++ r.idCol,
+      RelVar(r.relType, r.srcCol, r.dstCol, _), d => commit(r.copy(df = d)))
+
+  /** The element a node or relationship variable binds. Keys: a node's
+    * id; a relationship's declared id when the variable binds it, else
+    * (src, dst) — a BOTH-direction match without a declared id can only
+    * address the stored orientation (declare an id column for full
+    * fidelity).
+    */
+  private def element(f: Frame, v: String): Element = f.vars.get(v) match {
+    case Some(NodeVar(label, _, _)) =>
+      val e = catalog.entity(label)
+      Element(e.df, Seq(e.idCol), Set(e.idCol), NodeVar(label, e.idCol, _),
+        d => commit(e.copy(df = d)))
+    case Some(RelVar(relType, _, _, attrs)) =>
+      val r = catalog.relationship(relType)
+      relElement(r, r.idCol.filter(attrs.contains).fold(Seq(r.srcCol, r.dstCol))(Seq(_)))
+    case _ => throw new IllegalArgumentException(
+      s"$v is not a bound node or relationship variable")
+  }
+
+  /** Commit a new table: pin it, then replace the registration (or add
+    * it, for a label or type not registered yet).
+    */
+  private def commit(e: EntityDef): Unit = {
+    val pinned = e.df.localCheckpoint()
+    if (catalog.hasEntity(e.label)) catalog.replaceEntity(e.label, pinned)
+    else catalog.addEntity(e.label, pinned, e.idCol)
+  }
+  private def commit(r: RelationshipDef): Unit = {
+    val pinned = r.df.localCheckpoint()
+    if (catalog.hasRelationship(r.relType)) catalog.replaceRelationship(r.relType, pinned)
+    else catalog.addRelationship(r.relType, pinned, r.srcCol, r.dstCol, r.idCol,
+      r.srcLabel, r.dstLabel)
+  }
+
+  /** Append-and-register, shared by CREATE, MERGE and SET label: mint
+    * dense ids for `rows` after the table's current max (in `order`;
+    * no id column, no ids), union them by name into `table` (None: a
+    * name not registered yet) and hand the result to `register`.
+    * Returns the minted rows.
+    */
+  private def append(table: Option[DataFrame], idCol: Option[String], rows: DataFrame,
+                     order: Seq[String])(register: DataFrame => Unit): DataFrame = {
+    val minted = idCol.fold(rows)(ic =>
+      DenseId.assign(rows, order, ic, table.fold(0L)(nextIdBase(_, ic))))
+    val added = minted.drop("__rowid")
+    register(table.fold(added)(_.unionByName(added, allowMissingColumns = true)))
+    minted
+  }
+
+  /** Write properties on the rows of `df` where `hit` holds. The
+    * element's columns `cols` bind as `v` (`v__attr`, as a MATCH binds
+    * them; other columns pass through), so a value compiles like any
+    * property access on the element's current row — a key written
+    * earlier in `writes` included; each `(key, value)` overwrites or
+    * adds the property, and the prefix comes off again.
+    */
+  private def writeWhere(df: DataFrame, v: String, bind: Seq[String] => VarMeta,
+                         cols: Seq[String], hit: Column,
+                         writes: Seq[(String, Frame => Column)]): DataFrame = {
+    val prefixed = df.select(df.columns.toSeq.map(c =>
+      if (cols.contains(c)) col(c).as(s"${v}__$c") else col(c)): _*)
+    val (out, _) = writes.foldLeft((prefixed, cols)) { case ((d, seen), (k, value)) =>
+      val at = Frame(d, Map(v -> bind(seen)))
+      (d.withColumn(at.col(v, k), when(hit, value(at))
+        .otherwise(if (seen.contains(k)) col(at.col(v, k)) else lit(null))),
+       if (seen.contains(k)) seen else seen :+ k)
+    }
+    out.select(out.columns.toSeq.map(c => col(c).as(c.stripPrefix(s"${v}__"))): _*)
+  }
+
+  /** The one keyed update: `upd` holds one row per element to write —
+    * its keys as `__uk_<key>` and any precomputed values — and
+    * left-joins the element's table; `writes` land on the joined rows.
+    */
+  private def keyed(el: Element, v: String, upd: DataFrame,
+                    writes: Seq[(String, Frame => Column)]): DataFrame = {
+    val joined = el.df.join(upd,
+      el.keys.map(k => col(k) === col(s"__uk_$k")).reduce(_ && _), "left_outer")
+    writeWhere(joined, v, el.bind, el.df.columns.toSeq,
+      col(s"__uk_${el.keys.head}").isNotNull, writes).drop(upd.columns.toSeq: _*)
+  }
+
+  /** SET, REMOVE and map SET on v's bound rows: each `(key, value)` is
+    * written, `None` nulls it. A null write into a missing column is a
+    * no-op, and with nothing left to write the table is untouched;
+    * `replace` (SET v = {…}) also nulls every property outside the
+    * element's key and endpoint columns. Values compile against `f`, so
+    * every write of a clause reads the pre-clause state. Several binding
+    * rows of one element keep one row's values (as the reference's
+    * row-sequential writes make the last row win — order is undefined
+    * there too: mutation_engine.py:118-228). Returns the keys written.
+    */
+  private def update(f: Frame, v: String, writes: Seq[(String, Option[Expr])],
+                     replace: Boolean = false): Seq[String] = {
+    val el = element(f, v)
+    val cols = el.df.columns.toSeq
+    val all = writes.filter { case (k, e) => e.isDefined || cols.contains(k) } ++
+      (if (!replace) Nil
+       else cols.filterNot(c => el.fixed(c) || writes.exists(_._1 == c)).map(_ -> None))
+    if (all.nonEmpty) {
+      val compiler = ec(f)
+      val vals = all.zipWithIndex.collect { case ((_, Some(e)), i) =>
+        compiler.compile(e).as(s"__uv$i") }
+      val upd = f.df.select(el.keys.map(k => col(f.col(v, k)).as(s"__uk_$k")) ++ vals: _*)
+        .dropDuplicates(el.keys.map(k => s"__uk_$k"))
+      el.commit(keyed(el, v, upd, all.zipWithIndex.map { case ((k, e), i) =>
+        k -> ((_: Frame) => if (e.isDefined) col(s"__uv$i") else lit(null))
+      }))
+    }
+    all.map(_._1)
+  }
+
+  /** Re-read the properties `cols` of v's rows from its element's
+    * current table by the element's keys, so later clauses read what
+    * this clause wrote. It never changes the frame's row count: a row
+    * whose keys address no stored element (a null OPTIONAL MATCH
+    * variable) keeps its values, and (src, dst) keys, which parallel
+    * edges share, read one of them — a keyed write gave them all the
+    * same values.
+    */
+  private def rebind(f: Frame, v: String, cols: Seq[String]): Frame = {
+    val el = element(f, v)
+    val read = cols.distinct.filter(c => el.df.columns.contains(c) && !el.keys.contains(c))
+    val fresh = el.df.select(el.keys.map(k => col(k).as(s"__rb_$k")) ++
+      read.map(a => col(a).as(s"__rb_$a")): _*)
+    val joined = f.df.join(
+      if (el.keys.size > 1) fresh.dropDuplicates(el.keys.map("__rb_" + _)) else fresh,
+      el.keys.map(k => col(f.col(v, k)) === col(s"__rb_$k")).reduce(_ && _), "left_outer")
+    val attrs = f.varCols(v).map(_.stripPrefix(s"${v}__"))
+    val out = read.foldLeft(joined)((d, a) => d.withColumn(f.col(v, a),
+      when(col(s"__rb_${el.keys.head}").isNotNull, col(s"__rb_$a"))
+        .otherwise(if (attrs.contains(a)) col(f.col(v, a)) else lit(null))))
+    Frame(out.drop(fresh.columns.toSeq: _*), f.vars + (v -> el.bind((attrs ++ read).distinct)))
+  }
+
+  /** Rebind each variable on the keys a write clause wrote to it. */
+  private def rebindWritten(f: Frame, written: Seq[(String, String)]): Frame =
+    written.groupMap(_._1)(_._2).foldLeft(f) { case (g, (v, ks)) => rebind(g, v, ks) }
 
   // ---------------- CREATE ----------------
 
@@ -88,7 +240,7 @@ final class MutationEngine(catalog: GraphCatalog, spark: SparkSession,
       var prevVar = p.start.variable.get
       p.hops.foreach { case (rel, node) =>
         frame = createNodeIfUnbound(frame, node)
-        frame = createRel(frame, prevVar, rel, node.variable.get)
+        createRel(frame, prevVar, rel, node.variable.get)
         prevVar = node.variable.get
       }
     }
@@ -115,157 +267,73 @@ final class MutationEngine(catalog: GraphCatalog, spark: SparkSession,
     if (f.vars.contains(v)) return f
     val label = np.labels.headOption.getOrElse(
       throw new IllegalArgumentException(s"CREATE node $v requires a label"))
-
-    val (idCol, existingDf, known) =
-      if (catalog.hasEntity(label)) {
-        val e = catalog.entity(label)
-        (e.idCol, Some(e.df), true)
-      } else ("__ID__", None, false)
-
-    val base = existingDf.map(d => nextIdBase(d, idCol)).getOrElse(0L)
+    val table = Option.when(catalog.hasEntity(label))(catalog.entity(label))
+    val idCol = table.fold("__ID__")(_.idCol)
     val compiler = ec(f)
     val propCols = np.props.map { case (k, e) => compiler.compile(e).as(k) }
     // one created node per binding row; id = base + dense row number.
     // No pin of its own (round 21, −1 job/CREATE): DenseId pins the
     // sorted layout already, so the id map is deterministic per
     // consumer, and both consumers are cheap narrow maps over those
-    // pinned blocks (`merged` is pinned eagerly below; the join-back is
-    // forced with the statement).
-    val created = DenseId.assign(
-      f.df.select(Seq(col("__rowid")) ++ propCols: _*),
-      Seq("__rowid"), idCol, base)
-
-    val newRows = created.drop("__rowid")
-    val merged = existingDf match {
-      case Some(d) => d.unionByName(newRows, allowMissingColumns = true)
-      case None    => newRows
+    // pinned blocks (the table is pinned eagerly by commit; the
+    // join-back is forced with the statement).
+    val created = append(table.map(_.df), Some(idCol),
+      f.df.select(Seq(col("__rowid")) ++ propCols: _*), Seq("__rowid")) { d =>
+      // zero rows created against an unknown label (e.g. FOREACH over
+      // an empty list): don't mint an empty label table
+      if (table.isDefined || !d.isEmpty) commit(EntityDef(label, d, idCol))
     }
-    if (known) catalog.replaceEntity(label, merged.localCheckpoint())
-    else if (!newRows.isEmpty) catalog.addEntity(label, merged.localCheckpoint(), idCol)
-    // zero rows created against an unknown label (e.g. FOREACH over an
-    // empty list): don't mint an empty label table
-
     // bind the created node's columns into the frame (prefixed)
-    val attrs = newRows.columns.toSeq
+    val attrs = created.columns.toSeq.filter(_ != "__rowid")
     val prefixed = created.select(Seq(col("__rowid")) ++
-      attrs.map(a => col(a).as(s"${v}__$a")): _*)
+      attrs.map(a => col(a).as(f.col(v, a))): _*)
     Frame(f.df.join(prefixed, Seq("__rowid")),
       f.vars + (v -> NodeVar(label, idCol, attrs)))
   }
 
-  private def createRel(f: Frame, fromVar: String, rel: RelPattern,
-                        toVar: String): Frame = {
+  private def relTarget(rel: RelPattern, fromVar: String, toVar: String): RelTarget = {
     val relType = rel.types.headOption.getOrElse(
-      throw new IllegalArgumentException("CREATE relationship requires a type"))
-    // endpoints: previous chain node and this node — both bound by now;
-    // direction decides src/dst roles.
-    val (srcVar, dstVar) =
-      if (rel.direction == "IN") (toVar, fromVar) else (fromVar, toVar)
+      throw new IllegalArgumentException("CREATE/MERGE relationship requires a type"))
+    val (s, d) = if (rel.direction == "IN") (toVar, fromVar) else (fromVar, toVar)
+    if (catalog.hasRelationship(relType)) {
+      val r = catalog.relationship(relType)
+      RelTarget(relType, s, d, r.srcCol, r.dstCol, r.idCol, Some(r.df))
+    } else RelTarget(relType, s, d, "__SOURCE__", "__TARGET__", Some("__ID__"), None)
+  }
 
-    val (srcCol0, dstCol0, idColOpt, existing, known) =
-      if (catalog.hasRelationship(relType)) {
-        val r = catalog.relationship(relType)
-        (r.srcCol, r.dstCol, r.idCol, Some(r.df), true)
-      } else ("__SOURCE__", "__TARGET__", Some("__ID__"), None, false)
+  /** Append new edges — `rows` carry the target's src and dst columns
+    * and their properties — to the type's table as registered now (an
+    * ON MATCH write earlier in the statement stays); a new type
+    * registers with its endpoints' labels.
+    */
+  private def appendRels(f: Frame, t: RelTarget, rows: DataFrame): Unit = {
+    def label(v: String) = f.vars.get(v).collect { case NodeVar(l, _, _) => l }
+    val now = Option.when(catalog.hasRelationship(t.relType))(catalog.relationship(t.relType).df)
+    append(now, t.id, rows, Seq(t.src, t.dst)) { d =>
+      commit(RelationshipDef(t.relType, d, t.src, t.dst, t.id, label(t.srcVar), label(t.dstVar)))
+    }
+  }
 
+  private def createRel(f: Frame, fromVar: String, rel: RelPattern, toVar: String): Unit = {
+    val t = relTarget(rel, fromVar, toVar)
     val compiler = ec(f)
     val propCols = rel.props.map { case (k, e) => compiler.compile(e).as(k) }
-    var newRels = f.df.select(Seq(
-      col(f.idCol(srcVar)).as(srcCol0),
-      col(f.idCol(dstVar)).as(dstCol0)) ++ propCols: _*)
-    idColOpt.foreach { ic =>
-      val base = existing.map(d => nextIdBase(d, ic)).getOrElse(0L)
-      newRels = DenseId.assign(newRels, Seq(srcCol0, dstCol0), ic, base)
-    }
-    val merged = existing match {
-      case Some(d) => d.unionByName(newRels, allowMissingColumns = true)
-      case None    => newRels
-    }
-    val srcLabel = f.vars.get(srcVar).collect { case NodeVar(l, _, _) => l }
-    val dstLabel = f.vars.get(dstVar).collect { case NodeVar(l, _, _) => l }
-    if (known) catalog.replaceRelationship(relType, merged.localCheckpoint())
-    else catalog.addRelationship(relType, merged.localCheckpoint(),
-      srcCol0, dstCol0, idColOpt, srcLabel, dstLabel)
-    f
+    appendRels(f, t, f.df.select(Seq(
+      col(f.idCol(t.srcVar)).as(t.src), col(f.idCol(t.dstVar)).as(t.dst)) ++ propCols: _*))
   }
 
   // ---------------- SET / REMOVE ----------------
 
-  /** SET v.key = expr (per binding row). Multiple bindings of the same
-    * entity resolve to one value per id (first, as the reference's
-    * row-sequential writes make the last row win — order is undefined
-    * there too: mutation_engine.py:118-228).
+  /** SET v.key = expr, SET v += {…} and SET v = {…} per binding row
+    * through the keyed update; `=` also nulls every other property
+    * (mutation_engine.py SET map semantics).
     */
   def setItems(f: Frame, items: Seq[SetItem]): Frame = {
-    items.foreach {
+    rebindWritten(f, items.flatMap {
       case SetProperty(Variable(v), key, valueExpr) =>
-        val meta = f.vars.getOrElse(v,
-          throw new IllegalArgumentException(s"SET on unbound variable $v"))
-        meta match {
-          case NodeVar(label, idAttr, _) =>
-            val e = catalog.entity(label)
-            val updates = f.df
-              .select(col(f.col(v, idAttr)).as("__uid"), ec(f).compile(valueExpr).as("__uval"))
-              .groupBy(col("__uid")).agg(first(col("__uval")).as("__uval"))
-            val old = e.df
-            val hasCol = old.columns.contains(key)
-            val joined = old.join(updates, col(e.idCol) === col("__uid"), "left_outer")
-            val updated = (if (hasCol)
-              joined.withColumn(key, when(col("__uid").isNotNull, col("__uval"))
-                .otherwise(col(key)))
-            else joined.withColumn(key, col("__uval")))
-              .drop("__uid", "__uval")
-            catalog.replaceEntity(label, updated.localCheckpoint())
-          // SET r.key on a matched relationship: update the rel table
-          // keyed by the declared relationship id when there is one,
-          // else by exact (src, dst) orientation (a BOTH-direction
-          // match without a declared id can only address the stored
-          // orientation — declare an id column for full fidelity).
-          case RelVar(relType, _, _, attrs) =>
-            val r = catalog.relationship(relType)
-            val keyAttrs: Seq[String] = r.idCol match {
-              case Some(ic) if attrs.contains(ic) => Seq(ic)
-              case _                              => Seq(r.srcCol, r.dstCol)
-            }
-            val updates = f.df
-              .select(keyAttrs.map(a => col(f.col(v, a)).as(s"__uk_$a")) :+
-                ec(f).compile(valueExpr).as("__uval"): _*)
-              .groupBy(keyAttrs.map(a => col(s"__uk_$a")): _*)
-              .agg(first(col("__uval")).as("__uval"))
-            val old = r.df
-            val joined = old.join(updates,
-              keyAttrs.map(a => col(a) === col(s"__uk_$a")).reduce(_ && _),
-              "left_outer")
-            val marker = col(s"__uk_${keyAttrs.head}")
-            val updated = (if (old.columns.contains(key))
-              joined.withColumn(key, when(marker.isNotNull, col("__uval"))
-                .otherwise(col(key)))
-            else joined.withColumn(key, when(marker.isNotNull, col("__uval"))))
-              .drop(keyAttrs.map(a => s"__uk_$a") :+ "__uval": _*)
-            catalog.replaceRelationship(relType, updated.localCheckpoint())
-          case _ => throw new UnsupportedOperationException(
-            s"SET on non-node variable $v")
-        }
+        update(f, v, Seq(key -> Some(valueExpr))).map(v -> _)
       case SetVariable(v, MapLit(entries), additive) =>
-        // SET n += {..} merges keys; SET n = {..} replaces: provided keys
-        // are written and every other non-id attribute is nulled
-        // (mutation_engine.py SET map semantics).
-        entries.foreach { case (k, valueExpr) =>
-          setItems(f, Seq(SetProperty(Variable(v), k, valueExpr)))
-        }
-        if (!additive) f.vars.get(v) match {
-          case Some(NodeVar(label, idAttr, _)) =>
-            val e = catalog.entity(label)
-            val keep = Set(idAttr) ++ entries.map(_._1)
-            val ids = f.df.select(col(f.col(v, idAttr)).as("__uid")).distinct()
-            var updated = e.df.join(ids, col(e.idCol) === col("__uid"), "left_outer")
-            e.df.columns.filterNot(keep.contains).foreach { c =>
-              updated = updated.withColumn(c,
-                when(col("__uid").isNotNull, lit(null)).otherwise(col(c)))
-            }
-            catalog.replaceEntity(label, updated.drop("__uid").localCheckpoint())
-          case _ =>
-        }
+        update(f, v, entries.map { case (k, e) => k -> Some(e) }, replace = !additive).map(v -> _)
       case SetLabels(v, labels) =>
         // An additional label copies the matched rows into that label's
         // table (created on demand) — the multi-table analog of adding a
@@ -275,100 +343,26 @@ final class MutationEngine(catalog: GraphCatalog, spark: SparkSession,
             val rows = f.df
               .select(attrs.map(a => col(f.col(v, a)).as(a)): _*).distinct()
             labels.foreach { l =>
-              if (catalog.hasEntity(l)) {
-                val t = catalog.entity(l)
-                val fresh = rows.join(t.df.select(col(t.idCol)),
-                  rows(idAttr) === t.df(t.idCol), "left_anti")
-                catalog.replaceEntity(l,
-                  t.df.unionByName(fresh, allowMissingColumns = true).localCheckpoint())
-              } else catalog.addEntity(l, rows.localCheckpoint(), idAttr)
+              val table = Option.when(catalog.hasEntity(l))(catalog.entity(l))
+              val fresh = table.fold(rows)(t => rows.join(t.df.select(col(t.idCol)),
+                rows(idAttr) === t.df(t.idCol), "left_anti"))
+              append(table.map(_.df), None, fresh, Nil)(d => commit(EntityDef(l, d, idAttr)))
             }
           case _ => throw new UnsupportedOperationException("SET label needs a node variable")
         }
+        Nil
       case other => throw new UnsupportedOperationException(
         s"SET item not yet supported: $other")
-    }
-    // rebind touched variables so later clauses in this query read the
-    // updated values (the reference re-reads through the shadow layer)
-    val touched = items.collect { case SetProperty(Variable(v), _, _) => v }.distinct
-    touched.foldLeft(f)(rebind)
+    })
   }
 
-  /** Re-join a variable's prefixed columns from its (updated) catalog
-    * table — by id for nodes; by declared id (else (src, dst), the same
-    * keying rule relationship SET uses) for relationships — so later
-    * clauses in the same query read post-SET values, mirroring the
-    * reference's shadow-layer re-read.
-    */
-  private def rebind(f: Frame, v: String): Frame = f.vars.get(v) match {
-    case Some(RelVar(relType, srcAttr, dstAttr, _)) =>
-      val r = catalog.relationship(relType)
-      val attrs = r.df.columns.toSeq
-      val keyAttrs = r.idCol.filter(attrs.contains).map(Seq(_))
-        .getOrElse(Seq(srcAttr, dstAttr))
-      val keyCols = keyAttrs.map(a => f.col(v, a))
-      val keep = f.df.drop(f.varCols(v).filterNot(keyCols.contains): _*)
-      val prefixed = r.df.select(attrs.map(a => col(a).as(s"__rb_$a")): _*)
-      val joined = keep.join(prefixed,
-        keyAttrs.map(a => col(f.col(v, a)) === col(s"__rb_$a")).reduce(_ && _))
-      val renamed = attrs.foldLeft(joined) { (df, a) =>
-        if (keyAttrs.contains(a)) df.drop(s"__rb_$a")
-        else df.withColumnRenamed(s"__rb_$a", f.col(v, a))
-      }
-      Frame(renamed, f.vars + (v -> RelVar(relType, srcAttr, dstAttr, attrs)))
-    case Some(NodeVar(label, idAttr, _)) =>
-      val e = catalog.entity(label)
-      val attrs = e.df.columns.toSeq
-      val idColName = f.col(v, idAttr)
-      val keep = f.df.drop(f.varCols(v).filterNot(_ == idColName): _*)
-      val prefixed = e.df.select(attrs.map(a => col(a).as(s"__rb_$a")): _*)
-      val joined = keep.join(prefixed, col(idColName) === col(s"__rb_$idAttr"))
-      val renamed = attrs.foldLeft(joined) { (df, a) =>
-        if (a == idAttr) df.drop(s"__rb_$a")
-        else df.withColumnRenamed(s"__rb_$a", f.col(v, a))
-      }
-      Frame(renamed, f.vars + (v -> NodeVar(label, idAttr, attrs)))
-    case _ => f
-  }
-
-  /** REMOVE v.key → null out the property for matched ids
-    * (reference: mutation_engine.py:1020-1060).
+  /** REMOVE v.key nulls the property on the matched elements (reference:
+    * mutation_engine.py:1020-1060); REMOVE v:Label drops them from that
+    * label's table.
     */
   def remove(f: Frame, items: Seq[RemoveItem]): Frame = {
-    items.foreach {
-      case RemoveProperty(Variable(v), key) =>
-        f.vars.get(v) match {
-          case Some(NodeVar(label, _, _)) =>
-            val e = catalog.entity(label)
-            if (e.df.columns.contains(key)) {
-              val ids = f.df.select(col(f.idCol(v)).as("__uid")).distinct()
-              val updated = e.df.join(ids, col(e.idCol) === col("__uid"), "left_outer")
-                .withColumn(key, when(col("__uid").isNotNull, lit(null)).otherwise(col(key)))
-                .drop("__uid")
-              catalog.replaceEntity(label, updated.localCheckpoint())
-            }
-          // REMOVE r.key on a matched relationship: null out the
-          // property, same keying rule as relationship SET
-          case Some(RelVar(relType, _, _, attrs)) =>
-            val r = catalog.relationship(relType)
-            if (r.df.columns.contains(key)) {
-              val keyAttrs: Seq[String] = r.idCol match {
-                case Some(ic) if attrs.contains(ic) => Seq(ic)
-                case _                              => Seq(r.srcCol, r.dstCol)
-              }
-              val ids = f.df.select(keyAttrs.map(a =>
-                col(f.col(v, a)).as(s"__uk_$a")): _*).distinct()
-              val updated = r.df.join(ids,
-                keyAttrs.map(a => col(a) === col(s"__uk_$a")).reduce(_ && _),
-                "left_outer")
-                .withColumn(key,
-                  when(col(s"__uk_${keyAttrs.head}").isNotNull, lit(null))
-                    .otherwise(col(key)))
-                .drop(keyAttrs.map(a => s"__uk_$a"): _*)
-              catalog.replaceRelationship(relType, updated.localCheckpoint())
-            }
-          case _ => throw new UnsupportedOperationException("REMOVE needs a node variable")
-        }
+    rebindWritten(f, items.flatMap {
+      case RemoveProperty(Variable(v), key) => update(f, v, Seq(key -> None)).map(v -> _)
       case RemoveLabels(v, labels) =>
         // Remove from those labels' tables by id (no-op if unknown label
         // or the node was never copied there).
@@ -377,59 +371,47 @@ final class MutationEngine(catalog: GraphCatalog, spark: SparkSession,
             val ids = f.df.select(col(f.col(v, idAttr)).as("__rid")).distinct()
             labels.filter(catalog.hasEntity).foreach { l =>
               val t = catalog.entity(l)
-              catalog.replaceEntity(l,
-                t.df.join(ids, col(t.idCol) === col("__rid"), "left_anti")
-                  .localCheckpoint())
+              commit(t.copy(df = t.df.join(ids, col(t.idCol) === col("__rid"), "left_anti")))
             }
           case _ => throw new UnsupportedOperationException("REMOVE label needs a node variable")
         }
-    }
-    f
+        Nil
+    })
   }
 
   // ---------------- DELETE ----------------
 
-  /** DELETE / DETACH DELETE by anti-join on matched ids (reference:
-    * mutation_engine.py:619-745). DETACH also removes relationships
-    * whose declared src/dst label matches the deleted node label.
+  /** DELETE / DETACH DELETE by anti-join on the matched elements' keys
+    * (reference: mutation_engine.py:619-745). DETACH also removes
+    * relationships whose declared src/dst label matches the deleted
+    * node label.
     */
   def delete(f: Frame, exprs: Seq[Expr], detach: Boolean): Frame = {
     exprs.foreach {
       case Variable(v) =>
-        f.vars.get(v) match {
-          case Some(NodeVar(label, _, _)) =>
-            val e = catalog.entity(label)
-            val ids = f.df.select(col(f.idCol(v)).as("__did")).distinct().localCheckpoint()
-            val remaining = e.df.join(ids, col(e.idCol) === col("__did"), "left_anti")
-            catalog.replaceEntity(label, remaining.localCheckpoint())
-            if (detach) {
-              catalog.relTypes.foreach { rt =>
-                val rd = catalog.relationship(rt)
-                // undeclared endpoint labels scrub conservatively by id
-                // membership on BOTH endpoints (reference behavior) —
-                // otherwise an id reused after delete could re-attach a
-                // dangling edge to an unrelated new node
-                val touchesSrc = rd.srcLabel.forall(_ == label)
-                val touchesDst = rd.dstLabel.forall(_ == label)
-                if (touchesSrc || touchesDst) {
-                  var d = rd.df
-                  if (touchesSrc)
-                    d = d.join(ids, col(rd.srcCol) === col("__did"), "left_anti")
-                  if (touchesDst)
-                    d = d.join(ids, col(rd.dstCol) === col("__did"), "left_anti")
-                  catalog.replaceRelationship(rt, d.localCheckpoint())
-                }
+        val el = element(f, v)
+        val gone = f.df.select(el.keys.map(k => col(f.col(v, k)).as(s"__d_$k")): _*)
+          .distinct().localCheckpoint()
+        el.commit(el.df.join(gone,
+          el.keys.map(k => col(k) === col(s"__d_$k")).reduce(_ && _), "left_anti"))
+        f.vars(v) match {
+          case NodeVar(label, _, _) if detach =>
+            val did = col(s"__d_${el.keys.head}")
+            catalog.relationshipDefs.foreach { rd =>
+              // undeclared endpoint labels scrub conservatively by id
+              // membership on BOTH endpoints (reference behavior) —
+              // otherwise an id reused after delete could re-attach a
+              // dangling edge to an unrelated new node
+              val touchesSrc = rd.srcLabel.forall(_ == label)
+              val touchesDst = rd.dstLabel.forall(_ == label)
+              if (touchesSrc || touchesDst) {
+                var d = rd.df
+                if (touchesSrc) d = d.join(gone, col(rd.srcCol) === did, "left_anti")
+                if (touchesDst) d = d.join(gone, col(rd.dstCol) === did, "left_anti")
+                commit(rd.copy(df = d))
               }
             }
-          case Some(RelVar(relType, srcAttr, dstAttr, _)) =>
-            val rd = catalog.relationship(relType)
-            val pairs = f.df.select(
-              col(f.col(v, srcAttr)).as("__ds"), col(f.col(v, dstAttr)).as("__dd"))
-              .distinct().localCheckpoint()
-            val remaining = rd.df.join(pairs,
-              col(rd.srcCol) === col("__ds") && col(rd.dstCol) === col("__dd"), "left_anti")
-            catalog.replaceRelationship(relType, remaining.localCheckpoint())
-          case _ => throw new IllegalArgumentException(s"DELETE of unbound/value variable")
+          case _ =>
         }
       case other => throw new IllegalArgumentException(s"DELETE expects variables, got $other")
     }
@@ -442,7 +424,7 @@ final class MutationEngine(catalog: GraphCatalog, spark: SparkSession,
     * mutation_engine.py:746-855): exists-split on the property keys —
     * pre-existing keys get ON MATCH SET, missing keys are created with
     * the merge props + ON CREATE SET, then the variable binds to the
-    * union so later clauses read the post-merge state.
+    * post-merge table so later clauses read the post-merge state.
     */
   def merge(f0: Frame, path: PathPattern,
             onCreate: Seq[SetItem], onMatch: Seq[SetItem]): Frame = {
@@ -474,27 +456,18 @@ final class MutationEngine(catalog: GraphCatalog, spark: SparkSession,
     val (missing, missingRow) = graft.operators.IterPin.pinProbed(
       want.join(existingKeyed, joinCond, "left_anti"),
       Seq(count(lit(1))))
-
-    if (missingRow.getLong(0) > 0L) {
-      val base = nextIdBase(e.df, e.idCol)
-      val created = DenseId.assign(missing.dropDuplicates(keyNames),
-        Seq("__rowid"), e.idCol, base)
-        .drop("__rowid")
-      catalog.replaceEntity(label,
-        e.df.unionByName(created, allowMissingColumns = true).localCheckpoint())
-    }
+    if (missingRow.getLong(0) > 0L)
+      append(Some(e.df), Some(e.idCol), missing.dropDuplicates(keyNames),
+        Seq("__rowid"))(d => commit(e.copy(df = d)))
 
     // bind v's id per binding row against the post-create table
-    val e2 = catalog.entity(label)
-    val idBind = e2.df.select(
-      Seq(col(e2.idCol).as(s"${v}__${e2.idCol}")) ++
-        keyNames.map(k => col(k).as(s"__k_$k")): _*)
+    val idV = f.col(v, e.idCol)
+    val idBind = catalog.entity(label).df.select(Seq(col(e.idCol).as(idV)) ++
+      keyNames.map(k => col(k).as(s"__k_$k")): _*)
     val bindCond = keyNames.map(k => col(k) === col(s"__k_$k")).reduce(_ && _)
-    val boundIds = want.join(idBind, bindCond)
-      .select(col("__rowid"), col(s"${v}__${e2.idCol}"))
-    val idOnlyFrame = Frame(
-      f.df.join(boundIds, Seq("__rowid")),
-      f.vars + (v -> NodeVar(label, e2.idCol, Seq(e2.idCol))))
+    val boundIds = want.join(idBind, bindCond).select(col("__rowid"), col(idV))
+    val idOnly = Frame(f.df.join(boundIds, Seq("__rowid")),
+      f.vars + (v -> NodeVar(label, e.idCol, Seq(e.idCol))))
 
     // ON MATCH / ON CREATE evaluate against the FULL post-create
     // attribute set, not just the bound id: `ON MATCH SET m.v = m.v + 1`
@@ -502,37 +475,16 @@ final class MutationEngine(catalog: GraphCatalog, spark: SparkSession,
     // Cypher's null-for-missing property rule silently turned every
     // self-referencing SET into null (caught by the random-mutation
     // differential in PropertySpec)
-    val attrs2 = e2.df.columns.toSeq
-    val prefixedAll = e2.df.select(attrs2.map(a => col(a).as(s"__b_$a")): _*)
-    val fullBound = attrs2.foldLeft(
-      idOnlyFrame.df.join(prefixedAll,
-        col(s"${v}__${e2.idCol}") === col(s"__b_${e2.idCol}"))) { (df, a) =>
-      if (a == e2.idCol) df.drop(s"__b_$a")
-      else df.withColumnRenamed(s"__b_$a", s"${v}__$a")
-    }
-    val boundFrame = Frame(fullBound, f.vars + (v -> NodeVar(label, e2.idCol, attrs2)))
-    if (onMatch.nonEmpty && anyMatched) {
-      val sub = boundFrame.copy(df = boundFrame.df.join(matchedIds,
-        col(s"${v}__${e2.idCol}") === col("__mid")).drop("__mid"))
-      setItems(sub, onMatch)
-    }
+    val bound = rebind(idOnly, v, catalog.entity(label).df.columns.toSeq)
+    if (onMatch.nonEmpty && anyMatched)
+      setItems(bound.copy(df = bound.df.join(matchedIds, col(idV) === col("__mid"))
+        .drop("__mid")), onMatch)
     if (onCreate.nonEmpty) {
-      val createdOnly = boundFrame.df.join(matchedIds,
-        col(s"${v}__${e2.idCol}") === col("__mid"), "left_anti")
-      if (!createdOnly.isEmpty) setItems(boundFrame.copy(df = createdOnly), onCreate)
+      val createdOnly = bound.df.join(matchedIds, col(idV) === col("__mid"), "left_anti")
+      if (!createdOnly.isEmpty) setItems(bound.copy(df = createdOnly), onCreate)
     }
-
-    // final bind: all attributes from the post-SET table
-    val e3 = catalog.entity(label)
-    val attrs = e3.df.columns.toSeq
-    val prefixedFull = e3.df.select(attrs.map(a => col(a).as(s"__m_$a")): _*)
-    val full = idOnlyFrame.df
-      .join(prefixedFull, col(s"${v}__${e3.idCol}") === col(s"__m_${e3.idCol}"))
-    val cleaned = attrs.foldLeft(full) { (df, a) =>
-      if (a == e3.idCol) df.drop(s"__m_$a")
-      else df.withColumnRenamed(s"__m_$a", s"${v}__$a")
-    }.drop("__rowid")
-    Frame(cleaned, f.vars + (v -> NodeVar(label, e3.idCol, attrs)))
+    val out = rebind(idOnly, v, catalog.entity(label).df.columns.toSeq)
+    out.copy(df = out.df.drop("__rowid"))
   }
 
   /** Relationship MERGE: (a)-[:T {props}]->(b) with both endpoints
@@ -563,22 +515,10 @@ final class MutationEngine(catalog: GraphCatalog, spark: SparkSession,
                                 onCreate: Seq[SetItem], onMatch: Seq[SetItem]): Frame = {
     require(path.hops.size == 1, "relationship MERGE supports a single hop")
     val (rel, endNode) = path.hops.head
-    val relType = rel.types.headOption.getOrElse(
-      throw new IllegalArgumentException("relationship MERGE needs a type"))
-    val fromVar = path.start.variable.getOrElse(
-      throw new IllegalArgumentException("MERGE rel endpoints must be bound variables"))
-    val toVar = endNode.variable.getOrElse(
-      throw new IllegalArgumentException("MERGE rel endpoints must be bound variables"))
-    require(f.vars.contains(fromVar) && f.vars.contains(toVar),
-      "MERGE rel endpoints must be bound by a prior MATCH/CREATE")
-    val (srcVar, dstVar) =
-      if (rel.direction == "IN") (toVar, fromVar) else (fromVar, toVar)
-
-    val (srcCol0, dstCol0, idColOpt, existing, known) =
-      if (catalog.hasRelationship(relType)) {
-        val r = catalog.relationship(relType)
-        (r.srcCol, r.dstCol, r.idCol, Some(r.df), true)
-      } else ("__SOURCE__", "__TARGET__", Some("__ID__"), None, false)
+    def endpoint(np: NodePattern): String = np.variable.filter(f.vars.contains).getOrElse(
+      throw new IllegalArgumentException(
+        "MERGE rel endpoints must be variables bound by a prior MATCH/CREATE"))
+    val t = relTarget(rel, endpoint(path.start), endpoint(endNode))
 
     val compiler = ec(f)
     // ON CREATE / ON MATCH SET items must target the rel variable; their
@@ -588,131 +528,86 @@ final class MutationEngine(catalog: GraphCatalog, spark: SparkSession,
     // (the canonical counter idiom, ON MATCH SET r.n = r.n + 1) cannot
     // be precomputed in the outer frame — it is DEFERRED and evaluated
     // against the matched edge's current row at update time.
-    val (omDeferred, omOuter) = onMatch.partition {
-      case SetProperty(Variable(rv), _, vexpr) if rel.variable.contains(rv) =>
-        referencesVar(vexpr, rv)
-      case _ => false
+    def relSets(items: Seq[SetItem]): Seq[(String, Expr)] = items.map {
+      case SetProperty(Variable(rv), key, vexpr) if rel.variable.contains(rv) => key -> vexpr
+      case other => throw new UnsupportedOperationException(
+        s"relationship MERGE SET must target the relationship variable: $other")
     }
-    def relSetCols(items: Seq[SetItem], pref: String): Seq[(String, Column)] =
-      items.map {
-        case SetProperty(Variable(rv), key, vexpr) if rel.variable.contains(rv) =>
-          key -> compiler.compile(vexpr).as(s"$pref$key")
-        case other => throw new UnsupportedOperationException(
-          s"relationship MERGE SET must target the relationship variable: $other")
-      }
-    val ocCols = relSetCols(onCreate, "__oc_")
-    val omCols = relSetCols(omOuter, "__om_")
-
-    val propCols = rel.props.map { case (k, e0) => compiler.compile(e0).as(k) }
-    val carried = rel.props.map(_._1) ++
-      ocCols.map("__oc_" + _._1) ++ omCols.map("__om_" + _._1)
+    val (omDeferred, omOuter) = relSets(onMatch).partition { case (_, vexpr) =>
+      referencesVar(vexpr, rel.variable.get)
+    }
+    val oc = relSets(onCreate)
+    val ocKeys = oc.map(_._1)
+    val carried = rel.props.map(_._1) ++ ocKeys.map("__oc_" + _) ++
+      omOuter.map("__om_" + _._1)
     // Duplicate rows for one (src, dst) fold to ONE surviving row
     // atomically: max over a struct of all carried values picks a single
     // deterministic row (lexicographic struct ordering), so the edge
     // never gets a cross-row mix of values no input row contained.
     val grouped = f.df.select(Seq(
-      col(f.idCol(srcVar)).as(srcCol0),
-      col(f.idCol(dstVar)).as(dstCol0)) ++ propCols ++
-      ocCols.map(_._2) ++ omCols.map(_._2): _*)
-      .groupBy(col(srcCol0), col(dstCol0))
+      col(f.idCol(t.srcVar)).as(t.src), col(f.idCol(t.dstVar)).as(t.dst)) ++
+      rel.props.map { case (k, e0) => compiler.compile(e0).as(k) } ++
+      oc.map { case (k, e0) => compiler.compile(e0).as(s"__oc_$k") } ++
+      omOuter.map { case (k, e0) => compiler.compile(e0).as(s"__om_$k") }: _*)
+      .groupBy(col(t.src), col(t.dst))
     val wanted =
       if (carried.isEmpty) grouped.agg(count(lit(1)).as("__dup"))
       else grouped.agg(count(lit(1)).as("__dup"),
           max(struct(carried.map(col): _*)).as("__row"))
-        .select(Seq(col(srcCol0), col(dstCol0), col("__dup")) ++
+        .select(Seq(col(t.src), col(t.dst), col("__dup")) ++
           carried.map(c => col("__row").getField(c).as(c)): _*)
 
-    val missing = existing match {
-      case Some(d) => wanted.join(d.select(col(srcCol0), col(dstCol0))
-        .withColumnRenamed(srcCol0, "__es").withColumnRenamed(dstCol0, "__ed"),
-        col(srcCol0) === col("__es") && col(dstCol0) === col("__ed"), "left_anti")
-      case None => wanted
+    val missing = t.table.fold(wanted)(d => wanted.join(
+      d.select(col(t.src).as("__es"), col(t.dst).as("__ed")),
+      col(t.src) === col("__es") && col(t.dst) === col("__ed"), "left_anti"))
+
+    // ON MATCH values: precomputed ones read their carried column;
+    // deferred (self-referencing) ones compile against the matched
+    // edge's CURRENT row, bound as the rel variable
+    val omWrites: Seq[(String, Frame => Column)] =
+      omOuter.map { case (k, _) => k -> ((_: Frame) => col(s"__om_$k")) } ++
+        omDeferred.map { case (k, vexpr) => k -> ((bf: Frame) => ec(bf).compile(vexpr)) }
+    // ON MATCH: the keyed update of the pre-existing edges by (src, dst)
+    if (omWrites.nonEmpty && t.table.isDefined) {
+      val el = relElement(catalog.relationship(t.relType), Seq(t.src, t.dst))
+      val upd = wanted.select(Seq(col(t.src).as(s"__uk_${t.src}"),
+        col(t.dst).as(s"__uk_${t.dst}")) ++ omOuter.map(o => col(s"__om_${o._1}")): _*)
+      el.commit(keyed(el, rel.variable.get, upd, omWrites))
     }
 
-    // ON MATCH: update the pre-existing edges keyed by (src, dst).
-    // Edge columns are var-prefixed for the update so deferred
-    // (self-referencing) values compile like any property access
-    // against the matched edge's CURRENT row, then renamed back.
-    if ((omCols.nonEmpty || omDeferred.nonEmpty) && existing.isDefined)
-      existing.foreach { d =>
-        val rv = rel.variable.get
-        val matchKeys = wanted.select(Seq(col(srcCol0).as("__ms"),
-          col(dstCol0).as("__md")) ++ omCols.map { case (k, _) => col(s"__om_$k") }: _*)
-        val dCols = d.columns.toSeq
-        val pref = d.select(dCols.map(c => col(c).as(s"${rv}__$c")): _*)
-        var updated = pref.join(matchKeys,
-          col(s"${rv}__$srcCol0") === col("__ms") &&
-            col(s"${rv}__$dstCol0") === col("__md"), "left_outer")
-        def setCol(k: String, value: Column): Unit =
-          updated = updated.withColumn(s"${rv}__$k",
-            if (dCols.contains(k))
-              when(col("__ms").isNotNull, value).otherwise(col(s"${rv}__$k"))
-            else when(col("__ms").isNotNull, value))
-        omCols.foreach { case (k, _) => setCol(k, col(s"__om_$k")) }
-        omDeferred.foreach {
-          case SetProperty(Variable(_), k, vexpr) =>
-            val rf = Frame(updated, Map(rv -> RelVar(relType, srcCol0, dstCol0, dCols)))
-            setCol(k, ec(rf).compile(vexpr))
-          case other => throw new UnsupportedOperationException(other.toString)
-        }
-        var cleaned = updated.drop(
-          "__ms" +: "__md" +: omCols.map("__om_" + _._1): _*)
-        cleaned.columns.filter(_.startsWith(s"${rv}__")).foreach(c =>
-          cleaned = cleaned.withColumnRenamed(c, c.stripPrefix(s"${rv}__")))
-        catalog.replaceRelationship(relType, cleaned.localCheckpoint())
-      }
-
     if (!missing.isEmpty) {
-      // ON CREATE values become the new edges' properties; a key that ON
-      // MATCH also sets takes the ON MATCH value when the pair had
-      // duplicate binding rows (the duplicates matched the just-created
-      // edge and overwrote it)
-      val omKeys = omCols.map(_._1).toSet
-      val ocKeys = ocCols.map(_._1).toSet
-      var newRels = (ocKeys ++ omKeys).toSeq.sorted.foldLeft(missing) { (df, k) =>
-        val created = if (ocKeys(k)) col(s"__oc_$k") else lit(null)
-        df.withColumn(k,
-          if (omKeys(k)) when(col("__dup") > 1, col(s"__om_$k")).otherwise(created)
-          else created)
-      }
-      // duplicate binding rows matched the edge the first row just
-      // created — deferred ON MATCH values evaluate against that
-      // created edge's post-ON-CREATE columns
-      omDeferred.foreach {
-        case SetProperty(Variable(rv), k, vexpr) =>
-          val cols0 = newRels.columns.toSeq.filterNot(c =>
-            c == "__dup" || c.startsWith("__oc_") || c.startsWith("__om_"))
-          val prefd = newRels.select(
-            (Seq(col("__dup")) ++ newRels.columns.toSeq.filter(_ != "__dup")
-              .map(c => if (cols0.contains(c)) col(c).as(s"${rv}__$c") else col(c))): _*)
-          val rf = Frame(prefd, Map(rv -> RelVar(relType, srcCol0, dstCol0, cols0)))
-          val nv = ec(rf).compile(vexpr)
-          var applied = prefd.withColumn(s"${rv}__$k",
-            if (cols0.contains(k)) when(col("__dup") > 1, nv).otherwise(col(s"${rv}__$k"))
-            else when(col("__dup") > 1, nv))
-          applied.columns.filter(_.startsWith(s"${rv}__")).foreach(c =>
-            applied = applied.withColumnRenamed(c, c.stripPrefix(s"${rv}__")))
-          newRels = applied
-        case other => throw new UnsupportedOperationException(other.toString)
-      }
-      newRels = newRels.drop(("__dup" +: ocCols.map("__oc_" + _._1)) ++
-        omCols.map("__om_" + _._1): _*)
-      idColOpt.foreach { ic =>
-        val base = existing.map(d => nextIdBase(d, ic)).getOrElse(0L)
-        newRels = DenseId.assign(newRels, Seq(srcCol0, dstCol0), ic, base)
-      }
-      val current = if (catalog.hasRelationship(relType))
-        Some(catalog.relationship(relType).df) else None
-      val merged = current match {
-        case Some(d) => d.unionByName(newRels, allowMissingColumns = true)
-        case None    => newRels
-      }
-      val srcLabel = f.vars.get(srcVar).collect { case NodeVar(l, _, _) => l }
-      val dstLabel = f.vars.get(dstVar).collect { case NodeVar(l, _, _) => l }
-      if (known) catalog.replaceRelationship(relType, merged.localCheckpoint())
-      else catalog.addRelationship(relType, merged.localCheckpoint(),
-        srcCol0, dstCol0, idColOpt, srcLabel, dstLabel)
+      // ON CREATE values become the new edges' properties. Duplicate
+      // binding rows matched the edge the first row just created, so on
+      // those pairs the ON MATCH values land on it too — deferred ones
+      // read its post-ON-CREATE columns
+      val created = ocKeys.foldLeft(missing)((d, k) => d.withColumn(k, col(s"__oc_$k")))
+      val rows = if (omWrites.isEmpty) created
+        else writeWhere(created, rel.variable.get, RelVar(t.relType, t.src, t.dst, _),
+          created.columns.toSeq.filterNot(c => c == "__dup" || c.startsWith("__oc_") ||
+            c.startsWith("__om_")), col("__dup") > 1, omWrites)
+      appendRels(f, t, rows.drop(("__dup" +: ocKeys.map("__oc_" + _)) ++
+        omOuter.map("__om_" + _._1): _*))
     }
     f
   }
+}
+
+private object MutationEngine {
+  /** One mutable element kind as the write path sees it: the catalog
+    * table, the columns that key a bound variable's rows into it, the
+    * columns `SET v = {…}` keeps, how a variable binds it, and the
+    * commit of a new version.
+    */
+  private final case class Element(df: DataFrame, keys: Seq[String], fixed: Set[String],
+                                   bind: Seq[String] => VarMeta, commit: DataFrame => Unit)
+
+  /** Where CREATE and MERGE write a relationship pattern: its type, the
+    * bound src and dst variables (the direction decides), and the
+    * type's (src, dst, id) columns and table — the registration's, or
+    * the reserved `__SOURCE__`/`__TARGET__`/`__ID__` and no table for a
+    * type not registered yet.
+    */
+  private final case class RelTarget(relType: String, srcVar: String, dstVar: String,
+                                     src: String, dst: String, id: Option[String],
+                                     table: Option[DataFrame])
 }

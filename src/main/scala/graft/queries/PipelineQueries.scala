@@ -289,10 +289,11 @@ object PipelineQueries {
     "dd04_ngram_jaccard" -> { (s, dir) =>
       // shared spread scan: the inverted-index verify consumes the
       // shingle frontend's (doc_id, text) three ways (self-join sides
-      // + set sizing) — pin once; identity at scale (the dd02
-      // treatment)
+      // + set sizing) — pin once, and only those two columns; identity
+      // at scale (the dd02 treatment)
       Dedup.ngramJaccardPairs(
-        graft.operators.Par.spreadPinned(Tables(s, dir).documents),
+        graft.operators.Par.spreadPinned(
+          Tables(s, dir).documents.select("doc_id", "text")),
         "doc_id", "text", n = 3, threshold = 0.5)
     },
 
@@ -1549,8 +1550,10 @@ object PipelineQueries {
       // each paid their own scan (and the decontaminate frontend its
       // own spread shuffle); identity at scale (spread no-ops on
       // well-split corpora). All consumers are filters/aggregates —
-      // partitioning-insensitive.
-      val docs = graft.operators.Par.spreadPinned(Tables(s, dir).documents)
+      // partitioning-insensitive. The pin holds only the columns the
+      // subtrees read (the budget reads lang and n_chars).
+      val docs = graft.operators.Par.spreadPinned(
+        Tables(s, dir).documents.select("doc_id", "text", "lang", "n_chars"))
       val train = docs.filter(col("doc_id") % 29 =!= 0)
       val bench = docs.filter(col("doc_id") % 29 === 0)
       val pass = TextAnalysis.repetitionStats(docs)

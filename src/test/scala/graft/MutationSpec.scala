@@ -83,6 +83,20 @@ class MutationSpec extends SparkSpec {
       .collect().head.getLong(0) == 0L) // Alice's edge went with her
   }
 
+  test("DELETE of a relationship with a declared id removes only the matched edge") {
+    val eng = freshEngine
+    // a parallel Alice->Bob edge: same (src, dst), its own __ID__
+    eng.execute(
+      """MATCH (a:Person {name: 'Alice'}), (b:Person {name: 'Bob'})
+         CREATE (a)-[:KNOWS {w: 2}]->(b)""")
+    eng.execute(
+      """MATCH (:Person {name: 'Alice'})-[k:KNOWS]->(:Person {name: 'Bob'})
+         WHERE k.w = 2 DELETE k""")
+    val left = eng.query(
+      "MATCH (:Person)-[k:KNOWS]->(:Person) RETURN k.w AS w").collect()
+    assert(left.length == 1 && left.head.isNullAt(0)) // the original edge
+  }
+
   test("REMOVE nulls a property") {
     val eng = freshEngine
     eng.execute("MATCH (p:Person {name: 'Bob'}) REMOVE p.age")
@@ -141,6 +155,82 @@ class MutationSpec extends SparkSpec {
     val b = eng.query(
       "MATCH (p:Person {name: 'Bob'}) RETURN p.age AS a, p.city AS c").collect().head
     assert(b.getLong(0) == 99L && b.isNullAt(1)) // replaced: city nulled
+  }
+
+  test("map SET rebinds: later clauses in the same query read the written values") {
+    val eng = freshEngine
+    val add = eng.execute(
+      "MATCH (p:Person {name: 'Alice'}) SET p += {age: 31} RETURN p.age AS a").collect()
+    assert(add.map(_.getLong(0)).toSeq == Seq(31L))
+    val rep = eng.execute(
+      """MATCH (p:Person {name: 'Bob'}) SET p = {name: 'Bob', city: 'Oslo'}
+         RETURN p.age AS a, p.city AS c""").collect()
+    assert(rep.length == 1 && rep.head.isNullAt(0) && rep.head.getString(1) == "Oslo")
+  }
+
+  test("REMOVE rebinds: later clauses in the same query read null") {
+    val eng = freshEngine
+    val r = eng.execute(
+      "MATCH (p:Person {name: 'Alice'}) REMOVE p.age RETURN p.age AS a").collect()
+    assert(r.length == 1 && r.head.isNullAt(0))
+    val k = eng.execute(
+      """MATCH (:Person {name: 'Alice'})-[k:KNOWS]->(:Person)
+         SET k.since = 2020 REMOVE k.since RETURN k.since AS s""").collect()
+    assert(k.length == 1 && k.head.isNullAt(0))
+  }
+
+  test("SET r = {…} on a relationship nulls every property but its endpoints and id") {
+    val eng = freshEngine
+    eng.execute(
+      """MATCH (:Person {name: 'Alice'})-[k:KNOWS]->(:Person {name: 'Bob'})
+         SET k.since = 2020, k.note = 'w'""")
+    eng.execute(
+      """MATCH (:Person {name: 'Alice'})-[k:KNOWS]->(:Person {name: 'Bob'})
+         SET k = {since: 2030}""")
+    val r = eng.query(
+      """MATCH (a:Person)-[k:KNOWS]->(b:Person)
+         RETURN a.name AS a, b.name AS b, k.since AS s, k.note AS n""").collect()
+    assert(r.length == 1)
+    assert(r.head.getString(0) == "Alice" && r.head.getString(1) == "Bob")
+    assert(r.head.getLong(2) == 2030L && r.head.isNullAt(3))
+  }
+
+  test("SET and REMOVE on a null OPTIONAL MATCH variable keep every row") {
+    val eng = freshEngine
+    // only Alice KNOWS anyone: Bob's and Carol's rows bind b to null,
+    // and a write on null is a no-op that keeps the row
+    def run(write: String): Map[String, Any] = eng.execute(
+      s"""MATCH (a:Person) OPTIONAL MATCH (a)-[k:KNOWS]->(b:Person)
+          $write RETURN a.name AS a, b.age AS g""").collect()
+      .map(r => r.getString(0) -> r.getAs[Any](1)).toMap
+    assert(run("REMOVE b.age") == Map("Alice" -> null, "Bob" -> null, "Carol" -> null))
+    assert(run("SET b += {age: 40}") == Map("Alice" -> 40L, "Bob" -> null, "Carol" -> null))
+    assert(run("SET b.age = 41") == Map("Alice" -> 41L, "Bob" -> null, "Carol" -> null))
+    val k = eng.execute(
+      """MATCH (a:Person) OPTIONAL MATCH (a)-[k:KNOWS]->(:Person)
+         SET k = {w: 2} RETURN a.name AS a, k.w AS w""").collect()
+      .map(r => r.getString(0) -> r.getAs[Any](1)).toMap
+    assert(k == Map("Alice" -> 2L, "Bob" -> null, "Carol" -> null))
+  }
+
+  test("SET on a relationship keyed by (src, dst) neither drops nor multiplies rows") {
+    val person = Seq((0L, "Alice"), (1L, "Bob")).toDF("__ID__", "name")
+    // parallel Alice->Bob edges, no id column: (src, dst) keys them
+    val likes = Seq((0L, 1L, 1L), (0L, 1L, 2L)).toDF("__SOURCE__", "__TARGET__", "p")
+    val eng = new CypherEngine(spark, new GraphCatalog()
+      .addEntity("Person", person)
+      .addRelationship("LIKES", likes, srcLabel = Some("Person"), dstLabel = Some("Person")))
+    val r = eng.execute(
+      """MATCH (:Person {name: 'Alice'})-[l:LIKES]->(:Person)
+         SET l.x = 1 RETURN l.p AS p, l.x AS x""").collect()
+    assert(r.map(x => (x.getLong(0), x.getLong(1))).sorted.toSeq == Seq((1L, 1L), (2L, 1L)))
+    // Bob's undirected rows see each edge reversed, which addresses no
+    // stored (src, dst): the rows stay, with the values they matched
+    val u = eng.execute(
+      """MATCH (:Person {name: 'Bob'})-[l:LIKES]-(a:Person)
+         SET l.y = 1 RETURN a.name AS a, l.p AS p""").collect()
+    assert(u.map(x => (x.getString(0), x.getLong(1))).sorted.toSeq ==
+      Seq(("Alice", 1L), ("Alice", 2L)))
   }
 
   test("SET label copies into the label table; REMOVE label removes") {
@@ -421,6 +511,23 @@ class MutationSpec extends SparkSpec {
       """MATCH (:Person {name: 'Bob'})-[k:COUNTS]->(:Person {name: 'Carol'})
          RETURN k.n AS n""").collect()
     assert(seq.map(_.getLong(0)).toSeq == Seq(3L))
+  }
+
+  test("relationship MERGE ON MATCH values read keys written earlier in the clause") {
+    val eng = freshEngine
+    // created-edge path: the duplicate row matches the new edge
+    eng.execute(
+      """MATCH (b:Person {name: 'Bob'}), (c:Person {name: 'Carol'})
+         UNWIND [1, 2] AS i
+         MERGE (b)-[k:TIES]->(c) ON MATCH SET k.a = 5, k.b = k.a + 1""")
+    // existing-edge path: neither key is a column of TIES yet
+    eng.execute(
+      """MATCH (b:Person {name: 'Bob'}), (c:Person {name: 'Carol'})
+         MERGE (b)-[k:TIES]->(c) ON MATCH SET k.c = 7, k.d = k.c + 1""")
+    val r = eng.query(
+      """MATCH (:Person {name: 'Bob'})-[k:TIES]->(:Person {name: 'Carol'})
+         RETURN k.a AS a, k.b AS b, k.c AS c, k.d AS d""").collect()
+    assert(r.map(x => (0 to 3).map(x.getLong)).toSeq == Seq(Seq(5L, 6L, 7L, 8L)))
   }
 
   test("CALL with correlated args runs per distinct tuple and joins back") {

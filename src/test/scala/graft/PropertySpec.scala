@@ -280,13 +280,15 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("random mutation sequences match an in-memory graph model") {
-    // op = (kind 0..3, key 0..5, value 0..99): CREATE / SET / MERGE /
-    // DELETE against one label, mirrored in a Map. CREATE is
-    // unconditional (Cypher semantics: duplicates allowed → model
-    // keeps a multiset per key; queries compare (key, v) multisets).
+    // op = (kind 0..5, key 0..5, value 0..99): CREATE / SET / MERGE /
+    // DELETE / SET += / REMOVE against one label, mirrored in a Map.
+    // CREATE is unconditional (Cypher semantics: duplicates allowed →
+    // model keeps a multiset per key; queries compare (key, v)
+    // multisets). SET += and REMOVE also read m.v back in the same
+    // query, which must already see the write.
     val opGen: Gen[Seq[(Int, Int, Int)]] = Gen.chooseNum(5, 18).flatMap(n =>
       Gen.listOfN(n, for {
-        k <- Gen.chooseNum(0, 3); key <- Gen.chooseNum(0, 5)
+        k <- Gen.chooseNum(0, 5); key <- Gen.chooseNum(0, 5)
         v <- Gen.chooseNum(0, 99)
       } yield (k, key, v)))
     forAll(opGen, trials = 4) { ops =>
@@ -295,46 +297,60 @@ class PropertySpec extends AnyFunSuite {
       val seed = Seq((0L, 0L, 7L)).toDF("__ID__", "k", "v")
       val eng = new CypherEngine(spark,
         new GraphCatalog().addEntity("M", seed))
-      val model = scala.collection.mutable.Buffer[(Long, Long)]((0L, 7L))
+      val model = scala.collection.mutable.Buffer[(Long, Option[Long])]((0L, Some(7L)))
+      def write(key: Int, v: Option[Long]): Unit = model.indices.foreach(i =>
+        if (model(i)._1 == key) model(i) = (key.toLong, v))
+      def readBack(cypher: String, key: Int): Unit = {
+        val got = eng.execute(cypher).collect()
+          .map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSeq
+        val want = model.filter(_._1 == key).map(_._2).toSeq
+        assert(got == want, s"same-query read diverged: $cypher; ops=$ops")
+      }
       ops.foreach { case (kind, key, v) =>
         kind match {
           case 0 =>
             eng.execute(s"CREATE (m:M {k: $key, v: $v})")
-            model += ((key.toLong, v.toLong))
+            model += ((key.toLong, Some(v.toLong)))
           case 1 =>
             eng.execute(s"MATCH (m:M {k: $key}) SET m.v = $v")
-            model.indices.foreach(i =>
-              if (model(i)._1 == key) model(i) = (key.toLong, v.toLong))
+            write(key, Some(v.toLong))
           case 2 =>
             eng.execute(s"MERGE (m:M {k: $key}) ON CREATE SET m.v = $v " +
               s"ON MATCH SET m.v = m.v + 1")
             if (model.exists(_._1 == key))
               model.indices.foreach(i =>
-                if (model(i)._1 == key) model(i) = (key.toLong, model(i)._2 + 1))
-            else model += ((key.toLong, v.toLong))
+                if (model(i)._1 == key) model(i) = (key.toLong, model(i)._2.map(_ + 1)))
+            else model += ((key.toLong, Some(v.toLong)))
           case 3 =>
             eng.execute(s"MATCH (m:M {k: $key}) DELETE m")
             val keep = model.filterNot(_._1 == key)
             model.clear(); model ++= keep
+          case 4 =>
+            write(key, Some(v.toLong))
+            readBack(s"MATCH (m:M {k: $key}) SET m += {v: $v} RETURN m.v AS v", key)
+          case 5 =>
+            write(key, None)
+            readBack(s"MATCH (m:M {k: $key}) REMOVE m.v RETURN m.v AS v", key)
         }
       }
       val got = eng.query("MATCH (m:M) RETURN m.k AS k, m.v AS v")
-        .collect().map(r => (r.getAs[Any](0), r.getAs[Any](1))).toSeq
+        .collect().map(r => (r.getLong(0), Option(r.getAs[Any](1)))).toSeq
         .groupBy(identity).view.mapValues(_.size).toMap
-      val want = model.toSeq.map(t => (t._1: Any, t._2: Any))
+      val want = model.toSeq.map(t => (t._1, t._2: Option[Any]))
         .groupBy(identity).view.mapValues(_.size).toMap
       assert(got == want, s"mutation state diverged; ops=$ops")
     }
   }
 
   test("random relationship-mutation sequences match an in-memory edge model") {
-    // fixed 4-node graph; ops = (kind 0..2, k1, k2, v): MERGE counter /
-    // matched SET r.n = v / REMOVE r.n — mirrored in a Map keyed by the
-    // (k1, k2) pair with Option[Long] values (REMOVE → None, and the
-    // counter on a removed property stays None: null + 1 is null)
+    // fixed 4-node graph; ops = (kind 0..3, k1, k2, v): MERGE counter
+    // (ON CREATE also sets r.m = v) / matched SET r.n = v / REMOVE r.n /
+    // SET r = {n: v}, which nulls m — mirrored in a Map keyed by the
+    // (k1, k2) pair with Option[Long] (n, m) values (REMOVE → None, and
+    // the counter on a removed property stays None: null + 1 is null)
     val relOpGen: Gen[Seq[(Int, Int, Int, Int)]] = Gen.chooseNum(4, 14).flatMap(n =>
       Gen.listOfN(n, for {
-        kind <- Gen.chooseNum(0, 2)
+        kind <- Gen.chooseNum(0, 3)
         k1 <- Gen.chooseNum(0, 3); k2 <- Gen.chooseNum(0, 3)
         v <- Gen.chooseNum(0, 99)
       } yield (kind, k1, k2, v)))
@@ -344,7 +360,9 @@ class PropertySpec extends AnyFunSuite {
       val nodes = (0L to 3L).map(i => (i, i)).toDF("__ID__", "k")
       val eng = new CypherEngine(spark,
         new GraphCatalog().addEntity("M", nodes))
-      val model = scala.collection.mutable.Map.empty[(Int, Int), Option[Long]]
+      val model = scala.collection.mutable.Map.empty[(Int, Int), (Option[Long], Option[Long])]
+      def write(k: (Int, Int), n: Option[Long], m: Option[Long] => Option[Long]): Unit =
+        model.get(k).foreach(old => model(k) = (n, m(old._2)))
       // seed the R type (MATCH on an unknown type throws by design —
       // the ETL-safety divergence documented in GraphCatalog)
       val seeded = (0, 0, 1, 0) +: ops
@@ -353,28 +371,33 @@ class PropertySpec extends AnyFunSuite {
           case 0 =>
             eng.execute(
               s"""MATCH (a:M {k: $k1}), (b:M {k: $k2})
-                 MERGE (a)-[r:R]->(b) ON CREATE SET r.n = 1
+                 MERGE (a)-[r:R]->(b) ON CREATE SET r.n = 1, r.m = $v
                  ON MATCH SET r.n = r.n + 1""")
-            model((k1, k2)) =
-              if (model.contains((k1, k2))) model((k1, k2)).map(_ + 1L)
-              else Some(1L)
+            model((k1, k2)) = model.get((k1, k2)).fold((Option(1L), Option(v.toLong)))(
+              old => (old._1.map(_ + 1L), old._2))
           case 1 =>
             eng.execute(
               s"""MATCH (a:M {k: $k1})-[r:R]->(b:M {k: $k2})
                  SET r.n = $v""")
-            if (model.contains((k1, k2))) model((k1, k2)) = Some(v.toLong)
+            write((k1, k2), Some(v.toLong), identity)
           case 2 =>
             eng.execute(
               s"""MATCH (a:M {k: $k1})-[r:R]->(b:M {k: $k2})
                  REMOVE r.n""")
-            if (model.contains((k1, k2))) model((k1, k2)) = None
+            write((k1, k2), None, identity)
+          case 3 =>
+            eng.execute(
+              s"""MATCH (a:M {k: $k1})-[r:R]->(b:M {k: $k2})
+                 SET r = {n: $v}""")
+            write((k1, k2), Some(v.toLong), _ => None)
         }
       }
+      def opt(r: org.apache.spark.sql.Row, i: Int) =
+        if (r.isNullAt(i)) None else Some(r.getLong(i))
       val got = eng.query(
-        """MATCH (a:M)-[r:R]->(b:M) RETURN a.k AS k1, b.k AS k2, r.n AS n""")
+        """MATCH (a:M)-[r:R]->(b:M) RETURN a.k AS k1, b.k AS k2, r.n AS n, r.m AS m""")
         .collect()
-        .map(r => ((r.getLong(0).toInt, r.getLong(1).toInt),
-          if (r.isNullAt(2)) None else Some(r.getLong(2)))).toMap
+        .map(r => ((r.getLong(0).toInt, r.getLong(1).toInt), (opt(r, 2), opt(r, 3)))).toMap
       assert(got == model.toMap, s"edge state diverged; ops=$ops")
     }
   }
