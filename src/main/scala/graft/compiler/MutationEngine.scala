@@ -240,7 +240,7 @@ final class MutationEngine(catalog: GraphCatalog, spark: SparkSession,
       var prevVar = p.start.variable.get
       p.hops.foreach { case (rel, node) =>
         frame = createNodeIfUnbound(frame, node)
-        createRel(frame, prevVar, rel, node.variable.get)
+        frame = createRel(frame, prevVar, rel, node.variable.get)
         prevVar = node.variable.get
       }
     }
@@ -283,12 +283,18 @@ final class MutationEngine(catalog: GraphCatalog, spark: SparkSession,
       // an empty list): don't mint an empty label table
       if (table.isDefined || !d.isEmpty) commit(EntityDef(label, d, idCol))
     }
-    // bind the created node's columns into the frame (prefixed)
+    bindCreated(f, v, created, NodeVar(label, idCol, _))
+  }
+
+  /** Bind the elements CREATE minted, one per binding row and keyed by
+    * `__rowid`, as v (prefixed columns, joined back on `__rowid`).
+    */
+  private def bindCreated(f: Frame, v: String, created: DataFrame,
+                          bind: Seq[String] => VarMeta): Frame = {
     val attrs = created.columns.toSeq.filter(_ != "__rowid")
     val prefixed = created.select(Seq(col("__rowid")) ++
       attrs.map(a => col(a).as(f.col(v, a))): _*)
-    Frame(f.df.join(prefixed, Seq("__rowid")),
-      f.vars + (v -> NodeVar(label, idCol, attrs)))
+    Frame(f.df.join(prefixed, Seq("__rowid")), f.vars + (v -> bind(attrs)))
   }
 
   private def relTarget(rel: RelPattern, fromVar: String, toVar: String): RelTarget = {
@@ -304,9 +310,9 @@ final class MutationEngine(catalog: GraphCatalog, spark: SparkSession,
   /** Append new edges — `rows` carry the target's src and dst columns
     * and their properties — to the type's table as registered now (an
     * ON MATCH write earlier in the statement stays); a new type
-    * registers with its endpoints' labels.
+    * registers with its endpoints' labels. Returns the minted rows.
     */
-  private def appendRels(f: Frame, t: RelTarget, rows: DataFrame): Unit = {
+  private def appendRels(f: Frame, t: RelTarget, rows: DataFrame): DataFrame = {
     def label(v: String) = f.vars.get(v).collect { case NodeVar(l, _, _) => l }
     val now = Option.when(catalog.hasRelationship(t.relType))(catalog.relationship(t.relType).df)
     append(now, t.id, rows, Seq(t.src, t.dst)) { d =>
@@ -314,12 +320,20 @@ final class MutationEngine(catalog: GraphCatalog, spark: SparkSession,
     }
   }
 
-  private def createRel(f: Frame, fromVar: String, rel: RelPattern, toVar: String): Unit = {
+  /** CREATE one edge per binding row; a named relationship variable
+    * binds the edges it created.
+    */
+  private def createRel(f: Frame, fromVar: String, rel: RelPattern, toVar: String): Frame = {
     val t = relTarget(rel, fromVar, toVar)
     val compiler = ec(f)
-    val propCols = rel.props.map { case (k, e) => compiler.compile(e).as(k) }
-    appendRels(f, t, f.df.select(Seq(
-      col(f.idCol(t.srcVar)).as(t.src), col(f.idCol(t.dstVar)).as(t.dst)) ++ propCols: _*))
+    val cols = Seq(col(f.idCol(t.srcVar)).as(t.src), col(f.idCol(t.dstVar)).as(t.dst)) ++
+      rel.props.map { case (k, e) => compiler.compile(e).as(k) }
+    rel.variable.filterNot(f.vars.contains) match {
+      case Some(v) => bindCreated(f, v,
+        appendRels(f, t, f.df.select(col("__rowid") +: cols: _*)),
+        RelVar(t.relType, t.src, t.dst, _))
+      case None => appendRels(f, t, f.df.select(cols: _*)); f
+    }
   }
 
   // ---------------- SET / REMOVE ----------------

@@ -391,11 +391,10 @@ object CurationStages {
     * index creation ([[graft.operators.Dedup.fuzzyCrawlBatch]]),
     * `semantic_dedup` probes the vector index
     * ([[graft.operators.Similarity.semanticCrawlBatch]]), and
-    * `minhash_dedup` probes a MinHash index
-    * (the dd13/crawlDedup shape, Streams.scala): probe for
-    * cross-batch near-dups, band
-    * the batch against itself for intra-batch dups (min-id canonical),
-    * then append the survivors' signatures to the index. `minhash_dedup`
+    * `minhash_dedup` probes a MinHash index (the dd13 shape): probe
+    * for cross-batch near-dups, band the batch against itself for
+    * intra-batch dups (min-id canonical), then admit the survivors'
+    * signatures to the index. `minhash_dedup`
     * REQUIRES index_dir under streaming (validated at stream build):
     * the index-less batch operator runs an eager routing-sample job
     * and holds lineage pins per call, which a micro-batch loop would
@@ -409,9 +408,9 @@ object CurationStages {
     *
     * Trade vs the batch stage, stated: the batch form exact-verifies
     * LSH candidates at the Jaccard threshold and keeps the
-    * HIGHEST-QUALITY doc per cluster; the incremental form matches
-    * `crawlDedup` — signature-estimated Jaccard, arrival-order
-    * canonical across batches (earlier batch wins) — because a crawl
+    * HIGHEST-QUALITY doc per cluster; the incremental form uses
+    * signature-estimated Jaccard and arrival-order canonical across
+    * batches (earlier batch wins) — because a crawl
     * cannot re-rank against documents it has not seen yet. WITHIN a
     * batch the ranking IS computable: `rank_by: quality` on the
     * minhash stage keeps the highest-quality doc per intra-batch
@@ -747,9 +746,9 @@ object CurationStages {
     * dynamic-partition-overwrites `batch=<id>` with the keys of the
     * survivors that reached the output — run it only after the
     * output write commits. Text equality makes the index the whole
-    * truth, so restarts cost nothing; the standalone
-    * `Streams.bloomCrawlDedup` adds the bloom fast path when the
-    * at-rest side is large enough for the sketch to matter.
+    * truth, so restarts cost nothing. To pre-seed the index, write
+    * plain (batch-less) key parquet under `index_dir/keys/batch=-1`:
+    * it sorts before every real batch id.
     */
   private def streamingExactDedup(spark: SparkSession, df: DataFrame,
                                   idCol: String, textCol: String,
@@ -765,9 +764,8 @@ object CurationStages {
       if (have) {
         // a LEGACY key index (pre-batch-tagging plain appends) lacks
         // the batch column: keep always-earlier semantics instead of
-        // throwing on the missing column (the bloomCrawlDedup
-        // convention; the admit below migrates it under batch=-1
-        // before its first tagged write)
+        // throwing on the missing column (the admit below migrates it
+        // under batch=-1 before its first tagged write)
         val keys0 = spark.read.parquet(keysDir)
         val asOf =
           if (keys0.columns.contains("batch"))
@@ -893,39 +891,35 @@ object CurationStages {
         (d.join(nonCanon, Seq(idCol), "left_anti"), Seq(comps))
       }
     }
-    // HDFS-safe existence check (a java.io.File check is always false
-    // on HDFS/S3 and would re-create the index every restart). _meta
-    // is written LAST by minHashIndexPut and never rewritten, so
-    // "exists" means the first batch's index write fully committed.
-    val metaPath = new org.apache.hadoop.fs.Path(s"$indexDir/_meta")
-    val haveIndex = metaPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration).exists(metaPath)
-    val (shingleSize, numHashes, bands) =
-      if (haveIndex) {
-        val m = spark.read.parquet(s"$indexDir/_meta").head()
-        (m.getInt(0), m.getInt(1), m.getInt(2))
-      } else (
-        stage.intParam("shingle_size", 3),
-        stage.intParam("num_hashes", 64),
-        stage.intParam("bands", 16))
-    val (pre, probePins) =
-      if (haveIndex) {
+    // the index's _meta, read ONCE per micro-batch and handed to the
+    // probe and the put. _meta is written LAST by the put and never
+    // rewritten, so Some means the first batch's index write fully
+    // committed; None means this batch creates the index with the
+    // stage's parameters
+    val meta = Dedup.minHashIndexMeta(spark, indexDir)
+    val params @ (shingleSize, numHashes, bands) = meta.getOrElse((
+      stage.intParam("shingle_size", 3),
+      stage.intParam("num_hashes", 64),
+      stage.intParam("bands", 16)))
+    val (pre, probePins) = meta match {
+      case Some(m) =>
         val (lookup, pins) = Dedup.minHashIndexLookupPinned(spark,
-          indexDir, df, idCol, textCol, excludeBatchFrom = Some(batchId))
+          indexDir, m, df, idCol, textCol, excludeBatchFrom = Some(batchId))
         val idxDup = lookup
           .filter(col("est_jaccard") >= threshold)
           .select(col("new_id").as(idCol)).distinct()
         (df.join(idxDup, Seq(idCol), "left_anti"), pins)
-      } else (df, Seq.empty[DataFrame])
+      case None => (df, Seq.empty[DataFrame])
+    }
     val (intra, compPins) = intraSurvivors(pre, shingleSize, numHashes, bands)
     val survivors = intra.localCheckpoint(true)
     // the survivors checkpoint consumed the probe's and the component
     // loop's eager pins
     (probePins ++ compPins).foreach(graft.operators.IterPin.free)
     val admit: DataFrame => Unit = shipped => {
-      Dedup.minHashIndexPut(spark, indexDir,
+      Dedup.minHashIndexPutAs(spark, indexDir,
         survivors.join(shipped, Seq(idCol), "left_semi"),
-        idCol, textCol, batchId, shingleSize, numHashes, bands)
+        idCol, textCol, batchId, meta, params)
       // last consumer of the survivors pin ran (the put is eager)
       graft.operators.IterPin.free(survivors)
     }

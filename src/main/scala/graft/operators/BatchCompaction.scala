@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * partition `batch=-1`, which sorts BEFORE every real micro-batch
   * id: the as-of contract (`batch < batchId`) still sees exactly the
   * same rows, and the consolidated tag merges with the seed
-  * convention (plain parquet under `batch=-1`,
-  * [[graft.streaming.Streams.bloomCrawlDedup]]). Sidecars (`_meta`,
+  * convention (plain parquet under `batch=-1`, as the streaming
+  * `exact_dedup` arm reads its key index). Sidecars (`_meta`,
   * `_centroids`) are never touched.
   *
   * Crash safety: the consolidated rows are fully written to a hidden

@@ -1686,50 +1686,11 @@ object Dedup {
     // a 100 TB index build
     minHashSignatures(shingleRows(df, idCol, textCol, shingleSize), numHashes)
       .write.mode("overwrite").parquet(s"$path/_sigs")
-    writeBandsAndMeta(df.sparkSession, path, "overwrite",
-      shingleSize, numHashes, bands)
-  }
-
-  /** Full-write path only: derives ALL band rows from the complete
-    * `_sigs` directory (append derives its bands from the batch plan
-    * instead — batch-sized recompute is not the scale concern the
-    * corpus-wide one is).
-    */
-  private def writeBandsAndMeta(spark: org.apache.spark.sql.SparkSession,
-                                path: String, mode: String, shingleSize: Int,
-                                numHashes: Int, bands: Int): Long = {
+    val spark = df.sparkSession
     spark.read.parquet(s"$path/_sigs")
       .select(col("id"), explode(bandKeyArray(col("sig"), numHashes, bands)).as("bk"))
       .select(col("bk.band").as("band"), col("bk.bkey").as("bkey"), col("id"))
-      .write.mode(mode).partitionBy("band").parquet(s"$path/bands")
-    val epoch = System.currentTimeMillis()
-    import spark.implicits._
-    Seq((shingleSize, numHashes, bands, epoch))
-      .toDF("shingle_size", "num_hashes", "bands", "epoch")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_meta")
-    epoch
-  }
-
-  /** Append a (deduplicated) batch to a stored MinHash index — the
-    * maintenance half of the incremental-crawl loop (lookup → filter →
-    * append): band rows and signatures are written in APPEND mode at
-    * batch cost, so the index never rebuilds over the full corpus.
-    * Parameters come from `_meta` (writer/prober can't drift); the
-    * epoch bumps so process-level caches keyed on it invalidate. The
-    * caller owns id uniqueness across appends (ids are the dedup
-    * output's survivors).
-    */
-  def minHashIndexAppend(spark: org.apache.spark.sql.SparkSession,
-                         path: String, newDf: DataFrame,
-                         idCol: String, textCol: String): Long = {
-    val m = spark.read.parquet(s"$path/_meta").head()
-    val (shingleSize, numHashes, bands) = (m.getInt(0), m.getInt(1), m.getInt(2))
-    val sigs = minHashSignatures(
-      shingleRows(newDf, idCol, textCol, shingleSize), numHashes)
-    sigs.select(col("id"), explode(bandKeyArray(col("sig"), numHashes, bands)).as("bk"))
-      .select(col("bk.band").as("band"), col("bk.bkey").as("bkey"), col("id"))
-      .write.mode("append").partitionBy("band").parquet(s"$path/bands")
-    sigs.write.mode("append").parquet(s"$path/_sigs")
+      .write.mode("overwrite").partitionBy("band").parquet(s"$path/bands")
     val epoch = System.currentTimeMillis()
     import spark.implicits._
     Seq((shingleSize, numHashes, bands, epoch))
@@ -1739,9 +1700,8 @@ object Dedup {
   }
 
   /** Idempotent, batch-tagged write into a STREAMING-OWNED MinHash
-    * index — the exactly-once arm of the incremental-crawl loop.
-    * Unlike [[minHashIndexAppend]] (blind parquet append), every band
-    * and signature row here is stamped with the caller's micro-batch
+    * index — the exactly-once arm of the incremental-crawl loop. Every
+    * band and signature row is stamped with the caller's micro-batch
     * id and written with DYNAMIC PARTITION OVERWRITE of the
     * `batch=<id>` partition only: replaying a failed micro-batch
     * overwrites exactly its own rows instead of duplicating them, and
@@ -1750,28 +1710,41 @@ object Dedup {
     * batch index plus the `batch` partition key, which
     * [[minHashIndexLookup]] ignores unless told to filter on it.
     *
-    * `_meta` is written ONLY if absent and never rewritten: the
-    * append-path epoch bump of [[minHashIndexAppend]] is an
-    * overwrite, and a crash in that window would leave the index
-    * looking uncreated — a replay would then rebuild it from one
-    * batch, silently discarding every earlier batch. An immutable
-    * `_meta` closes that window; parameters still can never drift
-    * because every later put reads them back from `_meta`.
+    * `_meta` is written ONLY if absent and never rewritten: an
+    * overwrite has a crash window that leaves the index looking
+    * uncreated — a replay would then rebuild it from one batch,
+    * silently discarding every earlier batch. An immutable `_meta`
+    * closes that window; parameters still can never drift because
+    * every later put reads them back from `_meta`.
     */
   def minHashIndexPut(spark: org.apache.spark.sql.SparkSession,
                       path: String, df: DataFrame,
                       idCol: String, textCol: String, batch: Long,
                       shingleSize: Int = 3, numHashes: Int = 64,
-                      bands: Int = 16): Unit = {
-    val metaPath = new org.apache.hadoop.fs.Path(s"$path/_meta")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (ss, nh, nb) =
-      if (fs.exists(metaPath)) {
-        val m = spark.read.parquet(s"$path/_meta").head()
-        (m.getInt(0), m.getInt(1), m.getInt(2))
-      } else (shingleSize, numHashes, bands)
+                      bands: Int = 16): Unit =
+    minHashIndexPutAs(spark, path, df, idCol, textCol, batch,
+      minHashIndexMeta(spark, path), (shingleSize, numHashes, bands))
+
+  /** [[minHashIndexPut]] over the index's `meta` as the caller read it
+    * ([[minHashIndexMeta]]; the streaming arm reads it once per
+    * micro-batch): its parameters win over `params`, and `_meta` is
+    * written only when `meta` is None.
+    */
+  private[graft] def minHashIndexPutAs(spark: org.apache.spark.sql.SparkSession,
+                                       path: String, df: DataFrame,
+                                       idCol: String, textCol: String,
+                                       batch: Long,
+                                       meta: Option[(Int, Int, Int)],
+                                       params: (Int, Int, Int)): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (ss, nh, nb) = meta.getOrElse(params)
+    // signed BEFORE the migration below: `df` may be a lazy plan that
+    // reads this index's flat files (survivors of a probe against it)
+    val sigs = minHashSignatures(shingleRows(df, idCol, textCol, ss), nh)
+      .localCheckpoint(true)
     // a pre-batch-layout index (flat band=*/part files written by
-    // minHashIndexWrite/Append, or by a release before batch tagging)
+    // minHashIndexWrite, or by a release before batch tagging)
     // cannot take batch=N partition appends: parquet partition
     // discovery requires one consistent directory depth. Migrate the
     // flat content under batch=-1 — which sorts before every real
@@ -1779,8 +1752,6 @@ object Dedup {
     // first time the streaming writer touches it.
     ensureBatchLayout(fs, new org.apache.hadoop.fs.Path(s"$path/bands"))
     ensureBatchLayout(fs, new org.apache.hadoop.fs.Path(s"$path/_sigs"))
-    val sigs = minHashSignatures(shingleRows(df, idCol, textCol, ss), nh)
-      .localCheckpoint(true)
     // an EMPTY admit (every survivor dropped by a later stage, or a
     // batch of all-too-short docs) must not bootstrap the index:
     // writing data-less dirs + _meta would make the next batch's
@@ -1796,7 +1767,7 @@ object Dedup {
       sigs.withColumn("batch", lit(batch))
         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch").parquet(s"$path/_sigs")
-      if (!fs.exists(metaPath)) {
+      if (meta.isEmpty) {
         import spark.implicits._
         Seq((ss, nh, nb, batch))
           .toDF("shingle_size", "num_hashes", "bands", "epoch")
@@ -1806,6 +1777,22 @@ object Dedup {
     // the two index writes were the signature pin's last consumers —
     // release it deterministically (a crawl loop calls this per batch)
     IterPin.free(sigs)
+  }
+
+  /** A MinHash index's (shingle_size, num_hashes, bands), read from its
+    * `_meta`; None before the index's first write landed. The one
+    * `_meta` read of this index: the probe and the put take its values.
+    */
+  private[graft] def minHashIndexMeta(spark: org.apache.spark.sql.SparkSession,
+                                      path: String): Option[(Int, Int, Int)] =
+    metaRow(spark, path).map(m => (m.getInt(0), m.getInt(1), m.getInt(2)))
+
+  /** An index's one-row `_meta` sidecar; None before it was written. */
+  private def metaRow(spark: org.apache.spark.sql.SparkSession,
+                      dir: String): Option[org.apache.spark.sql.Row] = {
+    val metaPath = new org.apache.hadoop.fs.Path(s"$dir/_meta")
+    Option.when(metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .exists(metaPath))(spark.read.parquet(metaPath.toString).head())
   }
 
   /** Finish an interrupted [[ensureBatchLayout]] migration: if the
@@ -1846,7 +1833,7 @@ object Dedup {
     * [[completeBatchMigration]] on the next call from either the probe
     * or the put. Callers are the streaming index writers
     * (single-writer contract); standalone batch indexes keep their
-    * flat layout and [[minHashIndexAppend]] path untouched.
+    * flat layout untouched.
     */
   private[graft] def ensureBatchLayout(
       fs: org.apache.hadoop.fs.FileSystem,
@@ -1871,7 +1858,7 @@ object Dedup {
     * batch — the big side is never shuffled), and estimate Jaccard
     * from the stored signatures for colliding candidates only. Returns
     * (new_id, corpus_id, est_jaccard); parameters come from the
-    * index's `_meta`, never the caller.
+    * index's `_meta` ([[minHashIndexMeta]]), never the caller.
     *
     * The batch signature table is materialized eagerly with
     * `localCheckpoint` — the shingle+signature aggregate is the costly
@@ -1888,10 +1875,13 @@ object Dedup {
                          idCol: String, textCol: String,
                          maxBroadcastDocs: Long = 100000L,
                          excludeBatchFrom: Option[Long] = None): DataFrame =
-    minHashIndexLookupPinned(spark, path, newDf, idCol, textCol,
-      maxBroadcastDocs, excludeBatchFrom)._1
+    minHashIndexLookupPinned(spark, path,
+      minHashIndexMeta(spark, path).getOrElse(throw new IllegalArgumentException(
+        s"no MinHash index at $path (no _meta)")),
+      newDf, idCol, textCol, maxBroadcastDocs, excludeBatchFrom)._1
 
-  /** [[minHashIndexLookup]] exposing its internal eager pins (the
+  /** [[minHashIndexLookup]] over the index's `meta` as the caller read
+    * it ([[minHashIndexMeta]]), exposing its internal eager pins (the
     * batch signature table and, under the broadcast gate, the pinned
     * candidate set) so per-batch callers can free them
     * deterministically AFTER the result is materialized — a freed
@@ -1899,13 +1889,12 @@ object Dedup {
     */
   private[graft] def minHashIndexLookupPinned(
       spark: org.apache.spark.sql.SparkSession,
-      path: String, newDf: DataFrame,
+      path: String, meta: (Int, Int, Int), newDf: DataFrame,
       idCol: String, textCol: String,
       maxBroadcastDocs: Long = 100000L,
       excludeBatchFrom: Option[Long] = None)
   : (DataFrame, Seq[DataFrame]) = {
-    val m = spark.read.parquet(s"$path/_meta").head()
-    val (shingleSize, numHashes, bands) = (m.getInt(0), m.getInt(1), m.getInt(2))
+    val (shingleSize, numHashes, bands) = meta
     // a crash mid-way through ensureBatchLayout's legacy migration —
     // or mid-way through a BatchCompaction swap (batch partitions
     // deleted, tmp not yet renamed) — must not leave the probe reading
@@ -1925,9 +1914,9 @@ object Dedup {
     // otherwise match the batch against itself and drop every
     // survivor. `batch` is a partition key, so the filter is
     // partition PRUNING, not a scan-and-discard. A LEGACY batch-less
-    // index (minHashIndexWrite/Append layout, or a pre-batch-tagging
-    // release) keeps the old always-earlier semantics instead of
-    // failing on the missing column — the bloomCrawlDedup convention.
+    // index (minHashIndexWrite layout, or a pre-batch-tagging release)
+    // keeps the old always-earlier semantics instead of failing on the
+    // missing column — the streaming exact_dedup arm's convention.
     def asOf(df: DataFrame): DataFrame = excludeBatchFrom match {
       case Some(b) if df.columns.contains("batch") =>
         df.filter(col("batch") < lit(b))
@@ -3072,15 +3061,9 @@ object Dedup {
     * bands), read from its `_meta`; None before the first admit landed.
     */
   private def fuzzyIndexMeta(spark: org.apache.spark.sql.SparkSession,
-                             indexDir: String): Option[(String, Int, Int, Int)] = {
-    val metaPath = new org.apache.hadoop.fs.Path(s"$indexDir/_meta")
-    if (!metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(metaPath)) None
-    else {
-      val m = spark.read.parquet(metaPath.toString).head()
-      Some((m.getString(0), m.getInt(1), m.getInt(2), m.getInt(3)))
-    }
-  }
+                             indexDir: String): Option[(String, Int, Int, Int)] =
+    metaRow(spark, indexDir)
+      .map(m => (m.getString(0), m.getInt(1), m.getInt(2), m.getInt(3)))
 
   /** The admit shared by [[fuzzyCrawlBatch]] and [[fuzzyIndexPut]]:
     * write the distinct `keys` (one column `k`) under `batch` into the

@@ -371,10 +371,11 @@ object Similarity {
   }
 
   /** Append a batch to a stored LSH index — the maintenance half of an
-    * incremental ANN corpus (mirrors `Dedup.minHashIndexAppend`): the
-    * batch is signed with the INDEX's own (planes, seed) from `_meta`
-    * (writer/prober parameters can never drift), its rows land in their
-    * signature buckets in APPEND mode at batch cost — the at-rest
+    * incremental ANN corpus (`Dedup.minHashIndexPut` is the MinHash
+    * counterpart, batch-tagged): the batch is signed with the INDEX's
+    * own (planes, seed) from `_meta` (writer/prober parameters can
+    * never drift), its rows land in their signature buckets in
+    * APPEND mode at batch cost — the at-rest
     * corpus is never re-signed or rewritten — and the epoch bumps so
     * process-level caches keyed on it invalidate. Probing after an
     * append is exactly probing a full rebuild over the union: bucket

@@ -328,269 +328,6 @@ object Streams {
       .toDF("user_id", "stage", "step", "tsl")
   }
 
-  /** The PRODUCTION incremental-crawl dedup loop as a streaming
-    * pipeline — the shape `dd13` simulates in batch, wired end-to-end
-    * under `foreachBatch` (reference analog: the incremental-view
-    * subscribe loop, views.py:21-185). Per micro-batch of crawled
-    * documents:
-    *
-    *  1. PROBE the persisted MinHash index (`Dedup.minHashIndexLookup`)
-    *     — batch-sized work, the at-rest corpus is partition-scanned
-    *     once and never re-signed — and drop docs whose estimated
-    *     Jaccard against ANY indexed doc reaches `threshold`;
-    *  2. resolve INTRA-batch near-dups with the same banding the index
-    *     uses (parameters come from the index's `_meta`, so sketch and
-    *     index can never drift): candidate pairs → connected
-    *     components → keep the min-id canonical per component;
-    *  3. APPEND the surviving docs to the index
-    *     (`Dedup.minHashIndexAppend`, batch cost, epoch bump) and
-    *     write them to `survivorDir` (parquet, append mode).
-    *
-    * Batch-boundary invariance (spec-asserted by the re-batching
-    * differential): when duplicate groups are cliques at `threshold`
-    * (near-identical crawl dups are) and ids are arrival-ordered, the
-    * final index content and survivor set do not depend on where the
-    * micro-batch boundaries fall — a non-canonical doc is dropped
-    * either by step 2 (same batch as its canonical) or by step 1 (its
-    * canonical was appended by an earlier batch). Chain-shaped overlap
-    * at exactly the threshold can differ by batching, the same way any
-    * greedy dedup order does.
-    */
-  def crawlDedup(stream: DataFrame, idCol: String, textCol: String,
-                 indexPath: String, survivorDir: String,
-                 threshold: Double = 0.5): DataStreamWriter[Row] = {
-    import graft.operators.{Components, Dedup}
-    stream.writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (batch0: DataFrame, _: Long) =>
-        val spark = batch0.sparkSession
-        // pinned once: the batch feeds the probe, the intra-batch
-        // sketch, two anti-joins, the append, and the survivor write
-        val batch = batch0.localCheckpoint(true)
-        if (!batch.isEmpty) {
-          val m = spark.read.parquet(s"$indexPath/_meta").head()
-          val (shingleSize, numHashes, bands) =
-            (m.getInt(0), m.getInt(1), m.getInt(2))
-          val (lookup, probePins) = Dedup.minHashIndexLookupPinned(
-            spark, indexPath, batch, idCol, textCol)
-          val idxDup = lookup
-            .filter(col("est_jaccard") >= threshold)
-            .select(col("new_id").as(idCol)).distinct()
-          // connectivity-thin intra-batch edges — identical components
-          // to the filtered pair set, linear in a clone-flood batch
-          val pairs = Dedup.minHashLshDedupEdges(batch, idCol, textCol,
-            shingleSize, numHashes, bands, threshold)
-          val nonCanon = Components.connectedComponents(pairs, "id1", "id2")
-            .filter(col("id") =!= col("comp"))
-            .select(col("id").as(idCol))
-          val survivors = batch
-            .join(idxDup, Seq(idCol), "left_anti")
-            .join(nonCanon, Seq(idCol), "left_anti")
-            .localCheckpoint(true)
-          // the survivors checkpoint consumed the probe's eager pins
-          probePins.foreach(graft.operators.IterPin.free)
-          Dedup.minHashIndexAppend(spark, indexPath, survivors, idCol, textCol)
-          survivors.write.mode("append").parquet(survivorDir)
-          // deterministic pin release: the append + write were the
-          // survivors pin's last consumers (the runStreaming discipline)
-          graft.operators.IterPin.free(survivors)
-        }
-        graft.operators.IterPin.free(batch)
-        ()
-      }
-  }
-
-  /** Streaming EXACT dedup against an at-rest corpus, bloom fast path —
-    * the streaming form of [[graft.operators.BloomJoin.antiJoin]]
-    * (batch sibling: dd19). Per micro-batch:
-    *
-    *   1. rows whose key the sketch rejects are DEFINITELY new — they
-    *      skip the index entirely (in steady state that is almost the
-    *      whole batch, so the per-batch index join input is the true-
-    *      duplicate sliver plus fpp of the batch);
-    *   2. might-contain rows pay one exact anti-join against the key
-    *      index (text equality, so a 64-bit hash collision can never
-    *      drop a genuinely new document);
-    *   3. intra-batch exact dups keep the smallest id;
-    *   4. survivors and their keys are written as BATCH-TAGGED dynamic
-    *      partition overwrites (output first — the exactly-once
-    *      contract of [[graft.etl.CurationStages.runStreaming]]): a
-    *      replayed micro-batch overwrites exactly its own partitions
-    *      and anti-joins only against keys of EARLIER batches, so a
-    *      crash anywhere in the batch neither duplicates survivors nor
-    *      drops them against their own half-applied keys. The
-    *      survivors' DELTA sketch — built distributed
-    *      (`stat.bloomFilter`) with the same (expectedItems, fpp)
-    *      geometry — merges into the held sketch (a bit-OR on the
-    *      driver, bytes not rows). To pre-seed the index, write plain
-    *      (id-less) key parquet under `indexDir/keys/batch=-1`.
-    *
-    * The sketch lives in the sink closure for the query's lifetime and
-    * rebuilds from the index on restart — the index parquet is the
-    * source of truth; the bloom is a pure accelerator, so losing it
-    * costs one rebuild scan, never correctness.
-    */
-  def bloomCrawlDedup(stream: DataFrame, idCol: String, textCol: String,
-                      indexDir: String, survivorDir: String,
-                      expectedItems: Long = 1000000L,
-                      fpp: Double = 0.03): DataStreamWriter[Row] = {
-    import org.apache.spark.util.sketch.BloomFilter
-    import graft.operators.BloomJoin
-    var bloom: BloomFilter = null
-    val keysDir = s"$indexDir/keys"
-    // index-at-rest existence through Hadoop's FileSystem, not
-    // java.io.File — on HDFS/S3 a local-File check is always false, so
-    // a restart would silently rebuild an EMPTY bloom AND skip the
-    // exact anti-join sliver, emitting known duplicates as survivors
-    def indexExists(spark: org.apache.spark.sql.SparkSession): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(keysDir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
-    stream.writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        val spark = batch0.sparkSession
-        val batch = batch0.localCheckpoint(true)
-        if (!batch.isEmpty) {
-          val haveIndex = indexExists(spark)
-          if (bloom == null) {
-            bloom = BloomFilter.create(expectedItems, fpp)
-            if (haveIndex) {
-              val existing = spark.read.parquet(keysDir)
-              bloom.mergeInPlace(
-                existing.select(xxhash64(col("k")).as("__h"))
-                  .stat.bloomFilter("__h", expectedItems, fpp))
-            }
-          }
-          val bytes = { val bos = new java.io.ByteArrayOutputStream()
-            bloom.writeTo(bos); bos.toByteArray }
-          val definitelyNew = batch.filter(
-            !BloomJoin.mightContain(bytes, col(textCol)))
-          // the exact anti-join reads keys AS OF earlier batches (batch
-          // is a partition key → pruning): a replayed batch must be
-          // blind to its own half-applied keys, whether they reached
-          // the key files directly or rode back in through the bloom
-          // rebuild above — the bloom is only an accelerator, the
-          // as-of join decides
-          val (sliver, probePin) =
-            if (haveIndex) {
-              // a pre-seeded or legacy index may lack the batch
-              // partition key (seed convention: write plain parquet
-              // under keys/batch=-1 to join the tagged layout); a
-              // batch-less index keeps the old always-earlier
-              // semantics rather than failing on the missing column
-              val keys0 = spark.read.parquet(keysDir)
-              val asOf =
-                if (keys0.columns.contains("batch"))
-                  keys0.filter(col("batch") < lit(batchId))
-                else keys0
-              // probe SHAPE (the exactProbeHits discipline): the
-              // bloom-bounded sliver is the SMALL side; a plain
-              // left_anti against the index would sort-merge once the
-              // index outgrows auto-broadcast, shuffling the whole
-              // admitted history per batch. Semi-join the index
-              // against the broadcast sliver keys instead (size-gated
-              // — the bloom keeps the sliver to true dups + FPs, so
-              // the gate trips only on genuinely dup-dense bulk loads,
-              // where the shuffle join is the right plan).
-              val maybeDup = batch
-                .filter(BloomJoin.mightContain(bytes, col(textCol)))
-                .localCheckpoint(true)
-              val st = maybeDup.agg(count(lit(1)),
-                coalesce(avg(length(col(textCol))), lit(0.0))).head()
-              val small = st.getLong(0) <= 2000000L &&
-                (st.getLong(0) * (st.getDouble(1) * 2 + 20)).toLong <=
-                  64L * 1024 * 1024
-              val hits = graft.etl.CurationStages.exactProbeHits(
-                asOf.select(col("k").as(textCol)),
-                maybeDup.select(col(textCol)).distinct(), textCol, small)
-              (maybeDup.join(if (small) broadcast(hits) else hits,
-                Seq(textCol), "left_anti"), Some(maybeDup))
-            } else
-              (batch.filter(BloomJoin.mightContain(bytes, col(textCol))),
-                None)
-          // intra-batch exact dedup, smallest id survives (unionByName:
-          // the using-column anti join reorders the sliver's columns)
-          val fresh = definitelyNew.unionByName(
-            sliver.select(definitelyNew.columns.map(col).toSeq: _*))
-          val survivors = batch.join(
-              fresh.groupBy(col(textCol)).agg(min(col(idCol)).as(idCol)),
-              Seq(textCol, idCol), "left_semi")
-            .localCheckpoint(true)
-          // the survivors checkpoint was the probe pin's last consumer
-          probePin.foreach(graft.operators.IterPin.free)
-          if (!survivors.isEmpty) {
-            // batch-tagged DYNAMIC PARTITION OVERWRITES, output first
-            // (the runStreaming exactly-once contract): a replayed
-            // batch overwrites exactly its own output and key
-            // partitions — no duplicated survivors, no documents lost
-            // to a self-anti-join
-            survivors.withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id").parquet(survivorDir)
-            survivors.select(col(textCol).as("k"))
-              .withColumn("batch", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch").parquet(keysDir)
-            bloom.mergeInPlace(
-              survivors.select(xxhash64(col(textCol)).as("__h"))
-                .stat.bloomFilter("__h", expectedItems, fpp))
-            ()
-          }
-          // deterministic pin release (the runStreaming discipline):
-          // the writes and the bloom merge above were the last
-          // consumers of this batch's pins
-          graft.operators.IterPin.free(survivors)
-        }
-        graft.operators.IterPin.free(batch)
-        ()
-      }
-  }
-
-  /** Streaming SEMANTIC near-dup dedup against a vector index-at-rest —
-    * the embedding counterpart of [[bloomCrawlDedup]]/the minhash
-    * curation loop, for crawls that carry precomputed embeddings
-    * (batch sibling: dd14/SemDeDup). Per micro-batch: probe the
-    * persisted IVF-bucketed vector index for cosine >= `tau` neighbors
-    * from EARLIER batches (partition-pruned to the `nprobe` nearest
-    * frozen centroids), resolve intra-batch clusters to their min-id
-    * survivor, write survivors, then admit their vectors to the index.
-    *
-    * Exactly-once: output and index writes are batch-tagged dynamic
-    * partition overwrites, the probe reads the index AS OF earlier
-    * batches, and the index admit runs only AFTER the survivor write
-    * commits over ids that reached it — a crash anywhere in the batch
-    * replays cleanly (the [[graft.etl.CurationStages.runStreaming]]
-    * contract; the mechanics live in
-    * [[graft.operators.Similarity.semanticCrawlBatch]]). Consequence
-    * for readers: `survivorDir` is partitioned by `batch_id`.
-    */
-  def semanticCrawlDedup(stream: DataFrame, idCol: String, vecCol: String,
-                         indexDir: String, survivorDir: String,
-                         tau: Double, nlist: Int = 64, nprobe: Int = 4)
-  : DataStreamWriter[Row] =
-    stream.writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        val spark = batch0.sparkSession
-        val batch = batch0.localCheckpoint(true)
-        if (!batch.isEmpty) {
-          val (survivors, admit) = graft.operators.Similarity
-            .semanticCrawlBatch(spark, indexDir, batch, idCol, vecCol,
-              tau, nlist, nprobe, batchId)
-          val pinned = survivors.localCheckpoint(true)
-          pinned.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(survivorDir)
-          admit(pinned.select(col(idCol)))
-          // the admit (which frees the operator's own pins) was the
-          // last consumer — release this loop's pins deterministically
-          graft.operators.IterPin.free(pinned)
-        }
-        graft.operators.IterPin.free(batch)
-        ()
-      }
-
   /** Streaming query-performance regression alerts — the stateful
     * stream counterpart of [[graft.ops.QueryAnalytics.regressions]]
     * (reference regression.py `RegressionDetector.ingest`, which pulls

@@ -56,6 +56,26 @@ class MutationSpec extends SparkSpec {
     assert(n.head.getLong(0) == 2L)
   }
 
+  test("CREATE binds the relationship variable it creates") {
+    val eng = freshEngine
+    val r = eng.execute(
+      """MATCH (a:Person {name: 'Alice'}), (b:Person {name: 'Bob'})
+         CREATE (a)-[r:KNOWS {w: 1}]->(b) RETURN r.w AS w""").collect()
+    assert(r.map(_.getLong(0)).toSeq == Seq(1L))
+    // one edge per binding row, each bound to its own row, minted id
+    // included; a later SET in the same query writes the created edges
+    val l = eng.execute(
+      """MATCH (p:Person) WHERE p.age >= 30
+         CREATE (p)-[l:LIKES {since: p.age}]->(p) SET l.seen = true
+         RETURN p.name AS n, l.since AS s, l.__ID__ AS id, l.seen AS seen""").collect()
+    assert(l.map(x => (x.getString(0), x.getLong(1), x.getBoolean(3))).sorted.toSeq ==
+      Seq(("Alice", 30L, true), ("Carol", 35L, true)))
+    assert(l.map(_.getLong(2)).sorted.toSeq == Seq(0L, 1L))
+    assert(eng.query(
+      "MATCH (p:Person)-[l:LIKES]->(p) WHERE l.seen RETURN count(*) AS c").collect()
+      .head.getLong(0) == 2L)
+  }
+
   test("SET updates and adds properties; later reads see it") {
     val eng = freshEngine
     val out = eng.execute(

@@ -2100,8 +2100,11 @@ class OperatorsSpec extends SparkSpec {
     val dupNewIds = Dedup.minHashIndexLookup(spark, dir, batch, "doc_id", "text")
       .select(col("new_id").as("doc_id")).distinct()
     val survivors = batch.join(dupNewIds, Seq("doc_id"), "left_anti")
-    Dedup.minHashIndexAppend(spark, dir, survivors, "doc_id", "text")
-    // the appended doc is now findable; the dropped duplicate is not in
+    // the streaming arm's admit, as batch 0: the survivors (a lazy plan
+    // over the flat index) are signed, the flat index moves under
+    // batch=-1 and the survivors land as batch=0
+    Dedup.minHashIndexPut(spark, dir, survivors, "doc_id", "text", batch = 0L)
+    // the admitted doc is now findable; the dropped duplicate is not in
     // the index (a copy of it still matches the ORIGINAL corpus doc)
     val probe = Seq((300L, "entirely novel text about nothing seen before yet"))
       .toDF("doc_id", "text")

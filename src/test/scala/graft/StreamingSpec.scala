@@ -499,116 +499,6 @@ class StreamingSpec extends SparkSpec {
     assert(sets.forall(_ == Set((1L, 3L))), sets.toString)
   }
 
-  test("streaming crawl loop (probe index → filter → append): final index and " +
-    "survivor set are invariant to micro-batch boundaries") {
-    import graft.operators.Dedup
-    val seed = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog every single day"),
-      (2L, "an indexed corpus document about distributed engines and storage"))
-    val arrivals = Seq(
-      (10L, "the quick brown fox jumps over the lazy dog every single day"), // dup of seed 1
-      (11L, "genuinely novel crawled content about streaming dedup loops"),
-      (12L, "genuinely novel crawled content about streaming dedup loops"),  // dup of 11
-      (13L, "another unrelated page with its own distinct words entirely"))
-    def run(batches: Seq[Seq[(Long, String)]]): (Set[Long], Set[Long]) = {
-      val idx = Files.createTempDirectory("graft_crawlidx").toFile.getAbsolutePath
-      val out = Files.createTempDirectory("graft_crawlout").toFile.getAbsolutePath
-      val in = Files.createTempDirectory("graft_crawlin").toFile.getAbsolutePath
-      Dedup.minHashIndexWrite(seed.toDF("doc_id", "text"), "doc_id", "text",
-        idx, shingleSize = 2, numHashes = 64, bands = 32)
-      batches.head.toDF("doc_id", "text").write.mode("append").parquet(in)
-      val stream = spark.readStream
-        .schema(batches.head.toDF("doc_id", "text").schema).parquet(in)
-      val q = Streams.crawlDedup(stream, "doc_id", "text", idx, out).start()
-      q.processAllAvailable()
-      batches.tail.foreach { b =>
-        b.toDF("doc_id", "text").write.mode("append").parquet(in)
-        q.processAllAvailable()
-      }
-      q.stop()
-      val survivors = spark.read.parquet(out).select("doc_id")
-        .collect().map(_.getLong(0)).toSet
-      val indexed = spark.read.parquet(s"$idx/_sigs").select("id")
-        .collect().map(_.getLong(0)).toSet
-      (survivors, indexed)
-    }
-    val results = Seq(
-      Seq(arrivals),                                   // one big batch
-      Seq(arrivals.take(2), arrivals.drop(2)),         // dup pair split across batches
-      arrivals.map(Seq(_)))                            // one doc per batch
-      .map(run)
-    assert(results.forall(_ == ((Set(11L, 13L), Set(1L, 2L, 11L, 13L)))),
-      results.toString)
-  }
-
-  test("streaming bloom exact-dedup: batch-boundary invariant, seeded index " +
-    "respected, intra-batch dups keep the smallest id") {
-    val seed = Seq((1L, "seeded document alpha"), (2L, "seeded document beta"))
-    val arrivals = Seq(
-      (10L, "seeded document alpha"),      // dup of at-rest index
-      (11L, "novel gamma content"),
-      (12L, "novel gamma content"),        // intra-stream dup of 11
-      (13L, "novel delta content"))
-    def run(batches: Seq[Seq[(Long, String)]]): (Set[Long], Set[String]) = {
-      val idx = Files.createTempDirectory("graft_bloomidx").toFile.getAbsolutePath
-      val out = Files.createTempDirectory("graft_bloomout").toFile.getAbsolutePath
-      val in = Files.createTempDirectory("graft_bloomin").toFile.getAbsolutePath
-      // the documented seed convention: plain key parquet under
-      // batch=-1 joins the batch-tagged layout as "earlier than all"
-      seed.toDF("doc_id", "text").select(col("text").as("k"))
-        .write.mode("append").parquet(s"$idx/keys/batch=-1")
-      batches.head.toDF("doc_id", "text").write.mode("append").parquet(in)
-      val stream = spark.readStream
-        .schema(batches.head.toDF("doc_id", "text").schema).parquet(in)
-      val q = Streams.bloomCrawlDedup(stream, "doc_id", "text", idx, out,
-        expectedItems = 1000L).start()
-      q.processAllAvailable()
-      batches.tail.foreach { b =>
-        b.toDF("doc_id", "text").write.mode("append").parquet(in)
-        q.processAllAvailable()
-      }
-      q.stop()
-      val survivors = spark.read.parquet(out).select("doc_id")
-        .collect().map(_.getLong(0)).toSet
-      val keys = spark.read.parquet(s"$idx/keys").select("k")
-        .collect().map(_.getString(0)).toSet
-      (survivors, keys)
-    }
-    val expectKeys = Set("seeded document alpha", "seeded document beta",
-      "novel gamma content", "novel delta content")
-    val results = Seq(
-      Seq(arrivals),                             // one big batch
-      Seq(arrivals.take(2), arrivals.drop(2)),   // dup pair split across batches
-      arrivals.map(Seq(_)))                      // one doc per batch
-      .map(run)
-    assert(results.forall(_ == ((Set(11L, 13L), expectKeys))), results.toString)
-    // crash-replay: wipe the checkpoint so the batch re-processes as
-    // batch 0 — the batch-tagged overwrites and the as-of key join
-    // must land a bit-identical end state (the old append-mode writes
-    // duplicated every replayed survivor)
-    val idx = Files.createTempDirectory("graft_bloomrp_i").toFile.getAbsolutePath
-    val out = Files.createTempDirectory("graft_bloomrp_o").toFile.getAbsolutePath
-    val in = Files.createTempDirectory("graft_bloomrp_in").toFile.getAbsolutePath
-    val ck = Files.createTempDirectory("graft_bloomrp_ck").toFile.getAbsolutePath
-    arrivals.toDF("doc_id", "text").write.mode("append").parquet(in)
-    def replayRun(): Unit = {
-      val q = Streams.bloomCrawlDedup(
-          spark.readStream.schema("doc_id LONG, text STRING").parquet(in),
-          "doc_id", "text", idx, out, expectedItems = 1000L)
-        .option("checkpointLocation", ck).start()
-      q.processAllAvailable(); q.stop()
-    }
-    replayRun()
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ck))
-    replayRun()
-    val outRows = spark.read.parquet(out).select("doc_id")
-      .collect().map(_.getLong(0)).toSeq.sorted
-    assert(outRows == Seq(10L, 11L, 13L), outRows) // each once, no dups
-    val keyRows = spark.read.parquet(s"$idx/keys").select("k")
-      .collect().map(_.getString(0)).toSeq.sorted
-    assert(keyRows.distinct == keyRows && keyRows.size == 3, keyRows)
-  }
-
   test("streaming HLL register maintenance: estimate after N batches equals " +
     "one batch pass over the full stream") {
     import graft.operators.Sketches
@@ -622,7 +512,7 @@ class StreamingSpec extends SparkSpec {
       .schema(spark.range(1).toDF("v").withColumn("g", lit("x")).schema)
       .parquet(dir)
     // per micro-batch: merge the batch's registers into the at-rest
-    // table — the sketch-at-rest counterpart of bloomCrawlDedup
+    // table — a sketch kept at rest across micro-batches
     val q = stream.writeStream.outputMode(OutputMode.Append())
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         val fresh = Sketches.hllRegisters(batch, Seq("g"), "v")
@@ -726,6 +616,7 @@ class StreamingSpec extends SparkSpec {
   test("YAML streaming curation is batch-boundary invariant: one batch " +
     "vs three batches give the same survivors and index") {
     import graft.etl.{PipelineConfig, PipelineRunner}
+    import graft.operators.Dedup
     val base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa " +
       "lambda mu nu xi omicron pi rho sigma tau upsilon phi chi psi omega " +
       "ant bee cat dog elk fox").split(" ").toSeq
@@ -739,11 +630,16 @@ class StreamingSpec extends SparkSpec {
       (3L, doc(29, "wolf")),
       (4L, base.map(t => t + t.take(1)).mkString(" ")),
       (5L, doc(28, "hawk")))
-    def run(batches: Seq[Seq[(Long, String)]]): (Set[Long], Set[Long]) = {
+    // survivors and index content of a one-stage crawl over `batches`
+    // (a restart per batch); `seed` fills the index-at-rest first
+    def run(stage: String => String, seed: String => Unit,
+            indexed: String => Set[Any])(
+        batches: Seq[Seq[(Long, String)]]): (Set[Long], Set[Any]) = {
       val src = Files.createTempDirectory("graft_inv_src").toFile.getAbsolutePath
       val out = Files.createTempDirectory("graft_inv_out").toFile.getAbsolutePath
       val ck = Files.createTempDirectory("graft_inv_ck").toFile.getAbsolutePath
       val idx = s"${Files.createTempDirectory("graft_inv_idx")}/index"
+      seed(idx)
       val config = PipelineConfig.parse(
         s"""project: {name: inv}
            |curation:
@@ -753,7 +649,7 @@ class StreamingSpec extends SparkSpec {
            |    checkpoint: $ck
            |    output: $out
            |    stages:
-           |      - {op: minhash_dedup, index_dir: $idx, threshold: "0.5"}
+           |      - ${stage(idx)}
            |""".stripMargin)
       batches.foreach { b =>
         b.toDF("doc_id", "text").write.mode("append").parquet(src)
@@ -761,15 +657,56 @@ class StreamingSpec extends SparkSpec {
         q.processAllAvailable(); q.stop()
       }
       (spark.read.parquet(out).select("doc_id")
-         .collect().map(_.getLong(0)).toSet,
-       spark.read.parquet(s"$idx/_sigs").select("id")
-         .collect().map(_.getLong(0)).toSet)
+         .collect().map(_.getLong(0)).toSet, indexed(idx))
     }
-    val oneShot = run(Seq(docs))
-    val threeBatches = run(Seq(docs.take(2), docs.slice(2, 4), docs.drop(4)))
+    def minhash(idx: String) =
+      s"""{op: minhash_dedup, index_dir: $idx, threshold: "0.5"}"""
+    def sigIds(idx: String): Set[Any] = spark.read.parquet(s"$idx/_sigs")
+      .select("id").collect().map(_.getLong(0)).toSet
+    val oneShot = run(minhash, _ => (), sigIds)(Seq(docs))
+    val threeBatches = run(minhash, _ => (), sigIds)(
+      Seq(docs.take(2), docs.slice(2, 4), docs.drop(4)))
     assert(oneShot == threeBatches, s"$oneShot vs $threeBatches")
     assert(oneShot._1 == Set(1L, 2L, 4L), oneShot)  // 3, 5 near-dup of 1
     assert(oneShot._1 == oneShot._2) // index holds exactly the survivors
+    // against a SEEDED index: one big batch, the dup pair split across
+    // batches, one doc per batch — the same survivors and final index
+    def batchings[T](xs: Seq[T]): Seq[Seq[Seq[T]]] =
+      Seq(Seq(xs), Seq(xs.take(2), xs.drop(2)), xs.map(Seq(_)))
+    // a batch-path MinHash index (minHashIndexWrite, flat layout) at
+    // threshold 0.5: the probe reads it always-earlier, the first admit
+    // moves it under batch=-1
+    val seed = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog every single day"),
+      (2L, "an indexed corpus document about distributed engines and storage"))
+    val arrivals = Seq(
+      (10L, "the quick brown fox jumps over the lazy dog every single day"), // dup of seed 1
+      (11L, "genuinely novel crawled content about streaming dedup loops"),
+      (12L, "genuinely novel crawled content about streaming dedup loops"),  // dup of 11
+      (13L, "another unrelated page with its own distinct words entirely"))
+    val seeded = batchings(arrivals).map(run(minhash,
+      idx => Dedup.minHashIndexWrite(seed.toDF("doc_id", "text"), "doc_id",
+        "text", idx, shingleSize = 2, numHashes = 64, bands = 32), sigIds))
+    assert(seeded.forall(_ == ((Set(11L, 13L), Set(1L, 2L, 11L, 13L)))),
+      seeded.toString)
+    // an exact key index seeded by the documented convention: plain key
+    // parquet under keys/batch=-1 reads as "earlier than all"; intra-batch
+    // dups keep the smallest id
+    val keySeed = Seq((1L, "seeded document alpha"), (2L, "seeded document beta"))
+    val keyArrivals = Seq(
+      (10L, "seeded document alpha"),      // dup of at-rest index
+      (11L, "novel gamma content"),
+      (12L, "novel gamma content"),        // intra-stream dup of 11
+      (13L, "novel delta content"))
+    val exact = batchings(keyArrivals).map(run(
+      idx => s"{op: exact_dedup, index_dir: $idx}",
+      idx => keySeed.toDF("doc_id", "text").select(col("text").as("k"))
+        .write.mode("append").parquet(s"$idx/keys/batch=-1"),
+      idx => spark.read.parquet(s"$idx/keys").select("k")
+        .collect().map(_.getString(0)).toSet))
+    val expectKeys: Set[Any] = Set("seeded document alpha",
+      "seeded document beta", "novel gamma content", "novel delta content")
+    assert(exact.forall(_ == ((Set(11L, 13L), expectKeys))), exact.toString)
   }
 
   test("YAML streaming curation: exact_dedup against a key index-at-rest " +
@@ -942,61 +879,6 @@ class StreamingSpec extends SparkSpec {
     assert(survivors() == Set(3L, 7L), survivors())
   }
 
-  test("streaming semantic dedup against a vector index-at-rest: " +
-    "cross-batch cosine near-dups drop across a restart; replay after a " +
-    "wiped checkpoint is idempotent") {
-    val src = Files.createTempDirectory("graft_sem_src").toFile.getAbsolutePath
-    val out = Files.createTempDirectory("graft_sem_out").toFile.getAbsolutePath
-    val ck = Files.createTempDirectory("graft_sem_ck").toFile.getAbsolutePath
-    val idx = s"${Files.createTempDirectory("graft_sem_idx")}/index"
-    def run(): Unit = {
-      val stream = spark.readStream
-        .schema("vec_id LONG, emb ARRAY<DOUBLE>").parquet(src)
-      val q = Streams.semanticCrawlDedup(stream, "vec_id", "emb",
-          idx, out, tau = 0.95, nlist = 2, nprobe = 2)
-        .option("checkpointLocation", ck).start()
-      q.processAllAvailable(); q.stop()
-    }
-    def survivors(): Set[Long] = spark.read.parquet(out)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    // batch 1: 1 ~ 4 (cos 0.9999) intra-batch near-dup, 6 orthogonal.
-    // Ids chosen for the md5-ranked centroid sample (nlist=2 picks the
-    // two smallest md5(id): 6 then 4) so the near-dup PAIR shares a
-    // home bucket — the within-cluster pairing trade SemDeDup makes;
-    // a pair that is itself the sampled centroids splits buckets and
-    // is missed intra-batch (documented, not a bug)
-    Seq(
-      (1L, Seq(0.999, 0.01)),
-      (4L, Seq(1.0, 0.0)),
-      (6L, Seq(0.0, 1.0)))
-      .toDF("vec_id", "emb").write.mode("append").parquet(src)
-    run()
-    assert(survivors() == Set(1L, 6L), survivors())
-    // crash-replay: wipe the checkpoint so the same files re-process as
-    // batch 0 again — the as-of probe (batch < 0 sees nothing) and the
-    // batch-tagged overwrites must land a BIT-IDENTICAL end state: no
-    // survivor lost to a self-anti-join, no duplicated rows or vectors
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ck))
-    run()
-    def state(): (Seq[Long], Seq[Long]) =
-      (spark.read.parquet(out).select("vec_id")
-         .collect().map(_.getLong(0)).toSeq.sorted,
-       spark.read.parquet(s"$idx/vecs").select("id")
-         .collect().map(_.getLong(0)).toSeq.sorted)
-    assert(state() == ((Seq(1L, 6L), Seq(1L, 6L))), state())
-    // batch 2 (fresh checkpoint from the replay): 7 ~ 1 must be dropped
-    // by the INDEX (vector 1 is long gone from any state a restart
-    // kept); 8 is fresh
-    Seq(
-      (7L, Seq(0.998, -0.02)),
-      (8L, Seq(0.7, -0.7)))
-      .toDF("vec_id", "emb").write.mode("append").parquet(src)
-    run()
-    assert(survivors() == Set(1L, 6L, 8L), survivors())
-    // the index holds exactly the survivors' vectors, each once
-    assert(state() == ((Seq(1L, 6L, 8L), Seq(1L, 6L, 8L))), state())
-  }
-
   test("YAML streaming curation: semantic_dedup stage runs the incremental " +
     "SemDeDup loop against the vector index-at-rest across a restart") {
     import graft.etl.{PipelineConfig, PipelineRunner}
@@ -1029,7 +911,21 @@ class StreamingSpec extends SparkSpec {
     def survivors(): Set[Long] = spark.read.parquet(out)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(survivors() == Set(1L, 6L), survivors())
-    // restart: 7 ~ vector 1 drops via the index-at-rest, 8 is fresh
+    // crash-replay: wipe the checkpoint so the same files re-process as
+    // batch 0 again — the as-of probe (batch < 0 sees nothing) and the
+    // batch-tagged overwrites must land a BIT-IDENTICAL end state: no
+    // survivor lost to a self-anti-join, no duplicated rows or vectors
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ck))
+    val q1r = PipelineRunner.startCuration(spark, config, "ys")
+    q1r.processAllAvailable(); q1r.stop()
+    def state(): (Seq[Long], Seq[Long]) =
+      (spark.read.parquet(out).select("doc_id")
+         .collect().map(_.getLong(0)).toSeq.sorted,
+       spark.read.parquet(s"$idx/vecs").select("id")
+         .collect().map(_.getLong(0)).toSeq.sorted)
+    assert(state() == ((Seq(1L, 6L), Seq(1L, 6L))), state())
+    // restart: 7 ~ vector 1 drops via the index-at-rest (vector 1 is
+    // long gone from any state a restart kept), 8 is fresh
     Seq(
       (7L, "late near dup", Seq(0.998, -0.02)),
       (8L, "fresh", Seq(0.7, -0.7)))
@@ -1037,8 +933,8 @@ class StreamingSpec extends SparkSpec {
     val q2 = PipelineRunner.startCuration(spark, config, "ys")
     q2.processAllAvailable(); q2.stop()
     assert(survivors() == Set(1L, 6L, 8L), survivors())
-    assert(spark.read.parquet(s"$idx/vecs").select("id")
-      .collect().map(_.getLong(0)).toSet == Set(1L, 6L, 8L))
+    // the index holds exactly the survivors' vectors, each once
+    assert(state() == ((Seq(1L, 6L, 8L), Seq(1L, 6L, 8L))), state())
   }
 
   test("streaming micro-batch pins are RELEASED deterministically: a " +
@@ -1295,7 +1191,8 @@ class StreamingSpec extends SparkSpec {
         (9999L, "a fresh never before seen document about lazy plans"))
       .toDF("doc_id", "text")
     val (lookup, pins) = Dedup.minHashIndexLookupPinned(
-      spark, idir, flood, "doc_id", "text", excludeBatchFrom = Some(1L))
+      spark, idir, Dedup.minHashIndexMeta(spark, idir).get, flood,
+      "doc_id", "text", excludeBatchFrom = Some(1L))
     val hits = lookup.filter(col("est_jaccard") >= 0.9)
       .select("new_id").distinct().count()
     assert(hits == 3000L, s"every clone must match the admitted text: $hits")
@@ -1706,6 +1603,102 @@ class StreamingSpec extends SparkSpec {
     val q2 = PipelineRunner.startCuration(spark, config, "rp")
     q2.processAllAvailable(); q2.stop()
     assert(state() == first, s"${state()} vs $first")
+    // the exact_dedup arm over the same replay: each survivor shipped
+    // once, each key indexed once
+    val xsrc = Files.createTempDirectory("graft_rpx_src").toFile.getAbsolutePath
+    val xout = Files.createTempDirectory("graft_rpx_out").toFile.getAbsolutePath
+    val xck = Files.createTempDirectory("graft_rpx_ck").toFile.getAbsolutePath
+    val xidx = s"${Files.createTempDirectory("graft_rpx_idx")}/index"
+    val xconfig = PipelineConfig.parse(
+      s"""project: {name: rpx}
+         |curation:
+         |  - id: rpx
+         |    input: $xsrc
+         |    streaming: true
+         |    checkpoint: $xck
+         |    output: $xout
+         |    stages:
+         |      - {op: exact_dedup, index_dir: $xidx}
+         |""".stripMargin)
+    Seq(
+      (10L, "seeded document alpha"),
+      (11L, "novel gamma content"),
+      (12L, "novel gamma content"),        // intra-batch dup of 11
+      (13L, "novel delta content"))
+      .toDF("doc_id", "text").write.mode("append").parquet(xsrc)
+    def xrun(): Unit = {
+      val q = PipelineRunner.startCuration(spark, xconfig, "rpx")
+      q.processAllAvailable(); q.stop()
+    }
+    xrun()
+    FileUtils.deleteDirectory(new java.io.File(xck))
+    xrun()
+    val outRows = spark.read.parquet(xout).select("doc_id")
+      .collect().map(_.getLong(0)).toSeq.sorted
+    assert(outRows == Seq(10L, 11L, 13L), outRows) // each once, no dups
+    val keyRows = spark.read.parquet(s"$xidx/keys").select("k")
+      .collect().map(_.getString(0)).toSeq.sorted
+    assert(keyRows.distinct == keyRows && keyRows.size == 3, keyRows)
+  }
+
+  test("streaming minhash_dedup reads the index _meta once per micro-batch: " +
+    "two steady micro-batches schedule the same jobs") {
+    import graft.etl.{PipelineConfig, PipelineRunner}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graftshim.ListenerBridge
+    val src = Files.createTempDirectory("graft_mo_src").toFile.getAbsolutePath
+    val out = Files.createTempDirectory("graft_mo_out").toFile.getAbsolutePath
+    val ck = Files.createTempDirectory("graft_mo_ck").toFile.getAbsolutePath
+    val idx = s"${Files.createTempDirectory("graft_mo_idx")}/index"
+    val config = PipelineConfig.parse(
+      s"""project: {name: mo}
+         |curation:
+         |  - id: mo
+         |    input: $src
+         |    streaming: true
+         |    checkpoint: $ck
+         |    output: $out
+         |    schema: "doc_id LONG, text STRING"
+         |    stages:
+         |      - {op: minhash_dedup, index_dir: $idx, threshold: "0.5"}
+         |""".stripMargin)
+    val base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa " +
+      "lambda mu nu xi omicron pi rho sigma tau upsilon phi chi psi " +
+      "omega ant bee cat dog elk fox").split(" ").toSeq
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobs.merge(g, 1, _ + _))
+    }
+    // one query run per micro-batch: a run's jobs carry its runId as
+    // their job group
+    def batch(rows: Seq[(Long, String)]): Int = {
+      rows.toDF("doc_id", "text").write.mode("append").parquet(src)
+      val q = PipelineRunner.startCuration(spark, config, "mo")
+      try q.processAllAvailable() finally q.stop()
+      assert(ListenerBridge.waitUntilEmpty(spark, 10000L))
+      jobs.getOrDefault(q.runId.toString, 0)
+    }
+    sc.addSparkListener(listener)
+    val steady = try {
+      batch(Seq((1L, base.mkString(" ")), (2L, base.map(_.reverse).mkString(" "))))
+      // each steady batch: a near-dup of doc 1 (dropped by the probe)
+      // and a fresh doc (admitted)
+      Seq(
+        batch(Seq((3L, base.updated(29, "wolf").mkString(" ")),
+          (4L, base.map(t => t + t.take(1)).mkString(" ")))),
+        batch(Seq((5L, base.updated(28, "hawk").mkString(" ")),
+          (6L, base.map(_ + "s").mkString(" ")))))
+    } finally sc.removeSparkListener(listener)
+    assert(steady.distinct.size == 1, s"steady batches differ: $steady")
+    // the probe and the put take the values of the batch's one _meta
+    // read; each further read costs two jobs (schema inference and the
+    // row) and would push a steady batch past 47
+    assert(steady.head <= 47, s"steady batch ran ${steady.head} jobs")
+    assert(spark.read.parquet(out).select("doc_id").collect().map(_.getLong(0))
+      .toSet == Set(1L, 2L, 4L, 6L))
   }
 
   test("streaming routing-ledger rows are exactly-once: a replayed " +
