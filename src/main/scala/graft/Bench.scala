@@ -1,6 +1,7 @@
 package graft
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -134,10 +135,12 @@ object Bench {
   /** The timed loop. Each selected query runs `repeats` times; its
     * record is the lower median, the sorted times, and the scheduled
     * jobs, stages and tasks plus the generated classes compiled (a class
-    * evicted from Spark's codegen cache compiles again) of its LAST run,
-    * counted by one listener. The iterative operators run their loops
-    * while the frame is built, so these counts, not the final plan, are
-    * the evidence for job-count claims. The full record goes to
+    * evicted from Spark's codegen cache compiles again) of its LAST run.
+    * Each run sets its own job group, and one listener counts only that
+    * group's jobs and their stages and tasks, so a job some other thread
+    * runs meanwhile is not charged to the query. The iterative operators
+    * run their loops while the frame is built, so these counts, not the
+    * final plan, are the evidence for job-count claims. The full record goes to
     * `fullPath`; the returned compact line (under 1 KB) carries the
     * total, the query and error counts, the sf dir and `fullPath`.
     */
@@ -145,29 +148,39 @@ object Bench {
           repeats: Int, fullPath: Path,
           queries: Map[String, Query] = SparkEntry.queries): String = {
     val selected = prepare(spark, sfDir, only, queries)
+    val sc = spark.sparkContext
+    val group = new AtomicReference("")
+    val groupStages = ConcurrentHashMap.newKeySet[Int]()
     val jobs, stages, tasks = new AtomicLong(0)
     val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group.get)) {
+          jobs.incrementAndGet()
+          j.stageIds.foreach(groupStages.add)
+        }
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        stages.incrementAndGet()
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = tasks.incrementAndGet()
+        if (groupStages.contains(s.stageInfo.stageId)) stages.incrementAndGet()
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (groupStages.contains(t.stageId)) tasks.incrementAndGet()
     }
     val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
-    spark.sparkContext.addSparkListener(listener)
+    sc.addSparkListener(listener)
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // median-of-N per query so one GC pause or first-run plan compile
     // can't masquerade as a slow plan; a query that throws is reported
     // as -1 with its error surfaced instead of a plausible wall-time
     val results = try selected.map { case (name, fn) =>
-      val runs = (1 to repeats).map { _ =>
-        jobs.set(0); stages.set(0); tasks.set(0)
+      val runs = (1 to repeats).map { i =>
+        jobs.set(0); stages.set(0); tasks.set(0); groupStages.clear()
+        group.set(s"$name#$i")
+        sc.setJobGroup(group.get, name)
         val compiles0 = compiles.getCount
         val t0 = System.nanoTime()
         val t = try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
         catch { case e: Throwable =>
           errors.getOrElseUpdate(name, s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
           None
-        }
+        } finally sc.clearJobGroup()
         // listener events are async: drain the bus before reading
         if (!ListenerBridge.waitUntilEmpty(spark, 30000L))
           System.err.println(s"[bench] $name: listener bus not drained")
@@ -189,7 +202,7 @@ object Bench {
       // the steady-state number
       val dt = if (times.isEmpty) -1.0 else times((times.size - 1) / 2)
       (name, dt, times, runs.lastOption.fold(Seq.empty[Long])(_._2))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally sc.removeSparkListener(listener)
 
     def obj(fields: Seq[(String, String)]): String =
       fields.map { case (k, v) => jsonString(k) + ":" + v }.mkString("{", ",", "}")

@@ -104,8 +104,8 @@ object ScaleEdges {
     // edges), unlike the documents corpora's ~replicas² truth.
     lazy val cust = spark.read.parquet(s"$sfDir/customer.parquet")
     timed("fuzzy_thin_edges_auto")(
-      Dedup.editDistanceDedupEdgesAuto(cust, "c_custkey", "c_name",
-        maxDist = 1)._1.count())
+      Dedup.editDistanceAuto(cust, "c_custkey", "c_name",
+        maxDist = 1).edges.count())
     // the fuzzy EXACT tier bypassing the density router — the control
     // arm of the r20 diverse sweep: on the diverse-name corpus the
     // density statistic sits just over its threshold (70.4 vs 64 at
@@ -122,8 +122,8 @@ object ScaleEdges {
     // tier — this wall prices the disjunct (exact arm + one pre-flight
     // aggregate) against the 603 s sf1_div misroute it avoids
     timed("fuzzy_thin_edges_budget")(
-      Dedup.editDistanceDedupEdgesAuto(cust, "c_custkey", "c_name",
-        maxDist = 1, exactCandidateBudget = 2000000000L)._1.count())
+      Dedup.editDistanceAuto(cust, "c_custkey", "c_name",
+        maxDist = 1, exactCandidateBudget = 2000000000L).edges.count())
     // simhash thin edges on the marked documents (dd03's maxHamming=6)
     timed("simhash_thin_edges")(
       Dedup.simHashDedupEdges(docs, "doc_id", "text",

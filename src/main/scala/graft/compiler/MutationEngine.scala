@@ -98,6 +98,12 @@ final class MutationEngine(catalog: GraphCatalog, spark: SparkSession,
       val e = catalog.entity(label)
       Element(e.df, Seq(e.idCol), Set(e.idCol), NodeVar(label, e.idCol, _),
         d => commit(e.copy(df = d)))
+    // `[k:A|B]` binds a union named "A|B", which no stored table backs
+    case Some(RelVar(relType, _, _, _))
+        if relType.contains('|') && !catalog.hasRelationship(relType) =>
+      throw new IllegalArgumentException(
+        s"cannot write through relationship variable $v: it binds several types " +
+          s"(${relType.split('|').mkString(", ")}); match a single type to SET, REMOVE or DELETE it")
     case Some(RelVar(relType, _, _, attrs)) =>
       val r = catalog.relationship(relType)
       relElement(r, r.idCol.filter(attrs.contains).fold(Seq(r.srcCol, r.dstCol))(Seq(_)))

@@ -172,7 +172,7 @@ object CurationStages {
 
       case "fuzzy_dedup" =>
         // edit-distance dedup behind the collision-density AUTO-ROUTER
-        // (Dedup.editDistancePairsAuto, VERDICT r12 item 5): pairs
+        // (Dedup.editDistanceAuto, VERDICT r12 item 5): pairs
         // within `max_dist` Levenshtein on the text column, routed
         // exact (symmetric-delete, guaranteed recall) or MinHash-LSH
         // (collision-dense / long-key corpora; exact-verified
@@ -215,10 +215,11 @@ object CurationStages {
               t <- stickyPriorTier(spark, d, b)
             } yield t
           } else None
-        // connectivity-thin edges (same router/ledger as the pairs
-        // form): identical components and survivors, but an exact-dup
-        // key flood contributes |group| star edges, not |group|²/2
-        val (pairs, ledger) = Dedup.editDistanceDedupEdgesAuto(
+        // connectivity-thin edges (the router's edges projection):
+        // identical components and survivors to its pairs, but an
+        // exact-dup key flood contributes |group| star edges, not
+        // |group|²/2
+        val routed = Dedup.editDistanceAuto(
           df, idCol, textCol, maxDist = maxDist,
           densityThreshold = doubleParam("density_threshold", 64.0),
           maxMeanKeyLen = doubleParam("max_mean_key_len", 64.0),
@@ -230,10 +231,9 @@ object CurationStages {
           // measured mass and the override either way
           exactCandidateBudget =
             longParam("exact_candidate_budget").getOrElse(0L))
-        param("ledger_dir").foreach(d => writeLedger(ledger, d, streamBatch))
+        param("ledger_dir").foreach(d => writeLedger(routed.ledger, d, streamBatch))
         val nonCanon = Components
-          .connectedComponents(pairs.select(col("id1"), col("id2")),
-            "id1", "id2")
+          .connectedComponents(routed.edges, "id1", "id2")
           .filter(col("id") =!= col("comp"))
           .select(col("id").as(idCol))
         df.join(nonCanon, Seq(idCol), "left_anti")

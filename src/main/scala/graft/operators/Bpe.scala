@@ -114,7 +114,7 @@ object Bpe {
             minPairCount: Long = 2L, sampleSixteenths: Int = 16): Seq[Merge] =
     trainWithLedger(df, textCol, numMerges, minPairCount, sampleSixteenths)._1
 
-  /** [[train]] plus a one-row audit LEDGER (the editDistancePairsAuto
+  /** [[train]] plus a one-row audit LEDGER (the Dedup.editDistanceAuto
     * discipline): (sample_sixteenths, distinct_words, requested_merges,
     * learned_merges, min_pair_count, budget, estimated_rows) —
     * `estimated_rows` is the guarded distinct-words × numMerges

@@ -173,7 +173,7 @@ object Dedup {
     * structure of a web crawl) shingle identically and therefore sign
     * identically, so a 10⁶-member flood contributes ONE row to every
     * band join instead of 10⁶ rows to one bucket. Same
-    * exactness-preserving move as [[edSelfPairs]]' distinct-string
+    * exactness-preserving move as [[edSelf]]'s distinct-string
     * collapse (round 12), lifted from strings to signatures.
     */
   private[graft] def lshSigReps(sig: DataFrame): DataFrame =
@@ -429,7 +429,7 @@ object Dedup {
         greatest(col("m1"), col("m2")).as("id2") +: crossExtra: _*)
       // a repeated id value spanning two signature groups would emit
       // an id1 == id2 row the pre-collapse `id1 < id2` filter silently
-      // dropped — keep that contract (the expandStringPairs guard)
+      // dropped — keep that contract (see [[editDistancePairs]])
       .filter(col("id1") =!= col("id2"))
     val intra = members.select(keys.map(col) :+ col("id").as("id1"): _*)
       .join(members.select(keys.map(col) :+ col("id").as("id2"): _*), keys)
@@ -1040,7 +1040,7 @@ object Dedup {
   }
 
   /** [[ngramJaccardDedupEdges]] behind a CLONE-DENSITY router (the
-    * editDistancePairsAuto discipline): a deterministic 1-in-8 hash
+    * editDistanceAuto discipline): a deterministic 1-in-8 hash
     * sample of documents estimates the share whose shingle SET
     * duplicates another sampled document's. Clone-light corpora route
     * to the plain pair expansion — the thin form's collapse machinery
@@ -2264,13 +2264,12 @@ object Dedup {
 
   /** Edit-distance pair mining (record linkage / entity resolution):
     * every pair of rows whose strings are within Levenshtein distance
-    * 1, found by SYMMETRIC-DELETE blocking (the SymSpell scheme,
-    * Garbe 2012): each string's candidate key set is itself plus every
-    * single-character deletion. Any two strings at distance <=1 share
-    * a key (substitution at i -> both i-deletions equal; insertion/
-    * deletion -> the shorter string IS a deletion of the longer), so
-    * the equi-join on keys has EXACT recall; the final codegen'd
-    * `levenshtein` filter discards the distance-2 pairs that
+    * `maxDist` (1 or 2), found by SYMMETRIC-DELETE blocking (the SymSpell
+    * scheme, Garbe 2012): each string's candidate key set is itself plus
+    * every ≤maxDist-character deletion. Any two strings at distance ≤d
+    * share a key (an optimal alignment deletes ≤d positions from each
+    * side to reach a common string), so the equi-join on keys has EXACT
+    * recall; the capped-distance verify discards the farther pairs that
     * double-sided deletion also admits. Returns (id1 < id2, dist).
     *
     * Scale: the only shuffles are the variant equi-join (key length ~
@@ -2279,6 +2278,13 @@ object Dedup {
     * hot variant bucket means many strings one deletion apart, which
     * is exactly the cluster the operator must emit. The brute-force
     * O(n^2) form is the ORACLE, not the plan.
+    *
+    * Template compaction first (the dd16 routing rule in code): the
+    * corpus-constant prefix/suffix is stripped before blocking —
+    * Levenshtein is invariant under common-affix removal, so the output
+    * is bit-identical while the deletion neighborhoods shrink
+    * quadratically in the stripped length (TPC-H's "Customer#0…"
+    * template keys: 18-char neighborhoods → 4-8-char).
     *
     * PRECONDITION: id values are distinct (the same contract as
     * `Similarity.exactTopkNeighbors`). The exact-duplicate collapse
@@ -2289,19 +2295,17 @@ object Dedup {
     * once. Deduplicate ids upstream if the corpus can repeat them.
     */
   def editDistancePairs(df: DataFrame, idCol: String, strCol: String,
-                        maxDist: Int = 1): DataFrame = {
-    require(maxDist == 1 || maxDist == 2,
-      s"maxDist must be 1 or 2 (deletion-neighborhood size is len^d), got $maxDist")
-    import org.apache.spark.sql.graftshim.ColumnBridge.{column, expression}
-    // template compaction (the dd16 routing rule IN CODE, round 12):
-    // strip the corpus-constant prefix/suffix before blocking —
-    // Levenshtein is invariant under common-affix removal, so the
-    // output is bit-identical while the deletion-neighborhood explode
-    // shrinks quadratically in the stripped length (TPC-H's
-    // "Customer#0…" template keys: 18-char neighborhoods → 4-8-char)
-    edSelfPairs(compactTemplate(
-      df.select(col(idCol).as("id"), col(strCol).as("s"))), maxDist)
-  }
+                        maxDist: Int = 1): DataFrame =
+    edSelf(compactTemplate(fuzzyRows(df, idCol, strCol, maxDist)), maxDist, None)._1
+
+  /** [[editDistancePairs]]' connectivity-thin counterpart for SURVIVOR
+    * selection: (id1, id2) edges whose connected components equal the
+    * pair set's, at |corpus| + |distinct-string pairs| edges instead of
+    * per-clone-group quadratic cliques (see [[edSelf]]).
+    */
+  def editDistanceDedupEdges(df: DataFrame, idCol: String, strCol: String,
+                             maxDist: Int = 1): DataFrame =
+    edSelf(compactTemplate(fuzzyRows(df, idCol, strCol, maxDist)), maxDist, None)._2
 
   /** One-row candidate-volume DIAGNOSTIC for the symmetric-delete
     * blocking: (distinct_strings, keys, candidate_pairs) where
@@ -2320,17 +2324,13 @@ object Dedup {
     * neighborhood, no join.
     */
   def edCandidateStats(df: DataFrame, idCol: String, strCol: String,
-                       maxDist: Int = 1): DataFrame = {
-    require(maxDist == 1 || maxDist == 2,
-      s"maxDist must be 1 or 2 (deletion-neighborhood size is len^d), got $maxDist")
-    edCandidateStatsOf(compactTemplate(
-      df.select(col(idCol).as("id"), col(strCol).as("s"))), maxDist)
-  }
+                       maxDist: Int = 1): DataFrame =
+    edCandidateStatsOf(compactTemplate(fuzzyRows(df, idCol, strCol, maxDist)), maxDist)
 
-  /** [[edCandidateStats]]' core over an already-compacted (id, s)
-    * frame — shared with [[edAutoRouted]]'s opt-in exact-tier
-    * candidate-budget disjunct, so the router's pre-flight measures
-    * the IDENTICAL mass the diagnostic reports.
+  /** [[edCandidateStats]]' core over already-compacted strings `s` —
+    * shared with [[fuzzyRoute]]'s opt-in exact-tier candidate-budget
+    * disjunct, so the router's pre-flight measures the IDENTICAL mass
+    * the diagnostic reports.
     */
   private def edCandidateStatsOf(v: DataFrame, maxDist: Int): DataFrame = {
     val d = v.select(col("s")).distinct()
@@ -2343,266 +2343,161 @@ object Dedup {
       .select(col("distinct_strings"), col("keys"), col("candidate_pairs"))
   }
 
-  /** The blocking+verify core over a prepared (id, s) frame.
-    *
-    * Exact-duplicate collapse first: candidate volume grows
-    * QUADRATICALLY in per-string multiplicity, but every member of an
-    * exact-dup group has identical distances to everything — so block
-    * and verify over DISTINCT strings (the string is its own key),
-    * then expand each surviving string pair over both id groups and
-    * emit the intra-group d=0 pairs directly. Output is identical by
-    * construction; on a clone-dense corpus (boilerplate keys, ×N
-    * replication) the blocking stage shrinks by the clone factor
-    * squared.
+  /** [[editDistanceAuto]]'s result: the routed tier's pairs
+    * (id1 < id2, dist), its connectivity-thin survivor edges (id1, id2)
+    * and the one-row routing ledger. Both projections are lazy views of
+    * one verified pair set; only the one a caller runs is computed.
     */
-  private def edSelfPairs(v: DataFrame, maxDist: Int): DataFrame =
-    expandStringPairs(v, edSelfStringPairs(v, maxDist))
+  final case class FuzzyRouted(pairs: DataFrame, edges: DataFrame, ledger: DataFrame)
 
-  /** The distinct-string stage of [[edSelfPairs]]: verified
-    * (__sa, __sb, dist) pairs over DISTINCT strings — shared by the
-    * full pair expansion and [[thinStringEdges]].
+  /** [[editDistancePairs]] behind the collision-density ROUTER — the
+    * runtime seam for [[deletionCollisionStats]]. Measures the
+    * post-compaction sampled density and mean key length, then routes
+    * ([[fuzzyRoute]]): a corpus whose symmetric-delete blocking stays
+    * linear (the common case — the exact tier, bit-identical to the
+    * oracle) vs a collision-dense or long-key corpus where the deletion
+    * neighborhoods explode quadratically (the MinHash tier — char-bigram
+    * LSH candidates, exact-verified precision, banding recall).
+    *
+    * The ledger row records the decision and the measurements that
+    * drove it — (tier, [[fuzzyRoute]]'s measurements,
+    * exact_candidate_budget, exact_candidate_pairs, budget_override) —
+    * the auditable counterpart of dd20's recall ledger. The router is
+    * opt-in: callers who need the exact tier's guaranteed recall keep
+    * calling [[editDistancePairs]] / [[editDistanceDedupEdges]].
+    *
+    * `exactCandidateBudget` (opt-in, r20 — the simhash/embedding
+    * routers' absolute-mass lens applied to the fuzzy tier): the density
+    * statistic is candidate pairs PER ROW, so a corpus of genuine
+    * distance-≤d FAMILIES (the diverse-name regime, sf1_div density 70.4
+    * vs threshold 64) trips the minhash route even though the exact
+    * tier's TOTAL mass is small in absolute terms — and the minhash
+    * tier's char-bigram signatures over every distinct string cost far
+    * more there (measured 603 s routed vs 14 s exact at sf1_div — a 42×
+    * miss, with the minhash tier's banding also dropping ~8.5k of
+    * 3.30 M true edges; artifacts/r20/scale_edges_*_sf1_div.json). With
+    * a budget set, a minhash-routed corpus pays one extra aggregate
+    * ([[edCandidateStatsOf]] — the EXACT mass, not the sampled estimate)
+    * and drops back to the exact tier when total mass fits the budget;
+    * the measured mass lands in the ledger either way. 0 (default)
+    * disables the disjunct and the pre-flight is never paid.
     */
-  private def edSelfStringPairs(v: DataFrame, maxDist: Int): DataFrame = {
-    val d = v.select(col("s")).distinct().select(col("s").as("id"), col("s"))
-    // pin the blocking join's partition count (explicit-count
+  def editDistanceAuto(df: DataFrame, idCol: String, strCol: String,
+                       maxDist: Int = 1,
+                       densityThreshold: Double = 64.0,
+                       maxMeanKeyLen: Double = 64.0,
+                       sampleSixteenths: Int = 4,
+                       numHashes: Int = 64, bands: Int = 32,
+                       previousTier: Option[String] = None,
+                       hysteresisPct: Double = 0.10,
+                       exactCandidateBudget: Long = 0L): FuzzyRouted = {
+    require(exactCandidateBudget >= 0L,
+      s"exactCandidateBudget must be >= 0 (0 disables the disjunct), " +
+        s"got $exactCandidateBudget")
+    val v = compactTemplate(fuzzyRows(df, idCol, strCol, maxDist))
+    val (tier, ledger) = fuzzyRoute("fuzzy", v.select(col("s")), maxDist,
+      densityThreshold, maxMeanKeyLen, sampleSixteenths, previousTier,
+      hysteresisPct, Some(exactCandidateBudget))
+    val (pairs, edges) = edSelf(v, maxDist, lshOf(tier, numHashes, bands))
+    FuzzyRouted(pairs, edges, ledger)
+  }
+
+  /** (id, s) rows of `df`, the input of every fuzzy operator, after the
+    * one check of its `maxDist`.
+    */
+  private def fuzzyRows(df: DataFrame, idCol: String, strCol: String,
+                        maxDist: Int): DataFrame = {
+    require(maxDist == 1 || maxDist == 2,
+      s"maxDist must be 1 or 2 (deletion-neighborhood size is len^d), got $maxDist")
+    df.select(col(idCol).as("id"), col(strCol).as("s"))
+  }
+
+  /** The MinHash sketch params of a routed `tier`: Some for "minhash",
+    * None (the exact tier) otherwise. */
+  private def lshOf(tier: String, numHashes: Int, bands: Int): Option[(Int, Int)] =
+    Option.when(tier == "minhash")((numHashes, bands))
+
+  /** The self-join of the (id, s) rows `v`: (pairs, thin edges), both
+    * over ONE verified pair set of its DISTINCT strings
+    * ([[fuzzyStringPairs]] on (d, d)).
+    *
+    * Exact-duplicate collapse: candidate volume grows QUADRATICALLY in
+    * per-string multiplicity, but every member of an exact-dup group has
+    * identical distances to everything — so block and verify over
+    * distinct strings (the string is its own group key), then project.
+    * The pairs expand each string pair over both id groups and add the
+    * intra-group d = 0 pairs ([[expandRepPairs]] — true output rows: a
+    * clone-dense corpus's pair set IS quadratic in clone counts). The
+    * edges are one star edge per member of a >= 2 exact-dup group plus
+    * ONE edge per string pair ([[thinComponentEdges]]): edit distance is
+    * a pure function of the two strings, so their components equal the
+    * pairs' exactly.
+    */
+  private def edSelf(v: DataFrame, maxDist: Int,
+                     lsh: Option[(Int, Int)]): (DataFrame, DataFrame) = {
+    val d = v.select(col("s")).distinct()
+    val sp = fuzzyStringPairs(d, d, maxDist, lsh)
+    (expandRepPairs(v, Seq("s"), sp, Seq(col("dist")), Seq(lit(0L).as("dist"))),
+      thinComponentEdges(v, Seq("s"), sp))
+  }
+
+  /** THE fuzzy candidate generator: verified (s_a, s_b, dist) pairs,
+    * dist ≤ maxDist, between two DISTINCT-string sides `a` and `b` (one
+    * column `s` each). Passing one frame as both sides is the self-join:
+    * each unordered pair once, s_a < s_b. The tier picks the blocking key:
+    *   - exact (`lsh` None): the ≤maxDist deletion neighborhood — exact
+    *     recall by the SymSpell alignment argument;
+    *   - minhash (`lsh` = (numHashes, bands)): char-bigram MinHash band
+    *     keys — immune to the neighborhood blowup on collision-dense or
+    *     long keys, at the price of banding recall (< 1; near-dup pairs
+    *     share most char bigrams, so 2-row bands keep it high). The
+    *     self-join's bands go through the opt-in `graft.lsh.bucketCap`.
+    * Both verify every candidate with the same capped kernel, so
+    * precision is exact on either tier.
+    */
+  private def fuzzyStringPairs(a: DataFrame, b: DataFrame, maxDist: Int,
+                               lsh: Option[(Int, Int)]): DataFrame = {
+    val selfJoin = a eq b
+    // pin the exact tier's blocking partition count (explicit-count
     // repartition = REPARTITION_BY_NUM, which AQE must not coalesce):
     // the verify stage downstream is CPU-bound (a DP kernel per
     // candidate pair), so AQE's BYTE-based coalescing — candidate rows
     // are a few short strings each — starves it to 1-2 tasks exactly
     // when candidates are dense (measured 3.8 s single-task at dd16's
     // d=2 regime). The count is the session's shuffle-partition conf —
-    // the same knob a cluster sizes to its data. The two frames share
-    // one physical exchange (reuse).
-    val par = v.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val vars = d.select(col("id"), col("s"),
-        explode(deletionHood(col("s"), maxDist)).as("__v"))
-      .repartition(par, col("__v"))
-    val a = vars.select(col("__v"), col("id").as("id1"), col("s").as("s1"))
-    val b = vars.select(col("__v"), col("id").as("id2"), col("s").as("s2"))
-    // verify with an O(cap·n) capped-distance kernel, then dedupe the
-    // narrow (id1, id2, dist) survivors — the full-DP levenshtein at
-    // ~d² per pair was the dominant cost of the whole operator
-    verifyCandidates(
-      a.join(b, Seq("__v")).filter(col("id1") < col("id2")), maxDist)
-      .select(col("id1").as("__sa"), col("id2").as("__sb"), col("dist"))
+    // the same knob a cluster sizes to its data. A self-join's two
+    // sides share one physical exchange (reuse).
+    val par = a.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val (keys, keyed) = lsh match {
+      case None => (Seq("__v"), (d: DataFrame) =>
+        d.select(col("s"), explode(deletionHood(col("s"), maxDist)).as("__v"))
+          .repartition(par, col("__v")))
+      case Some((numHashes, bands)) => (Seq("band", "bkey"), (d: DataFrame) => {
+        val banded = minHashSignatures(shingleRows(charSpaced(d), "id", "chars", 2),
+            numHashes)
+          .select(col("id").as("s"),
+            explode(bandKeyArray(col("sig"), numHashes, bands)).as("bk"))
+          .select(col("s"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
+        if (selfJoin) capHotBuckets(banded, Seq("band", "bkey"), "fuzzyStringPairs")
+        else banded
+      })
+    }
+    val ka = keyed(a)
+    val cand = ka.select(keys.map(col) :+ col("s").as("s1"): _*)
+      .join((if (selfJoin) ka else keyed(b)).select(keys.map(col) :+ col("s").as("s2"): _*),
+        keys)
+    verifyCandidates(if (selfJoin) cand.filter(col("s1") < col("s2")) else cand, maxDist)
   }
 
-  /** Expand verified DISTINCT-string pairs (__sa, __sb, dist) over the
-    * id groups of the original (id, s) frame and add the intra-group
-    * d=0 pairs — the shared tail of both edit-distance tiers (true
-    * output rows: a clone-dense corpus's pair set IS quadratic in
-    * clone counts).
-    */
-  private def expandStringPairs(v: DataFrame, sp: DataFrame): DataFrame = {
-    val cross = sp
-      .join(v.select(col("s").as("__sa"), col("id").as("__ia")), Seq("__sa"))
-      .join(v.select(col("s").as("__sb"), col("id").as("__ib")), Seq("__sb"))
-      .select(least(col("__ia"), col("__ib")).as("id1"),
-        greatest(col("__ia"), col("__ib")).as("id2"), col("dist"))
-      // guard for the duplicated-id edge (see the precondition on
-      // editDistancePairs): two rows sharing an id value across two
-      // near-dup strings would otherwise emit an id1 == id2 row,
-      // which the pre-collapse direct id1 < id2 filter could not
-      .filter(col("id1") =!= col("id2"))
-    // intra-group pairs: exact dups at distance 0
-    val intra = v.select(col("s"), col("id").as("__ia"))
-      .join(v.select(col("s"), col("id").as("__ib")), Seq("s"))
-      .filter(col("__ia") < col("__ib"))
-      .select(col("__ia").as("id1"), col("__ib").as("id2"),
-        lit(0L).as("dist"))
-    cross.unionByName(intra)
-  }
-
-  /** The APPROXIMATE edit-distance tier: character-bigram MinHash-LSH
-    * candidates over the distinct strings, exact-verified with the
-    * same capped kernel, expanded over id groups like [[edSelfPairs]].
-    * Cost is ~|distinct strings| signature rows + band-bucket joins —
-    * immune to the deletion-neighborhood blowup on collision-dense or
-    * long keys — at the price of banding recall (<1; near-dup pairs
-    * share most char bigrams, so 2-row bands keep it high). Verified
-    * precision stays exact: every emitted pair is a true ≤maxDist pair.
-    */
-  private def edLshSelfPairs(v: DataFrame, maxDist: Int,
-                             numHashes: Int, bands: Int): DataFrame =
-    expandStringPairs(v, edLshSelfStringPairs(v, maxDist, numHashes, bands))
-
-  /** The distinct-string stage of [[edLshSelfPairs]] — shared by the
-    * full pair expansion and [[thinStringEdges]].
-    */
-  private def edLshSelfStringPairs(v: DataFrame, maxDist: Int,
-                                   numHashes: Int, bands: Int): DataFrame = {
-    val d = v.select(col("s")).distinct()
-    // char bigrams via the word-shingle machinery: space out the
-    // characters so tokens() yields one char per token (candidate
-    // generation only — verification is exact, so the space-char
-    // token-drop edge cannot cost correctness, only candidates)
-    val spaced = d.select(col("s").as("id"),
-      regexp_replace(col("s"), "(?s)(.)", "$1 ").as("chars"))
-    val cand = lshBandPairs(
-      minHashSignatures(shingleRows(spaced, "id", "chars", 2), numHashes),
-      numHashes, bands)
-      .select(col("id1"), col("id2"),
-        col("id1").as("s1"), col("id2").as("s2"))
-    verifyCandidates(cand, maxDist)
-      .select(col("id1").as("__sa"), col("id2").as("__sb"), col("dist"))
-  }
-
-  /** Connectivity-thin edges over verified DISTINCT-string pairs: one
-    * STAR edge per member of a >= 2 exact-dup string group (intra
-    * pairs are d = 0 <= maxDist always) plus ONE edge per surviving
-    * string pair — [[expandStringPairs]]' survivor-path counterpart.
-    * Edit distance is a pure function of the two strings, so the
-    * components of this graph equal the components of the full
-    * expansion exactly (the same equivalence-class argument as
-    * [[thinComponentEdges]], with the string itself as the group key).
-    */
-  private def thinStringEdges(v: DataFrame, sp: DataFrame): DataFrame = {
-    val canon = v.groupBy(col("s")).agg(min(col("id")).as("__cid"))
-    val star = v.join(canon, Seq("s"))
-      .filter(col("id") =!= col("__cid"))
-      .select(col("__cid").as("id1"), col("id").as("id2"))
-    val cross = sp
-      .join(canon.select(col("s").as("__sa"), col("__cid").as("__ca")), Seq("__sa"))
-      .join(canon.select(col("s").as("__sb"), col("__cid").as("__cb")), Seq("__sb"))
-      .select(least(col("__ca"), col("__cb")).as("id1"),
-        greatest(col("__ca"), col("__cb")).as("id2"))
-      .filter(col("id1") =!= col("id2"))
-    star.unionByName(cross)
-  }
-
-  /** [[editDistancePairs]] behind the collision-density ROUTER — the
-    * runtime seam for [[deletionCollisionStats]]. Measures the
-    * post-compaction sampled density and mean key length, then routes:
-    * a corpus whose symmetric-delete blocking stays linear (the common
-    * case — the exact tier, bit-identical to the oracle) vs a
-    * collision-dense or long-key corpus where the deletion
-    * neighborhoods explode quadratically (the MinHash tier — LSH
-    * candidates, exact-verified precision, banding recall).
-    *
-    * Returns (pairs, ledger): the ledger is ONE row recording the
-    * decision and the measurements that drove it — (tier,
-    * [[fuzzyTier]]'s measurements, exact_candidate_budget,
-    * exact_candidate_pairs, budget_override) — the auditable counterpart of
-    * dd20's recall ledger. The router is opt-in: callers who need the
-    * exact tier's guaranteed recall keep calling [[editDistancePairs]].
-    */
-  def editDistancePairsAuto(df: DataFrame, idCol: String, strCol: String,
-                            maxDist: Int = 1,
-                            densityThreshold: Double = 64.0,
-                            maxMeanKeyLen: Double = 64.0,
-                            sampleSixteenths: Int = 4,
-                            numHashes: Int = 64, bands: Int = 32,
-                            previousTier: Option[String] = None,
-                            hysteresisPct: Double = 0.10,
-                            exactCandidateBudget: Long = 0L)
-  : (DataFrame, DataFrame) = {
-    val (v, sp, ledger) = edAutoRouted(df, idCol, strCol, maxDist,
-      densityThreshold, maxMeanKeyLen, sampleSixteenths, numHashes, bands,
-      previousTier, hysteresisPct, exactCandidateBudget)
-    // pairs schema matches editDistancePairs: (id1, id2, dist)
-    (expandStringPairs(v, sp), ledger)
-  }
-
-  /** [[editDistancePairsAuto]]'s connectivity-thin counterpart for
-    * SURVIVOR selection: (edges = (id1, id2), ledger) where the edges'
-    * connected components equal those of the auto-routed pair set —
-    * so `min id per component` / `resolveDuplicates` survivors are
-    * identical — at |corpus| + |distinct-string pairs| edges instead
-    * of per-clone-group quadratic cliques ([[thinStringEdges]]). The
-    * same router, measurements, and ledger row as the pairs form.
-    */
-  def editDistanceDedupEdgesAuto(df: DataFrame, idCol: String, strCol: String,
-                                 maxDist: Int = 1,
-                                 densityThreshold: Double = 64.0,
-                                 maxMeanKeyLen: Double = 64.0,
-                                 sampleSixteenths: Int = 4,
-                                 numHashes: Int = 64, bands: Int = 32,
-                                 previousTier: Option[String] = None,
-                                 hysteresisPct: Double = 0.10,
-                                 exactCandidateBudget: Long = 0L)
-  : (DataFrame, DataFrame) = {
-    val (v, sp, ledger) = edAutoRouted(df, idCol, strCol, maxDist,
-      densityThreshold, maxMeanKeyLen, sampleSixteenths, numHashes, bands,
-      previousTier, hysteresisPct, exactCandidateBudget)
-    (thinStringEdges(v, sp), ledger)
-  }
-
-  /** [[editDistancePairs]]' connectivity-thin counterpart (the exact
-    * tier without the router): components equal the full pair set's —
-    * see [[editDistanceDedupEdgesAuto]].
-    */
-  def editDistanceDedupEdges(df: DataFrame, idCol: String, strCol: String,
-                             maxDist: Int = 1): DataFrame = {
-    require(maxDist == 1 || maxDist == 2,
-      s"maxDist must be 1 or 2 (deletion-neighborhood size is len^d), got $maxDist")
-    val v = compactTemplate(
-      df.select(col(idCol).as("id"), col(strCol).as("s")))
-    thinStringEdges(v, edSelfStringPairs(v, maxDist))
-  }
-
-  /** The shared measurement + routing core of the two auto forms:
-    * (v = compacted (id, s), sp = verified distinct-string pairs,
-    * ledger). The tier is [[fuzzyTier]]'s over the POST-COMPACTION
-    * distinct strings — the population the exact tier's blocking would
-    * actually explode.
-    */
-  private def edAutoRouted(df: DataFrame, idCol: String, strCol: String,
-                           maxDist: Int,
-                           densityThreshold: Double,
-                           maxMeanKeyLen: Double,
-                           sampleSixteenths: Int,
-                           numHashes: Int, bands: Int,
-                           previousTier: Option[String],
-                           hysteresisPct: Double,
-                           exactCandidateBudget: Long)
-  : (DataFrame, DataFrame, DataFrame) = {
-    require(exactCandidateBudget >= 0L,
-      s"exactCandidateBudget must be >= 0 (0 disables the disjunct), " +
-        s"got $exactCandidateBudget")
-    val v = compactTemplate(
-      df.select(col(idCol).as("id"), col(strCol).as("s")))
-    val (tierH, measured) = fuzzyTier(v.select(col("s")), maxDist,
-      densityThreshold, maxMeanKeyLen, sampleSixteenths, previousTier,
-      hysteresisPct)
-    // EXACT-TIER CANDIDATE-BUDGET DISJUNCT (opt-in, r20 — the
-    // simhash/embedding routers' absolute-mass lens applied to the
-    // fuzzy tier): the density statistic is candidate pairs PER ROW,
-    // so a corpus of genuine distance-≤d FAMILIES (the diverse-name
-    // regime, sf1_div density 70.4 vs threshold 64) trips the minhash
-    // route even though the exact tier's TOTAL mass is small in
-    // absolute terms — and the minhash tier's char-bigram signatures
-    // over every distinct string cost far more there (measured 603 s
-    // routed vs 14 s exact at sf1_div — a 42× miss, with the minhash
-    // tier's banding also dropping ~8.5k of 3.30 M true edges;
-    // artifacts/r20/scale_edges_*_sf1_div.json). With a budget set, a
-    // minhash-routed corpus pays one extra aggregate
-    // ([[edCandidateStatsOf]] — the EXACT mass, not the sampled
-    // estimate) and drops back to the exact tier when total mass fits
-    // the budget; the measured mass lands in the ledger either way.
-    // 0 (default) disables the disjunct: routing is bit-identical to
-    // r19 and the pre-flight is never paid.
-    val exactCand: Long =
-      if (exactCandidateBudget > 0L && tierH == "minhash")
-        edCandidateStatsOf(v, maxDist).head().getAs[Long]("candidate_pairs")
-      else -1L
-    val budgetOverride = exactCand >= 0L && exactCand <= exactCandidateBudget
-    val tier = if (budgetOverride) "exact" else tierH
-    val led = ledger(df.sparkSession, "fuzzy", ("tier" -> tier) +: measured :+
-      ("exact_candidate_budget" -> exactCandidateBudget) :+
-      ("exact_candidate_pairs" -> exactCand) :+
-      ("budget_override" -> budgetOverride): _*)
-    val sp =
-      if (tier == "minhash") edLshSelfStringPairs(v, maxDist, numHashes, bands)
-      else edSelfStringPairs(v, maxDist)
-    (v, sp, led)
-  }
-
-  /** The fuzzy routers' measurement and tier rule over a one-column
-    * frame of strings `s`: the sampled collision density and max bucket
-    * ([[deletionCollisionStats]]) and the sampled mean key length in
-    * codepoints. The raw tier is minhash when the density or the length
-    * is over its threshold, exact otherwise. Returns the routed tier and
-    * the ledger fields from `density` to `suppressed_flip`.
+  /** The fuzzy routers' one measure → tier → ledger step over a
+    * one-column frame of (compacted) strings `s`: the sampled collision
+    * density and max bucket ([[deletionCollisionStats]]) and the sampled
+    * mean key length in codepoints. The raw tier is minhash when the
+    * density or the length is over its threshold, exact otherwise.
+    * Returns the routed tier and the one-row ledger of `kind`, whose
+    * fields run (tier, density … suppressed_flip), plus the
+    * exact-candidate-budget fields when `exactCandidateBudget` is given
+    * (see [[editDistanceAuto]]).
     *
     * TIER HYSTERESIS (r18 verdict item 4): a corpus whose measured
     * density sits AT the threshold (sf10 measured 63.76 vs 64)
@@ -2617,12 +2512,11 @@ object Dedup {
     * (<= (1-h)·threshold). Inside the band the previous tier holds and
     * the ledger records the suppressed flip.
     */
-  private def fuzzyTier(s: DataFrame, maxDist: Int, densityThreshold: Double,
-                        maxMeanKeyLen: Double, sampleSixteenths: Int,
-                        previousTier: Option[String], hysteresisPct: Double)
-  : (String, Seq[(String, Any)]) = {
-    require(maxDist == 1 || maxDist == 2,
-      s"maxDist must be 1 or 2, got $maxDist")
+  private def fuzzyRoute(kind: String, s: DataFrame, maxDist: Int,
+                         densityThreshold: Double, maxMeanKeyLen: Double,
+                         sampleSixteenths: Int, previousTier: Option[String],
+                         hysteresisPct: Double,
+                         exactCandidateBudget: Option[Long]): (String, DataFrame) = {
     require(hysteresisPct >= 0.0 && hysteresisPct < 1.0,
       s"hysteresisPct must be in [0, 1), got $hysteresisPct")
     previousTier.foreach(t => require(t == "exact" || t == "minhash",
@@ -2644,19 +2538,33 @@ object Dedup {
     val confidentlyExact =
       density <= densityThreshold * (1.0 - hysteresisPct) &&
         meanLen <= maxMeanKeyLen * (1.0 - hysteresisPct)
-    val tier = previousTier match {
+    val heldTier = previousTier match {
       case Some("exact") if rawTier == "minhash" && !over(hysteresisPct) =>
         "exact"
       case Some("minhash") if rawTier == "exact" && !confidentlyExact =>
         "minhash"
       case _ => rawTier
     }
-    (tier, Seq("density" -> density, "density_threshold" -> densityThreshold,
+    // the candidate-budget disjunct: only a minhash route with a
+    // positive budget pays the exact-mass aggregate (-1 = not measured)
+    val budget = exactCandidateBudget.map { b =>
+      val mass =
+        if (b > 0L && heldTier == "minhash")
+          edCandidateStatsOf(s, maxDist).head().getAs[Long]("candidate_pairs")
+        else -1L
+      (b, mass, mass >= 0L && mass <= b)
+    }
+    val tier = if (budget.exists(_._3)) "exact" else heldTier
+    (tier, ledger(s.sparkSession, kind, Seq("tier" -> tier,
+      "density" -> density, "density_threshold" -> densityThreshold,
       "mean_key_cp" -> meanLen, "max_mean_key_cp" -> maxMeanKeyLen,
       "max_bucket" -> maxBucket, "sample_sixteenths" -> sampleSixteenths,
       "max_dist" -> maxDist, "raw_tier" -> rawTier,
       "previous_tier" -> previousTier.getOrElse(""),
-      "suppressed_flip" -> (tier != rawTier)))
+      "suppressed_flip" -> (heldTier != rawTier)) ++
+      budget.toSeq.flatMap { case (b, mass, overridden) =>
+        Seq("exact_candidate_budget" -> b, "exact_candidate_pairs" -> mass,
+          "budget_override" -> overridden) }: _*))
   }
 
   /** Symmetric-delete collision-density detector: the estimated
@@ -2681,7 +2589,7 @@ object Dedup {
     * KEY-CLONE mega group is already safe on the exact tier (both
     * measurement and blocking run on DISTINCT strings — a 10⁶-member
     * clone group is ONE row here, and its survivor edges are the
-    * linear [[thinStringEdges]] star), while a mega bucket of DISTINCT
+    * linear [[edSelf]] star), while a mega bucket of DISTINCT
     * near-identical strings is candidate-quadratic on BOTH tiers (they
     * share most char bigrams, so the MinHash tier's band buckets go
     * quadratic too — `graft.lsh.bucketCap` is the bound there), so no
@@ -2695,7 +2603,7 @@ object Dedup {
     require(sampleSixteenths >= 1 && sampleSixteenths <= 16,
       "sampleSixteenths in 1..16")
     // DISTINCT strings, matching the blocking stage this density
-    // models (edSelfPairs collapses exact duplicates BEFORE exploding
+    // models (edSelf collapses exact duplicates BEFORE exploding
     // neighborhoods — raw-row sampling would inflate the estimate on
     // a clone-dense corpus by the clone factor squared). The hash
     // gate is deterministic per string, so filtering before distinct
@@ -2786,6 +2694,11 @@ object Dedup {
     else array_distinct(flatten(transform(delAll(s), v1 => delAll(v1))))
   }
 
+  /** Verify candidate string pairs (s1, s2) with an O(cap·n)
+    * capped-distance kernel and dedupe the narrow survivors: (s_a, s_b,
+    * dist ≤ maxDist), one row per pair — the full-DP levenshtein at ~d²
+    * per pair was the dominant cost of the whole operator.
+    */
   private def verifyCandidates(cand: DataFrame, maxDist: Int): DataFrame = {
     import org.apache.spark.sql.graftshim.ColumnBridge.{column, expression}
     val dist =
@@ -2793,7 +2706,7 @@ object Dedup {
         expression(col("s1")), expression(col("s2"))))
       else column(graft.functions.EditDistanceCapped(
         expression(col("s1")), expression(col("s2")), maxDist))
-    cand.select(col("id1"), col("id2"), dist.cast("long").as("dist"))
+    cand.select(col("s1").as("s_a"), col("s2").as("s_b"), dist.cast("long").as("dist"))
       .filter(col("dist") <= maxDist)
       .distinct()
   }
@@ -2801,51 +2714,77 @@ object Dedup {
   /** Cross-table record LINKAGE within edit distance `maxDist`
     * (matching crawl-extracted entities against a canonical table):
     * the same symmetric-delete blocking and capped verify as
-    * [[editDistancePairs]], but candidates come from the equi-join of
-    * the two tables' deletion neighborhoods — exact recall by the same
-    * alignment argument. Returns every (id1, id2, dist) link; a
-    * downstream best-match rule (min dist, tie to min id2 — one
-    * salted top-k per id1) picks canonical assignments.
+    * [[editDistancePairs]] ([[fuzzyStringPairs]] over the two tables'
+    * distinct strings) — exact recall by the same alignment argument.
+    * Returns every (id1, id2, dist) link; a downstream best-match rule
+    * (min dist, tie to min id2 — one salted top-k per id1) picks
+    * canonical assignments.
     */
   def fuzzyLink(left: DataFrame, lIdCol: String, lStrCol: String,
                 right: DataFrame, rIdCol: String, rStrCol: String,
                 maxDist: Int = 1): DataFrame = {
-    require(maxDist == 1 || maxDist == 2,
-      s"maxDist must be 1 or 2, got $maxDist")
-    // template compaction as in editDistancePairs, but the affixes
-    // must be constant over the UNION of both tables — a cross-pair's
-    // common affix is only guaranteed when every string on either
-    // side carries it
-    val l0 = left.select(col(lIdCol).as("id"), col(lStrCol).as("s"))
-    val r0 = right.select(col(rIdCol).as("id"), col(rStrCol).as("s"))
-    val (pre, suf) = corpusAffixes(
-      l0.select(col("s")).unionByName(r0.select(col("s"))))
-    // per-side exact-duplicate collapse, as in the self-join form:
-    // block/verify over distinct strings, expand links over both id
-    // groups afterward — identical output, clone-factor² less blocking
-    // explicit-count repartition on the blocking key: the downstream
-    // DP verify is CPU-bound and AQE's byte-based coalescing would run
-    // it in 1-2 tasks at small candidate bytes (the edSelfStringPairs
-    // discipline)
-    val par = left.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "32").toInt
-    def distinctVars(v: DataFrame, idAs: String, sAs: String) = {
-      val c = stripAffixes(v, pre, suf).select(col("s")).distinct()
-      c.select(col("s").as(idAs), col("s").as(sAs),
-          explode(deletionHood(col("s"), maxDist)).as("__v"))
-        .repartition(par, col("__v"))
-    }
-    val sp = verifyCandidates(
-      distinctVars(l0, "id1", "s1").join(distinctVars(r0, "id2", "s2"),
-        Seq("__v")), maxDist)
-      .select(col("id1").as("__sa"), col("id2").as("__sb"), col("dist"))
-    val lG = stripAffixes(l0, pre, suf)
-      .select(col("s").as("__sa"), col("id").as("id1"))
-    val rG = stripAffixes(r0, pre, suf)
-      .select(col("s").as("__sb"), col("id").as("id2"))
-    sp.join(lG, Seq("__sa")).join(rG, Seq("__sb"))
-      .select(col("id1"), col("id2"), col("dist"))
+    val (l, r) = linkSides(left, lIdCol, lStrCol, right, rIdCol, rStrCol, maxDist)
+    links(l, r, maxDist, None)
   }
+
+  /** [[fuzzyLink]] behind the collision-density ROUTER — the
+    * cross-table twin of [[editDistanceAuto]]. Density and mean key
+    * length are measured over the UNION of both tables' post-compaction
+    * strings (the population whose deletion neighborhoods meet in shared
+    * blocking buckets); linear corpora run the exact tier (bit-identical
+    * to [[fuzzyLink]] and its dd17 oracle), collision-dense or long-key
+    * corpora run the char-bigram MinHash-LSH tier (left-vs-right band
+    * join, exact-verified precision, banding recall). Returns (links,
+    * one-row ledger) with the same schema conventions as the self-join
+    * router — including the hysteresis columns: a nightly re-linkage of
+    * a near-threshold corpus alternates tiers exactly like the dedup
+    * crawl, so `previousTier` (e.g. the previous run's ledger row) +
+    * `hysteresisPct` apply the same ±band rule ([[fuzzyRoute]]).
+    */
+  def fuzzyLinkAuto(left: DataFrame, lIdCol: String, lStrCol: String,
+                    right: DataFrame, rIdCol: String, rStrCol: String,
+                    maxDist: Int = 1,
+                    densityThreshold: Double = 64.0,
+                    maxMeanKeyLen: Double = 64.0,
+                    sampleSixteenths: Int = 4,
+                    numHashes: Int = 64, bands: Int = 32,
+                    previousTier: Option[String] = None,
+                    hysteresisPct: Double = 0.10)
+  : (DataFrame, DataFrame) = {
+    val (l, r) = linkSides(left, lIdCol, lStrCol, right, rIdCol, rStrCol, maxDist)
+    val (tier, ledger) = fuzzyRoute("fuzzy-link",
+      l.select(col("s")).unionByName(r.select(col("s"))), maxDist,
+      densityThreshold, maxMeanKeyLen, sampleSixteenths, previousTier,
+      hysteresisPct, None)
+    (links(l, r, maxDist, lshOf(tier, numHashes, bands)), ledger)
+  }
+
+  /** Both tables of a linkage as (id, s) rows, template-compacted as in
+    * [[editDistancePairs]] — but the affixes must be constant over the
+    * UNION of both tables: a cross-pair's common affix is only
+    * guaranteed when every string on either side carries it.
+    */
+  private def linkSides(left: DataFrame, lIdCol: String, lStrCol: String,
+                        right: DataFrame, rIdCol: String, rStrCol: String,
+                        maxDist: Int): (DataFrame, DataFrame) = {
+    val l = fuzzyRows(left, lIdCol, lStrCol, maxDist)
+    val r = fuzzyRows(right, rIdCol, rStrCol, maxDist)
+    val (pre, suf) = corpusAffixes(l.select(col("s")).unionByName(r.select(col("s"))))
+    (stripAffixes(l, pre, suf), stripAffixes(r, pre, suf))
+  }
+
+  /** (id1, id2, dist) links between the compacted (id, s) rows `l` and
+    * `r`: per-side exact-duplicate collapse, as in the self-join — block
+    * and verify over distinct strings, then expand each string link over
+    * both id groups (identical output, clone-factor² less blocking).
+    */
+  private def links(l: DataFrame, r: DataFrame, maxDist: Int,
+                    lsh: Option[(Int, Int)]): DataFrame =
+    fuzzyStringPairs(l.select(col("s")).distinct(), r.select(col("s")).distinct(),
+        maxDist, lsh)
+      .join(l.select(col("s").as("s_a"), col("id").as("id1")), Seq("s_a"))
+      .join(r.select(col("s").as("s_b"), col("id").as("id2")), Seq("s_b"))
+      .select(col("id1"), col("id2"), col("dist"))
 
   /** Per-micro-batch body of STREAMING fuzzy (edit-distance) dedup
     * against an index-at-rest — the short-KEY counterpart of the
@@ -2859,7 +2798,7 @@ object Dedup {
     *
     * The TIER is decided ONCE, on the index's first non-empty batch,
     * by the same collision-density + mean-key-length rule as
-    * [[editDistancePairsAuto]], and persisted in the index `_meta` so
+    * [[editDistanceAuto]], and persisted in the index `_meta` so
     * writer and prober can never drift — a crawl cannot re-route per
     * batch because the two tiers keep different layouts:
     *   - exact (symmetric-delete): `hood/batch=N` holds (k, dk) — the
@@ -2872,7 +2811,7 @@ object Dedup {
     *     char-bigram MinHash index in the [[minHashIndexPut]] layout
     *     keyed by the STRING itself, so the probe can exact-verify
     *     every band collision at the edit distance — exact precision,
-    *     banding recall (the [[editDistancePairsAuto]] trade).
+    *     banding recall (the [[editDistanceAuto]] trade).
     *
     * No affix compaction here: the corpus template DRIFTS across a
     * crawl (batch-local affixes are not corpus affixes), so streaming
@@ -2892,23 +2831,19 @@ object Dedup {
                       sampleSixteenths: Int = 16,
                       numHashes: Int = 64, bands: Int = 32)
   : (DataFrame, DataFrame => Unit) = {
-    require(maxDist == 1 || maxDist == 2,
-      s"maxDist must be 1 or 2, got $maxDist")
+    val v = fuzzyRows(df, idCol, strCol, maxDist).localCheckpoint(true)
     val existing = fuzzyIndexMeta(spark, indexDir)
     val have = existing.isDefined
-    val v = df.select(col(idCol).as("id"), col(strCol).as("s"))
-      .localCheckpoint(true)
     // an EXISTING index pins tier/maxDist AND the minhash sketch params:
-    // the intra-batch banding (edLshSelfPairs) and the admit's
+    // the intra-batch banding and the admit's
     // minHashIndexPut must use the num_hashes/bands the index was
     // created with, not the caller's — a crawl configured differently
     // than the fuzzyIndexPut seed would otherwise silently change
     // intra-batch banding recall and let the outer _meta drift from the
     // sketch's own _meta
     val meta @ (tier, md, nh, bs) = existing.getOrElse {
-      val (t, measured) = fuzzyTier(v.select(col("s")), maxDist,
-        densityThreshold, maxMeanKeyLen, sampleSixteenths, None, 0.0)
-      logRouting("streaming fuzzy", ("tier" -> t) +: measured)
+      val (t, _) = fuzzyRoute("streaming fuzzy", v.select(col("s")), maxDist,
+        densityThreshold, maxMeanKeyLen, sampleSixteenths, None, 0.0, None)
       (t, maxDist, numHashes, bands)
     }
     // 1. cross-batch drop: batch strings within md of anything the
@@ -2923,16 +2858,13 @@ object Dedup {
       .select(df.columns.map(col).toSeq: _*)
     // 2. intra-batch: min-id survivor per edit-distance component —
     //    over connectivity-THIN edges (identical components; a clone
-    //    flood batch feeds |batch| edges, not |group|²/2 per group)
-    val pairs =
-      if (tier == "exact") editDistanceDedupEdges(pre, idCol, strCol, md)
-      else {
-        val vb = pre.select(col(idCol).as("id"), col(strCol).as("s"))
-        thinStringEdges(vb, edLshSelfStringPairs(vb, md, nh, bs))
-      }
-    val comps = Components
-      .connectedComponents(pairs.select(col("id1"), col("id2")),
-        "id1", "id2")
+    //    flood batch feeds |batch| edges, not |group|²/2 per group). The
+    //    exact tier strips the batch's own template, as the batch stage
+    //    does; the minhash tier bands the strings as the index does
+    val vb = pre.select(col(idCol).as("id"), col(strCol).as("s"))
+    val (_, edges) = edSelf(if (tier == "exact") compactTemplate(vb) else vb,
+      md, lshOf(tier, nh, bs))
+    val comps = Components.connectedComponents(edges, "id1", "id2")
     val nonCanon = comps
       .filter(col("id") =!= col("comp"))
       .select(col("id").as(idCol))
@@ -2999,15 +2931,13 @@ object Dedup {
         idx.select(col("dk"), col("k"))
           .join(if (hoodRows <= 2000000L) broadcast(hood) else hood,
             Seq("dk"))
-          .select(col("s").as("id1"), col("k").as("id2"),
-            col("s").as("s1"), col("k").as("s2")).distinct()
+          .select(col("s").as("s1"), col("k").as("s2")).distinct()
       } else
         minHashIndexLookup(spark, s"$indexDir/sketch", charSpaced(probe),
             "id", "chars", excludeBatchFrom = excludeBatchFrom)
-          .select(col("new_id").as("id1"), col("corpus_id").as("id2"),
-            col("new_id").as("s1"), col("corpus_id").as("s2")).distinct()
+          .select(col("new_id").as("s1"), col("corpus_id").as("s2")).distinct()
     verifyCandidates(cand, md)
-      .select(col("id1").as("s"), col("id2").as("k"), col("dist"))
+      .select(col("s_a").as("s"), col("s_b").as("k"), col("dist"))
   }
 
   /** Fuzzy LOOKUP against a streaming fuzzy index-at-rest: every
@@ -3048,10 +2978,8 @@ object Dedup {
                     batch: Long, maxDist: Int = 1,
                     tier: String = "exact",
                     numHashes: Int = 64, bands: Int = 32): Unit = {
-    require(maxDist == 1 || maxDist == 2,
-      s"maxDist must be 1 or 2, got $maxDist")
-    val keys = df.select(col(strCol).as("k")).distinct()
-      .localCheckpoint(true)
+    val keys = fuzzyRows(df, strCol, strCol, maxDist).select(col("s").as("k"))
+      .distinct().localCheckpoint(true)
     fuzzyIndexWrite(spark, indexDir, keys, batch,
       fuzzyIndexMeta(spark, indexDir).getOrElse((tier, maxDist, numHashes, bands)))
     IterPin.free(keys) // the writes above were the pin's last consumers
@@ -3106,78 +3034,10 @@ object Dedup {
   }
 
   /** Strings `s` as (id = the string, chars = its characters spaced),
-    * the char-bigram MinHash input of the fuzzy index's minhash tier. */
+    * the char-bigram MinHash input of the fuzzy minhash tier: one char
+    * per token, so word shingles of size 2 are char bigrams (candidate
+    * generation only — verification is exact, so the space-char
+    * token-drop edge cannot cost correctness, only candidates). */
   private def charSpaced(d: DataFrame): DataFrame = d.select(col("s").as("id"),
     regexp_replace(col("s"), "(?s)(.)", "$1 ").as("chars"))
-
-  /** [[fuzzyLink]] behind the collision-density ROUTER — the
-    * cross-table twin of [[editDistancePairsAuto]]. Density and mean
-    * key length are measured over the UNION of both tables'
-    * post-compaction strings (the population whose deletion
-    * neighborhoods meet in shared blocking buckets); linear corpora
-    * run the exact tier (bit-identical to [[fuzzyLink]] and its dd17
-    * oracle), collision-dense or long-key corpora run the char-bigram
-    * MinHash-LSH tier (left-vs-right band join, exact-verified
-    * precision, banding recall). Returns (links, one-row ledger) with
-    * the same schema conventions as the self-join router — including
-    * the hysteresis columns: a nightly re-linkage of a near-threshold
-    * corpus alternates tiers exactly like the dedup crawl, so
-    * `previousTier` (e.g. the previous run's ledger row) +
-    * `hysteresisPct` apply the same ±band rule ([[fuzzyTier]]).
-    */
-  def fuzzyLinkAuto(left: DataFrame, lIdCol: String, lStrCol: String,
-                    right: DataFrame, rIdCol: String, rStrCol: String,
-                    maxDist: Int = 1,
-                    densityThreshold: Double = 64.0,
-                    maxMeanKeyLen: Double = 64.0,
-                    sampleSixteenths: Int = 4,
-                    numHashes: Int = 64, bands: Int = 32,
-                    previousTier: Option[String] = None,
-                    hysteresisPct: Double = 0.10)
-  : (DataFrame, DataFrame) = {
-    val l0 = left.select(col(lIdCol).as("id"), col(lStrCol).as("s"))
-    val r0 = right.select(col(rIdCol).as("id"), col(rStrCol).as("s"))
-    val (pre, suf) = corpusAffixes(
-      l0.select(col("s")).unionByName(r0.select(col("s"))))
-    val (tier, measured) = fuzzyTier(
-      stripAffixes(l0, pre, suf).select(col("s"))
-        .unionByName(stripAffixes(r0, pre, suf).select(col("s"))),
-      maxDist, densityThreshold, maxMeanKeyLen, sampleSixteenths,
-      previousTier, hysteresisPct)
-    val led = ledger(left.sparkSession, "fuzzy-link",
-      ("tier" -> tier) +: measured: _*)
-    val links =
-      if (tier == "exact")
-        fuzzyLink(left, lIdCol, lStrCol, right, rIdCol, rStrCol, maxDist)
-      else {
-        // char-bigram LSH across the two DISTINCT-string sides: band
-        // collision generates candidates, the capped kernel verifies,
-        // and links expand over both id groups like the exact tail
-        def sides(v: DataFrame) = {
-          val d = stripAffixes(v, pre, suf).select(col("s")).distinct()
-          val spaced = d.select(col("s").as("id"),
-            regexp_replace(col("s"), "(?s)(.)", "$1 ").as("chars"))
-          minHashSignatures(shingleRows(spaced, "id", "chars", 2), numHashes)
-            .select(col("id"),
-              explode(bandKeyArray(col("sig"), numHashes, bands)).as("bk"))
-            .select(col("id"), col("bk.band").as("band"),
-              col("bk.bkey").as("bkey"))
-        }
-        val cand = sides(l0).select(col("id").as("id1"),
-            col("band"), col("bkey"))
-          .join(sides(r0).select(col("id").as("id2"),
-            col("band"), col("bkey")), Seq("band", "bkey"))
-          .select(col("id1"), col("id2"),
-            col("id1").as("s1"), col("id2").as("s2"))
-        val sp = verifyCandidates(cand, maxDist)
-          .select(col("id1").as("__sa"), col("id2").as("__sb"), col("dist"))
-        val lG = stripAffixes(l0, pre, suf)
-          .select(col("s").as("__sa"), col("id").as("id1"))
-        val rG = stripAffixes(r0, pre, suf)
-          .select(col("s").as("__sb"), col("id").as("id2"))
-        sp.join(lG, Seq("__sa")).join(rG, Seq("__sb"))
-          .select(col("id1"), col("id2"), col("dist"))
-      }
-    (links, led)
-  }
 }

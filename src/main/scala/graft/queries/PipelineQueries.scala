@@ -1174,7 +1174,7 @@ object PipelineQueries {
       recallRow(truth, found)
     },
 
-    // The AUTO-ROUTED fuzzy tier (round 13): editDistancePairsAuto
+    // The AUTO-ROUTED fuzzy tier (round 13): editDistanceAuto
     // measures post-compaction collision density + mean key length and
     // routes exact (symmetric-delete) vs MinHash-LSH. This gate PINS
     // the router's decision on the customer-name corpus: the ledger's
@@ -1190,9 +1190,8 @@ object PipelineQueries {
       val cust = Tables(s, dir).customer
         .filter(col("c_custkey") % 9 === 0)
         .select(col("c_custkey"), col("c_name"))
-      val (pairs, ledger) = Dedup.editDistancePairsAuto(
-        cust, "c_custkey", "c_name", maxDist = 1)
-      val routed = pairs.select(col("id1"), col("id2")).localCheckpoint(true)
+      val auto = Dedup.editDistanceAuto(cust, "c_custkey", "c_name", maxDist = 1)
+      val routed = auto.pairs.select(col("id1"), col("id2")).localCheckpoint(true)
       // repartition by id before the O(n²) truth crossJoin: the slice is
       // ONE parquet partition and BNLJ preserves left partitioning, so
       // the levenshtein verify otherwise runs in a single task (measured
@@ -1208,7 +1207,7 @@ object PipelineQueries {
         .localCheckpoint(true)
       recallRow(truth, routed)
         .crossJoin(routed.agg(count(lit(1)).as("n_routed")))
-        .crossJoin(ledger.select(col("tier")))
+        .crossJoin(auto.ledger.select(col("tier")))
         .select(col("tier"), col("n_truth"), col("n_routed"),
           col("n_hit"), col("recall"))
     },
@@ -1506,8 +1505,8 @@ object PipelineQueries {
       val slice = Tables(s, dir).customer
         .filter(col("c_custkey") % 3 === 0)
         .select(col("c_custkey"), col("c_name"))
-      val (edges, _) = Dedup.editDistanceDedupEdgesAuto(slice,
-        "c_custkey", "c_name", maxDist = 1)
+      val edges = Dedup.editDistanceAuto(slice, "c_custkey", "c_name",
+        maxDist = 1).edges
       val comps = Components.connectedComponents(edges, "id1", "id2")
       slice.select(col("c_custkey").as("id"))
         .join(comps, Seq("id"), "left_outer")

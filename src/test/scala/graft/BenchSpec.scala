@@ -36,6 +36,29 @@ class BenchSpec extends SparkSpec {
     } finally Files.deleteIfExists(full)
   }
 
+  test("Bench.run counts only the query's own job group: a job run outside it is not counted") {
+    val plain: Bench.Query = (s, _) => s.range(10).toDF("x")
+    // the same frame, after a job on a thread that left the group
+    val outside: Bench.Query = (s, _) => {
+      val t = new Thread(() => {
+        s.sparkContext.clearJobGroup()
+        s.sparkContext.parallelize(1 to 4, 2).count()
+      })
+      t.start(); t.join()
+      s.range(10).toDF("x")
+    }
+    val full = Files.createTempFile("bench_full", ".json")
+    try {
+      Bench.run(spark, dir, Some(Set("zz_plain", "zz_outside")), repeats = 1, full,
+        Map("zz_plain" -> plain, "zz_outside" -> outside))
+      val c = mapper.readTree(Files.readString(full)).get("counters")
+      Seq("jobs", "stages", "tasks").foreach { k =>
+        assert(c.get("zz_plain").get(k).asLong() > 0, k)
+        assert(c.get("zz_outside").get(k).asLong() == c.get("zz_plain").get(k).asLong(), k)
+      }
+    } finally Files.deleteIfExists(full)
+  }
+
   test("Bench.plans writes <query>_<suffix>.txt with the formatted plan") {
     val out = Files.createTempDirectory("bench_plans")
     try {

@@ -253,6 +253,23 @@ class MutationSpec extends SparkSpec {
       Seq(("Alice", 1L), ("Alice", 2L)))
   }
 
+  test("SET, REMOVE and DELETE on a multi-type relationship variable fail naming the variable and its types") {
+    val eng = freshEngine
+    eng.execute(
+      """MATCH (a:Person {name: 'Bob'}), (b:Person {name: 'Carol'})
+         CREATE (a)-[:LIKES {w: 1}]->(b)""")
+    Seq("SET k.x = 1", "REMOVE k.w", "DELETE k").foreach { write =>
+      val e = intercept[IllegalArgumentException](eng.execute(
+        s"MATCH (a:Person)-[k:KNOWS|LIKES]->(b:Person) $write RETURN count(*) AS n").collect())
+      Seq("k", "KNOWS", "LIKES").foreach(w => assert(e.getMessage.contains(w), e.getMessage))
+    }
+    // nothing was written
+    assert(eng.query("MATCH (:Person)-[k:KNOWS]->(:Person) RETURN count(*) AS n")
+      .collect().head.getLong(0) == 1L)
+    assert(eng.query("MATCH (:Person)-[l:LIKES]->(:Person) RETURN l.w AS w")
+      .collect().map(_.getLong(0)).toSeq == Seq(1L))
+  }
+
   test("SET label copies into the label table; REMOVE label removes") {
     val eng = freshEngine
     eng.execute("MATCH (p:Person) WHERE p.age >= 30 SET p:Senior")

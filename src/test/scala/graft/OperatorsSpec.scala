@@ -188,8 +188,7 @@ class OperatorsSpec extends SparkSpec {
         (g * 100L + k, s"key-alpha-$g"))) ++
       Seq((900L, "key-alpha-0x"), (901L, "key-alpha-11"))
     val keyDf = keys.toDF("id", "text")
-    val (fp, _) = Dedup.editDistancePairsAuto(keyDf, "id", "text", maxDist = 1)
-    val (fe, _) = Dedup.editDistanceDedupEdgesAuto(keyDf, "id", "text", maxDist = 1)
+    val Dedup.FuzzyRouted(fp, fe, _) = Dedup.editDistanceAuto(keyDf, "id", "text", maxDist = 1)
     assert(compsOf(fe) == compsOf(fp))
     assert(fe.count() < fp.count())
 
@@ -1415,9 +1414,9 @@ class OperatorsSpec extends SparkSpec {
       "Cust#" + (1 to 5).map(_ => ('0' + rnd.nextInt(3)).toChar).mkString + "-X"))
     // high-entropy corpus: 11-char alphanumeric keys — density ~0
     val sparse = (1L to 60L).map(i => (i, rnd.alphanumeric.take(11).mkString))
-    val (densePairs, denseLedger) = Dedup.editDistancePairsAuto(
+    val Dedup.FuzzyRouted(densePairs, _, denseLedger) = Dedup.editDistanceAuto(
       dense.toDF("id", "s"), "id", "s", maxDist = 2, sampleSixteenths = 16)
-    val (sparsePairs, sparseLedger) = Dedup.editDistancePairsAuto(
+    val Dedup.FuzzyRouted(sparsePairs, _, sparseLedger) = Dedup.editDistanceAuto(
       sparse.toDF("id", "s"), "id", "s", maxDist = 2, sampleSixteenths = 16)
     // the two corpora route DIFFERENTLY, and the ledger records the
     // measurements that drove each decision
@@ -1446,8 +1445,8 @@ class OperatorsSpec extends SparkSpec {
     assert(got.size >= (truth.size * 0.7).toInt, s"${got.size}/${truth.size}")
     // long keys route to minhash even at low density
     val long = (1L to 40L).map(i => (i, rnd.alphanumeric.take(200).mkString))
-    val (_, longLedger) = Dedup.editDistancePairsAuto(
-      long.toDF("id", "s"), "id", "s", maxDist = 2, sampleSixteenths = 16)
+    val longLedger = Dedup.editDistanceAuto(
+      long.toDF("id", "s"), "id", "s", maxDist = 2, sampleSixteenths = 16).ledger
     assert(longLedger.collect().head.getAs[String]("tier") == "minhash")
   }
 
@@ -1467,9 +1466,9 @@ class OperatorsSpec extends SparkSpec {
       (i, java.security.MessageDigest.getInstance("MD5")
         .digest(i.toString.getBytes("UTF-8"))
         .map("%02x".format(_)).mkString.take(10)))
-    val (_, ledger) = Dedup.editDistancePairsAuto(
+    val ledger = Dedup.editDistanceAuto(
       (hot ++ dilute).toDF("id", "s"), "id", "s", maxDist = 1,
-      sampleSixteenths = 16)
+      sampleSixteenths = 16).ledger
     val l = ledger.collect().head
     assert(l.getAs[Double]("density") <= l.getAs[Double]("density_threshold"), l)
     assert(l.getAs[String]("tier") == "exact", l)
@@ -1483,7 +1482,7 @@ class OperatorsSpec extends SparkSpec {
       (i, java.security.MessageDigest.getInstance("MD5")
         .digest(("o" + i).getBytes("UTF-8"))
         .map("%02x".format(_)).mkString.take(12)))
-    val (edges, cl) = Dedup.editDistanceDedupEdgesAuto(
+    val Dedup.FuzzyRouted(_, edges, cl) = Dedup.editDistanceAuto(
       (clones ++ others).toDF("id", "s"), "id", "s", maxDist = 1,
       sampleSixteenths = 16)
     val clRow = cl.collect().head
@@ -1504,9 +1503,9 @@ class OperatorsSpec extends SparkSpec {
     val corpus = (0L until 200L).map(i =>
       (i, f"rec-$i%03d-${(i * 7) % 10}")).toDF("id", "s")
     def route(thr: Double, prev: Option[String]) = {
-      val (_, l) = Dedup.editDistanceDedupEdgesAuto(corpus, "id", "s",
+      val l = Dedup.editDistanceAuto(corpus, "id", "s",
         maxDist = 1, densityThreshold = thr, maxMeanKeyLen = 1000.0,
-        sampleSixteenths = 16, previousTier = prev)
+        sampleSixteenths = 16, previousTier = prev).ledger
       l.collect().head
     }
     val d = route(64.0, None).getAs[Double]("density")
@@ -1806,7 +1805,7 @@ class OperatorsSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     // default: the density rule routes minhash on this corpus (the
     // precondition that makes the disjunct arms meaningful)
-    val (eDef, lDef) = Dedup.editDistanceDedupEdgesAuto(names, "id", "s",
+    val Dedup.FuzzyRouted(_, eDef, lDef) = Dedup.editDistanceAuto(names, "id", "s",
       maxDist = 1, densityThreshold = 4.0)
     val d0 = lDef.head()
     assert(d0.getAs[String]("tier") == "minhash", d0)
@@ -1817,7 +1816,7 @@ class OperatorsSpec extends SparkSpec {
       .head().getAs[Long]("candidate_pairs")
     // budget >= mass: override to exact, bit-identical to the explicit
     // exact-tier operator, mass recorded in the ledger
-    val (eEx, lEx) = Dedup.editDistanceDedupEdgesAuto(names, "id", "s",
+    val Dedup.FuzzyRouted(_, eEx, lEx) = Dedup.editDistanceAuto(names, "id", "s",
       maxDist = 1, densityThreshold = 4.0, exactCandidateBudget = mass)
     val r1 = lEx.head()
     assert(r1.getAs[String]("tier") == "exact" &&
@@ -1827,7 +1826,7 @@ class OperatorsSpec extends SparkSpec {
     assert(edges(eEx) == edges(
       Dedup.editDistanceDedupEdges(names, "id", "s", maxDist = 1)))
     // budget < mass: the minhash route stands, mass still recorded
-    val (eMh, lMh) = Dedup.editDistanceDedupEdgesAuto(names, "id", "s",
+    val Dedup.FuzzyRouted(_, eMh, lMh) = Dedup.editDistanceAuto(names, "id", "s",
       maxDist = 1, densityThreshold = 4.0,
       exactCandidateBudget = mass - 1)
     val r2 = lMh.head()
@@ -1861,8 +1860,7 @@ class OperatorsSpec extends SparkSpec {
     val ed = StructType(fuzzyLink.fields ++ Seq(
       f("exact_candidate_budget", LongType),
       f("exact_candidate_pairs", LongType), f("budget_override", BooleanType)))
-    assert(Dedup.editDistancePairsAuto(keys, "id", "s")._2.schema == ed)
-    assert(Dedup.editDistanceDedupEdgesAuto(keys, "id", "s")._2.schema == ed)
+    assert(Dedup.editDistanceAuto(keys, "id", "s").ledger.schema == ed)
     val simhash = StructType(Seq(f("route", StringType),
       f("distinct_fingerprints", LongType), f("buckets", LongType),
       f("candidate_pairs", LongType), f("candidate_budget", LongType),

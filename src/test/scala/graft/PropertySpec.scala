@@ -930,9 +930,88 @@ class PropertySpec extends AnyFunSuite {
         == comps(Dedup.ngramJaccardPairs(df, "id", "text",
           n = 2, threshold = 0.5)), s"ngram: $spec")
       // fuzzy tier (texts as keys)
-      val (fe, _) = Dedup.editDistanceDedupEdgesAuto(df, "id", "text")
-      val (fp, _) = Dedup.editDistancePairsAuto(df, "id", "text")
+      val Dedup.FuzzyRouted(fp, fe, _) = Dedup.editDistanceAuto(df, "id", "text")
       assert(comps(fe) == comps(fp), s"fuzzy: $spec")
+    }
+  }
+
+  test("fuzzy tier differential: exact self pairs and fuzzyLink equal " +
+    "brute-force Levenshtein, the MinHash tier is a subset with the true " +
+    "distance, and thin edges keep the pairs' components, at maxDist 1 and 2") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    import graft.operators.{Components, Dedup}
+    import spark.implicits._
+    def lev(a: String, b: String): Int = {
+      val d = Array.tabulate(a.length + 1, b.length + 1)((i, j) =>
+        if (i == 0) j else if (j == 0) i else 0)
+      for (i <- 1 to a.length; j <- 1 to b.length)
+        d(i)(j) = math.min(math.min(d(i - 1)(j), d(i)(j - 1)) + 1,
+          d(i - 1)(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1))
+      d(a.length)(b.length)
+    }
+    // short-alphabet strings of length 0..5 (empty and 1-char included),
+    // some replicated as exact clones, all optionally wrapped in one
+    // shared template prefix/suffix
+    val sideGen = for {
+      k <- Gen.chooseNum(4, 10)
+      mids <- Gen.listOfN(k, Gen.chooseNum(0, 5).flatMap(n =>
+        Gen.listOfN(n, Gen.oneOf('a', 'b', 'c')).map(_.mkString)))
+      reps <- Gen.listOfN(k, Gen.frequency(3 -> Gen.const(1), 1 -> Gen.chooseNum(2, 4)))
+    } yield mids.zip(reps).flatMap { case (m, r) => Seq.fill(r)(m) }
+    val trialGen = for {
+      l <- sideGen; r <- sideGen; tmpl <- Gen.oneOf(true, false)
+    } yield (l, r, tmpl)
+    def comps(edges: DataFrame): Map[Long, Long] =
+      Components.connectedComponents(edges.select(col("id1"), col("id2")), "id1", "id2")
+        .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+    def triples(df: DataFrame): Set[(Long, Long, Long)] =
+      df.select(col("id1"), col("id2"), col("dist")).collect()
+        .map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSet
+    forAll(trialGen, trials = 3) { case (lm, rm, tmpl) =>
+      def wrap(m: String) = if (tmpl) s"Customer#$m-x" else m
+      val ls = lm.zipWithIndex.map { case (m, i) => (i.toLong, wrap(m)) }
+      val rs = rm.zipWithIndex.map { case (m, i) => (100L + i, wrap(m)) }
+      val left = ls.toDF("id", "s")
+      val right = rs.toDF("rid", "rs")
+      Seq(1, 2).foreach { d =>
+        val ctx = s"d=$d tmpl=$tmpl left=$lm right=$rm"
+        val self = (for { (i, a) <- ls; (j, b) <- ls if i < j; e = lev(a, b) if e <= d }
+          yield (i, j, e.toLong)).toSet
+        val cross = (for { (i, a) <- ls; (j, b) <- rs; e = lev(a, b) if e <= d }
+          yield (i, j, e.toLong)).toSet
+        // exact tier: the plain operators and the router held on exact
+        val exact = Dedup.editDistancePairs(left, "id", "s", maxDist = d)
+        assert(triples(exact) == self, s"exact self pairs: $ctx")
+        assert(triples(Dedup.fuzzyLink(left, "id", "s", right, "rid", "rs",
+          maxDist = d)) == cross, s"fuzzyLink: $ctx")
+        val Dedup.FuzzyRouted(xPairs, xEdges, xLed) = Dedup.editDistanceAuto(left, "id", "s",
+          maxDist = d, densityThreshold = 1e12, maxMeanKeyLen = 1e12, sampleSixteenths = 16)
+        assert(xLed.head().getAs[String]("tier") == "exact", ctx)
+        assert(triples(xPairs) == self, s"routed exact pairs: $ctx")
+        assert(comps(xEdges) == comps(exact), s"exact thin components: $ctx")
+        assert(comps(Dedup.editDistanceDedupEdges(left, "id", "s", maxDist = d))
+          == comps(exact), s"exact edges components: $ctx")
+        val (xLinks, _) = Dedup.fuzzyLinkAuto(left, "id", "s", right, "rid", "rs",
+          maxDist = d, densityThreshold = 1e12, maxMeanKeyLen = 1e12,
+          sampleSixteenths = 16)
+        assert(triples(xLinks) == cross, s"routed exact links: $ctx")
+        // MinHash tier, forced by a zero key-length threshold: a subset
+        // of the truth with the true distance on every row
+        val Dedup.FuzzyRouted(mPairs, mEdges, mLed) = Dedup.editDistanceAuto(left, "id", "s",
+          maxDist = d, maxMeanKeyLen = 0.0, sampleSixteenths = 16)
+        val (mLinks, lLed) = Dedup.fuzzyLinkAuto(left, "id", "s", right, "rid", "rs",
+          maxDist = d, maxMeanKeyLen = 0.0, sampleSixteenths = 16)
+        // two distinct strings leave a non-empty one after compaction
+        if (lm.distinct.size > 1)
+          assert(mLed.head().getAs[String]("tier") == "minhash", ctx)
+        if ((lm ++ rm).distinct.size > 1)
+          assert(lLed.head().getAs[String]("tier") == "minhash", ctx)
+        val mp = triples(mPairs)
+        assert(mp.subsetOf(self), s"minhash pairs ${mp -- self}: $ctx")
+        assert(triples(mLinks).subsetOf(cross), s"minhash links: $ctx")
+        assert(comps(mEdges) == comps(mPairs), s"minhash thin components: $ctx")
+      }
     }
   }
 }

@@ -1863,13 +1863,13 @@ class StreamingSpec extends SparkSpec {
         .map("%02x".format(_)).mkString.take(12)))
     // the stage's own measurement of the mild corpus (same defaults:
     // maxDist 1, sampleSixteenths 4)
-    val dMild = Dedup.editDistanceDedupEdgesAuto(
+    val dMild = Dedup.editDistanceAuto(
         mild.toDF("doc_id", "text"), "doc_id", "text", maxDist = 1)
-      ._2.collect().head.getAs[Double]("density")
+      .ledger.collect().head.getAs[Double]("density")
     assert(dMild > 0.5, s"mild corpus density $dMild too low to band")
-    val dDense = Dedup.editDistanceDedupEdgesAuto(
+    val dDense = Dedup.editDistanceAuto(
         dense.toDF("doc_id", "text"), "doc_id", "text", maxDist = 1)
-      ._2.collect().head.getAs[Double]("density")
+      .ledger.collect().head.getAs[Double]("density")
     val thr = dMild * 1.05 // mild sits at thr/1.05 ≈ 0.95·thr: in band
     assert(dDense > thr * 1.1, s"dense $dDense not confidently over $thr")
     val config = PipelineConfig.parse(
