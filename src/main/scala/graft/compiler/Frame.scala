@@ -51,3 +51,12 @@ final case class Frame(df: DataFrame, vars: Map[String, VarMeta]) {
     case ValueVar                => Seq(v)
   }
 }
+
+object Frame {
+  /** The marker an undirected match over a relationship type with no id
+    * column sets on the rows that see a stored edge reversed (their
+    * src/dst columns hold the stored dst/src), so writes through v
+    * address the stored orientation. Absent from frames that need none.
+    */
+  def revCol(v: String): String = s"${v}____rev"
+}

@@ -85,13 +85,14 @@ final class MutationEngine(catalog: GraphCatalog, spark: SparkSession,
 
   private def relElement(r: RelationshipDef, keys: Seq[String]): Element =
     Element(r.df, keys, Set(r.srcCol, r.dstCol) ++ r.idCol,
-      RelVar(r.relType, r.srcCol, r.dstCol, _), d => commit(r.copy(df = d)))
+      RelVar(r.relType, r.srcCol, r.dstCol, _), d => commit(r.copy(df = d)),
+      Map(r.srcCol -> r.dstCol, r.dstCol -> r.srcCol))
 
   /** The element a node or relationship variable binds. Keys: a node's
     * id; a relationship's declared id when the variable binds it, else
-    * (src, dst) — a BOTH-direction match without a declared id can only
-    * address the stored orientation (declare an id column for full
-    * fidelity).
+    * (src, dst) in the stored orientation ([[Element.bound]]) — parallel
+    * edges of one orientation share them, and a keyed write reaches
+    * them all.
     */
   private def element(f: Frame, v: String): Element = f.vars.get(v) match {
     case Some(NodeVar(label, _, _)) =>
@@ -195,7 +196,7 @@ final class MutationEngine(catalog: GraphCatalog, spark: SparkSession,
       val compiler = ec(f)
       val vals = all.zipWithIndex.collect { case ((_, Some(e)), i) =>
         compiler.compile(e).as(s"__uv$i") }
-      val upd = f.df.select(el.keys.map(k => col(f.col(v, k)).as(s"__uk_$k")) ++ vals: _*)
+      val upd = f.df.select(el.keys.map(k => el.bound(f, v, k).as(s"__uk_$k")) ++ vals: _*)
         .dropDuplicates(el.keys.map(k => s"__uk_$k"))
       el.commit(keyed(el, v, upd, all.zipWithIndex.map { case ((k, e), i) =>
         k -> ((_: Frame) => if (e.isDefined) col(s"__uv$i") else lit(null))
@@ -219,7 +220,7 @@ final class MutationEngine(catalog: GraphCatalog, spark: SparkSession,
       read.map(a => col(a).as(s"__rb_$a")): _*)
     val joined = f.df.join(
       if (el.keys.size > 1) fresh.dropDuplicates(el.keys.map("__rb_" + _)) else fresh,
-      el.keys.map(k => col(f.col(v, k)) === col(s"__rb_$k")).reduce(_ && _), "left_outer")
+      el.keys.map(k => el.bound(f, v, k) === col(s"__rb_$k")).reduce(_ && _), "left_outer")
     val attrs = f.varCols(v).map(_.stripPrefix(s"${v}__"))
     val out = read.foldLeft(joined)((d, a) => d.withColumn(f.col(v, a),
       when(col(s"__rb_${el.keys.head}").isNotNull, col(s"__rb_$a"))
@@ -410,7 +411,7 @@ final class MutationEngine(catalog: GraphCatalog, spark: SparkSession,
     exprs.foreach {
       case Variable(v) =>
         val el = element(f, v)
-        val gone = f.df.select(el.keys.map(k => col(f.col(v, k)).as(s"__d_$k")): _*)
+        val gone = f.df.select(el.keys.map(k => el.bound(f, v, k).as(s"__d_$k")): _*)
           .distinct().localCheckpoint()
         el.commit(el.df.join(gone,
           el.keys.map(k => col(k) === col(s"__d_$k")).reduce(_ && _), "left_anti"))
@@ -615,11 +616,21 @@ final class MutationEngine(catalog: GraphCatalog, spark: SparkSession,
 private object MutationEngine {
   /** One mutable element kind as the write path sees it: the catalog
     * table, the columns that key a bound variable's rows into it, the
-    * columns `SET v = {…}` keeps, how a variable binds it, and the
-    * commit of a new version.
+    * columns `SET v = {…}` keeps, how a variable binds it, the commit of
+    * a new version, and (relationships) each endpoint key's opposite.
     */
   private final case class Element(df: DataFrame, keys: Seq[String], fixed: Set[String],
-                                   bind: Seq[String] => VarMeta, commit: DataFrame => Unit)
+                                   bind: Seq[String] => VarMeta, commit: DataFrame => Unit,
+                                   opposite: Map[String, String] = Map.empty) {
+    /** v's binding column for key `k`, in the stored orientation: a row
+      * an undirected match sees reversed ([[Frame.revCol]]) reads an
+      * endpoint key from the opposite endpoint's column.
+      */
+    def bound(f: Frame, v: String, k: String): Column =
+      opposite.get(k).filter(_ => f.df.columns.contains(Frame.revCol(v)))
+        .fold(col(f.col(v, k)))(o =>
+          when(col(Frame.revCol(v)), col(f.col(v, o))).otherwise(col(f.col(v, k))))
+  }
 
   /** Where CREATE and MERGE write a relationship pattern: its type, the
     * bound src and dst variables (the direction decides), and the

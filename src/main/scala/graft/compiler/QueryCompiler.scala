@@ -324,7 +324,8 @@ final class QueryCompiler(catalog: GraphCatalog, spark: SparkSession,
 
   /** Relationship frame. For BOTH direction the edge set is the union of
     * both orientations (reference: pattern_matcher.py:572-699 direction
-    * handling re-expressed as a unioned scan).
+    * handling re-expressed as a unioned scan); over a type with no id
+    * column the reversed half carries the `revCol` marker.
     */
   private def relFrame(varName: String, rd: RelationshipDef,
                        direction: String, props: Seq[(String, Expr)]): Frame = {
@@ -338,7 +339,9 @@ final class QueryCompiler(catalog: GraphCatalog, spark: SparkSession,
           .withColumnRenamed(rd.dstCol, rd.srcCol)
           .withColumnRenamed("__tmp_swap", rd.dstCol)
           .select(attrs.map(col): _*)
-        prefixed(fwd.unionByName(bwd))
+        if (rd.idCol.isDefined) prefixed(fwd.unionByName(bwd))
+        else prefixed(fwd).withColumn(Frame.revCol(varName), lit(false))
+          .unionByName(prefixed(bwd).withColumn(Frame.revCol(varName), lit(true)))
       case _ => prefixed(rd.df)
     }
     val f = Frame(base, Map(varName -> RelVar(rd.relType, rd.srcCol, rd.dstCol, attrs)))
@@ -648,7 +651,8 @@ final class QueryCompiler(catalog: GraphCatalog, spark: SparkSession,
       val bPrepared0 = keyCols.foldLeft(b.df) { case (df, (v, jk)) =>
         df.withColumn(jk, col(b.idCol(v)))
       }
-      val dropCols = shared.flatMap(b.varCols)
+      val dropCols = shared.flatMap(v => b.varCols(v) :+ Frame.revCol(v))
+        .filter(b.df.columns.contains)
       val bPrepared = bPrepared0.drop(dropCols: _*)
       // correlated predicates compile against the merged namespace: shared
       // vars resolve to the left side's columns (the right side's copies
@@ -1154,6 +1158,8 @@ final class QueryCompiler(catalog: GraphCatalog, spark: SparkSession,
               vars(alias) = m
             case m: RelVar =>
               m.attrs.foreach(a => cols += col(f.col(v, a)).as(s"${alias}__$a"))
+              if (f.df.columns.contains(Frame.revCol(v)))
+                cols += col(Frame.revCol(v)).as(Frame.revCol(alias))
               vars(alias) = m
             case PathVar(h, n, r) =>
               cols += col(h).as(s"${alias}__hops")

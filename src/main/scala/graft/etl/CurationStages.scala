@@ -3,7 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Components, Dedup, Sampling, TextAnalysis}
+import graft.operators.{Components, Dedup, IndexStore, Sampling, TextAnalysis}
 
 /** Declarative curation stages for YAML pipelines — the beyond-parity
   * dedup/quality/text tier exposed with `nmetl run` ergonomics
@@ -476,21 +476,15 @@ object CurationStages {
         confSess.conf.set("graft.lsh.bucketCapLedgerBatch", batchId.toString)
         try {
         if (!batch.isEmpty) {
-          // FIRST, before any probe reads an index: repair interrupted
-          // compactions. compactDir's crash window (batch partitions
-          // deleted, tmp not yet renamed) leaves an index missing every
-          // consolidated row, and the recovery inside the compaction
-          // step at the END of the batch comes too late — a replayed
-          // batch would probe the broken index, admit duplicates, and
-          // commit. Also covers an admin CALL curation.compactIndex
-          // that crashed and was never re-run. Idempotent, two exists()
-          // calls per component on a healthy index.
-          pipeline.stages.foreach { st =>
-            st.param("index_dir").foreach(idx =>
-              graft.operators.BatchCompaction.recoverIndex(spark, idx))
-            st.param("ledger_dir").foreach(led =>
-              graft.operators.BatchCompaction.recoverDir(spark, led, "batch"))
-          }
+          // FIRST, before the budget stage reads its ledger: repair an
+          // interrupted compaction. compactDir's crash window (batch
+          // partitions deleted, tmp not yet renamed) leaves a ledger
+          // missing every consolidated row, and the recovery inside the
+          // compaction step at the END of the batch comes too late.
+          // Index probes need no pass here: every index component read
+          // (IndexStore.read) repairs its directory first.
+          pipeline.stages.foreach(_.param("ledger_dir").foreach(led =>
+            graft.operators.BatchCompaction.recoverDir(spark, led, "batch")))
           // index writes are collected, not executed, during the fold:
           // they run only after the output write commits, and only
           // over ids that reached the output
@@ -567,11 +561,10 @@ object CurationStages {
           // (BatchCompaction — as-of semantics preserved). Safe inside
           // the batch: only COMMITTED batches (<= batchId - retain) are
           // folded, so no foldable batch can ever replay, and a crash
-          // mid-compaction is repaired by the recoverIndex pass at the
-          // START of the replayed batch — before its probes read the
-          // index, not here. Without this, a months-long crawl
-          // accrues one partition per micro-batch and probe listing
-          // costs grow linearly in batch count.
+          // mid-compaction is repaired by the next read of the index
+          // (the replayed batch's probe), not here. Without this, a
+          // months-long crawl accrues one partition per micro-batch and
+          // probe listing costs grow linearly in batch count.
           pipeline.stages.foreach { st =>
             st.longParam("compact_every").foreach { every =>
               val retain = math.max(1L, st.longParam("compact_retain").getOrElse(1L))
@@ -602,10 +595,8 @@ object CurationStages {
                 st.params.contains("drift_dir")) {
               st.longParam("drift_every").foreach { every =>
                 val idx = st.params("index_dir")
-                val meta = new org.apache.hadoop.fs.Path(s"$idx/_meta")
-                val ifs = meta
-                  .getFileSystem(spark.sparkContext.hadoopConfiguration)
-                if (every > 0 && batchId % every == 0 && ifs.exists(meta)) {
+                if (every > 0 && batchId % every == 0 &&
+                    IndexStore.open(spark, idx, "sem_stream").isDefined) {
                   val thr = st.doubleParam("drift_threshold", 4.0)
                   // INCREMENTAL audit: scan only the EARLIEST batch
                   // (the baseline) and the NEWEST one — partition
@@ -616,6 +607,8 @@ object CurationStages {
                   // to the full audit's rows for those batches
                   // (per-batch means are independent).
                   val vecsPath = new org.apache.hadoop.fs.Path(s"$idx/vecs")
+                  val ifs = vecsPath
+                    .getFileSystem(spark.sparkContext.hadoopConfiguration)
                   val batchNums =
                     if (!ifs.exists(vecsPath)) Seq.empty[Long]
                     else ifs.listStatus(vecsPath).toSeq
@@ -746,31 +739,19 @@ object CurationStages {
     * dynamic-partition-overwrites `batch=<id>` with the keys of the
     * survivors that reached the output — run it only after the
     * output write commits. Text equality makes the index the whole
-    * truth, so restarts cost nothing. To pre-seed the index, write
-    * plain (batch-less) key parquet under `index_dir/keys/batch=-1`:
-    * it sorts before every real batch id.
+    * truth, so restarts cost nothing. To pre-seed the index, admit its
+    * keys (one string column `k`) as batch -1 through
+    * [[graft.operators.IndexStore.admit]] (kind `exact`, component
+    * `keys`): it sorts before every real batch id.
     */
   private def streamingExactDedup(spark: SparkSession, df: DataFrame,
                                   idCol: String, textCol: String,
                                   stage: CurationStageDef, batchId: Long)
   : (DataFrame, DataFrame => Unit) = {
-    val keysDir = s"${stage.params("index_dir")}/keys"
-    val p = new org.apache.hadoop.fs.Path(keysDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // finish any interrupted legacy-layout migration before reading
-    Dedup.completeBatchMigration(fs, p)
-    val have = fs.exists(p)
-    val (fresh, batchKeysPin) =
-      if (have) {
-        // a LEGACY key index (pre-batch-tagging plain appends) lacks
-        // the batch column: keep always-earlier semantics instead of
-        // throwing on the missing column (the admit below migrates it
-        // under batch=-1 before its first tagged write)
-        val keys0 = spark.read.parquet(keysDir)
-        val asOf =
-          if (keys0.columns.contains("batch"))
-            keys0.filter(col("batch") < lit(batchId))
-          else keys0
+    val indexDir = stage.params("index_dir")
+    val (fresh, batchKeysPin) = IndexStore.open(spark, indexDir, "exact") match {
+      case Some(rec) =>
+        val asOf = IndexStore.read(spark, indexDir, rec, "keys", Some(batchId))
         // probe SHAPE (the minHashIndexLookup discipline): the at-rest
         // key index must stream through ONE scan with no shuffle. The
         // old plain left_anti against the index planned a sort-merge
@@ -793,7 +774,8 @@ object CurationStages {
         (df.join(if (small) broadcast(hits) else hits,
             Seq(textCol), "left_anti")
           .select(df.columns.map(col).toSeq: _*), Some(batchKeys))
-      } else (df, None)
+      case None => (df, None)
+    }
     val survivors = fresh.join(
         fresh.groupBy(col(textCol)).agg(min(col(idCol)).as(idCol)),
         Seq(textCol, idCol), "left_semi")
@@ -803,16 +785,9 @@ object CurationStages {
       val keys = survivors.join(shipped, Seq(idCol), "left_semi")
         .select(col(textCol).as("k")).distinct()
         .localCheckpoint(true)
-      // an EMPTY admit must not create a data-less keys dir — the next
-      // batch's read would fail schema inference and wedge the stream;
-      // skipping is the same deterministic no-op on replay
-      if (!keys.isEmpty) {
-        Dedup.ensureBatchLayout(fs, p)
-        keys.withColumn("batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch").parquet(keysDir)
-      }
+      // an EMPTY admit writes nothing: a deterministic no-op on replay
+      IndexStore.admit(spark, indexDir, "exact", Map.empty, batchId,
+        Seq(IndexStore.Part("keys", keys)))
       // admit is this batch's LAST consumer of these pins (survivors
       // already materialized into the curated output checkpoint) —
       // free them now instead of waiting on GC-triggered cleanup
@@ -891,16 +866,15 @@ object CurationStages {
         (d.join(nonCanon, Seq(idCol), "left_anti"), Seq(comps))
       }
     }
-    // the index's _meta, read ONCE per micro-batch and handed to the
-    // probe and the put. _meta is written LAST by the put and never
-    // rewritten, so Some means the first batch's index write fully
+    // the index's record, read ONCE per micro-batch and handed to the
+    // probe and the put. It is written after the first admit landed and
+    // never rewritten, so Some means the first batch's index write fully
     // committed; None means this batch creates the index with the
     // stage's parameters
     val meta = Dedup.minHashIndexMeta(spark, indexDir)
-    val params @ (shingleSize, numHashes, bands) = meta.getOrElse((
-      stage.intParam("shingle_size", 3),
-      stage.intParam("num_hashes", 64),
-      stage.intParam("bands", 16)))
+    val params @ (shingleSize, numHashes, bands) =
+      meta.fold((stage.intParam("shingle_size", 3), stage.intParam("num_hashes", 64),
+        stage.intParam("bands", 16)))(Dedup.minHashParams)
     val (pre, probePins) = meta match {
       case Some(m) =>
         val (lookup, pins) = Dedup.minHashIndexLookupPinned(spark,
@@ -919,7 +893,7 @@ object CurationStages {
     val admit: DataFrame => Unit = shipped => {
       Dedup.minHashIndexPutAs(spark, indexDir,
         survivors.join(shipped, Seq(idCol), "left_semi"),
-        idCol, textCol, batchId, meta, params)
+        idCol, textCol, batchId, params)
       // last consumer of the survivors pin ran (the put is eager)
       graft.operators.IterPin.free(survivors)
     }

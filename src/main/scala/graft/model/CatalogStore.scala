@@ -316,7 +316,7 @@ object CatalogStore {
         Some(l)
       } catch { case _: java.io.IOException => None }
     try {
-    val manifest = spark.read.parquet(s"$vdir/_manifest").collect()
+    val manifest = graft.operators.IndexStore.side(spark, vdir, "_manifest").collect()
     val cat = new GraphCatalog
     manifest.foreach { m =>
       val kind = m.getAs[String]("kind")

@@ -16,16 +16,19 @@ import org.apache.spark.sql.functions._
   * partition `batch=-1`, which sorts BEFORE every real micro-batch
   * id: the as-of contract (`batch < batchId`) still sees exactly the
   * same rows, and the consolidated tag merges with the seed
-  * convention (plain parquet under `batch=-1`, as the streaming
-  * `exact_dedup` arm reads its key index). Sidecars (`_meta`,
-  * `_centroids`) are never touched.
+  * convention (the whole corpus of a `Dedup.minHashIndexWrite` build
+  * lands under `batch=-1`). Only batch-partitioned directories are
+  * rewritten: an index's `_meta` record and its side tables
+  * (`_centroids`, `_codebook`, `_drift_baseline`) are never touched,
+  * and the record's component schemas stay valid because compaction
+  * keeps every column and partition column ([[IndexStore]]).
   *
   * Crash safety: the consolidated rows are fully written to a hidden
   * `.compact_tmp` (invisible to parquet discovery) BEFORE the
   * `_compact_commit` marker appears; the old partitions are deleted
   * and the tmp renamed to `batch=-1` only after. A crash anywhere is
-  * repaired by the recovery pass every later compaction (or
-  * [[recoverDir]] caller) runs first: marker + tmp → redo the
+  * repaired by the recovery pass every later compaction and every
+  * index read ([[IndexStore.read]]) runs first: marker + tmp → redo the
   * delete/rename; marker alone → the rename already happened, drop
   * the marker; tmp alone → a pre-commit crash, drop the tmp. Readers
   * between the commit marker and the rename see missing data, so —
@@ -168,43 +171,25 @@ object BatchCompaction {
     (before, dataFileCount(fs, d))
   }
 
-  /** Compact every batch-partitioned component of a streaming dedup
-    * index-at-rest (`keys` for the exact stage, `bands`/`_sigs` for
-    * minhash, `vecs` for the vector index) up to and including batch
-    * `upTo`. `_meta`/`_centroids` are untouched. Returns one stats
-    * row per component present.
-    */
   /** Every batch-partitioned component a streaming dedup index can
     * have, with its residual partition columns: exact-stage `keys`,
-    * minhash `bands`/`_sigs`, vector `vecs`, and the fuzzy arm's
+    * minhash `bands`/`sigs`, vector `vecs`, and the fuzzy arm's
     * deletion-hood keys plus its nested char-bigram sketch (a full
     * minHashIndexPut layout).
     */
   private val indexComponents: Seq[(String, Seq[String])] = Seq(
     ("keys", Seq.empty[String]),
     ("bands", Seq("band")),
-    ("_sigs", Seq.empty[String]),
+    ("sigs", Seq.empty[String]),
     ("vecs", Seq("__bucket")),
     ("hood", Seq.empty[String]),
     ("sketch/bands", Seq("band")),
-    ("sketch/_sigs", Seq.empty[String]))
+    ("sketch/sigs", Seq.empty[String]))
 
-  /** Repair any interrupted compaction across ALL components of a
-    * streaming dedup index-at-rest (idempotent, two `exists` calls per
-    * component on a healthy index). MUST run before a probe reads the
-    * index whenever a compaction could have crashed since the last
-    * read: [[compactDir]]'s window between the batch deletes and the
-    * tmp rename leaves the index missing every consolidated row, and
-    * the recovery inside the COMPACTION step comes too late for the
-    * probes at the START of a replayed micro-batch — the ordering hole
-    * this entry point closes ([[graft.etl.CurationStages.runStreaming]]
-    * calls it per micro-batch, next to the legacy-layout migration).
+  /** Compact every batch-partitioned component of a streaming dedup
+    * index-at-rest up to and including batch `upTo`. Returns one stats
+    * row per component present.
     */
-  def recoverIndex(spark: SparkSession, indexDir: String): Unit =
-    indexComponents.foreach { case (name, _) =>
-      recoverDir(spark, s"$indexDir/$name", "batch")
-    }
-
   def compactIndex(spark: SparkSession, indexDir: String,
                    upTo: Long, targetFiles: Int = 1): DataFrame = {
     import spark.implicits._

@@ -78,9 +78,6 @@ object Dedup {
         array((0 until numHashes).map(h => col(s"__mh$h")): _*).as("sig"))
   }
 
-  /** (id, sh) distinct shingle sets for a corpus — the shared front end
-    * of every token-level dedup operator here.
-    */
   /** (id, shingle) rows for a whole corpus, fully whole-stage-codegen'd:
     * explode the shingle START POSITIONS and assemble each n-gram with
     * `element_at` (n is a plan-time constant, so the concat unrolls into
@@ -181,25 +178,6 @@ object Dedup {
       .groupBy(col("__k1"), col("__k2"))
       .agg(first(col("sig")).as("sig")) // identical within a group
 
-  /** (r1, r2, est_jaccard) candidate pairs over the DISTINCT-signature
-    * representatives `reps` = (sig, rid) — the band self-join, run on
-    * one row per signature. Candidate volume is therefore a function
-    * of distinct signatures, never of clone multiplicity (spec-gated
-    * on an engineered clone flood).
-    *
-    * `graft.lsh.bucketCap` (session conf, opt-in): buckets holding
-    * more than this many DISTINCT signatures are dropped from the
-    * join with loud stderr accounting — the escape hatch for
-    * near-identical-but-distinct floods (j ≈ 0.999 clusters whose
-    * members sign differently but still collide in most bands), where
-    * one (band, bkey) bucket is quadratic in distinct signatures and
-    * no skew split makes it linear. The trade is RECALL: pairs
-    * connected ONLY through a dropped bucket are lost (they usually
-    * also collide in a surviving band — that is what banding is for);
-    * exact clone groups are immune (collapsed to one row, they never
-    * overflow a bucket). Default off: results are bit-identical to the
-    * uncapped join.
-    */
   /** One-row candidate-volume DIAGNOSTIC for the MinHash banding:
     * (distinct_signatures, buckets, candidate_pairs) where
     * candidate_pairs = Σ_bucket C(n, 2) over the (band, bkey) buckets
@@ -227,6 +205,25 @@ object Dedup {
         col("buckets"), col("candidate_pairs"))
   }
 
+  /** (r1, r2, est_jaccard) candidate pairs over the DISTINCT-signature
+    * representatives `reps` = (sig, rid) — the band self-join, run on
+    * one row per signature. Candidate volume is therefore a function
+    * of distinct signatures, never of clone multiplicity (spec-gated
+    * on an engineered clone flood).
+    *
+    * `graft.lsh.bucketCap` (session conf, opt-in): buckets holding
+    * more than this many DISTINCT signatures are dropped from the
+    * join with loud stderr accounting — the escape hatch for
+    * near-identical-but-distinct floods (j ≈ 0.999 clusters whose
+    * members sign differently but still collide in most bands), where
+    * one (band, bkey) bucket is quadratic in distinct signatures and
+    * no skew split makes it linear. The trade is RECALL: pairs
+    * connected ONLY through a dropped bucket are lost (they usually
+    * also collide in a surviving band — that is what banding is for);
+    * exact clone groups are immune (collapsed to one row, they never
+    * overflow a bucket). Default off: results are bit-identical to the
+    * uncapped join.
+    */
   private[graft] def lshRepPairs(reps: DataFrame, numHashes: Int,
                                  bands: Int): DataFrame = {
     val banded0 = reps.select(col("__k1"), col("__k2"), col("sig"),
@@ -1668,54 +1665,34 @@ object Dedup {
     * dedup model: the historical corpus is signed ONCE at rest, and
     * each NEW batch is signed at batch cost and probed against the
     * stored bands, so deduping a day's crawl never re-reads (or
-    * re-hashes) the 100 TB already indexed. Layout: `bands/` holds one
-    * (band, bkey, id) row per document per band, partitioned by band;
-    * `_sigs/` holds one (id, sig) row per document (the estimate side —
-    * ~8 bytes × numHashes per doc, not repeated per band); `_meta` is a
-    * one-row parquet sidecar (shingleSize / numHashes / bands + write
-    * epoch) so probe parameters can never drift from the writer's, the
-    * same contract as the ANN indexes. Rewrites bump the epoch.
+    * re-hashes) the 100 TB already indexed. Layout ([[IndexStore]]):
+    * `bands/` holds one (band, bkey, id) row per document per band,
+    * partitioned by band; `sigs/` holds one (id, sig) row per document
+    * (the estimate side — ~8 bytes × numHashes per doc, not repeated
+    * per band); the `_meta` record pins shingleSize / numHashes / bands
+    * so probe parameters can never drift from the writer's. The corpus
+    * lands under `batch=-1`, the seed convention: it sorts before every
+    * micro-batch a later [[minHashIndexPut]] admits. A rewrite replaces
+    * the whole directory.
     */
   def minHashIndexWrite(df: DataFrame, idCol: String, textCol: String,
                         path: String, shingleSize: Int = 3,
-                        numHashes: Int = 64, bands: Int = 16): Long = {
-    // signatures are computed ONCE: _sigs is written first and the band
-    // rows derive from reading it back (8 B × numHashes per doc) — two
-    // write actions over the raw `sigs` plan would run the corpus-wide
-    // shingle+signature aggregate twice, doubling the dominant pass of
-    // a 100 TB index build
-    minHashSignatures(shingleRows(df, idCol, textCol, shingleSize), numHashes)
-      .write.mode("overwrite").parquet(s"$path/_sigs")
+                        numHashes: Int = 64, bands: Int = 16): Unit = {
     val spark = df.sparkSession
-    spark.read.parquet(s"$path/_sigs")
-      .select(col("id"), explode(bandKeyArray(col("sig"), numHashes, bands)).as("bk"))
-      .select(col("bk.band").as("band"), col("bk.bkey").as("bkey"), col("id"))
-      .write.mode("overwrite").partitionBy("band").parquet(s"$path/bands")
-    val epoch = System.currentTimeMillis()
-    import spark.implicits._
-    Seq((shingleSize, numHashes, bands, epoch))
-      .toDF("shingle_size", "num_hashes", "bands", "epoch")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_meta")
-    epoch
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    minHashIndexPutAs(spark, path, df, idCol, textCol, -1L,
+      (shingleSize, numHashes, bands))
   }
 
-  /** Idempotent, batch-tagged write into a STREAMING-OWNED MinHash
-    * index — the exactly-once arm of the incremental-crawl loop. Every
-    * band and signature row is stamped with the caller's micro-batch
-    * id and written with DYNAMIC PARTITION OVERWRITE of the
-    * `batch=<id>` partition only: replaying a failed micro-batch
-    * overwrites exactly its own rows instead of duplicating them, and
-    * a half-written attempt is erased by the retry. Layout:
-    * `bands/batch=N/band=B/`, `_sigs/batch=N/` — same columns as the
-    * batch index plus the `batch` partition key, which
-    * [[minHashIndexLookup]] ignores unless told to filter on it.
-    *
-    * `_meta` is written ONLY if absent and never rewritten: an
-    * overwrite has a crash window that leaves the index looking
-    * uncreated — a replay would then rebuild it from one batch,
-    * silently discarding every earlier batch. An immutable `_meta`
-    * closes that window; parameters still can never drift because
-    * every later put reads them back from `_meta`.
+  /** Idempotent, batch-tagged admit into a MinHash index — the
+    * exactly-once arm of the incremental-crawl loop. Every band and
+    * signature row lands in the `batch=<id>` partition through
+    * [[IndexStore.admit]]: replaying a failed micro-batch overwrites
+    * exactly its own rows instead of duplicating them, and a probe
+    * reads the index as of the batches before it. The first admit
+    * writes the `_meta` record with these parameters; later admits
+    * use the record's, so parameters can never drift.
     */
   def minHashIndexPut(spark: org.apache.spark.sql.SparkSession,
                       path: String, df: DataFrame,
@@ -1723,134 +1700,43 @@ object Dedup {
                       shingleSize: Int = 3, numHashes: Int = 64,
                       bands: Int = 16): Unit =
     minHashIndexPutAs(spark, path, df, idCol, textCol, batch,
-      minHashIndexMeta(spark, path), (shingleSize, numHashes, bands))
+      minHashIndexMeta(spark, path).fold((shingleSize, numHashes, bands))(minHashParams))
 
-  /** [[minHashIndexPut]] over the index's `meta` as the caller read it
-    * ([[minHashIndexMeta]]; the streaming arm reads it once per
-    * micro-batch): its parameters win over `params`, and `_meta` is
-    * written only when `meta` is None.
+  /** [[minHashIndexPut]] at (shingle_size, num_hashes, bands) `params`
+    * — the index's own once it exists (the streaming arm passes the
+    * values of its one record read per micro-batch).
     */
   private[graft] def minHashIndexPutAs(spark: org.apache.spark.sql.SparkSession,
                                        path: String, df: DataFrame,
                                        idCol: String, textCol: String,
-                                       batch: Long,
-                                       meta: Option[(Int, Int, Int)],
-                                       params: (Int, Int, Int)): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (ss, nh, nb) = meta.getOrElse(params)
-    // signed BEFORE the migration below: `df` may be a lazy plan that
-    // reads this index's flat files (survivors of a probe against it)
+                                       batch: Long, params: (Int, Int, Int)): Unit = {
+    val (ss, nh, nb) = params
+    // signed ONCE and pinned: the admit's emptiness check and both
+    // component writes consume it (unpinned, a corpus build would run
+    // the shingle+signature aggregate per consumer)
     val sigs = minHashSignatures(shingleRows(df, idCol, textCol, ss), nh)
       .localCheckpoint(true)
-    // a pre-batch-layout index (flat band=*/part files written by
-    // minHashIndexWrite, or by a release before batch tagging)
-    // cannot take batch=N partition appends: parquet partition
-    // discovery requires one consistent directory depth. Migrate the
-    // flat content under batch=-1 — which sorts before every real
-    // micro-batch id, preserving always-earlier as-of semantics — the
-    // first time the streaming writer touches it.
-    ensureBatchLayout(fs, new org.apache.hadoop.fs.Path(s"$path/bands"))
-    ensureBatchLayout(fs, new org.apache.hadoop.fs.Path(s"$path/_sigs"))
-    // an EMPTY admit (every survivor dropped by a later stage, or a
-    // batch of all-too-short docs) must not bootstrap the index:
-    // writing data-less dirs + _meta would make the next batch's
-    // lookup fail schema inference on the empty parquet dirs and
-    // wedge the stream on every replay. Writing nothing is the same
-    // deterministic no-op on replay, so exactly-once holds.
-    if (!sigs.isEmpty) {
-      sigs.select(col("id"), explode(bandKeyArray(col("sig"), nh, nb)).as("bk"))
-        .select(col("bk.band").as("band"), col("bk.bkey").as("bkey"), col("id"))
-        .withColumn("batch", lit(batch))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch", "band").parquet(s"$path/bands")
-      sigs.withColumn("batch", lit(batch))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch").parquet(s"$path/_sigs")
-      if (meta.isEmpty) {
-        import spark.implicits._
-        Seq((ss, nh, nb, batch))
-          .toDF("shingle_size", "num_hashes", "bands", "epoch")
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/_meta")
-      }
-    }
-    // the two index writes were the signature pin's last consumers —
-    // release it deterministically (a crawl loop calls this per batch)
+    IndexStore.admit(spark, path, "minhash",
+      Map("shingle_size" -> ss.toString, "num_hashes" -> nh.toString,
+        "bands" -> nb.toString), batch,
+      Seq(IndexStore.Part("bands",
+          sigs.select(col("id"), explode(bandKeyArray(col("sig"), nh, nb)).as("bk"))
+            .select(col("bk.band").as("band"), col("bk.bkey").as("bkey"), col("id")),
+          Seq("band")),
+        IndexStore.Part("sigs", sigs)))
     IterPin.free(sigs)
   }
 
-  /** A MinHash index's (shingle_size, num_hashes, bands), read from its
-    * `_meta`; None before the index's first write landed. The one
-    * `_meta` read of this index: the probe and the put take its values.
+  /** A MinHash index's record; None before its first write landed. The
+    * one record read of this index: the probe and the put take it.
     */
   private[graft] def minHashIndexMeta(spark: org.apache.spark.sql.SparkSession,
-                                      path: String): Option[(Int, Int, Int)] =
-    metaRow(spark, path).map(m => (m.getInt(0), m.getInt(1), m.getInt(2)))
+                                      path: String): Option[IndexStore.Record] =
+    IndexStore.open(spark, path, "minhash")
 
-  /** An index's one-row `_meta` sidecar; None before it was written. */
-  private def metaRow(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): Option[org.apache.spark.sql.Row] = {
-    val metaPath = new org.apache.hadoop.fs.Path(s"$dir/_meta")
-    Option.when(metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(metaPath))(spark.read.parquet(metaPath.toString).head())
-  }
-
-  /** Finish an interrupted [[ensureBatchLayout]] migration: if the
-    * staging sibling `<dir>.__migrating` exists, the two-rename move
-    * was cut between steps — complete it. Idempotent and read-safe
-    * (probe paths call it so a crash mid-migration never wedges them).
-    */
-  private[graft] def completeBatchMigration(
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Unit = {
-    val mig = new org.apache.hadoop.fs.Path(
-      dir.getParent, dir.getName + ".__migrating")
-    if (fs.exists(mig)) {
-      if (!fs.exists(dir)) fs.mkdirs(dir)
-      val dst = new org.apache.hadoop.fs.Path(dir, "batch=-1")
-      // renames are CHECKED (BatchCompaction.renameOrThrow): an
-      // unchecked false here would silently leave the legacy rows in
-      // the staging sibling while probes read an empty batch=-1
-      if (!fs.exists(dst)) BatchCompaction.renameOrThrow(fs, mig, dst)
-      else {
-        // a re-migration raced a completed one: fold the stragglers in
-        fs.listStatus(mig).foreach(s => BatchCompaction.renameOrThrow(fs,
-          s.getPath, new org.apache.hadoop.fs.Path(dst, s.getPath.getName)))
-        fs.delete(mig, true)
-      }
-      ()
-    }
-  }
-
-  /** One-time in-place migration of a LEGACY flat index directory into
-    * the batch-partitioned layout the streaming writers own: the whole
-    * flat content (band=* dirs or loose part files) moves under
-    * `batch=-1`, the documented seed convention — it sorts before
-    * every real micro-batch id, so always-earlier as-of semantics are
-    * preserved exactly. Mechanics: rename the dir to a `.__migrating`
-    * staging sibling, then rename that under a fresh `<dir>/batch=-1`;
-    * a crash between the renames is finished by
-    * [[completeBatchMigration]] on the next call from either the probe
-    * or the put. Callers are the streaming index writers
-    * (single-writer contract); standalone batch indexes keep their
-    * flat layout untouched.
-    */
-  private[graft] def ensureBatchLayout(
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Unit = {
-    completeBatchMigration(fs, dir)
-    if (fs.exists(dir)) {
-      val flat = fs.listStatus(dir).exists { s =>
-        val n = s.getPath.getName
-        !n.startsWith("batch=") && !n.startsWith("_") && !n.startsWith(".")
-      }
-      if (flat) {
-        BatchCompaction.renameOrThrow(fs, dir, new org.apache.hadoop.fs.Path(
-          dir.getParent, dir.getName + ".__migrating"))
-        completeBatchMigration(fs, dir)
-      }
-    }
-  }
+  /** A MinHash record's (shingle_size, num_hashes, bands). */
+  private[graft] def minHashParams(r: IndexStore.Record): (Int, Int, Int) =
+    (r.int("shingle_size"), r.int("num_hashes"), r.int("bands"))
 
   /** Probe a stored MinHash index with a new document batch: sign the
     * batch (batch-sized work, pinned so it runs ONCE), BROADCAST its
@@ -1858,7 +1744,7 @@ object Dedup {
     * batch — the big side is never shuffled), and estimate Jaccard
     * from the stored signatures for colliding candidates only. Returns
     * (new_id, corpus_id, est_jaccard); parameters come from the
-    * index's `_meta` ([[minHashIndexMeta]]), never the caller.
+    * index's `_meta` record ([[minHashIndexMeta]]), never the caller.
     *
     * The batch signature table is materialized eagerly with
     * `localCheckpoint` — the shingle+signature aggregate is the costly
@@ -1880,7 +1766,7 @@ object Dedup {
         s"no MinHash index at $path (no _meta)")),
       newDf, idCol, textCol, maxBroadcastDocs, excludeBatchFrom)._1
 
-  /** [[minHashIndexLookup]] over the index's `meta` as the caller read
+  /** [[minHashIndexLookup]] over the index's record as the caller read
     * it ([[minHashIndexMeta]]), exposing its internal eager pins (the
     * batch signature table and, under the broadcast gate, the pinned
     * candidate set) so per-batch callers can free them
@@ -1889,39 +1775,20 @@ object Dedup {
     */
   private[graft] def minHashIndexLookupPinned(
       spark: org.apache.spark.sql.SparkSession,
-      path: String, meta: (Int, Int, Int), newDf: DataFrame,
+      path: String, meta: IndexStore.Record, newDf: DataFrame,
       idCol: String, textCol: String,
       maxBroadcastDocs: Long = 100000L,
       excludeBatchFrom: Option[Long] = None)
   : (DataFrame, Seq[DataFrame]) = {
-    val (shingleSize, numHashes, bands) = meta
-    // a crash mid-way through ensureBatchLayout's legacy migration —
-    // or mid-way through a BatchCompaction swap (batch partitions
-    // deleted, tmp not yet renamed) — must not leave the probe reading
-    // a broken index: finish the interrupted renames first (no-op in
-    // every other state)
-    locally {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      completeBatchMigration(fs, new org.apache.hadoop.fs.Path(s"$path/bands"))
-      completeBatchMigration(fs, new org.apache.hadoop.fs.Path(s"$path/_sigs"))
-      BatchCompaction.recoverDir(spark, s"$path/bands", "batch")
-      BatchCompaction.recoverDir(spark, s"$path/_sigs", "batch")
-    }
-    // batch-tagged (minHashIndexPut) indexes only: a replayed
-    // micro-batch must probe the index AS OF the batches before it —
-    // its own half-applied entries from the failed attempt would
-    // otherwise match the batch against itself and drop every
-    // survivor. `batch` is a partition key, so the filter is
-    // partition PRUNING, not a scan-and-discard. A LEGACY batch-less
-    // index (minHashIndexWrite layout, or a pre-batch-tagging release)
-    // keeps the old always-earlier semantics instead of failing on the
-    // missing column — the streaming exact_dedup arm's convention.
-    def asOf(df: DataFrame): DataFrame = excludeBatchFrom match {
-      case Some(b) if df.columns.contains("batch") =>
-        df.filter(col("batch") < lit(b))
-      case _ => df
-    }
+    val (shingleSize, numHashes, bands) = minHashParams(meta)
+    // a replayed micro-batch must probe the index AS OF the batches
+    // before it — its own half-applied entries from the failed attempt
+    // would otherwise match the batch against itself and drop every
+    // survivor. `batch` is a partition key, so the filter is partition
+    // PRUNING, not a scan-and-discard; each read first repairs an
+    // interrupted compaction of its component
+    def asOf(name: String): DataFrame =
+      IndexStore.read(spark, path, meta, name, excludeBatchFrom)
     val sigNew = minHashSignatures(
       shingleRows(newDf, idCol, textCol, shingleSize), numHashes)
       .localCheckpoint(true)
@@ -1952,7 +1819,7 @@ object Dedup {
     // `maxBroadcastDocs`. Too big → hash join fallback; Catalyst must
     // NOT be left to pick, because auto-broadcast would try to ship
     // the INDEX side. The count is a cheap scan of the pinned blocks.
-    val idx = asOf(spark.read.parquet(s"$path/bands"))
+    val idx = asOf("bands")
     val batchDocs = sigNew.count()
     val estBroadcastBytes = batchDocs * (16L * bands + 8L * numHashes)
     val smallBatch =
@@ -1963,7 +1830,7 @@ object Dedup {
     val cand0 = joined
       .select(col("__k1"), col("__k2"), col("id").as("corpus_id")).distinct()
     // the candidate ⋈ signature join must not shuffle the at-rest
-    // `_sigs` table either (id + numHashes longs per row — the WHOLE
+    // `sigs` table either (id + numHashes longs per row — the WHOLE
     // index through an exchange on every probe; candidate stats derive
     // from the index scan, so left alone the planner sort-merge-joins).
     // Candidates are collision-bounded: pin them (the sigNew rationale
@@ -1984,13 +1851,13 @@ object Dedup {
     // function of the two signatures, so it is shared by every clone),
     // then expand over the MAP-SIDE member projection — both
     // batch-side joins broadcast under the same smallBatch gate so the
-    // at-rest `_sigs` side still streams through one scan
+    // at-rest `sigs` side still streams through one scan
     val repSide = repsNew.select(col("__k1"), col("__k2"),
       col("sig").as("sig2"))
     val mem = sigNew.select(xxhash64(col("sig")).as("__k1"),
       xxhash64(lit(1), col("sig")).as("__k2"), col("id").as("new_id"))
     val result = (if (smallCand) broadcast(cand) else cand)
-      .join(asOf(spark.read.parquet(s"$path/_sigs"))
+      .join(asOf("sigs")
         .select(col("id").as("corpus_id"), col("sig").as("sig1")), Seq("corpus_id"))
       .join(if (smallBatch) broadcast(repSide) else repSide,
         Seq("__k1", "__k2"))
@@ -2817,10 +2684,7 @@ object Dedup {
     * crawl (batch-local affixes are not corpus affixes), so streaming
     * pays full-string hoods — correct, just less compact than the
     * batch stage's exactness-preserving strip. Empty admits write
-    * nothing (an index bootstrapped with data-less dirs wedges later
-    * probes), and a legacy batch-less `hood` keeps always-earlier
-    * semantics and is migrated under `batch=-1` by the first tagged
-    * write, like the text stages.
+    * nothing ([[IndexStore.admit]]).
     */
   def fuzzyCrawlBatch(spark: org.apache.spark.sql.SparkSession,
                       indexDir: String, df: DataFrame,
@@ -2833,26 +2697,24 @@ object Dedup {
   : (DataFrame, DataFrame => Unit) = {
     val v = fuzzyRows(df, idCol, strCol, maxDist).localCheckpoint(true)
     val existing = fuzzyIndexMeta(spark, indexDir)
-    val have = existing.isDefined
     // an EXISTING index pins tier/maxDist AND the minhash sketch params:
     // the intra-batch banding and the admit's
     // minHashIndexPut must use the num_hashes/bands the index was
     // created with, not the caller's — a crawl configured differently
     // than the fuzzyIndexPut seed would otherwise silently change
-    // intra-batch banding recall and let the outer _meta drift from the
-    // sketch's own _meta
-    val meta @ (tier, md, nh, bs) = existing.getOrElse {
+    // intra-batch banding recall and let the outer record drift from
+    // the sketch's own
+    val meta @ (tier, md, nh, bs) = existing.map(fuzzyParams).getOrElse {
       val (t, _) = fuzzyRoute("streaming fuzzy", v.select(col("s")), maxDist,
         densityThreshold, maxMeanKeyLen, sampleSixteenths, None, 0.0, None)
       (t, maxDist, numHashes, bands)
     }
     // 1. cross-batch drop: batch strings within md of anything the
     //    index admitted before this batch
-    val dupStrings =
-      if (!have) v.select(col("s")).limit(0)
-      else matchStrings(spark, indexDir, v.select(col("s")).distinct(),
-          tier, md, Some(batchId))
-        .select(col("s")).distinct()
+    val dupStrings = existing.fold(v.select(col("s")).limit(0))(rec =>
+      matchStrings(spark, indexDir, rec, v.select(col("s")).distinct(),
+          Some(batchId))
+        .select(col("s")).distinct())
     val pre = df
       .join(dupStrings.select(col("s").as(strCol)), Seq(strCol), "left_anti")
       .select(df.columns.map(col).toSeq: _*)
@@ -2892,26 +2754,17 @@ object Dedup {
   /** The probe core shared by [[fuzzyCrawlBatch]] and
     * [[fuzzyIndexMatches]]: every (s, k, dist) link between the
     * DISTINCT probe strings `probe` (one column `s`) and index keys
-    * admitted before `excludeBatchFrom`, at the index's tier/maxDist.
+    * admitted before `excludeBatchFrom`, at the tier/maxDist of the
+    * index's record `rec`.
     */
   private def matchStrings(spark: org.apache.spark.sql.SparkSession,
-                           indexDir: String, probe: DataFrame,
-                           tier: String, md: Int,
+                           indexDir: String, rec: IndexStore.Record,
+                           probe: DataFrame,
                            excludeBatchFrom: Option[Long]): DataFrame = {
+    val (tier, md, _, _) = fuzzyParams(rec)
     val cand =
       if (tier == "exact") {
-        val hoodDir = new org.apache.hadoop.fs.Path(s"$indexDir/hood")
-        val fs = hoodDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        completeBatchMigration(fs, hoodDir)
-        // interrupted-compaction repair before the read, same as the
-        // migration completion above (the minHashIndexLookup discipline)
-        BatchCompaction.recoverDir(spark, s"$indexDir/hood", "batch")
-        val idx0 = spark.read.parquet(s"$indexDir/hood")
-        val idx = excludeBatchFrom match {
-          case Some(b) if idx0.columns.contains("batch") =>
-            idx0.filter(col("batch") < lit(b))
-          case _ => idx0
-        }
+        val idx = IndexStore.read(spark, indexDir, rec, "hood", excludeBatchFrom)
         // the probe's exploded hood is the SMALL side (probe keys ×
         // hood size); the at-rest index must stream through ONE scan
         // with no shuffle — force the broadcast under a size gate (the
@@ -2954,12 +2807,12 @@ object Dedup {
                         indexDir: String, df: DataFrame,
                         idCol: String, strCol: String,
                         excludeBatchFrom: Option[Long] = None): DataFrame = {
-    val (tier, md, _, _) = fuzzyIndexMeta(spark, indexDir).getOrElse(
+    val rec = fuzzyIndexMeta(spark, indexDir).getOrElse(
       throw new IllegalArgumentException(
         s"no streaming fuzzy index at $indexDir (no _meta)"))
     val v = df.select(col(idCol).as("__pid"), col(strCol).as("s"))
-    v.join(matchStrings(spark, indexDir,
-        v.select(col("s")).distinct(), tier, md, excludeBatchFrom),
+    v.join(matchStrings(spark, indexDir, rec,
+        v.select(col("s")).distinct(), excludeBatchFrom),
         Seq("s"))
       .select(col("__pid").as(idCol), col("k"), col("dist"))
   }
@@ -2967,7 +2820,7 @@ object Dedup {
   /** Seed or bulk-append ALL of `df`'s distinct strings into a
     * streaming fuzzy index (no survivor filtering — the bootstrap arm;
     * a crawl's own admits stay survivor-only through
-    * [[fuzzyCrawlBatch]]). Creates the index `_meta` (pinning tier and
+    * [[fuzzyCrawlBatch]]). Creates the index record (pinning tier and
     * maxDist) if absent; `tier` is only consulted on creation.
     * Batch-tag the seed `-1` to sort before every live micro-batch
     * (the seeding convention), or any id below the stream's next
@@ -2980,56 +2833,46 @@ object Dedup {
                     numHashes: Int = 64, bands: Int = 32): Unit = {
     val keys = fuzzyRows(df, strCol, strCol, maxDist).select(col("s").as("k"))
       .distinct().localCheckpoint(true)
-    fuzzyIndexWrite(spark, indexDir, keys, batch,
-      fuzzyIndexMeta(spark, indexDir).getOrElse((tier, maxDist, numHashes, bands)))
+    fuzzyIndexWrite(spark, indexDir, keys, batch, fuzzyIndexMeta(spark, indexDir)
+      .map(fuzzyParams).getOrElse((tier, maxDist, numHashes, bands)))
     IterPin.free(keys) // the writes above were the pin's last consumers
   }
 
-  /** A streaming fuzzy index's pinned (tier, max_dist, num_hashes,
-    * bands), read from its `_meta`; None before the first admit landed.
-    */
+  /** A streaming fuzzy index's record; None before the first admit
+    * landed. */
   private def fuzzyIndexMeta(spark: org.apache.spark.sql.SparkSession,
-                             indexDir: String): Option[(String, Int, Int, Int)] =
-    metaRow(spark, indexDir)
-      .map(m => (m.getString(0), m.getInt(1), m.getInt(2), m.getInt(3)))
+                             indexDir: String): Option[IndexStore.Record] =
+    IndexStore.open(spark, indexDir, "fuzzy")
+
+  /** A fuzzy record's pinned (tier, max_dist, num_hashes, bands). */
+  private def fuzzyParams(r: IndexStore.Record): (String, Int, Int, Int) =
+    (r.params("tier"), r.int("max_dist"), r.int("num_hashes"), r.int("bands"))
 
   /** The admit shared by [[fuzzyCrawlBatch]] and [[fuzzyIndexPut]]:
     * write the distinct `keys` (one column `k`) under `batch` into the
     * tier `meta` names — the exact tier's deletion hoods, or the
-    * minhash tier's char-bigram sketch — then the outer `_meta`. An
-    * empty admit writes nothing (an index bootstrapped with data-less
-    * dirs wedges later probes).
+    * minhash tier's char-bigram sketch (a nested MinHash index) — then
+    * the outer record. An empty admit writes nothing.
     */
   private def fuzzyIndexWrite(spark: org.apache.spark.sql.SparkSession,
                               indexDir: String, keys: DataFrame, batch: Long,
                               meta: (String, Int, Int, Int)): Unit = {
-    if (keys.isEmpty) return
     val (tier, md, nh, bs) = meta
-    val metaPath = new org.apache.hadoop.fs.Path(s"$indexDir/_meta")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (tier == "exact") {
-      ensureBatchLayout(fs, new org.apache.hadoop.fs.Path(s"$indexDir/hood"))
-      keys.select(col("k"), explode(deletionHood(col("k"), md)).as("dk"))
-        .withColumn("batch", lit(batch))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch").parquet(s"$indexDir/hood")
-    } else
+    val params = Map("tier" -> tier, "max_dist" -> md.toString,
+      "num_hashes" -> nh.toString, "bands" -> bs.toString)
+    if (tier == "exact")
+      IndexStore.admit(spark, indexDir, "fuzzy", params, batch, Seq(IndexStore.Part("hood",
+        keys.select(col("k"), explode(deletionHood(col("k"), md)).as("dk")))))
+    else {
       minHashIndexPut(spark, s"$indexDir/sketch",
         charSpaced(keys.select(col("k").as("s"))), "id", "chars", batch,
         shingleSize = 2, numHashes = nh, bands = bs)
-    // the outer _meta pins the tier and means "the index exists": write
-    // it only once the tier's OWN write actually landed. The exact tier
-    // always lands (a non-empty key's hood contains the key itself); the
-    // minhash tier skips keys too short to form a char bigram — an
-    // all-1-char-key admit writes no sketch, and writing _meta anyway
-    // would point later probes at a sketch that is not there
-    val landed = tier == "exact" ||
-      fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/sketch/_meta"))
-    if (landed && !fs.exists(metaPath)) {
-      import spark.implicits._
-      Seq(meta).toDF("tier", "max_dist", "num_hashes", "bands")
-        .coalesce(1).write.mode("overwrite").parquet(metaPath.toString)
+      // the outer record pins the tier and means "the index exists":
+      // write it only once the sketch landed — keys too short to form
+      // a char bigram write no sketch, and a record anyway would point
+      // later probes at a sketch that is not there
+      if (minHashIndexMeta(spark, s"$indexDir/sketch").isDefined)
+        IndexStore.create(spark, indexDir, "fuzzy", params, Nil)
     }
   }
 

@@ -188,6 +188,17 @@ object Similarity {
     bits.reduce((a, b) => a.bitwiseOR(b))
   }
 
+  /** Fit the coarse k-means quantizer of a corpus. */
+  def ivfFit(df: DataFrame, vecCol: String,
+             nlist: Int, seed: Long): org.apache.spark.ml.clustering.KMeansModel = {
+    import org.apache.spark.ml.clustering.KMeans
+    import org.apache.spark.ml.functions.array_to_vector
+    new KMeans().setK(nlist).setSeed(seed).setMaxIter(10)
+      .setFeaturesCol("__fv").setPredictionCol("__bucket")
+      .fit(df.select(asDouble(col(vecCol)).as("v"))
+        .withColumn("__fv", array_to_vector(col("v"))))
+  }
+
   /** IVF (inverted-file) ANN — the FAISS IVF-Flat layout expressed
     * relationally: coarse k-means centroids (Spark ML, a handful of
     * scan-bounded iterations) partition the corpus into `nlist`
@@ -197,65 +208,14 @@ object Similarity {
     * prunes to nprobe buckets of files; the centroid table is tiny and
     * driver-resident by construction (nlist rows).
     */
-  /** Fitted coarse quantizers, keyed by a caller-supplied corpus key —
-    * an IVF index is built ONCE offline and amortized over every query
-    * against that corpus (the FAISS usage model); refitting k-means per
-    * query would charge the index build to each lookup. LRU-bounded so
-    * rewritten/forgotten corpora can't pin stale KMeansModels (and the
-    * session references inside them) for the life of the process.
-    */
-  private val ivfModelCap = 32
-  private val ivfModels = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, Int, Long),
-      org.apache.spark.ml.clustering.KMeansModel](16, 0.75f, true) {
-      override def removeEldestEntry(
-        e: java.util.Map.Entry[(String, Int, Long),
-          org.apache.spark.ml.clustering.KMeansModel]): Boolean =
-        size() > ivfModelCap
-    })
-
-  /** Drop a cached quantizer (call after the corpus under `corpusKey`
-    * is rewritten — the cache has no content-based invalidation, so a
-    * stale model would silently degrade recall).
-    */
-  def ivfInvalidate(corpusKey: String): Unit = ivfModels.synchronized {
-    val it = ivfModels.keySet().iterator()
-    while (it.hasNext) if (it.next()._1 == corpusKey) it.remove()
-  }
-
-  /** Fit (or fetch the cached) coarse k-means quantizer for a corpus.
-    * The cache keys on (corpusKey, nlist, seed) only — the caller owns
-    * the contract that a key names an immutable corpus snapshot; use
-    * `ivfInvalidate` when the data under a key changes.
-    */
-  def ivfFit(df: DataFrame, vecCol: String,
-             nlist: Int, seed: Long,
-             corpusKey: Option[String] = None)
-  : org.apache.spark.ml.clustering.KMeansModel = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    def fit() = new KMeans().setK(nlist).setSeed(seed).setMaxIter(10)
-      .setFeaturesCol("__fv").setPredictionCol("__bucket")
-      .fit(df.select(asDouble(col(vecCol)).as("v"))
-        .withColumn("__fv", array_to_vector(col("v"))))
-    corpusKey match {
-      case Some(key) => ivfModels.synchronized {
-        val k = (key, nlist, seed)
-        Option(ivfModels.get(k)).getOrElse { val m = fit(); ivfModels.put(k, m); m }
-      }
-      case None => fit()
-    }
-  }
-
   def ivfTopK(df: DataFrame, idCol: String, vecCol: String,
               queryVecId: Long, k: Int, nlist: Int = 16,
-              nprobe: Int = 4, seed: Long = 7L,
-              corpusKey: Option[String] = None): DataFrame = {
+              nprobe: Int = 4, seed: Long = 7L): DataFrame = {
     import org.apache.spark.ml.functions.array_to_vector
     val withVec = df
       .select(col(idCol), asDouble(col(vecCol)).as("v"))
       .withColumn("__fv", array_to_vector(col("v")))
-    val model = ivfFit(df, vecCol, nlist, seed, corpusKey)
+    val model = ivfFit(df, vecCol, nlist, seed)
     val assigned = model.transform(withVec).drop("__fv")
     // nprobe nearest centroids to the query vector: nlist² driver flops.
     // An absent query id returns an empty frame (matching the sibling
@@ -316,35 +276,13 @@ object Similarity {
 
   // ---------------- persisted index-at-rest ----------------
   //
-  // The 100 TB usage model (mirroring the reference's persisted graph
-  // indexes with epoch invalidation, /root/reference/packages/pycypher/
-  // src/pycypher/graph_index.py:562-887): the corpus is signed/assigned
-  // ONCE offline and written `partitionBy(__bucket)`, so a lookup is a
+  // The 100 TB usage model (mirroring the reference implementation's
+  // persisted graph indexes, pycypher's graph_index.py): the corpus is signed/assigned ONCE offline
+  // and written `partitionBy(__bucket)`, so a lookup is a
   // PARTITION-PRUNED scan of its probe buckets — never a corpus scan,
   // never a per-query signature pass. Probe parameters (planes / nlist,
-  // seed) live in the index's `_meta` sidecar (underscore-prefixed, so
-  // partition discovery ignores it), which makes parameter drift between
-  // writer and reader impossible; `epoch` records the write time and
-  // changes on every rewrite, invalidating any process-level caches
-  // keyed on it.
-
-  /** One-row sidecar describing an index; read back by the probe side. */
-  private def writeMeta(spark: org.apache.spark.sql.SparkSession, path: String,
-                        kind: String, param: Int, seed: Long): Long = {
-    val epoch = System.currentTimeMillis()
-    import spark.implicits._
-    Seq((kind, param, seed, epoch)).toDF("kind", "param", "seed", "epoch")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_meta")
-    epoch
-  }
-
-  private def readMeta(spark: org.apache.spark.sql.SparkSession, path: String,
-                       kind: String): (Int, Long, Long) = {
-    val m = spark.read.parquet(s"$path/_meta").head()
-    require(m.getString(0) == kind,
-      s"index at $path is '${m.getString(0)}', expected '$kind'")
-    (m.getInt(1), m.getLong(2), m.getLong(3))
-  }
+  // seed) live in the index's `_meta` record ([[IndexStore]]), which
+  // makes parameter drift between writer and reader impossible.
 
   /** Signature of one query vector, evaluated through the SAME Catalyst
     * expression the index writer used (a 1-row local relation — no
@@ -359,38 +297,43 @@ object Similarity {
   }
 
   /** Build the LSH index: sign every vector and write the corpus
-    * partitioned by its signature bucket. Rewriting bumps the epoch.
+    * partitioned by its signature bucket. A rewrite replaces the index.
     */
   def lshIndexWrite(df: DataFrame, idCol: String, vecCol: String,
-                    path: String, planes: Int, seed: Int = 42): Long = {
-    df.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
+                    path: String, planes: Int, seed: Int = 42): Unit = {
+    val rows = df.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
       .withColumn("__bucket",
         hyperplaneSignature(col("v"), planes, seed, dimsOf(df, vecCol)))
-      .write.mode("overwrite").partitionBy("__bucket").parquet(path)
-    writeMeta(df.sparkSession, path, "lsh", planes, seed.toLong)
+    rows.write.mode("overwrite").partitionBy("__bucket").parquet(path)
+    IndexStore.create(df.sparkSession, path, "lsh",
+      Map("planes" -> planes.toString, "seed" -> seed.toString), Seq("" -> rows.schema))
   }
+
+  /** A stored vector index's record; fails when there is none. */
+  private def indexRecord(spark: org.apache.spark.sql.SparkSession, path: String,
+                          kind: String): IndexStore.Record =
+    IndexStore.open(spark, path, kind).getOrElse(
+      throw new IllegalArgumentException(s"no $kind index at $path (no _meta)"))
 
   /** Append a batch to a stored LSH index — the maintenance half of an
     * incremental ANN corpus (`Dedup.minHashIndexPut` is the MinHash
     * counterpart, batch-tagged): the batch is signed with the INDEX's
-    * own (planes, seed) from `_meta` (writer/prober parameters can
-    * never drift), its rows land in their signature buckets in
-    * APPEND mode at batch cost — the at-rest
-    * corpus is never re-signed or rewritten — and the epoch bumps so
-    * process-level caches keyed on it invalidate. Probing after an
-    * append is exactly probing a full rebuild over the union: bucket
-    * assignment is a pure per-row function of the vector, so appended
-    * rows land in the same partitions a rebuild would put them in
-    * (spec-asserted). The caller owns id uniqueness across appends.
+    * own (planes, seed) from its record (writer/prober parameters can
+    * never drift) and its rows land in their signature buckets in
+    * APPEND mode at batch cost — the at-rest corpus is never re-signed
+    * or rewritten. Probing after an append is exactly probing a full
+    * rebuild over the union: bucket assignment is a pure per-row
+    * function of the vector, so appended rows land in the same
+    * partitions a rebuild would put them in (spec-asserted). The caller
+    * owns id uniqueness across appends.
     */
   def lshIndexAppend(spark: org.apache.spark.sql.SparkSession, path: String,
-                     df: DataFrame, idCol: String, vecCol: String): Long = {
-    val (planes, seed, _) = readMeta(spark, path, "lsh")
+                     df: DataFrame, idCol: String, vecCol: String): Unit = {
+    val rec = indexRecord(spark, path, "lsh")
     df.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-      .withColumn("__bucket",
-        hyperplaneSignature(col("v"), planes, seed.toInt, dimsOf(df, vecCol)))
+      .withColumn("__bucket", hyperplaneSignature(col("v"), rec.int("planes"),
+        rec.int("seed"), dimsOf(df, vecCol)))
       .write.mode("append").partitionBy("__bucket").parquet(path)
-    writeMeta(spark, path, "lsh", planes, seed)
   }
 
   /** Probe-only ANN against a stored LSH index: compute the query's
@@ -403,73 +346,14 @@ object Similarity {
                    queryVec: Seq[Double], k: Int,
                    excludeId: Option[Long] = None,
                    idColName: String = "id"): DataFrame = {
-    val (planes, seed, _) = readMeta(spark, path, "lsh")
-    val qsig = signatureOf(spark, queryVec, planes, seed.toInt)
+    val rec = indexRecord(spark, path, "lsh")
+    val planes = rec.int("planes")
+    val qsig = signatureOf(spark, queryVec, planes, rec.int("seed"))
     val probes = qsig +: (0 until planes).map(p => qsig ^ (1L << p))
     import spark.implicits._
     val q = Seq(Tuple1(queryVec)).toDF("qv")
-    spark.read.parquet(path)
+    IndexStore.read(spark, path, rec, "")
       .filter(col("__bucket").isin(probes: _*))
-      .filter(excludeId.map(col("id") =!= _).getOrElse(lit(true)))
-      .crossJoin(broadcast(q))
-      .select(col("id").as(idColName),
-        round(cosine(col("v"), col("qv"), queryVec.size), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idColName))
-      .limit(k)
-  }
-
-  /** Build the IVF index: fit the coarse quantizer, assign every vector
-    * to its centroid bucket, write the corpus partitioned by bucket and
-    * the fitted model under `_model`.
-    */
-  def ivfIndexWrite(df: DataFrame, idCol: String, vecCol: String,
-                    path: String, nlist: Int, seed: Long = 7L): Long = {
-    import org.apache.spark.ml.functions.array_to_vector
-    val withVec = df.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-      .withColumn("__fv", array_to_vector(col("v")))
-    val model = ivfFit(df, vecCol, nlist, seed, corpusKey = None)
-    model.transform(withVec).drop("__fv")
-      .write.mode("overwrite").partitionBy("__bucket").parquet(path)
-    model.write.overwrite().save(s"$path/_model")
-    writeMeta(df.sparkSession, path, "ivf", nlist, seed)
-  }
-
-  /** Loaded IVF quantizers keyed by (path, epoch) — a rewrite changes
-    * the epoch, so stale models age out of the LRU instead of serving a
-    * replaced corpus.
-    */
-  private val loadedIvfModels = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, Long),
-      org.apache.spark.ml.clustering.KMeansModel](16, 0.75f, true) {
-      override def removeEldestEntry(
-        e: java.util.Map.Entry[(String, Long),
-          org.apache.spark.ml.clustering.KMeansModel]): Boolean =
-        size() > ivfModelCap
-    })
-
-  /** Probe-only ANN against a stored IVF index: nprobe nearest
-    * centroids from the tiny persisted model (nlist² driver flops),
-    * then a partition-pruned scan of those buckets + exact cosine.
-    * Identical results to `ivfTopK` over the same fitted quantizer.
-    */
-  def ivfIndexTopK(spark: org.apache.spark.sql.SparkSession, path: String,
-                   queryVec: Seq[Double], k: Int, nprobe: Int = 4,
-                   excludeId: Option[Long] = None,
-                   idColName: String = "id"): DataFrame = {
-    val (_, _, epoch) = readMeta(spark, path, "ivf")
-    val model = loadedIvfModels.synchronized {
-      Option(loadedIvfModels.get((path, epoch))).getOrElse {
-        val m = org.apache.spark.ml.clustering.KMeansModel.load(s"$path/_model")
-        loadedIvfModels.put((path, epoch), m); m
-      }
-    }
-    val probes = model.clusterCenters.zipWithIndex.map { case (c, i) =>
-      (c.toArray.zip(queryVec).map { case (a, b) => (a - b) * (a - b) }.sum, i)
-    }.sortBy(_._1).take(nprobe).map(_._2)
-    import spark.implicits._
-    val q = Seq(Tuple1(queryVec)).toDF("qv")
-    spark.read.parquet(path)
-      .filter(col("__bucket").isin(probes.toIndexedSeq: _*))
       .filter(excludeId.map(col("id") =!= _).getOrElse(lit(true)))
       .crossJoin(broadcast(q))
       .select(col("id").as(idColName),
@@ -659,7 +543,7 @@ object Similarity {
     * `_centroids`, the assigned corpus partitioned by bucket.
     */
   def ivfSampledIndexWrite(df: DataFrame, idCol: String, vecCol: String,
-                           path: String, nlist: Int): Long = {
+                           path: String, nlist: Int): Unit = {
     val v = df.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
     // pin the nlist-row centroid table on the driver: the sampled-
     // centroid TakeOrdered is a corpus-wide scan, and leaving it lazy
@@ -680,18 +564,24 @@ object Similarity {
     val cent = spark.createDataFrame(
       spark.sparkContext.parallelize(centRows, 1), centPlan.schema)
     val asg = centroidAssigner(centRows, centPlan.schema("cid").dataType, 1)
-    v.withColumn("__bucket", asg.home(col("v")))
+    val rows = v.withColumn("__bucket", asg.home(col("v")))
       .select(col("id"), col("v"), col("__bucket"))
-      .write.mode("overwrite").partitionBy("__bucket").parquet(path)
-    cent.coalesce(1).write.mode("overwrite").parquet(s"$path/_centroids")
-    writeMeta(spark, path, "ivf_sampled", nlist, 0L)
+    rows.write.mode("overwrite").partitionBy("__bucket").parquet(path)
+    IndexStore.create(spark, path, "ivf_sampled", Map("nlist" -> nlist.toString),
+      Seq("" -> rows.schema), sides = Seq("_centroids" -> cent))
   }
+
+  /** The `_centroids` side table of a stored vector index, collected. */
+  private def centroidRows(spark: org.apache.spark.sql.SparkSession, path: String,
+                           rec: IndexStore.Record): IndexedSeq[org.apache.spark.sql.Row] =
+    IndexStore.side(spark, path, "_centroids", rec.schemas.get("_centroids"))
+      .collect().toIndexedSeq
 
   /** Append a batch to a stored deterministic IVF index: assign the
     * batch vectors to the EXISTING persisted centroids (map-side
     * against the collected nlist-row table, same argmin rule as the
     * build) and append them to
-    * their buckets at batch cost; the epoch bumps. Append-assign is the
+    * their buckets at batch cost. Append-assign is the
     * standard IVF maintenance trade-off (FAISS `add` semantics): the
     * coarse quantizer is NOT refit, so if the appended data's
     * distribution drifts from the build-time corpus, buckets grow
@@ -703,16 +593,14 @@ object Similarity {
     */
   def ivfSampledIndexAppend(spark: org.apache.spark.sql.SparkSession,
                             path: String, df: DataFrame,
-                            idCol: String, vecCol: String): Long = {
-    val (nlist, _, _) = readMeta(spark, path, "ivf_sampled")
+                            idCol: String, vecCol: String): Unit = {
+    val rec = indexRecord(spark, path, "ivf_sampled")
     val v = df.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    val cent = spark.read.parquet(s"$path/_centroids")
-    val asg = centroidAssigner(cent.collect().toIndexedSeq,
-      cent.schema("cid").dataType, 1)
+    val asg = centroidAssigner(centroidRows(spark, path, rec),
+      rec.schemas("_centroids")("cid").dataType, 1)
     v.withColumn("__bucket", asg.home(col("v")))
       .select(col("id"), col("v"), col("__bucket"))
       .write.mode("append").partitionBy("__bucket").parquet(path)
-    writeMeta(spark, path, "ivf_sampled", nlist, 0L)
   }
 
   /** Probe-only top-k against a stored deterministic IVF index: rank
@@ -723,15 +611,15 @@ object Similarity {
                           queryVec: Seq[Double], k: Int, nprobe: Int = 4,
                           excludeId: Option[Long] = None,
                           idColName: String = "id"): DataFrame = {
-    readMeta(spark, path, "ivf_sampled")
-    val cents = spark.read.parquet(s"$path/_centroids").collect()
+    val rec = indexRecord(spark, path, "ivf_sampled")
+    val cents = centroidRows(spark, path, rec)
       .map(r => (r.getLong(0), r.getSeq[Double](1)))
     val probes = cents.map { case (cid, c) =>
       (c.zip(queryVec).map { case (a, b) => (a - b) * (a - b) }.sum, cid)
     }.sortBy(identity).take(nprobe).map(_._2)
     import spark.implicits._
     val q = Seq(Tuple1(queryVec)).toDF("qv")
-    spark.read.parquet(path)
+    IndexStore.read(spark, path, rec, "")
       .filter(col("__bucket").isin(probes.toIndexedSeq: _*))
       .filter(excludeId.map(col("id") =!= _).getOrElse(lit(true)))
       .crossJoin(broadcast(q))
@@ -749,8 +637,8 @@ object Similarity {
     * `indexDir`: `vecs/batch=N/__bucket=B/` (id, v), `_centroids`
     * (frozen — FAISS `add` semantics: appended batches assign against
     * the FIRST batch's fitted centroids, the documented drift trade of
-    * [[ivfSampledIndexAppend]]), `_meta` written LAST and never
-    * rewritten.
+    * [[ivfSampledIndexAppend]]), and the `_meta` record written after
+    * the first admit landed ([[IndexStore]]).
     *
     * Per batch:
     *  1. cross-batch probe: assign each batch vector to its `nprobe`
@@ -780,24 +668,15 @@ object Similarity {
     val nd = dimsOf(df, vecCol)
     val v = df.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
       .localCheckpoint(true)
-    val metaPath = new org.apache.hadoop.fs.Path(s"$indexDir/_meta")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val have = fs.exists(metaPath)
+    val existing = IndexStore.open(spark, indexDir, "sem_stream")
     // centroids: persisted and frozen after the first committed batch;
     // a replay of batch 0 refits from the same rows (md5-ranked sample
     // — deterministic), so the rebuild is idempotent
-    val (centRows, centSchema) =
-      if (have) {
-        val c = spark.read.parquet(s"$indexDir/_centroids")
-        (c.collect().toIndexedSeq, c.schema)
-      } else {
-        val plan = sampledCentroids(v, nlist)
-        (plan.collect().toIndexedSeq, plan.schema)
-      }
+    val (centRows, centSchema) = streamCentroids(spark, indexDir, existing, v, nlist)
     // an EMPTY batch against a not-yet-created index has no centroids
     // to sample: nothing to dedup, nothing to admit (the empty-admit
     // guard — never bootstrap an index from a data-less batch)
-    if (!have && centRows.isEmpty) return (df, _ => IterPin.free(v))
+    if (existing.isEmpty && centRows.isEmpty) return (df, _ => IterPin.free(v))
     val cent = spark.createDataFrame(
       spark.sparkContext.parallelize(centRows, 1), centSchema)
     // home bucket AND the nprobe probe set in ONE map-side pass
@@ -815,11 +694,8 @@ object Similarity {
     //    interrupted compaction (batch partitions deleted, tmp not yet
     //    renamed) is repaired BEFORE the read — a probe against the
     //    broken window would silently re-admit everything consolidated
-    val pre =
-      if (have) {
-        BatchCompaction.recoverDir(spark, s"$indexDir/vecs", "batch")
-        val idx = spark.read.parquet(s"$indexDir/vecs")
-          .filter(col("batch") < lit(batchId))
+    val pre = existing.fold(home) { rec =>
+        val idx = IndexStore.read(spark, indexDir, rec, "vecs", Some(batchId))
           .select(col("__bucket"), col("v").as("iv"))
         // probe SHAPE (the minHashIndexLookup discipline): the index
         // must stream through ONE scan; the batch's exploded nprobe
@@ -838,7 +714,7 @@ object Similarity {
         val small = nProbeRows <= 2000000L && estBytes <= 64L * 1024 * 1024
         val dup = vecProbeDups(idx, probe, nd, tau, small)
         home.join(if (small) broadcast(dup) else dup, Seq("id"), "left_anti")
-      } else home
+      }
     // 2. intra-batch components over home-bucket tau-pairs — at the
     //    DISTINCT-VECTOR level: cosine and the bucket assignment are
     //    pure functions of the vector, so identical embeddings (a
@@ -883,22 +759,10 @@ object Similarity {
       val adm = keep.join(shipped.select(col(shipped.columns.head).as("id")),
           Seq("id"), "left_semi")
         .localCheckpoint(true)
-      // an EMPTY admit (a later stage dropped every survivor) must not
-      // bootstrap the index: data-less vecs + _centroids + _meta would
-      // make every later batch's probe fail schema inference on the
-      // empty parquet dirs and wedge the stream. Skipping is the same
-      // deterministic no-op on replay; the NEXT non-empty batch refits
-      // centroids from its own rows exactly as a first batch would.
-      if (!adm.isEmpty) {
-        adm.withColumn("batch", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch", "__bucket").parquet(s"$indexDir/vecs")
-        if (!have) {
-          cent.coalesce(1).write.mode("overwrite")
-            .parquet(s"$indexDir/_centroids")
-          writeMeta(spark, indexDir, "sem_stream", nlist, 0L)
-        }
-      }
+      // an EMPTY admit (a later stage dropped every survivor) writes
+      // nothing: the NEXT non-empty batch refits centroids from its own
+      // rows exactly as a first batch would
+      vecAdmit(spark, indexDir, adm, batchId, nlist, cent)
       // admit is the batch's LAST consumer of every pin this operator
       // took (the caller materialized survivors into its own checkpoint
       // before the output write — the deferred-admit contract): free
@@ -942,36 +806,40 @@ object Similarity {
     val v = df.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
       .localCheckpoint(true)
     if (v.isEmpty) { IterPin.free(v); return }
-    val metaPath = new org.apache.hadoop.fs.Path(s"$indexDir/_meta")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val have = fs.exists(metaPath)
-    val (centRows, centSchema) =
-      if (have) {
-        val c = spark.read.parquet(s"$indexDir/_centroids")
-        (c.collect().toIndexedSeq, c.schema)
-      } else {
-        val plan = sampledCentroids(v, nlist)
-        (plan.collect().toIndexedSeq, plan.schema)
-      }
+    val (centRows, centSchema) = streamCentroids(spark, indexDir,
+      IndexStore.open(spark, indexDir, "sem_stream"), v, nlist)
     val cent = spark.createDataFrame(
       spark.sparkContext.parallelize(centRows, 1), centSchema)
     // map-side home-bucket assignment (centroidAssigner): the write
     // plan is scan → project → sort-for-partitioning, zero Exchange —
     // PlanSpec gates this shape
     val asg = centroidAssigner(centRows, centSchema("cid").dataType, 1)
-    v.withColumn("__bucket", asg.home(col("v")))
-      .select(col("id"), col("v"), col("__bucket"))
-      .withColumn("batch", lit(batch))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch", "__bucket").parquet(s"$indexDir/vecs")
-    if (!have) {
-      cent.coalesce(1).write.mode("overwrite")
-        .parquet(s"$indexDir/_centroids")
-      writeMeta(spark, indexDir, "sem_stream", nlist, 0L)
-      ()
-    }
+    vecAdmit(spark, indexDir, v.withColumn("__bucket", asg.home(col("v")))
+      .select(col("id"), col("v"), col("__bucket")), batch, nlist, cent)
     IterPin.free(v) // the write was the pin's last consumer
   }
+
+  /** A streaming vector index's frozen centroids (rows and schema): the
+    * stored ones, or — before the index exists — the deterministic
+    * md5-ranked sample of `v`. */
+  private def streamCentroids(spark: org.apache.spark.sql.SparkSession,
+                              indexDir: String, existing: Option[IndexStore.Record],
+                              v: DataFrame, nlist: Int)
+  : (IndexedSeq[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType) =
+    existing match {
+      case Some(rec) => (centroidRows(spark, indexDir, rec), rec.schemas("_centroids"))
+      case None =>
+        val plan = sampledCentroids(v, nlist)
+        (plan.collect().toIndexedSeq, plan.schema)
+    }
+
+  /** Admit (id, v, __bucket) rows as `batch` of a streaming vector
+    * index; the first admit also writes the frozen centroids `cent`. */
+  private def vecAdmit(spark: org.apache.spark.sql.SparkSession, indexDir: String,
+                       rows: DataFrame, batch: Long, nlist: Int, cent: DataFrame): Unit =
+    IndexStore.admit(spark, indexDir, "sem_stream", Map("nlist" -> nlist.toString),
+      batch, Seq(IndexStore.Part("vecs", rows, Seq("__bucket"))),
+      sides = Seq("_centroids" -> cent))
 
   /** Drift audit for a STREAMING vector index
     * ([[semanticCrawlBatch]]'s layout): the index's centroids are
@@ -1007,11 +875,8 @@ object Similarity {
                        indexDir: String,
                        thresholdRatio: Double = 4.0,
                        onlyBatches: Option[Seq[Long]] = None): DataFrame = {
-    readMeta(spark, indexDir, "sem_stream")
-    // repair an interrupted compaction before auditing — a broken
-    // window would report drift over a partial index
-    BatchCompaction.recoverDir(spark, s"$indexDir/vecs", "batch")
-    val cent = spark.read.parquet(s"$indexDir/_centroids")
+    val rec = indexRecord(spark, indexDir, "sem_stream")
+    val cent = IndexStore.side(spark, indexDir, "_centroids", rec.schemas.get("_centroids"))
     // `onlyBatches` = the INCREMENTAL audit (the streaming drift
     // watchdog's arm): restrict the scan to the named batch partitions
     // — partition pruning, so a periodic audit costs O(named batches),
@@ -1019,17 +884,15 @@ object Similarity {
     // which is this audit's baseline row; values for the named batches
     // are identical to the full audit's (per-batch means are
     // independent). None = audit everything (the CALL surface / ann14).
-    val vecs0 = spark.read.parquet(s"$indexDir/vecs")
+    // The read repairs an interrupted compaction first — a broken
+    // window would report drift over a partial index.
+    val vecs0 = IndexStore.read(spark, indexDir, rec, "vecs")
     val vecs = onlyBatches.fold(vecs0)(bs =>
       vecs0.filter(col("batch").isin(bs.distinct: _*)))
     val nd = dimsOf(vecs, "v")
-    // bucket partition values come back as DISCOVERED types (int for
-    // numeric ids, string otherwise) while cid keeps the id column's
-    // own type — compare as strings so a string-id index audits
-    // instead of null-joining to an empty report
+    // the recorded schema types `__bucket` as the id column, as `cid`
     val perBatch = vecs
-      .join(broadcast(cent),
-        vecs("__bucket").cast("string") === cent("cid").cast("string"))
+      .join(broadcast(cent), vecs("__bucket") === cent("cid"))
       .select(col("batch"), sqDist(col("v"), col("c"), nd).as("__d"))
       .groupBy(col("batch"))
       .agg(count(lit(1)).as("n_vecs"),
@@ -1041,9 +904,7 @@ object Similarity {
     val basePath = new org.apache.hadoop.fs.Path(s"$indexDir/_drift_baseline")
     val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val baseVal: Option[Double] =
-      if (fs.exists(basePath))
-        Some(spark.read.parquet(basePath.toString).head()
-          .getAs[Double]("baseline_dist"))
+      if (fs.exists(basePath)) Some(storedBaseline(spark, indexDir))
       else
         perBatch.orderBy(col("batch"))
           .select(col("batch").cast("long"), col("n_vecs"), col("__mean"))
@@ -1105,9 +966,7 @@ object Similarity {
       fs: org.apache.hadoop.fs.FileSystem, indexDir: String,
       batch: Long, nVecs: Long, mean: Double): Double = {
     val basePath = new org.apache.hadoop.fs.Path(s"$indexDir/_drift_baseline")
-    def adoptWinner(): Double =
-      spark.read.parquet(basePath.toString)
-        .head().getAs[Double]("baseline_dist")
+    def adoptWinner(): Double = storedBaseline(spark, indexDir)
     // sweep ORPHAN tmps (a crash between write and rename) by prefix,
     // AGE-GATED: a tmp still minutes young may be a LIVE racer's
     // in-flight write — deleting it mid-write fails that racer's write
@@ -1139,6 +998,11 @@ object Similarity {
     if (claimRename(fs, tmp, basePath)) mean
     else { fs.delete(tmp, true); adoptWinner() }
   }
+
+  private def storedBaseline(spark: org.apache.spark.sql.SparkSession,
+                             indexDir: String): Double =
+    IndexStore.side(spark, indexDir, "_drift_baseline").head()
+      .getAs[Double]("baseline_dist")
 
   /** Atomically CLAIM `dst` by renaming `tmp` onto it; true = this
     * caller won. Deliberately FileContext.rename, not
@@ -1188,13 +1052,13 @@ object Similarity {
     * `.vecs_refit` and the new centroids to `.centroids_refit` BEFORE
     * the `_refit_commit` marker appears; the swap (old dirs out, new
     * dirs in) runs after, and a rerun of refit (or any crash)
-    * completes an interrupted swap from the marker. `_meta` is
-    * untouched — nlist and the index kind never drift.
+    * completes an interrupted swap from the marker. The `_meta` record
+    * is untouched — nlist, the kind and the schemas never change.
     */
   def refitStreamIndex(spark: org.apache.spark.sql.SparkSession,
                        indexDir: String): Unit = {
     import org.apache.hadoop.fs.Path
-    val (nlist, _, _) = readMeta(spark, indexDir, "sem_stream")
+    val rec = indexRecord(spark, indexDir, "sem_stream")
     val root = new Path(indexDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val marker = new Path(root, "_refit_commit")
@@ -1225,15 +1089,14 @@ object Similarity {
     }
     if (fs.exists(marker)) { swap(); return } // finish an interrupted refit
     fs.delete(tmpVecs, true); fs.delete(tmpCent, true) // pre-commit garbage
-    // a refit over a mid-compaction index would PERSIST the missing
-    // rows into the rewritten vecs — repair before reading
-    BatchCompaction.recoverDir(spark, s"$indexDir/vecs", "batch")
-    val vecs = spark.read.parquet(s"$indexDir/vecs")
+    // the read repairs a mid-compaction index first: a refit over one
+    // would PERSIST the missing rows into the rewritten vecs
+    val vecs = IndexStore.read(spark, indexDir, rec, "vecs")
       .select(col("id"), col("v"), col("batch"))
     // centroid refit pinned driver-side (nlist rows), reassignment
     // map-side per ROW — same result as the old per-(id, batch) window
     // (assignment is a pure function of the vector), zero Exchange
-    val centPlan = sampledCentroids(vecs.select(col("id"), col("v")), nlist)
+    val centPlan = sampledCentroids(vecs.select(col("id"), col("v")), rec.int("nlist"))
     val centRows = centPlan.collect().toIndexedSeq
     val cent = spark.createDataFrame(
       spark.sparkContext.parallelize(centRows, 1), centPlan.schema)
@@ -1372,7 +1235,7 @@ object Similarity {
     */
   def pqIndexWrite(df: DataFrame, idCol: String, vecCol: String,
                    path: String, nlist: Int = 16, m: Int = 8,
-                   ksub: Int = 16): Long = {
+                   ksub: Int = 16): Unit = {
     val spark = df.sparkSession
     val nd = dimsOf(df, vecCol)
     require(m > 0 && nd % m == 0, s"dims $nd not divisible into $m subspaces")
@@ -1402,20 +1265,19 @@ object Similarity {
     // the plan-constant centroid matrix, PQ codes via the codebook
     val asg = centroidAssigner(centRows.take(nlist),
       centPlan.schema("cid").dataType, 1)
-    v.withColumn("__bucket", asg.home(col("v")))
+    val rows = v.withColumn("__bucket", asg.home(col("v")))
       .select(col("id"), col("v"), col("__bucket"))
       .withColumn("codes",
         column(graft.functions.PqEncode(expression(col("v")), codebook)))
       .select(col("id"), col("codes"), col("__bucket"))
-      .write.mode("overwrite").partitionBy("__bucket").parquet(path)
-    coarse.coalesce(1).write.mode("overwrite").parquet(s"$path/_centroids")
+    rows.write.mode("overwrite").partitionBy("__bucket").parquet(path)
     // self-describing codebook: (subspace, code rank, sub-centroid)
     import spark.implicits._
-    (0 until m).flatMap(mi => codebook(mi).zipWithIndex.map {
+    val cb = (0 until m).flatMap(mi => codebook(mi).zipWithIndex.map {
       case (sc, j) => (mi, j, sc.toSeq)
     }).toDF("m", "j", "sc")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_codebook")
-    writeMeta(spark, path, "ivf_pq", nlist, 0L)
+    IndexStore.create(spark, path, "ivf_pq", Map("nlist" -> nlist.toString),
+      Seq("" -> rows.schema), sides = Seq("_centroids" -> coarse, "_codebook" -> cb))
   }
 
   /** Probe-only PQ top-k against a stored IVF-PQ index: rank the tiny
@@ -1429,13 +1291,13 @@ object Similarity {
                   queryVec: Seq[Double], k: Int, nprobe: Int = 4,
                   excludeId: Option[Long] = None,
                   idColName: String = "id"): DataFrame = {
-    readMeta(spark, path, "ivf_pq")
-    val cents = spark.read.parquet(s"$path/_centroids").collect()
+    val rec = indexRecord(spark, path, "ivf_pq")
+    val cents = centroidRows(spark, path, rec)
       .map(r => (r.get(0).asInstanceOf[Number].longValue, r.getSeq[Double](1)))
     val probes = cents.map { case (cid, c) =>
       (c.zip(queryVec).map { case (a, b) => (a - b) * (a - b) }.sum, cid)
     }.sortBy(identity).take(nprobe).map(_._2)
-    val cb = spark.read.parquet(s"$path/_codebook").collect()
+    val cb = IndexStore.side(spark, path, "_codebook", rec.schemas.get("_codebook")).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
     val m = cb.map(_._1).max + 1
     val sd = cb.head._3.length
@@ -1450,7 +1312,7 @@ object Similarity {
       a
     }
     import org.apache.spark.sql.graftshim.ColumnBridge.{column, expression}
-    spark.read.parquet(path)
+    IndexStore.read(spark, path, rec, "")
       .filter(col("__bucket").isin(probes.toIndexedSeq: _*))
       .filter(excludeId.map(col("id") =!= _).getOrElse(lit(true)))
       .withColumn("__adc",

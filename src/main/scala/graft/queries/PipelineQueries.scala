@@ -25,9 +25,18 @@ object PipelineQueries {
   private def indexRoot(dir: String) =
     s"/tmp/graft_index/${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
 
+  /** A fixture's index directory, emptied before its build: an index an
+    * earlier process left there (possibly in a layout from before the
+    * index record) must not meet the new one. */
+  private def freshIndexDir(s: SparkSession, dir: String, name: String): String = {
+    val p = new org.apache.hadoop.fs.Path(s"${indexRoot(dir)}/$name")
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    p.toString
+  }
+
   private def lshIndexPath(s: SparkSession, dir: String): String =
     builtIndexes.getOrElseUpdate(s"$dir#lsh8", {
-      val p = s"${indexRoot(dir)}/lsh8"
+      val p = freshIndexDir(s, dir, "lsh8")
       Similarity.lshIndexWrite(Tables(s, dir).embeddings, "vec_id", "embedding",
         p, planes = 8, seed = 42)
       p
@@ -35,7 +44,7 @@ object PipelineQueries {
 
   private def mhIndexPath(s: SparkSession, dir: String): String =
     builtIndexes.getOrElseUpdate(s"$dir#mh3_64_16", {
-      val p = s"${indexRoot(dir)}/mh3_64_16"
+      val p = freshIndexDir(s, dir, "mh3_64_16")
       Dedup.minHashIndexWrite(
         Tables(s, dir).documents.filter(col("doc_id") % 7 =!= 0),
         "doc_id", "text", p, shingleSize = 3, numHashes = 64, bands = 16)
@@ -49,7 +58,7 @@ object PipelineQueries {
     */
   private def vecStreamIndexPath(s: SparkSession, dir: String): String =
     builtIndexes.getOrElseUpdate(s"$dir#vec_stream8", {
-      val p = s"${indexRoot(dir)}/vec_stream8"
+      val p = freshIndexDir(s, dir, "vec_stream8")
       val emb = Tables(s, dir).embeddings
       Similarity.vecIndexPut(s, p, emb.filter(col("vec_id") % 3 === 0),
         "vec_id", "embedding", batch = 0L, nlist = 8)
@@ -66,7 +75,7 @@ object PipelineQueries {
     */
   private def fzMinhashIndexPath(s: SparkSession, dir: String): String =
     builtIndexes.getOrElseUpdate(s"$dir#fz1_minhash", {
-      val p = s"${indexRoot(dir)}/fz1_minhash"
+      val p = freshIndexDir(s, dir, "fz1_minhash")
       Dedup.fuzzyIndexPut(s, p,
         Tables(s, dir).documents.filter(col("doc_id") % 4 =!= 0)
           .select(substring(col("text"), 1, 80).as("k")),
@@ -80,7 +89,7 @@ object PipelineQueries {
     */
   private def fzIndexPath(s: SparkSession, dir: String): String =
     builtIndexes.getOrElseUpdate(s"$dir#fz1_exact", {
-      val p = s"${indexRoot(dir)}/fz1_exact"
+      val p = freshIndexDir(s, dir, "fz1_exact")
       Dedup.fuzzyIndexPut(s, p,
         Tables(s, dir).customer
           .filter(col("c_custkey") % 9 === 0 && col("c_custkey") % 7 =!= 0),
@@ -94,7 +103,7 @@ object PipelineQueries {
     */
   private def fzCompactedIndexPath(s: SparkSession, dir: String): String =
     builtIndexes.getOrElseUpdate(s"$dir#fz1_exact_compacted", {
-      val p = s"${indexRoot(dir)}/fz1_exact_compacted"
+      val p = freshIndexDir(s, dir, "fz1_exact_compacted")
       val corpus = Tables(s, dir).customer
         .filter(col("c_custkey") % 9 === 0 && col("c_custkey") % 7 =!= 0)
       Dedup.fuzzyIndexPut(s, p, corpus.filter(col("c_custkey") % 2 === 0),
@@ -161,7 +170,7 @@ object PipelineQueries {
 
   private def ivfSampledIndexPath(s: SparkSession, dir: String): String =
     builtIndexes.getOrElseUpdate(s"$dir#ivfs16", {
-      val p = s"${indexRoot(dir)}/ivfs16"
+      val p = freshIndexDir(s, dir, "ivfs16")
       Similarity.ivfSampledIndexWrite(Tables(s, dir).embeddings, "vec_id",
         "embedding", p, nlist = 16)
       p
@@ -169,7 +178,7 @@ object PipelineQueries {
 
   private def pqIndexPath(s: SparkSession, dir: String): String =
     builtIndexes.getOrElseUpdate(s"$dir#pq16_8_16", {
-      val p = s"${indexRoot(dir)}/pq16_8_16"
+      val p = freshIndexDir(s, dir, "pq16_8_16")
       Similarity.pqIndexWrite(Tables(s, dir).embeddings, "vec_id",
         "embedding", p, nlist = 16, m = 8, ksub = 16)
       p
@@ -353,8 +362,9 @@ object PipelineQueries {
     // centroid choice (md5 rank), assignment, probing and verification
     // are all relational, so the DuckDB oracle replays the whole
     // pipeline; the scan prunes to the nprobe bucket partitions
-    // (plan-asserted in PlanSpec). The learned k-means variant
-    // (ivfTopK/ivfIndexTopK) stays the higher-recall path, spec-tested.
+    // (plan-asserted in PlanSpec). The learned k-means variant,
+    // ivfTopK (fit per call, no index at rest), is the other IVF path;
+    // OperatorsSpec's IVF recall case tests it.
     "ann03_ivf_topk" -> { (s, dir) =>
       Similarity.ivfSampledIndexTopK(s, ivfSampledIndexPath(s, dir),
         queryVec(s, dir, 0L), k = 10, nprobe = 4,

@@ -253,6 +253,43 @@ class MutationSpec extends SparkSpec {
       Seq(("Alice", 1L), ("Alice", 2L)))
   }
 
+  test("SET, REMOVE and DELETE through an undirected match without a relationship id " +
+    "address the stored edge a reversed row sees, never a parallel edge of the other orientation") {
+    def engine(edges: Seq[(Long, Long, String)]): CypherEngine = {
+      val person = Seq((0L, "Alice"), (1L, "Bob"), (2L, "Carol")).toDF("__ID__", "name")
+      new CypherEngine(spark, new GraphCatalog()
+        .addEntity("Person", person)
+        .addRelationship("KNOWS", edges.toDF("__SOURCE__", "__TARGET__", "w"),
+          srcLabel = Some("Person"), dstLabel = Some("Person")))
+    }
+    def num(v: Any): Option[Long] = Option(v).map(_.asInstanceOf[Number].longValue)
+    def stored(eng: CypherEngine): Set[(String, Option[Long])] = eng.query(
+        "MATCH (:Person)-[k:KNOWS]->(:Person) RETURN k.w AS w, k.x AS x").collect()
+      .map(r => (r.getString(0), num(r.get(1)))).toSet
+    // Bob sees the stored Alice→Bob edge reversed
+    val one = engine(Seq((0L, 1L, "ab")))
+    val back = one.query(
+      """MATCH (a:Person {name: 'Bob'})-[k:KNOWS]-(b:Person) SET k.x = 1
+         RETURN b.name AS b, k.x AS x""").collect()
+      .map(r => (r.getString(0), num(r.get(1)))).toSeq
+    assert(back == Seq(("Alice", Some(1L))), back)
+    assert(stored(one) == Set(("ab", Some(1L))), stored(one))
+    one.execute("MATCH (:Person {name: 'Bob'})-[k:KNOWS]-(:Person) REMOVE k.x")
+    assert(stored(one) == Set(("ab", None)), stored(one))
+    one.execute("MATCH (:Person {name: 'Bob'})-[k:KNOWS]-(:Person) DELETE k")
+    assert(stored(one).isEmpty, stored(one))
+    // a parallel edge of the other orientation: each write reaches the
+    // edge its row matched
+    val two = engine(Seq((0L, 1L, "ab"), (1L, 0L, "ba")))
+    two.execute("MATCH (:Person {name: 'Bob'})-[k:KNOWS {w: 'ab'}]-(:Person) SET k.x = 2")
+    assert(stored(two) == Set(("ab", Some(2L)), ("ba", None)), stored(two))
+    two.execute("MATCH (:Person {name: 'Alice'})-[k:KNOWS {w: 'ba'}]-(:Person) SET k.x = 3")
+    assert(stored(two) == Set(("ab", Some(2L)), ("ba", Some(3L))), stored(two))
+    // WITH carries the orientation to the write
+    two.execute("MATCH (:Person {name: 'Alice'})-[k:KNOWS {w: 'ba'}]-(:Person) WITH k SET k.x = 4")
+    assert(stored(two) == Set(("ab", Some(2L)), ("ba", Some(4L))), stored(two))
+  }
+
   test("SET, REMOVE and DELETE on a multi-type relationship variable fail naming the variable and its types") {
     val eng = freshEngine
     eng.execute(

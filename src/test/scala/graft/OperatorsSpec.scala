@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Bpe, Components, Dedup, GraphAlgos, Similarity, TextAnalysis}
+import graft.operators.{Bpe, Components, Dedup, GraphAlgos, IndexStore, Similarity, TextAnalysis}
 
 /** Training-data operator semantics on hand-built corpora where ground
   * truth is computable exactly.
@@ -653,12 +653,6 @@ class OperatorsSpec extends SparkSpec {
     assert((exact intersect ivf).size >= 4, s"recall too low: $exact vs $ivf")
     // the pruning is real: cloud B never surfaces for a cloud-A query
     assert(ivf.forall(_ < 20L))
-    // the fitted quantizer is cached per corpus key (index build is
-    // offline-amortized; only probe + exact cosine is per-query)
-    val m1 = Similarity.ivfFit(vecs, "embedding", 4, 7L, Some("spec-corpus"))
-    val m2 = Similarity.ivfFit(vecs, "embedding", 4, 7L, Some("spec-corpus"))
-    assert(m1 eq m2)
-    assert(!(Similarity.ivfFit(vecs, "embedding", 4, 7L, None) eq m1))
     // an absent query id returns an empty frame (like the sibling
     // top-k operators), never a driver-side throw
     val none = Similarity.ivfTopK(vecs, "vec_id", "embedding",
@@ -2099,8 +2093,8 @@ class OperatorsSpec extends SparkSpec {
       .select(col("new_id").as("doc_id")).distinct()
     val survivors = batch.join(dupNewIds, Seq("doc_id"), "left_anti")
     // the streaming arm's admit, as batch 0: the survivors (a lazy plan
-    // over the flat index) are signed, the flat index moves under
-    // batch=-1 and the survivors land as batch=0
+    // over the index) are signed and land as batch=0, after the
+    // build's batch=-1
     Dedup.minHashIndexPut(spark, dir, survivors, "doc_id", "text", batch = 0L)
     // the admitted doc is now findable; the dropped duplicate is not in
     // the index (a copy of it still matches the ORIGINAL corpus doc)
@@ -2111,7 +2105,7 @@ class OperatorsSpec extends SparkSpec {
     assert(hits == Set((300L, 201L)), s"got $hits")
   }
 
-  test("LSH index append: probe after append equals probe of a full rebuild; epoch bumps") {
+  test("LSH index append: probe after append equals a full rebuild") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val base = emb.filter(col("vec_id") % 5 =!= 0 || col("vec_id") === 0)
     val batch = emb.filter(col("vec_id") % 5 === 0 && col("vec_id") =!= 0)
@@ -2119,10 +2113,8 @@ class OperatorsSpec extends SparkSpec {
       .select(transform(col("embedding"), x => x.cast("double")).as("v"))
       .head().getSeq[Double](0)
     val dirA = java.nio.file.Files.createTempDirectory("graft_lshapp").toString
-    val e1 = Similarity.lshIndexWrite(base, "vec_id", "embedding", dirA, planes = 8)
-    Thread.sleep(2)
-    val e2 = Similarity.lshIndexAppend(spark, dirA, batch, "vec_id", "embedding")
-    assert(e2 > e1, "append must bump the index epoch")
+    Similarity.lshIndexWrite(base, "vec_id", "embedding", dirA, planes = 8)
+    Similarity.lshIndexAppend(spark, dirA, batch, "vec_id", "embedding")
     val dirB = java.nio.file.Files.createTempDirectory("graft_lshfull").toString
     Similarity.lshIndexWrite(emb, "vec_id", "embedding", dirB, planes = 8)
     def rows(d: String) = Similarity.lshIndexTopK(spark, d, qv, 5,
@@ -2150,10 +2142,8 @@ class OperatorsSpec extends SparkSpec {
       .select(transform(col("embedding"), x => x.cast("double")).as("v"))
       .head().getSeq[Double](0)
     val dirA = java.nio.file.Files.createTempDirectory("graft_ivfapp").toString
-    val e1 = Similarity.ivfSampledIndexWrite(base, "vec_id", "embedding", dirA, nlist = 8)
-    Thread.sleep(2)
-    val e2 = Similarity.ivfSampledIndexAppend(spark, dirA, batch, "vec_id", "embedding")
-    assert(e2 > e1, "append must bump the index epoch")
+    Similarity.ivfSampledIndexWrite(base, "vec_id", "embedding", dirA, nlist = 8)
+    Similarity.ivfSampledIndexAppend(spark, dirA, batch, "vec_id", "embedding")
     val dirB = java.nio.file.Files.createTempDirectory("graft_ivffull").toString
     Similarity.ivfSampledIndexWrite(emb, "vec_id", "embedding", dirB, nlist = 8)
     def rows(d: String) = Similarity.ivfSampledIndexTopK(spark, d, qv, 5,
@@ -2861,30 +2851,6 @@ class OperatorsSpec extends SparkSpec {
     assert(dGot.size >= (truth.size * 0.7).toInt, s"${dGot.size}/${truth.size}")
   }
 
-  test("batch-layout migration is crash-recoverable: an interrupted " +
-    "two-rename move is completed by the next probe or put, exactly once") {
-    val d = java.nio.file.Files.createTempDirectory("graft_mig")
-      .toFile.getAbsolutePath
-    Seq("a", "b").toDF("k").write.parquet(s"$d/keys")
-    val p = new org.apache.hadoop.fs.Path(s"$d/keys")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // simulate a crash after ensureBatchLayout's FIRST rename: the
-    // staging sibling exists, the live dir is gone
-    fs.rename(p, new org.apache.hadoop.fs.Path(s"$d/keys.__migrating"))
-    assert(!fs.exists(p))
-    Dedup.completeBatchMigration(fs, p)
-    val keys = spark.read.parquet(s"$d/keys")
-    assert(keys.select("k").collect().map(_.getString(0)).toSet ==
-      Set("a", "b"))
-    // recovered content landed under batch=-1 (earlier-than-all)
-    assert(keys.select("batch").distinct().collect()
-      .map(_.getInt(0)).toSet == Set(-1))
-    // both helpers are idempotent no-ops afterwards
-    Dedup.completeBatchMigration(fs, p)
-    Dedup.ensureBatchLayout(fs, p)
-    assert(spark.read.parquet(s"$d/keys").count() == 2)
-  }
-
   test("streaming fuzzy crawl differential: random short-alphabet " +
     "corpora under random batchings match a driver-side reference model " +
     "of the arrival-order semantics (cross-batch probe + intra min-id)") {
@@ -3061,9 +3027,10 @@ class OperatorsSpec extends SparkSpec {
       "mornings and the sound of distant trains"
     Dedup.fuzzyIndexPut(spark, d, Seq(k1, k2).toDF("k"), "k",
       batch = -1L, maxDist = 1, tier = "minhash", numHashes = 16, bands = 8)
-    val om0 = spark.read.parquet(s"$d/_meta").head()
-    assert(om0.getString(0) == "minhash" &&
-      (om0.getInt(2), om0.getInt(3)) == (16, 8))
+    def rec(dir: String, kind: String) = IndexStore.open(spark, dir, kind).get
+    val om0 = rec(d, "fuzzy")
+    assert(om0.params("tier") == "minhash" &&
+      (om0.int("num_hashes"), om0.int("bands")) == (16, 8))
     // crawl with caller params 64/32 (the defaults): one near-dup of k1
     // (one char deleted) and one fresh key
     val batch = Seq((1L, k1.dropRight(1)), (2L, "a genuinely new key"))
@@ -3074,11 +3041,11 @@ class OperatorsSpec extends SparkSpec {
     assert(kept == Set(2L), s"cross-batch minhash probe missed: $kept")
     admit(surv.select(col("id")))
     // the admitted sketch kept the SEED's params, not the caller's
-    val sm = spark.read.parquet(s"$d/sketch/_meta").head()
-    assert((sm.getInt(1), sm.getInt(2)) == (16, 8),
-      s"sketch _meta drifted: (${sm.getInt(1)}, ${sm.getInt(2)})")
-    val om = spark.read.parquet(s"$d/_meta").head()
-    assert((om.getInt(2), om.getInt(3)) == (16, 8))
+    val sm = rec(s"$d/sketch", "minhash")
+    assert((sm.int("num_hashes"), sm.int("bands")) == (16, 8),
+      s"sketch _meta drifted: $sm")
+    val om = rec(d, "fuzzy")
+    assert((om.int("num_hashes"), om.int("bands")) == (16, 8))
     // and the newly admitted key is findable at the pinned params
     val hits = Dedup.fuzzyIndexMatches(spark, d,
         Seq((9L, "a genuinely new kez")).toDF("id", "s"), "id", "s")

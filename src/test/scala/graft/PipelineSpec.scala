@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.etl.{PipelineConfig, PipelineRunner}
+import graft.operators.IndexStore
 
 /** ETL runner parity (`nmetl run` / `validate`, SURVEY §3.2) against
   * the reference's fixture shapes (FIXTURES §A.3/§A.4).
@@ -312,7 +313,7 @@ class PipelineSpec extends SparkSpec {
          |""".stripMargin)
     assert(config.auditUri.contains(s"$out/_audit"))
     PipelineRunner.run(spark, config)
-    val audit = spark.read.parquet(s"$out/_audit")
+    val audit = IndexStore.side(spark, out, "_audit")
     // one caller-timed row per sink write, labeled with its pipeline
     // query id and successful
     val sinks = audit.filter("action like 'sink:%' and status = 'success'")
@@ -325,7 +326,7 @@ class PipelineSpec extends SparkSpec {
     // session must not grow a flushed-and-finished audit
     spark.range(3).count()
     org.apache.spark.sql.graftshim.ListenerBridge.waitUntilEmpty(spark, 5000L)
-    assert(spark.read.parquet(s"$out/_audit").count() == audit.count())
+    assert(IndexStore.side(spark, out, "_audit").count() == audit.count())
     // audit_daily: true lays the sink out day-partitioned so
     // retention-bounded analytics (regressions sinceMillis) can prune
     val config2 = PipelineConfig.parse(
@@ -340,7 +341,7 @@ class PipelineSpec extends SparkSpec {
          |""".stripMargin)
     assert(config2.auditDaily)
     PipelineRunner.run(spark, config2)
-    val daily = spark.read.parquet(s"$out/_daudit")
+    val daily = IndexStore.side(spark, out, "_daudit")
     assert(daily.columns.contains("audit_date"))
     assert(daily.count() >= 1)
   }
@@ -359,7 +360,7 @@ class PipelineSpec extends SparkSpec {
          |  - {query_id: q, uri: $out/bad.xyz, format: nope}
          |""".stripMargin)
     intercept[IllegalArgumentException](PipelineRunner.run(spark, config))
-    val audit = spark.read.parquet(s"$out/_audit")
+    val audit = IndexStore.side(spark, out, "_audit")
     val fail = audit.filter("status = 'failure' and label = 'q'").collect()
     assert(fail.length == 1 && fail.head.getAs[String]("error").contains("nope"))
   }
